@@ -14,11 +14,13 @@ column runs at memory bandwidth in the JVM; shipping rows to Python would be
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
-def vec_nonfinite_to_null(c: Column | str) -> Column:
+def vec_nonfinite_to_null(c: str) -> Column:
     """Failed-encoder guard (r11 fuzz phase 7): a vector containing any
     NaN/±Inf component carries no usable geometry — and letting one reach
     the cosine path is actively dangerous: NaN/NaN = NaN, and the [-1,1]
@@ -30,17 +32,31 @@ def vec_nonfinite_to_null(c: Column | str) -> Column:
     cover them with no further per-query logic. NULL stays NULL; -0.0 and
     subnormal components are legitimate geometry and pass through.
 
-    One extra JVM-side O(dim) fold per row at load — map-only, no shuffle,
+    Three codegen'd O(dim) scans per row at load — map-only, no shuffle,
     negligible next to the cosine math it protects."""
-    c = F.col(c) if isinstance(c, str) else c
-    nonfinite = F.exists(
-        c, lambda x: F.isnan(x) | (F.abs(x) == F.lit(float("inf")))
-    )
-    # when() without otherwise: nonfinite -> NULL, NULL input -> NULL
-    return F.when(~nonfinite, c)
+    # CASE without ELSE: nonfinite -> NULL, NULL input -> NULL
+    return F.expr(f"CASE WHEN NOT {_sql_has_nonfinite(c)} THEN {sql_ident(c)} END")
 
 
-def vec_contract_to_null(c: Column | str, dim: int) -> Column:
+def _sql_has_nonfinite(c: str) -> str:
+    """TRUE if any component of column `c` is NaN or ±Inf; else NULL if
+    any component is NULL; else FALSE (NULL for a NULL vector): the
+    three-valued `exists(c, x -> isnan(x) OR abs(x) = inf)`, as three
+    `array_contains` probes in one parsed expression. A Python-lambda
+    `F.exists` cost ~100 py4j round trips every time the guard was built,
+    and a higher-order function evaluates interpreted where array_contains
+    is codegen'd. array_contains matches NaN to NaN, and is NULL when the
+    value is absent and the array holds a NULL. The probes are FLOAT so an
+    array<float> column is compared in place (a DOUBLE probe would widen
+    the whole array per row); an array<double> widens the probe instead."""
+    q = sql_ident(c)
+    probes = ("NaN", "Infinity", "-Infinity")
+    return "(" + " OR ".join(
+        f"array_contains({q}, CAST('{x}' AS FLOAT))" for x in probes
+    ) + ")"
+
+
+def vec_contract_to_null(c: str, dim: int) -> Column:
     """The full embedding-column contract guard (r11 fuzz phases 7+8):
     vec_nonfinite_to_null PLUS a dimension check — a vector whose length
     differs from the column's declared dimension (encoder version drift,
@@ -50,14 +66,20 @@ def vec_contract_to_null(c: Column | str, dim: int) -> Column:
     quietly becomes NULL), while DuckDB's list_cosine_similarity raises
     on mismatched lengths and an EMPTY list trips an INTERNAL error that
     fatally invalidates the whole database — one ragged row would kill
-    the oracle side and silently skew the Spark side."""
-    c = F.col(c) if isinstance(c, str) else c
-    nonfinite = F.exists(
-        c, lambda x: F.isnan(x) | (F.abs(x) == F.lit(float("inf")))
-    )
+    the oracle side and silently skew the Spark side. One parsed
+    expression, so building it costs a fixed few py4j round trips."""
     # size(NULL) is NULL under default sizeOfNull semantics, so a NULL
-    # vector falls through both branches to NULL, same as before
-    return F.when((F.size(c) == F.lit(dim)) & ~nonfinite, c)
+    # vector falls through both branches to NULL
+    q = sql_ident(c)
+    return F.expr(
+        f"CASE WHEN size({q}) = {int(dim)} AND NOT {_sql_has_nonfinite(c)}"
+        f" THEN {q} END"
+    )
+
+
+def sql_ident(name: str) -> str:
+    """A column name quoted for a parsed SQL expression (F.expr)."""
+    return "`" + name.replace("`", "``") + "`"
 
 
 # DuckDB mirror of vec_contract_to_null for the differential oracles:
@@ -126,22 +148,37 @@ def cosine_similarity(a: Column, b: Column) -> Column:
 
 
 def const_vec(vec: list[float]) -> Column:
-    """A constant vector as ONE Literal node (array<double>).
+    """A constant array<double> built in a fixed number of py4j round
+    trips, whatever its length.
 
-    Building it as `F.array(F.lit(x), ...)` creates dim+1 expression nodes
-    per use — with 16 centroids x 64 dims that's thousands of nodes, and
-    Catalyst analysis + whole-stage codegen compile time (a per-QUERY fixed
-    cost, pure overhead for short interactive queries) grows with tree
-    size. A single Literal carries the same ArrayData at O(1) tree size."""
-    return F.lit([float(x) for x in vec])
+    `F.lit(list)` expands to `array(lit(x1), ..., lit(xd))` on the Python
+    side, one JVM call per component (263 round trips for a 64-dim
+    vector). Here the whole vector is one parsed `array(<repr>D, ...)`
+    expression: Python's `repr` is the shortest string that round-trips
+    the double and Spark parses it with a correctly rounded
+    `Double.parseDouble`, so every component (±0.0 and subnormals too) is
+    bit-identical, and the analyzed plan is the same `array(...)` node the
+    `F.lit` form gives. ConstantFolding collapses it to one Literal in
+    the optimized plan. Non-finite components have no literal form and
+    are no valid geometry: they raise."""
+    return F.expr(sql_array(vec))
+
+
+def sql_array(vec: list[float]) -> str:
+    """`vec` as a parsed-SQL array<double> constant (see const_vec)."""
+    parts = []
+    for x in vec:
+        x = float(x)
+        if not math.isfinite(x):
+            raise ValueError(f"constant vector component is not finite: {x!r}")
+        parts.append(f"{x!r}D")
+    return "array(" + ", ".join(parts) + ")"
 
 
 def py_l2_norm(vec: list[float]) -> float:
     """Driver-side ||v||, bit-identical to `l2_norm` on the same values:
     Python `sum` and the Catalyst fold both accumulate left-to-right over
     IEEE doubles, and both sqrts are correctly rounded."""
-    import math
-
     return math.sqrt(sum(float(x) * float(x) for x in vec))
 
 

@@ -40,7 +40,17 @@ def symmetrized_edges(
     twice (guide §2.4, duplicated subtrees). A 2-struct posexplode emits
     the same multiset of rows from a single evaluation; downstream
     distinct/groupBy/window consumers are order-insensitive, so results
-    are identical."""
+    are identical. `src` and `dst` must differ, and no carry column may
+    be named like an output or helper column (`u`, `v`, `__uv`): either
+    would silently pair a node with itself or shadow an endpoint."""
+    if src == dst:
+        raise ValueError(f"symmetrized_edges: src and dst are both {src!r}")
+    clash = sorted(set(carry) & {"u", "v", "__uv"})
+    if clash:
+        raise ValueError(
+            f"symmetrized_edges: carry columns {clash} collide with the "
+            "output columns u, v or the helper column __uv"
+        )
     both = F.explode(
         F.array(
             F.struct(F.col(src).alias("u"), F.col(dst).alias("v")),

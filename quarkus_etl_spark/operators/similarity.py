@@ -22,11 +22,12 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.vectors import (
-    const_vec,
     cosine_to_const,
     dot_product,
     guarded_cosine,
     l2_norm,
+    sql_array,
+    sql_ident,
     to_double_array,
 )
 from ..plans.tuning import ensure_parallelism, log_route, routing_count
@@ -225,19 +226,29 @@ def _vec_dim(df: DataFrame, vec_col: str) -> int:
 def add_lsh_bucket(
     df: DataFrame, vec_col: str, planes: list[list[float]], out_col: str = "bucket"
 ) -> DataFrame:
-    """Sign-bit bucket id from the hyperplane dot products (pure Column
-    algebra — one pass, codegen'd)."""
-    v = to_double_array(vec_col)
-    bucket = None
-    for i, p in enumerate(planes):
-        dot = F.aggregate(
-            F.zip_with(v, const_vec(p), lambda x, y: x * y), F.lit(0.0), lambda a, x: a + x
-        )
-        # bigint, not int: the auto-sized plane count grows with data volume
-        # and 1 << i exceeds int32 from i=31 (ANSI mode would error the cast).
-        bit = F.when(dot >= 0, F.lit(1 << i)).otherwise(F.lit(0)).cast("bigint")
-        bucket = bit if bucket is None else bucket + bit
-    return df.withColumn(out_col, bucket)
+    """Sign-bit bucket id from the hyperplane dot products: bit i is set iff
+    dot(v, planes[i]) >= 0 (a NULL or ragged vector sets no bit). One
+    parsed expression over ONE plane-matrix constant — a transform over
+    the planes whose dot is `dot_product`'s left-to-right zip_with /
+    aggregate fold — so building it costs a fixed few py4j round trips
+    for any plane count and dim (a Column expression per plane cost ~270
+    round trips each). The lambda variables carry a `__lsh_` prefix:
+    inside a lambda they would shadow a column of the same name."""
+    v = f"CAST({sql_ident(vec_col)} AS ARRAY<DOUBLE>)"
+    dot = (
+        f"aggregate(zip_with({v}, __lsh_p, (__lsh_x, __lsh_y) -> __lsh_x * __lsh_y),"
+        " 0D, (__lsh_s, __lsh_x) -> __lsh_s + __lsh_x)"
+    )
+    plane_mat = "array(" + ", ".join(sql_array(p) for p in planes) + ")"
+    # bigint, not int: the auto-sized plane count grows with data volume
+    # and 1 << i exceeds int32 from i=31.
+    bits = (
+        f"transform({plane_mat},"
+        f" (__lsh_p, __lsh_i) -> IF({dot} >= 0, shiftleft(1L, __lsh_i), 0L))"
+    )
+    return df.withColumn(
+        out_col, F.expr(f"aggregate({bits}, 0L, (__lsh_s, __lsh_b) -> __lsh_s + __lsh_b)")
+    )
 
 
 def _bucket_of(probe: list[float], planes: list[list[float]]) -> int:

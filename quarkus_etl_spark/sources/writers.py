@@ -19,6 +19,20 @@ def write_dataframe(df: DataFrame, target: WriteTarget) -> None:
     fmt = target.format.lower()
     if fmt == "jdbc":
         opts = {"batchsize": str(REFERENCE_BATCH_SIZE), **target.options}
+        # Spark's JDBC sink applies `numPartitions` by calling
+        # df.rdd.getNumPartitions before its write. Spark 4.1 builds
+        # Dataset.rdd inside a SQL execution of its own, which ends before
+        # any row is read, and an Observation completes from the first
+        # execution that ends: JobResult.rows read 0 for every such sink.
+        # The same cap as a coalesce of our own plan keeps the count and
+        # adds no Spark job: coalesce(n) never raises the partition
+        # count, exactly like the option.
+        n_key = next((k for k in opts if k.lower() == "numpartitions"), None)
+        if n_key is not None:
+            n = int(opts.pop(n_key))
+            if n <= 0:
+                raise ValueError(f"jdbc numPartitions must be positive, got {n}")
+            df = df.coalesce(n)
         df.write.format("jdbc").options(**opts).mode(target.mode).save()
         return
     if fmt == "table":

@@ -292,3 +292,25 @@ def test_write_bench_out_unwritable_path_warns_not_raises(tmp_path, monkeypatch,
     monkeypatch.setenv("SPARK_GRAFT_BENCH_OUT", str(tmp_path / "no_dir" / "x.json"))
     bench._write_bench_out({"queries": {}})
     assert "could not write" in capsys.readouterr().err
+
+
+def test_ab12_rejects_unknown_query_before_starting_spark(monkeypatch, capsys):
+    """A misspelt query name fails at argument parsing, naming the query,
+    before any Spark session starts (the warm-up used to swallow the
+    KeyError, and the timed loop died on it after the whole warm-up)."""
+    import sys
+
+    import pytest
+
+    import quarkus_etl_spark.session as session
+    from tools import ab12
+
+    def no_spark(*args, **kwargs):
+        raise AssertionError("Spark started before the names were checked")
+
+    monkeypatch.setattr(session, "get_spark", no_spark)
+    monkeypatch.setattr(sys, "argv", ["ab12", "g", "q_sim_ann_lsh", "q_no_such_query"])
+    with pytest.raises(SystemExit) as exc:
+        ab12.main()
+    assert exc.value.code == 2
+    assert "q_no_such_query" in capsys.readouterr().err

@@ -116,6 +116,51 @@ def test_jdbc_to_jdbc_reference_job_live(spark, derby_url, seeded_nation):
     assert back.agg(F.max("N_NATIONKEY")).first()[0] == 9
 
 
+@pytest.mark.parametrize("num_partitions", [None, 2, 8, 16])
+def test_job_rows_counted_for_jdbc_sink_with_num_partitions_live(
+    spark, derby_url, num_partitions
+):
+    """JobResult.rows counts a JDBC sink's rows whatever its
+    `numPartitions`. Spark's own handling of that option (a
+    df.rdd.getNumPartitions call before the write, which Spark runs as a
+    SQL execution of its own) completed the job's row Observation at 0,
+    even where nothing was coalesced (16 > 8 partitions); the writer now
+    applies the cap as a coalesce of its own plan."""
+    spark.range(5000).repartition(8).selectExpr(
+        "id AS ID", "id * 2 AS V"
+    ).createOrReplaceTempView("rows_src")
+    table = f"ROWS_NP_{num_partitions or 0}"
+    opts = jdbc_write_options(derby_url, table, driver=DERBY_DRIVER)
+    if num_partitions:
+        opts["numPartitions"] = str(num_partitions)
+    job = EtlJob(
+        name=f"rows_np_{num_partitions}",
+        extract="SELECT * FROM rows_src",
+        write=WriteTarget(format="jdbc", mode="overwrite", options=opts),
+    )
+    (result,) = JobRunner(spark).run([job])
+    back = read_jdbc(spark, derby_url, table=table, driver=DERBY_DRIVER)
+    assert result.rows == 5000
+    assert back.count() == 5000
+    assert back.agg(F.sum("V")).first()[0] == 2 * sum(range(5000))
+
+
+def test_jdbc_sink_rejects_non_positive_num_partitions(spark, derby_url):
+    job = EtlJob(
+        name="rows_np_0",
+        extract="SELECT 1 AS ID",
+        write=WriteTarget(
+            format="jdbc",
+            mode="overwrite",
+            options={**jdbc_write_options(derby_url, "ROWS_NP_BAD",
+                                          driver=DERBY_DRIVER),
+                     "numPartitions": "0"},
+        ),
+    )
+    with pytest.raises(ValueError, match="numPartitions"):
+        JobRunner(spark).run([job])
+
+
 def test_streaming_etl_into_jdbc_live(spark, sf_dir, derby_url, tmp_path):
     """The reference's consumer loop, live AND streaming: a file stream
     micro-batched through foreachBatch into Derby via the batched JDBC

@@ -364,6 +364,8 @@ def test_vec_nonfinite_to_null_is_missing(spark):
             (5, None),                   # NULL stays NULL
             (6, [-0.0, 0.0]),            # signed zero passes (zero-norm path)
             (7, [5e-324, 1.0]),          # subnormal passes
+            (8, [1.0, None]),            # NULL component -> NULL
+            (9, [None, float("nan")]),   # NULL and NaN -> NULL
         ],
         "id long, a array<double>",
     )
@@ -382,6 +384,7 @@ def test_vec_nonfinite_to_null_is_missing(spark):
     assert out[4] == (None, None) and out[5] == (None, None)
     assert out[6][0] == [-0.0, 0.0] and out[6][1] == 0.0  # zero-norm -> 0.0
     assert out[7][0] == [5e-324, 1.0] and out[7][1] is not None
+    assert out[8] == (None, None) and out[9] == (None, None)
 
 
 def test_vec_contract_dim_leg_rejects_ragged_and_empty(spark):
@@ -392,24 +395,47 @@ def test_vec_contract_dim_leg_rejects_ragged_and_empty(spark):
     raise on ragged input while an EMPTY list fatally invalidates the
     whole database, so the structural exclusion must happen before any
     vector math in BOTH engines (SQL_EMB_FINITE carries the len()=dim
-    conjunct)."""
+    conjunct). Checked on array<double> and on the fixtures' array<float>."""
     from quarkus_etl_spark.functions.vectors import vec_contract_to_null
 
-    df = spark.createDataFrame(
-        [
-            (1, [1.0, 2.0, 3.0]),        # contract dim -> unchanged
-            (2, [1.0, 2.0]),             # truncated -> NULL
-            (3, [1.0, 2.0, 3.0, 4.0]),   # over-long -> NULL
-            (4, []),                     # empty (≠ NULL upstream) -> NULL
-            (5, None),                   # NULL stays NULL
-            (6, [float("nan"), 1.0, 2.0]),  # non-finite leg still applies
-        ],
-        "id long, a array<double>",
+    rows = [
+        (1, [1.0, 2.0, 3.0]),        # contract dim -> unchanged
+        (2, [1.0, 2.0]),             # truncated -> NULL
+        (3, [1.0, 2.0, 3.0, 4.0]),   # over-long -> NULL
+        (4, []),                     # empty (≠ NULL upstream) -> NULL
+        (5, None),                   # NULL stays NULL
+        (6, [float("nan"), 1.0, 2.0]),  # non-finite leg still applies
+        (7, [1.0, float("-inf"), 2.0]),
+        (8, [1.0, None, 2.0]),       # NULL component -> NULL
+        (9, [None, None, None]),
+        (10, [None, 1.0]),           # ragged AND a NULL component
+        (11, [-0.0, 5e-45, 0.0]),    # signed zero, float subnormal pass
+    ]
+    for elem in ("double", "float"):
+        df = spark.createDataFrame(rows, f"id long, a array<{elem}>")
+        out = {
+            r["id"]: r["g"]
+            for r in df.select(
+                "id", vec_contract_to_null("a", 3).alias("g")
+            ).collect()
+        }
+        kept = out.pop(11)
+        assert kept is not None and str(kept[0]) == "-0.0" and 0.0 < kept[1] < 1e-44
+        assert out == {1: [1.0, 2.0, 3.0], 2: None, 3: None, 4: None, 5: None,
+                       6: None, 7: None, 8: None, 9: None, 10: None}, elem
+
+
+def test_vec_guard_is_one_parsed_expression(spark, round_trips):
+    """The load-time guard is built in a fixed few py4j round trips (the
+    Python-lambda form made ~100 on every emb() call) and carries no
+    higher-order function, which would evaluate interpreted per row."""
+    from quarkus_etl_spark.functions.vectors import (
+        vec_contract_to_null,
+        vec_nonfinite_to_null,
     )
-    out = {
-        r["id"]: r["g"]
-        for r in df.select(
-            "id", vec_contract_to_null("a", 3).alias("g")
-        ).collect()
-    }
-    assert out == {1: [1.0, 2.0, 3.0], 2: None, 3: None, 4: None, 5: None, 6: None}
+
+    assert round_trips(lambda: vec_contract_to_null("embedding", 64)) <= 10
+    assert round_trips(lambda: vec_nonfinite_to_null("embedding")) <= 10
+    df = spark.createDataFrame([([1.0],)], "embedding array<float>")
+    plan = df.select(vec_contract_to_null("embedding", 1))._jdf.queryExecution()
+    assert "lambdafunction" not in plan.analyzed().toString().lower()

@@ -419,6 +419,30 @@ def test_connected_components_chain_and_islands(spark):
     assert len(comp) == 12 + 3 + 2
 
 
+@pytest.mark.parametrize(
+    "src, dst, carry, match",
+    [
+        ("id_a", "id_a", (), "src and dst"),
+        ("id_a", "id_b", ("u",), "collide"),
+        ("id_a", "id_b", ("w", "v"), "collide"),
+        ("id_a", "id_b", ("__uv",), "collide"),
+    ],
+)
+def test_symmetrized_edges_rejects_ambiguous_columns(spark, src, dst, carry, match):
+    """src == dst would pair every node with itself, and a carry column
+    named u, v or __uv would shadow an endpoint: both raise at build."""
+    from quarkus_etl_spark.operators.cluster import symmetrized_edges
+
+    pairs = spark.createDataFrame(
+        [(1, 2, 0.5, 0.5, 0.5, 0.5)],
+        "id_a long, id_b long, u double, v double, w double, __uv double",
+    )
+    with pytest.raises(ValueError, match=match):
+        symmetrized_edges(pairs, src, dst, carry)
+    out = symmetrized_edges(pairs, "id_a", "id_b", ("w",)).collect()
+    assert sorted(map(tuple, out)) == [(1, 2, 0.5), (2, 1, 0.5)]
+
+
 def test_dedup_keep_canonical(spark):
     from quarkus_etl_spark.operators.cluster import dedup_keep_canonical
 

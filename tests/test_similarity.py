@@ -1,3 +1,4 @@
+import pytest
 
 
 def test_knn_graph_ann_recall(spark, sf_dir):
@@ -152,3 +153,76 @@ def test_knn_graph_ann_zero_and_null_vector_duplicates(spark):
         fellows = [r for r in by_src[s] if r["nbr"] in (100, 101, 102)]
         assert len(fellows) == 2
         assert all(r["cosine"] == 1.0 for r in fellows)
+
+
+@pytest.mark.parametrize("n_planes", [8, 33])
+def test_add_lsh_bucket_matches_driver_bucket_of(spark, sf_dir, n_planes):
+    """The one-expression bucket column sets exactly the bits the
+    driver-side `_bucket_of` computes, for every fixture embedding — with
+    33 planes too, where bit 32 only fits a bigint. A NULL vector sets no
+    bit."""
+    from quarkus_etl_spark.catalog import load_table
+    from quarkus_etl_spark.operators.similarity import (
+        _bucket_of,
+        add_lsh_bucket,
+        random_hyperplanes,
+    )
+
+    e = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+    planes = random_hyperplanes(64, n_planes, seed=n_planes)
+    rows = add_lsh_bucket(e, "embedding", planes).collect()
+    assert rows
+    want = {
+        r["vec_id"]: 0 if r["embedding"] is None
+        else _bucket_of([float(x) for x in r["embedding"]], planes)
+        for r in rows
+    }
+    assert {r["vec_id"]: r["bucket"] for r in rows} == want
+    if n_planes > 32:
+        assert max(want.values()) >= 1 << 32
+
+
+def test_const_vec_round_trips_do_not_grow_with_dim(spark, round_trips):
+    """A constant vector costs the same py4j round trips at dim 4 and 256
+    (F.lit(list) made one call per component), and an LSH bucket the same
+    at 8 planes and 33 (one dot-product expression per plane made ~270
+    calls each)."""
+    from quarkus_etl_spark.functions.vectors import const_vec
+    from quarkus_etl_spark.operators.similarity import (
+        add_lsh_bucket,
+        random_hyperplanes,
+    )
+
+    def fewest(fn):
+        return min(round_trips(fn) for _ in range(3))
+
+    assert fewest(lambda: const_vec([0.5] * 4)) == fewest(
+        lambda: const_vec([0.5] * 256)
+    )
+    df = spark.createDataFrame([([1.0] * 64,)], "v array<float>")
+    few, many = (random_hyperplanes(64, p) for p in (8, 33))
+    assert fewest(lambda: add_lsh_bucket(df, "v", few)) == fewest(
+        lambda: add_lsh_bucket(df, "v", many)
+    )
+
+
+def test_const_vec_is_bit_exact_and_rejects_non_finite(spark):
+    """Every component survives the parsed literal bit for bit: signed
+    zeros, subnormals, the extremes of the double range and values with
+    17 significant digits. NaN and ±Inf raise at build time."""
+    import random
+    import struct
+
+    from quarkus_etl_spark.functions.vectors import const_vec
+
+    rng = random.Random(7)
+    vec = [0.0, -0.0, 5e-324, -5e-324, 2.2250738585072014e-308, 1e-300,
+           -1e300, 1.7976931348623157e308, 0.1, -0.30000000000000004]
+    vec += [rng.gauss(0.0, 1.0) for _ in range(200)]
+    vec += [struct.unpack(">d", rng.randbytes(8))[0] for _ in range(200)]
+    vec = [x for x in vec if x == x and abs(x) != float("inf")]
+    got = spark.range(1).select(const_vec(vec).alias("c")).first()["c"]
+    assert [struct.pack(">d", x) for x in got] == [struct.pack(">d", x) for x in vec]
+    for bad in (float("nan"), float("inf"), float("-inf")):
+        with pytest.raises(ValueError, match="not finite"):
+            const_vec([1.0, bad])

@@ -20,9 +20,12 @@ Usage:
 from __future__ import annotations
 
 import argparse
+import logging
 import os
 import statistics
 import time
+
+log = logging.getLogger("tools.ab12")
 
 
 def main() -> None:
@@ -37,11 +40,16 @@ def main() -> None:
     args = parser.parse_args()
 
     from quarkus_etl_spark.queries import all_query_callables
+
+    queries = all_query_callables()
+    unknown = [name for name in args.queries if name not in queries]
+    if unknown:
+        parser.error(f"unknown queries: {', '.join(unknown)}")
+
     from quarkus_etl_spark.session import get_spark
 
     spark = get_spark("ab12")
     spark.sparkContext.setLogLevel("ERROR")
-    queries = all_query_callables()
 
     def materialize(df):
         df.write.format("noop").mode("overwrite").save()
@@ -72,7 +80,8 @@ def main() -> None:
                 os.environ.pop(k, None)
 
     # codegen warm-up for BOTH shapes at the tiny SF, so neither side's
-    # first timed pass pays first-compile
+    # first timed pass pays first-compile. A failure here is logged, not
+    # fatal: the timed pass at the real SF reports it if it persists.
     tiny = "/root/testdata/sf0.001"
     for side in ("base", "var"):
         set_side(side)
@@ -80,7 +89,7 @@ def main() -> None:
             try:
                 materialize(queries[name](spark, tiny))
             except Exception:  # noqa: BLE001
-                pass
+                log.exception("warm-up of %s (%s side) failed", name, side)
 
     times: dict[tuple[str, str], list[float]] = {}
     for pair in range(args.pairs):
