@@ -12,6 +12,7 @@ Design rules for scale:
 
 from __future__ import annotations
 
+import logging
 from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
@@ -30,6 +31,8 @@ from ..vendor import ensure_protobuf
 # Prefers a real protobuf install; the vendored minimal runtime only fills
 # the gap (quarkus_etl_spark/vendor/gproto).
 ensure_protobuf()
+
+log = logging.getLogger("quarkus_etl_spark.streaming")
 
 # Watermarks require TIMESTAMP (instant) semantics — Spark rejects
 # TIMESTAMP_NTZ event time — so streaming schemas use `timestamp`; with the
@@ -175,7 +178,14 @@ def state_partitions(
 
     if n is None and expected_keys is not None:
         upper = int(spark.conf.get("spark.sql.shuffle.partitions"))
-        n = max(1, min(upper, -(-int(expected_keys) // KEYS_PER_STATE_PARTITION)))
+        wanted = -(-int(expected_keys) // KEYS_PER_STATE_PARTITION)
+        if wanted > upper:
+            log.warning(
+                "state_partitions: expected_keys=%d asks for %d state "
+                "partitions; clamped to spark.sql.shuffle.partitions=%d",
+                expected_keys, wanted, upper,
+            )
+        n = max(1, min(upper, wanted))
     if n is None:
         raw = os.environ.get("SPARK_GRAFT_STREAM_STATE_PARTITIONS", "4")
         try:
@@ -190,18 +200,26 @@ def state_partitions(
     # in executor memory with full-snapshot versioning; RocksDB keeps it
     # off-heap with incremental versioning — the scale choice when state
     # outgrows memory. A streaming query pins the provider at first start,
-    # so it must wrap the START like the partition count.
+    # so it must wrap the START like the partition count. `hdfs` sets its
+    # provider explicitly: a session already carrying RocksDB would
+    # otherwise silently keep it (ADVICE r12). Unset leaves the session's
+    # provider alone.
     provider = (
         os.environ.get("SPARK_GRAFT_STREAM_STATE_PROVIDER", "").strip().lower()
     )
     provider_conf = "spark.sql.streaming.stateStore.providerClass"
     new_provider = None
-    if provider in ("rocksdb",):
+    if provider == "rocksdb":
         new_provider = (
             "org.apache.spark.sql.execution.streaming.state."
             "RocksDBStateStoreProvider"
         )
-    elif provider not in ("", "hdfs", "default"):
+    elif provider in ("hdfs", "default"):
+        new_provider = (
+            "org.apache.spark.sql.execution.streaming.state."
+            "HDFSBackedStateStoreProvider"
+        )
+    elif provider:
         raise ValueError(
             "SPARK_GRAFT_STREAM_STATE_PROVIDER must be 'rocksdb', 'hdfs' or "
             f"unset, got {provider!r}"

@@ -1,4 +1,5 @@
-"""Pins for bench.py's self-normalizing vs_prev section (VERDICT r7 #4).
+"""Pins for bench.py's self-normalizing vs_prev section (VERDICT r7 #4)
+and the shared artifact code in tools/harness.py.
 
 Sessionless: exercises the artifact-comparison arithmetic and the
 tail-only-record salvage without starting Spark or running the bench.
@@ -6,14 +7,20 @@ tail-only-record salvage without starting Spark or running the bench.
 
 import json
 import os
+import sys
+
+import pytest
 
 import bench
+from tools import bench_compare, harness
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def test_vs_prev_self_compare_is_identity(tmp_path, monkeypatch):
     prev = {
         "queries": {"q_a": 1.0, "q_b": 2.0, "q_err": -1.0},
-        "calib_sec": 0.15,
+        "calib3_sec": 0.15,
     }
     p = tmp_path / "prev.json"
     p.write_text(json.dumps(prev))
@@ -29,12 +36,13 @@ def test_vs_prev_self_compare_is_identity(tmp_path, monkeypatch):
 def test_vs_prev_host_drift_cancels(tmp_path, monkeypatch):
     """2x wall on every query at 2x calib = pure host drift: normalized 1.0,
     nothing flagged (the exact ambiguity VERDICT r7 'what's wrong #1' hit)."""
-    prev = {"queries": {"q_a": 1.0, "q_b": 4.0}, "calib_sec": 0.10}
+    prev = {"queries": {"q_a": 1.0, "q_b": 4.0}, "calib3_sec": 0.10}
     p = tmp_path / "prev.json"
     p.write_text(json.dumps(prev))
     monkeypatch.setenv("SPARK_GRAFT_BENCH_PREV", str(p))
     sec = bench._vs_prev_section({"q_a": 2.0, "q_b": 8.0}, 0.20)
     assert sec["host_ratio_vs_prev"] == 2.0
+    assert sec["calib_probe_used"] == "v3"
     assert sec["raw_ratio_vs_prev"] == 2.0
     assert sec["normalized_vs_prev"] == 1.0
     assert sec["flagged_regressions"] == []
@@ -42,7 +50,7 @@ def test_vs_prev_host_drift_cancels(tmp_path, monkeypatch):
 
 def test_vs_prev_flags_real_regression_at_compare_bar(tmp_path, monkeypatch):
     """>=1.4x AND >=0.5 s host-normalized — the tools/bench_compare.py bar."""
-    prev = {"queries": {"q_slow": 1.0, "q_small": 0.1, "q_ok": 3.0}, "calib_sec": 0.1}
+    prev = {"queries": {"q_slow": 1.0, "q_small": 0.1, "q_ok": 3.0}, "calib3_sec": 0.1}
     p = tmp_path / "prev.json"
     p.write_text(json.dumps(prev))
     monkeypatch.setenv("SPARK_GRAFT_BENCH_PREV", str(p))
@@ -61,7 +69,7 @@ def test_vs_prev_cc_noise_family_annotated_not_flagged(tmp_path, monkeypatch):
     prev = {
         "queries": {"q_dedup_cluster": 2.0, "q_graph_label_prop": 2.0,
                     "q_slow": 1.0},
-        "calib_sec": 0.1,
+        "calib3_sec": 0.1,
     }
     p = tmp_path / "prev.json"
     p.write_text(json.dumps(prev))
@@ -78,7 +86,7 @@ def test_vs_prev_cc_noise_family_annotated_not_flagged(tmp_path, monkeypatch):
          "expected_bound": 1.8}
     ]
     # every frozen name is a registered bench query name (no typos rotting)
-    assert set(bench.CC_NOISE_EXPECTED_SPREAD) == {
+    assert set(harness.CC_NOISE_EXPECTED_SPREAD) == {
         "q_dedup_cluster", "q_dedup_soft", "q_dedup_canonical",
         "q_dedup_canonical_best", "q_graph_label_prop",
         # r11 addition: measured 2.19x same-session spread (bound 2.4)
@@ -88,84 +96,88 @@ def test_vs_prev_cc_noise_family_annotated_not_flagged(tmp_path, monkeypatch):
 
 def test_load_prev_salvages_driver_tail_record(tmp_path):
     """Driver BENCH records keep only the tail of the JSON line; the loader
-    must salvage '"q_*": secs' pairs and the calib from the raw tail text."""
-    tail = '0.91, "q_topk": 0.35, "q_agg_global": 0.22, "calib_sec": 0.175, "total_sec": 158.4}'
+    must salvage '"q_*": secs' pairs and the calib3 from the raw tail text."""
+    tail = (
+        '0.91, "q_topk": 0.35, "q_agg_global": 0.22, "calib_sec": 0.175, '
+        '"calib3_sec": 0.7496, "total_sec": 158.4}'
+    )
     p = tmp_path / "tail.json"
     p.write_text(json.dumps({"parsed": None, "tail": tail}))
-    loaded = bench._load_prev_artifact(str(p))
-    assert loaded is not None
-    qs, calib, calib2, calib3 = loaded
-    assert qs == {"q_topk": 0.35, "q_agg_global": 0.22}
-    assert calib == 0.175
-    assert calib2 is None and calib3 is None  # pre-v2/v3 artifact
+    assert harness.load_artifact(str(p)) == (
+        {"q_topk": 0.35, "q_agg_global": 0.22}, 0.7496
+    )
+    # a pre-r10 tail carries no calib3
+    p.write_text(json.dumps({"parsed": None, "tail": tail.replace("calib3", "x")}))
+    assert harness.load_artifact(str(p))[1] is None
 
 
 def test_load_prev_missing_or_corrupt_is_none(tmp_path):
-    assert bench._load_prev_artifact(str(tmp_path / "nope.json")) is None
+    assert harness.load_artifact(str(tmp_path / "nope.json")) is None
     p = tmp_path / "bad.json"
     p.write_text("{not json")
-    assert bench._load_prev_artifact(str(p)) is None
+    assert harness.load_artifact(str(p)) is None
 
 
 def test_committed_artifact_round_trips_through_vs_prev(monkeypatch):
     """The committed bench_out.json must always be loadable as a prev
-    artifact (the default comparison source for the next round's run)."""
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    path = os.path.join(repo, "bench_out.json")
-    loaded = bench._load_prev_artifact(path)
+    artifact (the default comparison source for the next round's run), and
+    compare against itself through its calib3 probe."""
+    loaded = harness.load_artifact(os.path.join(REPO, "bench_out.json"))
     assert loaded is not None
-    qs, calib, calib2, calib3 = loaded
-    assert len(qs) >= 240 and calib and calib > 0
+    qs, calib3 = loaded
+    assert len(qs) >= 240 and calib3 == 0.8684
     monkeypatch.delenv("SPARK_GRAFT_BENCH_PREV", raising=False)
-    sec = bench._vs_prev_section(dict(qs), calib, calib2, calib3)
+    sec = bench._vs_prev_section(dict(qs), calib3)
     assert sec["normalized_vs_prev"] == 1.0 and sec["flagged_regressions"] == []
+    assert sec["calib_probe_used"] == "v3"
 
 
-def test_vs_prev_prefers_low_variance_v2_probe(tmp_path, monkeypatch):
-    """When BOTH artifacts carry the v2 probe, normalization uses it (the
-    v1 min-of-3 probe measured 0.197 vs 0.141 across same-code runs with
-    flat query totals — probe plans differ, so v1/v2 values never mix)."""
+def test_vs_prev_pre_r10_artifact_normalizes_at_host_one(tmp_path, monkeypatch):
+    """Only the calib3 probe normalizes. A pre-r10 artifact (v1 calib_sec /
+    v2 calib2_sec only, BENCH_r01-r09) compares at host 1.0 with no probe
+    named, whatever its legacy probes say; so does a new side without
+    calib3."""
     prev = {"queries": {"q_a": 1.0}, "calib_sec": 0.10, "calib2_sec": 0.70}
     p = tmp_path / "prev.json"
     p.write_text(json.dumps(prev))
     monkeypatch.setenv("SPARK_GRAFT_BENCH_PREV", str(p))
-    # v1 says host 2x slower; v2 says unchanged — v2 must win
-    sec = bench._vs_prev_section({"q_a": 1.0}, 0.20, 0.70)
-    assert sec["calib_probe_used"] == "v2"
+    sec = bench._vs_prev_section({"q_a": 2.0}, 0.60)
+    assert sec["calib_probe_used"] is None
     assert sec["host_ratio_vs_prev"] == 1.0
-    assert sec["normalized_vs_prev"] == 1.0
-    # v2 missing on one side: falls back to v1
-    sec = bench._vs_prev_section({"q_a": 1.0}, 0.20, None)
-    assert sec["calib_probe_used"] == "v1"
-    assert sec["host_ratio_vs_prev"] == 2.0
+    assert sec["normalized_vs_prev"] == 2.0
+    assert "prev_calib_sec" not in sec and "prev_calib2_sec" not in sec
+    p.write_text(json.dumps({"queries": {"q_a": 1.0}, "calib3_sec": 0.60}))
+    sec = bench._vs_prev_section({"q_a": 2.0}, None)
+    assert sec["calib_probe_used"] is None and sec["normalized_vs_prev"] == 2.0
 
 
-def test_vs_prev_prefers_in_window_v3_probe(tmp_path, monkeypatch):
-    """When BOTH artifacts carry the v3 (interleaved, in-window) probe,
-    normalization uses it over v2 (r10: edge-sampled v2 medians moved 25%
-    across same-code runs whose per-query medians were flat at 1.00);
-    pre-v3 snapshots (3-tuples) must still load and fall back to v2."""
-    prev = {
-        "queries": {"q_a": 1.0},
-        "calib_sec": 0.10, "calib2_sec": 0.70, "calib3_sec": 0.60,
-    }
-    p = tmp_path / "prev.json"
-    p.write_text(json.dumps(prev))
-    monkeypatch.setenv("SPARK_GRAFT_BENCH_PREV", str(p))
-    # v2 says host 2x slower; v3 says unchanged — v3 must win
-    sec = bench._vs_prev_section({"q_a": 1.0}, 0.10, 1.40, 0.60)
+def test_bench_compare_agrees_with_vs_prev_on_committed_pair(monkeypatch, capsys):
+    """bench_compare and bench.py's vs_prev read the same artifacts the same
+    way: on BENCH_r12.json -> bench_out.json both normalize by calib3 and
+    report the same ratio, regressions and expected-variance entries."""
+    old = os.path.join(REPO, "BENCH_r12.json")
+    new = os.path.join(REPO, "bench_out.json")
+    qs, calib3 = harness.load_artifact(new)
+    sec = bench._vs_prev_section(
+        qs, calib3, prev=harness.load_artifact(old), path=old
+    )
     assert sec["calib_probe_used"] == "v3"
-    assert sec["host_ratio_vs_prev"] == 1.0
-    assert sec["normalized_vs_prev"] == 1.0
-    # v3 missing on the new side: falls back to v2
-    sec = bench._vs_prev_section({"q_a": 1.0}, 0.10, 1.40, None)
-    assert sec["calib_probe_used"] == "v2"
-    assert sec["host_ratio_vs_prev"] == 2.0
-    # legacy 3-tuple snapshot (pre-v3 bench.py pickled shape): still works
-    snap = ({"q_a": 1.0}, 0.10, 0.70)
-    sec = bench._vs_prev_section({"q_a": 1.0}, 0.10, 0.70, 0.60, prev=snap, path=str(p))
-    assert sec["calib_probe_used"] == "v2"
-    assert sec["normalized_vs_prev"] == 1.0
+    assert sec["normalized_vs_prev"] == 1.0961
+    assert sec["flagged_regressions"] == ["q_dedup_cluster", "q_gen_pysource"]
+    assert [e["query"] for e in sec["expected_variance"]] == ["q_dedup_soft"]
+
+    monkeypatch.setattr(sys, "argv", ["bench_compare", old, new])
+    with pytest.raises(SystemExit) as exc:
+        bench_compare.main()
+    assert exc.value.code == 1
+    lines = capsys.readouterr().out.splitlines()
+    assert any("1.0961x host-normalized" in line for line in lines)
+
+    def tagged(tag):
+        return [line.split()[1] for line in lines if line.startswith(tag)]
+
+    assert tagged("REGRESSION") == sec["flagged_regressions"]
+    assert tagged("expected-var") == [e["query"] for e in sec["expected_variance"]]
 
 
 def test_load_prev_empty_file_warns_and_returns_none(tmp_path, capsys):
@@ -174,8 +186,12 @@ def test_load_prev_empty_file_warns_and_returns_none(tmp_path, capsys):
     (ADVICE r8)."""
     p = tmp_path / "empty.json"
     p.write_text("")
-    assert bench._load_prev_artifact(str(p)) is None
-    assert "EMPTY" in capsys.readouterr().err
+    assert harness.load_artifact(str(p)) is None
+    err = capsys.readouterr().err
+    assert "EMPTY" in err and "SPARK_GRAFT_BENCH_PREV" not in err  # neutral
+    # bench.py, whose redirect workflow causes it, adds the remedy
+    assert bench._load_prev(str(p)) is None
+    assert "SPARK_GRAFT_BENCH_PREV" in capsys.readouterr().err
 
 
 def test_vs_prev_uses_startup_snapshot_not_lazy_read(tmp_path):
@@ -183,10 +199,10 @@ def test_vs_prev_uses_startup_snapshot_not_lazy_read(tmp_path):
     section must honor a passed snapshot even if the file has since been
     truncated (the redirect workflow)."""
     p = tmp_path / "prev.json"
-    p.write_text(json.dumps({"queries": {"q_a": 1.0}, "calib_sec": 0.1}))
-    snap = bench._load_prev_artifact(str(p))
+    p.write_text(json.dumps({"queries": {"q_a": 1.0}, "calib3_sec": 0.1}))
+    snap = harness.load_artifact(str(p))
     p.write_text("")  # the shell redirect's truncation
-    sec = bench._vs_prev_section({"q_a": 1.0}, 0.1, None, prev=snap, path=str(p))
+    sec = bench._vs_prev_section({"q_a": 1.0}, 0.1, prev=snap, path=str(p))
     assert sec["normalized_vs_prev"] == 1.0
 
 
@@ -278,7 +294,7 @@ def test_write_bench_out_writes_full_artifact(tmp_path, monkeypatch):
     assert json.loads(out.read_text()) == result
     # the written file itself parses as a prev artifact (per-query baseline
     # survives any stdout truncation)
-    loaded = bench._load_prev_artifact(str(out))
+    loaded = harness.load_artifact(str(out))
     assert loaded is not None and loaded[0] == result["queries"]
 
 
@@ -298,10 +314,6 @@ def test_ab12_rejects_unknown_query_before_starting_spark(monkeypatch, capsys):
     """A misspelt query name fails at argument parsing, naming the query,
     before any Spark session starts (the warm-up used to swallow the
     KeyError, and the timed loop died on it after the whole warm-up)."""
-    import sys
-
-    import pytest
-
     import quarkus_etl_spark.session as session
     from tools import ab12
 
@@ -309,8 +321,16 @@ def test_ab12_rejects_unknown_query_before_starting_spark(monkeypatch, capsys):
         raise AssertionError("Spark started before the names were checked")
 
     monkeypatch.setattr(session, "get_spark", no_spark)
-    monkeypatch.setattr(sys, "argv", ["ab12", "g", "q_sim_ann_lsh", "q_no_such_query"])
+    monkeypatch.setattr(
+        sys, "argv", ["ab12", "K=V", "q_sim_ann_lsh", "q_no_such_query"]
+    )
     with pytest.raises(SystemExit) as exc:
         ab12.main()
     assert exc.value.code == 2
     assert "q_no_such_query" in capsys.readouterr().err
+    # a plain token (no env assignment) is rejected the same way
+    monkeypatch.setattr(sys, "argv", ["ab12", "K=V,g", "q_sim_ann_lsh"])
+    with pytest.raises(SystemExit) as exc:
+        ab12.main()
+    assert exc.value.code == 2
+    assert "not K=V env assignments: g" in capsys.readouterr().err

@@ -1015,3 +1015,52 @@ def test_state_partitions_env_parse_error_names_variable(spark, monkeypatch):
     with _pytest.raises(ValueError, match="SPARK_GRAFT_STREAM_STATE_PARTITIONS"):
         with state_partitions(spark):
             pass
+
+
+def test_state_partitions_hdfs_provider_replaces_session_rocksdb(spark, monkeypatch):
+    """SPARK_GRAFT_STREAM_STATE_PROVIDER=hdfs (or default) sets the
+    HDFS-backed provider explicitly, so a session already carrying RocksDB
+    does not silently keep it; the session's provider is restored on exit,
+    and with the variable unset it is left alone."""
+    from quarkus_etl_spark.streaming.streams import state_partitions
+
+    conf = "spark.sql.streaming.stateStore.providerClass"
+    pkg = "org.apache.spark.sql.execution.streaming.state."
+    prev = spark.conf.get(conf, None)
+    spark.conf.set(conf, pkg + "RocksDBStateStoreProvider")
+    try:
+        for value in ("hdfs", "default"):
+            monkeypatch.setenv("SPARK_GRAFT_STREAM_STATE_PROVIDER", value)
+            with state_partitions(spark):
+                assert spark.conf.get(conf) == pkg + "HDFSBackedStateStoreProvider"
+            assert spark.conf.get(conf) == pkg + "RocksDBStateStoreProvider"
+        monkeypatch.delenv("SPARK_GRAFT_STREAM_STATE_PROVIDER")
+        with state_partitions(spark):
+            assert spark.conf.get(conf) == pkg + "RocksDBStateStoreProvider"
+    finally:
+        if prev is None:
+            spark.conf.unset(conf)
+        else:
+            spark.conf.set(conf, prev)
+
+
+def test_state_partitions_warns_when_expected_keys_clamped(spark, caplog):
+    """expected_keys sizing that exceeds the session's shuffle partitions is
+    clamped with a WARN naming both numbers; sizing inside the cap is
+    silent."""
+    import logging
+
+    from quarkus_etl_spark.streaming.streams import state_partitions
+
+    upper = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    with caplog.at_level(logging.WARNING, logger="quarkus_etl_spark.streaming"):
+        with state_partitions(spark, expected_keys=1):
+            pass
+        assert not caplog.records
+        with state_partitions(spark, expected_keys=10**12):
+            pass
+    (record,) = caplog.records
+    assert record.levelno == logging.WARNING
+    msg = record.getMessage()
+    assert "clamped" in msg and "asks for 1000000" in msg
+    assert f"spark.sql.shuffle.partitions={upper}" in msg

@@ -1,36 +1,35 @@
-"""Round-12 interleaved A/B harness (guide §1 + the host-noise discipline).
+"""Interleaved A/B harness (guide §1 + the host-noise discipline).
 
-Runs the given queries in ONE Spark session, alternating the candidate
-variant (gates ON) and the pre-change baseline (SPARK_GRAFT_OPT12_OFF=
-<gates>) block-by-block for N pairs, and reports per-query and per-set
-min/median for both sides. Only this same-session interleaving is
+Runs the given queries in ONE Spark session, alternating the baseline
+(the given variables unset) and the variant (the given K=V environment
+assignments applied) block-by-block for N pairs, and reports per-query and
+per-set min/median for both sides. Only this same-session interleaving is
 trustworthy on this host (documented 1.5-2.2x same-code cross-run swings).
 
-NOTE: the r12 measurement gates were STRIPPED after the round's verdicts
-settled (OPTIMIZATION_r12.md), so there are currently no opt12_off call
-sites — a future round re-adds a gate per candidate (read a csv env var,
-branch to the pre-change shape) and measures with this harness. Tokens
-containing "=" are applied as env assignments on the variant side (e.g.
-SPARK_GRAFT_STREAM_STATE_PROVIDER=rocksdb), which needs no code gate.
+A candidate is measured through an environment variable the code already
+reads (e.g. SPARK_GRAFT_STREAM_STATE_PROVIDER=rocksdb); a code change
+without one is gated by adding such a read at its call site for the
+duration of the measurement.
 
 Usage:
-    python -m tools.ab12 <gates-csv> <query> [<query> ...] [--pairs N]
+    python -m tools.ab12 <K=V[,K=V...]> <query> [<query> ...] [--pairs N]
 """
 
 from __future__ import annotations
 
 import argparse
-import logging
 import os
 import statistics
 import time
 
-log = logging.getLogger("tools.ab12")
+from tools.harness import materialize, warm_codegen, warm_session
 
 
 def main() -> None:
     parser = argparse.ArgumentParser()
-    parser.add_argument("gates", help="comma-separated opt12 gate names to A/B")
+    parser.add_argument(
+        "env", help="comma-separated K=V env assignments for the variant side"
+    )
     parser.add_argument("queries", nargs="+", metavar="query")
     parser.add_argument("--pairs", type=int, default=4)
     parser.add_argument(
@@ -38,6 +37,10 @@ def main() -> None:
         default=os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"),
     )
     args = parser.parse_args()
+    env = [token.split("=", 1) for token in args.env.split(",")]
+    plain = [token for token, *value in env if not value or not token]
+    if plain:
+        parser.error(f"not K=V env assignments: {', '.join(plain)}")
 
     from quarkus_etl_spark.queries import all_query_callables
 
@@ -51,45 +54,20 @@ def main() -> None:
     spark = get_spark("ab12")
     spark.sparkContext.setLogLevel("ERROR")
 
-    def materialize(df):
-        df.write.format("noop").mode("overwrite").save()
-
-    materialize(spark.range(1_000_000).selectExpr("sum(id) AS s"))
-    from quarkus_etl_spark.catalog import TABLES, load_table
-
-    for tbl in TABLES:
-        materialize(load_table(spark, args.sf_dir, tbl))
-
-    def _noop_pd(batches):
-        yield from batches
-
-    materialize(spark.range(1_000, numPartitions=32).mapInPandas(_noop_pd, "id long"))
-
-    # Gate tokens containing "=" are env assignments applied on the VARIANT
-    # side only (e.g. SPARK_GRAFT_STREAM_STATE_PROVIDER=rocksdb); plain
-    # tokens ride SPARK_GRAFT_OPT12_OFF on the BASE side.
-    off_gates = ",".join(g for g in args.gates.split(",") if "=" not in g)
-    env_gates = [g.split("=", 1) for g in args.gates.split(",") if "=" in g]
+    warm_session(spark, args.sf_dir)
 
     def set_side(side: str) -> None:
-        os.environ["SPARK_GRAFT_OPT12_OFF"] = off_gates if side == "base" else ""
-        for k, v in env_gates:
+        for k, v in env:
             if side == "var":
                 os.environ[k] = v
             else:
                 os.environ.pop(k, None)
 
-    # codegen warm-up for BOTH shapes at the tiny SF, so neither side's
-    # first timed pass pays first-compile. A failure here is logged, not
-    # fatal: the timed pass at the real SF reports it if it persists.
-    tiny = "/root/testdata/sf0.001"
+    # codegen warm-up for BOTH shapes, so neither side's first timed pass
+    # pays first-compile
     for side in ("base", "var"):
         set_side(side)
-        for name in args.queries:
-            try:
-                materialize(queries[name](spark, tiny))
-            except Exception:  # noqa: BLE001
-                log.exception("warm-up of %s (%s side) failed", name, side)
+        warm_codegen(spark, queries, args.queries, args.sf_dir)
 
     times: dict[tuple[str, str], list[float]] = {}
     for pair in range(args.pairs):
@@ -104,7 +82,6 @@ def main() -> None:
                 spark.sparkContext.setJobDescription(None)
         print(f"pair {pair + 1}/{args.pairs} done", flush=True)
 
-    os.environ.pop("SPARK_GRAFT_OPT12_OFF", None)
     tot = {"base": [0.0] * args.pairs, "var": [0.0] * args.pairs}
     for name in args.queries:
         row = []

@@ -6,111 +6,77 @@ Usage:
 Lists regressions (new/old >= threshold AND absolute slowdown >= 0.5 s),
 improvements at the same bar, and inventory changes. Exit code 1 if any
 regression — usable as a gate. Over-the-bar entries from the frozen
-CC-noise family (bench.CC_NOISE_EXPECTED_SPREAD, VERDICT r10 #3) that stay
-inside their reviewed same-code spread bound print as `expected-var` and
-do NOT fail the gate; a breach of the bound is a real regression.
+CC-noise family (tools.harness.CC_NOISE_EXPECTED_SPREAD, VERDICT r10 #3)
+that stay inside their reviewed same-code spread bound print as
+`expected-var` and do NOT fail the gate; a breach of the bound is a real
+regression.
 
-When BOTH artifacts carry a `calib_sec` host probe (bench.py records the
-min-of-3 wall of a fixed data-independent codegen plan), every new-side
-timing is divided by the calib ratio before thresholding, so pure host
-drift (measured up to ~1.25x on this host between identical-code rounds)
-cancels instead of reading as regression/improvement.
+When BOTH artifacts carry a `calib3_sec` host probe (bench.py's median of
+a fixed data-independent plan sampled between query batches inside the
+timed window), every new-side timing is divided by the calib3 ratio
+before thresholding, so pure host drift (measured up to ~1.25x on this
+host between identical-code rounds) cancels instead of reading as
+regression/improvement. Loader, normalization and classification are the
+ones bench.py's `vs_prev` section uses (tools/harness.py), so the two
+always agree on the same pair of artifacts.
 """
 
 from __future__ import annotations
 
 import argparse
-import json
+
+from tools.harness import (
+    REGRESSION_ABS_SEC,
+    REGRESSION_RATIO,
+    compare,
+    host_ratio,
+    load_artifact,
+)
 
 
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("old")
     ap.add_argument("new")
-    ap.add_argument("--threshold", type=float, default=1.4)
-    ap.add_argument("--abs-floor", type=float, default=0.5)
+    ap.add_argument("--threshold", type=float, default=REGRESSION_RATIO)
+    ap.add_argument("--abs-floor", type=float, default=REGRESSION_ABS_SEC)
     args = ap.parse_args()
 
-    def load(path):
-        d = json.load(open(path))
-        if "queries" not in d and isinstance(d.get("parsed"), dict):
-            d = d["parsed"]
-        if "queries" not in d and isinstance(d.get("tail"), str):
-            # driver tail-only record: the head (metric/value/queries{...)
-            # was truncated, but the tail still contains many
-            # '"q_name": 1.234' pairs plus trailing scalar fields —
-            # salvage the per-query pairs by regex (q_ prefix filters out
-            # scalars like "total_sec")
-            import re
-
-            pairs = re.findall(r'"(q_[a-z0-9_]+)":\s*(-?\d+(?:\.\d+)?)', d["tail"])
-            if pairs:
-                seen = {}
-                for k, v in pairs:  # later duplicates (slowest10) keep first
-                    seen.setdefault(k, float(v))
-                print(f"{path}: tail-only record, salvaged {len(seen)} per-query timings")
-                return seen, None, True
-        if "queries" not in d:
-            raise SystemExit(f"{path}: no per-query timings (driver tail-only record?)")
-        return d["queries"], d.get("calib_sec"), False
-
-    old, calib_old, old_partial = load(args.old)
-    new, calib_new, new_partial = load(args.new)
-    partial = old_partial or new_partial
-    # host-drift normalization: scale new-side timings into the old
-    # artifact's host regime via the calib ratio (1.0 when either side
-    # predates the probe)
-    host = 1.0
-    if calib_old and calib_new and calib_old > 0 and calib_new > 0:
-        host = calib_new / calib_old
-        print(f"host calib: old={calib_old:.3f}s new={calib_new:.3f}s "
-              f"(new host {host:.2f}x old; new timings divided by this)")
-    shared = sorted(set(old) & set(new))
-    valid = [n for n in shared if old[n] > 0 and new[n] > 0]
-
-    # frozen expected-variance bounds for the cross-run-noisy CC family
-    # (VERDICT r10 #3) — same list the bench artifact's vs_prev consults
-    import importlib.util
-    import os
-
-    _bench_path = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "bench.py"
-    )
-    _spec = importlib.util.spec_from_file_location("_bench_for_bounds", _bench_path)
-    _bench = importlib.util.module_from_spec(_spec)
-    _spec.loader.exec_module(_bench)
-    cc_bounds = _bench.CC_NOISE_EXPECTED_SPREAD
-
-    regressions, improvements, expected = [], [], []
-    for n in valid:
-        adj = new[n] / host
-        ratio = adj / old[n]
-        if ratio >= args.threshold and adj - old[n] >= args.abs_floor:
-            bound = cc_bounds.get(n)
-            if bound is not None and ratio < bound:
-                expected.append((n, old[n], adj, ratio, bound))
-            else:
-                regressions.append((n, old[n], adj, ratio))
-        elif 1 / ratio >= args.threshold and old[n] - adj >= args.abs_floor:
-            improvements.append((n, old[n], adj, ratio))
-
-    t_old = sum(old[n] for n in valid)
-    t_new = sum(new[n] for n in valid)
-    print(f"shared queries: {len(valid)}  aggregate {t_old:.1f}s -> {t_new:.1f}s "
-          f"({t_new / t_old:.2f}x raw"
-          + (f", {t_new / host / t_old:.2f}x host-normalized)" if host != 1.0 else ")"))
-    if partial:
-        print("(partial record: inventory added/removed not meaningful)")
+    loaded = []
+    for path in (args.old, args.new):
+        artifact = load_artifact(path)
+        if artifact is None:
+            raise SystemExit(f"{path}: no per-query timings")
+        loaded.append(artifact)
+    (old, calib_old), (new, calib_new) = loaded
+    host, probe = host_ratio(calib_old, calib_new)
+    if probe:
+        print(f"host calib3: old={calib_old:.4f}s new={calib_new:.4f}s "
+              f"(new host {host:.4f}x old; new timings divided by this)")
     else:
-        print(f"added: {sorted(set(new) - set(old)) or '-'}")
-        print(f"removed: {sorted(set(old) - set(new)) or '-'}")
-    for tag, rows in (("REGRESSION", regressions), ("improvement", improvements)):
-        for n, o, v, r in sorted(rows, key=lambda x: -abs(x[3] - 1)):
-            print(f"{tag:11s} {n:28s} {o:7.2f}s -> {v:7.2f}s ({r:.2f}x)")
-    for n, o, v, r, b in sorted(expected, key=lambda x: -x[3]):
-        print(f"expected-var {n:28s} {o:7.2f}s -> {v:7.2f}s "
-              f"({r:.2f}x, inside reviewed CC-noise bound {b}x)")
-    raise SystemExit(1 if regressions else 0)
+        print("host calib3: missing on one side, timings compared raw")
+    cmp = compare(old, new, host, args.threshold, args.abs_floor)
+    if not cmp["shared"]:
+        raise SystemExit("no shared queries with positive timings")
+
+    print(f"shared queries: {len(cmp['shared'])}  aggregate "
+          f"{cmp['old_total']:.1f}s -> {cmp['new_total']:.1f}s "
+          f"({cmp['raw_ratio']:.4f}x raw, "
+          f"{cmp['normalized_ratio']:.4f}x host-normalized)")
+    print(f"added: {sorted(set(new) - set(old)) or '-'}")
+    print(f"removed: {sorted(set(old) - set(new)) or '-'}")
+    for tag, names in (("REGRESSION", cmp["flagged"]),
+                       ("improvement", cmp["improved"][::-1])):
+        for n in names:
+            adj = new[n] / host
+            print(f"{tag:11s} {n:28s} {old[n]:7.2f}s -> {adj:7.2f}s "
+                  f"({adj / old[n]:.2f}x)")
+    for e in cmp["expected"]:
+        n = e["query"]
+        print(f"expected-var {n:28s} {old[n]:7.2f}s -> {new[n] / host:7.2f}s "
+              f"({e['normalized_ratio']:.2f}x, inside reviewed CC-noise bound "
+              f"{e['expected_bound']}x)")
+    raise SystemExit(1 if cmp["flagged"] else 0)
 
 
 if __name__ == "__main__":

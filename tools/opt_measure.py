@@ -2,8 +2,9 @@
 
 Times individual queries in isolation with the noop sink (the bench's own
 methodology), after the same warm-up discipline bench.py uses, and dumps
-each query's `.explain("formatted")` to <plans-dir>/<name>_<tag>.txt so the
-before/after plan evidence is a committed artifact.
+each query's `.explain("formatted")` to <plans-dir>/<name>_<tag>.txt
+(default: the gitignored .scratch/plans/, so a run never overwrites the
+committed plan evidence under plans/; copy the files there to commit them).
 
 Usage:
     python -m tools.opt_measure <tag> <query> [<query> ...]
@@ -18,6 +19,8 @@ import argparse
 import os
 import statistics
 import time
+
+from tools.harness import materialize, warm_session
 
 
 def main() -> None:
@@ -35,8 +38,8 @@ def main() -> None:
         "--plans-dir",
         default=os.path.join(
             os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+            ".scratch",
             "plans",
-            "r12",
         ),
     )
     parser.add_argument("--no-plans", action="store_true")
@@ -50,21 +53,7 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
     queries = all_query_callables()
 
-    def materialize(df):
-        df.write.format("noop").mode("overwrite").save()
-
-    # bench.py's warm-up discipline: one JVM/codegen action, every fixture
-    # table materialized once (schema cache + page cache), Python workers up.
-    materialize(spark.range(1_000_000).selectExpr("sum(id) AS s"))
-    from quarkus_etl_spark.catalog import TABLES, load_table
-
-    for tbl in TABLES:
-        materialize(load_table(spark, args.sf_dir, tbl))
-
-    def _noop_pd(batches):
-        yield from batches
-
-    materialize(spark.range(1_000, numPartitions=32).mapInPandas(_noop_pd, "id long"))
+    warm_session(spark, args.sf_dir)
 
     if not args.no_plans:
         os.makedirs(args.plans_dir, exist_ok=True)
