@@ -2,7 +2,10 @@
 
 Every query from SURVEY.md §2 registers here as
     (name) -> callable(spark, sf_dir) -> DataFrame
-optionally with a DuckDB oracle SQL string. The driver hash-compares values
+optionally with a DuckDB oracle SQL string. `all_query_callables()` and
+`all_oracles()` emit the registry in grading order (`_graded_last`),
+derived from the committed driver records and the fingerprint manifest.
+The driver hash-compares values
 order-insensitively but EXACTLY, so cross-engine float determinism is part of
 the engine contract (SURVEY.md §7.4 "known-hard list"):
 
@@ -17,7 +20,11 @@ the engine contract (SURVEY.md §7.4 "known-hard list"):
 
 from __future__ import annotations
 
+import json
+import os
+import re
 from collections.abc import Callable
+
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -139,335 +146,52 @@ def sql_davg(expr: str, alias: str) -> str:
     return f"CAST(SUM(CAST({expr} AS DECIMAL(18,2))) AS DOUBLE) / COUNT({expr}) AS {alias}"
 
 
-# Queries with a conclusive driver verdict in CORRECTNESS_r01.json (full
-# pass, or rows-only-by-design for the two approximate ones). The driver
-# grades roughly the first 50 registered queries per round, so these yield
-# their window slots to the not-yet-graded rest; the local harness
-# (verify.py) still covers every query on every run, so regressions among
-# these are caught locally.
-_PREVIOUSLY_GRADED = frozenset({
-    "q_scan_parquet", "q_scan_select_literal", "q_filter_projection",
-    "q_pred_between", "q_pred_in", "q_pred_like", "q_pred_null",
-    "q_pred_compound", "q_join_inner", "q_join_left", "q_join_right",
-    "q_join_full", "q_join_semi", "q_join_anti", "q_join_cross",
-    "q_join_broadcast", "q_join_theta_range", "q_join_multiway",
-    "q_agg_global", "q_agg_groupby", "q_agg_having", "q_agg_distinct",
-    "q_agg_rollup", "q_agg_cube", "q_agg_gsets",
-    "q_distinct", "q_sort_multi", "q_topk", "q_union_all",
-    "q_union_distinct", "q_intersect", "q_except", "q_tpch_q3_shape",
-    "q_tpch_q5_shape", "q_pivot", "q_unpivot",
-    # q_sample and q_agg_approx_distinct are intentionally ABSENT (despite r1
-    # grades): they failed r1 pre-remediation and were converted to rows-only
-    # per SURVEY §2; re-queued in _GRADE_FIRST so the cumulative record
-    # replaces the stale FAILs with fresh verdicts (VERDICT r4 #4).
-    # q_agg_percentile is intentionally ABSENT: its r1 PASS graded the old
-    # buffer-based implementation; the histogram rewrite should be regraded.
-    "q_agg_stats", "q_fn_string", "q_fn_date",
-    "q_fn_cond", "q_fn_cast", "q_fn_array", "q_fn_map", "q_fn_json",
-    "q_win_rank",
-    # --- CORRECTNESS_r02.json: 50 graded, 50 passed (hash-conclusive).
-    "q_tpch_q10_shape", "q_tpch_q18_shape", "q_agg_percentile",
-    "q_agg_collect", "q_agg_histogram", "q_agg_mode", "q_agg_grouping_id",
-    "q_join_null_safe", "q_agg_cond_bool", "q_fn_bitwise", "q_agg_linreg",
-    "q_agg_corr", "q_stats_ttest", "q_fn_math", "q_fn_struct", "q_fn_hof",
-    "q_fn_variant", "q_fn_collate", "q_win_topk_per_group", "q_win_lag_lead",
-    "q_win_running", "q_win_ntile", "q_win_first_last", "q_win_distribution",
-    "q_win_moving", "q_win_islands", "q_win_ema", "q_subq_scalar",
-    "q_subq_in", "q_subq_exists_corr", "q_cte", "q_udf_scalar",
-    "q_udf_pandas", "q_tpch_q2_shape", "q_tpch_q4_shape", "q_tpch_q6_shape",
-    "q_tpch_q7_shape", "q_tpch_q8_shape", "q_tpch_q9_shape",
-    "q_tpch_q11_shape", "q_tpch_q12_shape", "q_tpch_q13_shape",
-    "q_tpch_q14_shape", "q_tpch_q15_shape", "q_tpch_q16_shape",
-    "q_tpch_q17_shape", "q_tpch_q19_shape", "q_tpch_q20_shape",
-    "q_tpch_q21_shape", "q_tpch_q22_shape",
-    # --- CORRECTNESS_r03.json: 50 graded, 50 passed (hash-conclusive).
-    # q_udaf_grouped / q_udf_cogroup / q_udf_window_pandas are intentionally
-    # ABSENT: their output changed in r5 (quarter-of-users cap; NULL-sum
-    # semantics), so the r3 PASS graded a different result set — regraded
-    # via _GRADE_FIRST per ADVICE r5 item 4 and the q_agg_percentile
-    # precedent.
-    "q_udtf_explode", "q_udtf_python", "q_udf_arrow",
-    "q_udf_mapinarrow",
-    "q_stream_tumbling", "q_stream_sliding", "q_stream_session",
-    "q_stream_dedup", "q_stream_live_tumbling", "q_stream_live_dedup",
-    # q_stream_live_join intentionally ABSENT (was here through r8): r9's
-    # seed-31 fuzz proved Spark floors stream watermarks at epoch 0 —
-    # pre-1970 pairs silently vanished from the live join; fixed by era
-    # translation (+73000 days both sides) — requeued for a fresh verdict.
-    "q_stream_live_sliding", "q_stream_live_session",
-    "q_stream_live_static_join", "q_sink_parquet", "q_sink_orc",
-    "q_sink_csv_quoted", "q_scan_csv", "q_scan_json", "q_etl_job",
-    # q_dedup_ngram intentionally ABSENT (was here through r11): the r11
-    # optimization round checkpoints the shared dedup feature table, so
-    # its plan fingerprint changed — requeued in _GRADE_FIRST.
-    "q_multimodal_cols", "q_dedup_exact",
-    # --- r11 late fold-out (fuzz phase 7, non-finite embeddings): the 14
-    # embedding-consumer queries gained the shared failed-encoder guard
-    # (base.emb + SQL_EMB_FINITE) — outputs identical on pristine
-    # fixtures, but implementation+oracle fingerprints changed, so all 14
-    # are requeued in _GRADE_FIRST for fresh verdicts: q_sim_topk,
-    # q_sim_pairs, q_dedup_embed, q_sim_ann_lsh, q_knn_graph, q_sim_mmr,
-    # q_rank_ndcg, q_sim_batch, q_hybrid_rrf, q_emb_centroid,
-    # q_emb_quantize, q_emb_covariance, q_emb_kmeans, q_emb_pq.
-    "q_text_stats", "q_text_ngrams",
-    "q_text_langid", "q_text_quality", "q_text_fingerprint",
-    # q_dedup_cluster / q_dedup_canonical / q_dedup_minhash intentionally
-    # ABSENT (were here through r11): r12 symmetrizes the CC edge list via
-    # explode (plan drift for every connected_components consumer) and
-    # restructures q_dedup_minhash's band build (4-way union -> one
-    # posexplode + materialized band table) — requeued in _GRADE_FIRST.
-    "q_text_tokens",
-    "q_text_tfidf", "q_text_bm25", "q_sessionize",
-    "q_time_rollup", "q_join_interval", "q_win_range_frame",
-    # q_dq_checks intentionally ABSENT: gained the lineitem_price_finite
-    # rule in r7 (the upstream gate for the NaN/Inf-money cross-engine
-    # divergence pinned in tests/test_nullsafety.py) — requeued.
-    # q_table_diff intentionally ABSENT (was here through r7): its oracle
-    # gained IS DISTINCT FROM in r8 (the <> form silently dropped
-    # value<->NULL price changes — fuzz seed 17 phase 5) — requeued.
-    # q_sample_hash intentionally ABSENT: its key build switched
-    # concat_ws -> null-propagating concat in r8 (NULL-orderkey rows were
-    # sampled under a truncated key — NULL-FK fuzz) — requeued.
-    # --- CORRECTNESS_r04.json: 50 graded, 46 passed. The 4 hash-fails
-    # (q_chunk_dedup, q_corpus_stats, q_pack_sequences, q_mix_rebalance —
-    # DuckDB HUGEINT oracle leaks, fixed r5 by BIGINT casts) are intentionally
-    # ABSENT: they need fresh post-fix verdicts and lead _GRADE_FIRST.
-    # q_emb_centroid / q_emb_covariance / q_emb_kmeans intentionally
-    # ABSENT (were here through r8): their >2^53 fixed-point decimal sums
-    # gained the string-bridged decimal->double cast in r9 (seed-53
-    # phase-6 fuzz measured DuckDB's int128->double 1 ULP off Spark's
-    # BigDecimal cast under a hot-duplicate burst) — requeued.
-    # q_graph_triangles intentionally ABSENT (was here through r11): its
-    # edge list is checkpointed once in the r11 optimization round (plan
-    # fingerprint changed) — requeued in _GRADE_FIRST.
-    # q_graph_pagerank / q_graph_label_prop intentionally ABSENT (were
-    # here through r11): their edge lists are symmetrized via explode in
-    # r12 (plan drift) — requeued in _GRADE_FIRST.
-    "q_dedup_incremental",
-    # q_dedup_soft intentionally ABSENT (was here through r11): CC edge
-    # symmetrization (r12 plan drift) — requeued in _GRADE_FIRST.
-    "q_dedup_url", "q_decontaminate",
-    "q_text_chunk", "q_text_pii", "q_text_repetition",
-    "q_text_html", "q_text_url", "q_text_colloc",
-    # q_text_postings intentionally ABSENT: its posting-list head is
-    # bounded BEFORE the collect since r7 (single-array discipline;
-    # output unchanged) — requeued.
-    "q_text_keyphrase", "q_text_bigram_lp",
-    "q_text_unigram_lp", "q_corpus_entropy", "q_corpus_curate",
-    # q_split_leakage intentionally ABSENT (was here through r11): its
-    # near-dup feature table is checkpointed in the r11 optimization
-    # round (plan fingerprint changed) — requeued in _GRADE_FIRST.
-    "q_corpus_pipeline", "q_split_assign",
-    "q_span_corrupt", "q_tok_bpe_learn", "q_tok_apply", "q_vocab_build",
-    "q_mix_temperature", "q_quota_sample", "q_sample_stratified",
-    "q_sample_weighted", "q_oversample", "q_feat_hash",
-    # --- CORRECTNESS_r05.json: 50 graded, 44 hash-PASS + 6 rows-only
-    # ran+rows (the declared no-oracle class; re-confirmed via _GRADE_FIRST
-    # tail, not counted as failures). The 4 r4 HUGEINT regrades and
-    # q_shard_manifest all flipped green.
-    "q_chunk_dedup", "q_corpus_stats", "q_pack_sequences", "q_mix_rebalance",
-    "q_shard_manifest", "q_feat_scale", "q_anon_k", "q_feat_target_encode",
-    # q_agg_incremental intentionally ABSENT: its history/delta split
-    # became TOTAL in r8 (NULL split keys vanished from both partitions —
-    # NULL-FK fuzz) — requeued.
-    "q_agg_countmin", "q_agg_countmin_merge",
-    # q_dq_freshness intentionally ABSENT: lag_sec switched to integer div
-    # in r6 (same >2^53 class as q_time_lttb); queued for a fresh verdict.
-    "q_dq_anomaly", "q_dq_benford", "q_dq_profile",
-    # q_outlier_mad intentionally ABSENT (was here through r11): its
-    # histogram checkpoint went lazy -> eager in r12 (src drift) —
-    # requeued in _GRADE_FIRST.
-    "q_drift_tvd", "q_stats_chi2", "q_stats_gini",
-    "q_stats_ks", "q_funnel", "q_funnel_window", "q_retention_cohort",
-    "q_time_ohlc", "q_time_acf", "q_time_changepoint",
-    "q_time_seasonal", "q_win_concurrency",
-    "q_win_drawdown", "q_win_pattern", "q_win_session_native",
-    "q_join_bucketed", "q_join_skew_salted", "q_scd2_build", "q_zorder_key",
-    "q_scan_csv_dirty", "q_scan_jdbc_live", "q_scan_merge_schema",
-    "q_scan_partitioned", "q_gen_pysource",
-    # --- CORRECTNESS_r06.json: 50 graded — 39 hash-PASS (incl. the r6
-    # regrade queue and a re-confirmation sweep of the oldest r1
-    # relational block) + 11 rows-only ran+rows (the declared no-oracle
-    # class). With this window every registered query holds a driver
-    # verdict. q_time_gapfill / q_time_interp / q_text_fuzzy are
-    # intentionally ABSENT (ADVICE r6 item 1): their implementations AND
-    # oracles changed in r6 (engine-side unix_micros domain guard;
-    # length-gap prune) while they wrongly stayed in this set — requeued
-    # in _GRADE_FIRST per the changed-implementation precedent.
-    # q_attribution / q_dedup_canonical_best / q_merge_upsert are ABSENT
-    # again: r7 added fail-loud packed-key domain guards (ADVICE r6
-    # item 2) / the max_by unordered-value-type rewrite (item 3), so
-    # their fresh r6 PASSes are stale the day after — requeued.
-    # q_gen_addresses / q_agg_percentile_approx are ABSENT: both gained
-    # conclusive oracles in r7 (VERDICT r6 #5) and need first hash
-    # verdicts. q_knn_graph_ann is ABSENT pending its r7 rows-only
-    # re-confirmation alongside the recall-floor documentation refresh.
-    "q_udf_window_pandas", "q_udaf_grouped", "q_udf_cogroup",
-    "q_time_lttb", "q_dq_freshness", "q_join_asof", "q_join_pit",
-    "q_multimodal_frames", "q_multimodal_audio",
-    "q_sample",
-    "q_stream_live_eviction",
-    # q_agg_hll_merge / q_agg_approx_distinct intentionally ABSENT: both
-    # upgraded rows-only → conclusive contract oracles in r8 (VERDICT r7
-    # #2: exact counts + rsd/merge-lossless booleans) — they need first
-    # hash verdicts and lead _GRADE_FIRST.
-    # q_sim_ann_ivf intentionally ABSENT: its r8 recall-floor pin
-    # (VERDICT r7 #5) warrants a fresh rows-only re-confirmation in the
-    # same window.
-    # --- CORRECTNESS_r07.json: 50 graded — 48 hash-PASS (the full r7
-    # regrade queue: the r6-changed trio, the fail-loud key guards, the
-    # max_by rewrite, both oracle upgrades, the three bounded-collect
-    # fixes, plus a staleness sweep of the oldest r1/r2 verdicts) + 2
-    # rows-only ran+rows by design. Folded per VERDICT r7 #1.
-    # q_text_fuzzy / q_dedup_near intentionally ABSENT (were here through
-    # r11): both consume the r11-checkpointed dedup feature table (plan
-    # fingerprints changed) — requeued in _GRADE_FIRST.
-    "q_time_gapfill", "q_time_interp",
-    # q_dedup_canonical_best / q_dedup_simhash intentionally ABSENT (were
-    # here through r11): r12 changes — CC edge symmetrization (plan drift)
-    # and the single-md5 feature-hash rewrite — requeued in _GRADE_FIRST.
-    "q_gen_addresses", "q_agg_percentile_approx",
-    "q_text_postings",
-    # --- CORRECTNESS_r08.json: 50 graded — 48 hash-PASS (the full r8
-    # regrade queue: both HLL contract-oracle upgrades, the ADVICE r7
-    # pair, the table_diff/dq_checks/sample_hash/agg_incremental
-    # NULL-semantics fixes, plus the staleness sweep of the oldest
-    # windows/subqueries/TPC-H/functions/UDF/streaming verdicts) + 2
-    # rows-only ran+rows by design (the two ANN queries). Folded per
-    # VERDICT r8 #3.
-    "q_attribution", "q_merge_upsert",
-    # q_knn_graph_ann / q_sim_ann_ivf intentionally ABSENT (were here
-    # through r10 as rows-only ran+rows): r11 upgraded both to conclusive
-    # recall-contract oracles (VERDICT r10 #4) — output changed, so they
-    # lead _GRADE_FIRST for first hash verdicts.
-    "q_table_diff", "q_dq_checks", "q_sample_hash", "q_agg_incremental",
-    "q_agg_approx_distinct",
-    # q_agg_hll_merge intentionally ABSENT despite its fresh r8 PASS: r9
-    # changed its exact-count build again (count the non-NULL partkeys —
-    # a NULL counted as a distinct value diverged from both the oracle's
-    # COUNT(DISTINCT) and the sketch, ADVICE r8) — requeued.
-    # --- CORRECTNESS_r09.json: 50 graded — 50 hash-PASS (the full r9
-    # regrade queue: the hll_merge NULL-count fix, the stream-join era
-    # translation, the three string-bridged embedding moments, plus the
-    # staleness sweep of the oldest northstar/curation/text verdicts).
-    # Folded per VERDICT r9 #1. The three embedding-moment regrades land
-    # here; q_agg_hll_merge and q_stream_live_join stay ABSENT one more
-    # round — VERDICT r9 #1 asks the r10 sample to LEAD with the two
-    # r9-changed queries (a second post-fix confirmation) before they
-    # rejoin the staleness rotation.
-    # q_emb_centroid / q_emb_covariance / q_emb_kmeans re-requeued by the
-    # r11 phase-7 fold-out above (their r10 verdicts stand in the record).
-    # --- CORRECTNESS_r10.json: 50 graded — 50 hash-PASS (led by the two
-    # r9-changed queries the r9 judge queued for second post-fix verdicts,
-    # then the staleness sweep of the oldest r4 curation/text and r5
-    # lifecycle/analytics verdicts). Folded per VERDICT r10 #1: both
-    # regrades held, so the queue is clear and they rejoin the rotation.
-    "q_agg_hll_merge", "q_stream_live_join",
-    # --- CORRECTNESS_r11.json: 50 graded — 49 hash-PASS + 1 rows-only
-    # ran+rows by design (q_dedup_near, the declared rows-only MinHash-LSH
-    # query). The whole 21-name r11 _GRADE_FIRST queue got verdicts; folded
-    # per VERDICT r11 #9. The r11-queued names NOT listed here —
-    # q_sim_ann_ivf, q_knn_graph_ann, q_knn_graph, q_emb_kmeans,
-    # q_graph_triangles — passed in r11 but were changed AGAIN by the r12
-    # optimization round, so they stay queued.
-    "q_sim_topk", "q_sim_pairs", "q_dedup_embed", "q_sim_ann_lsh",
-    "q_sim_mmr", "q_rank_ndcg", "q_sim_batch", "q_hybrid_rrf",
-    "q_emb_centroid", "q_emb_quantize", "q_emb_covariance", "q_emb_pq",
-    "q_dedup_ngram", "q_dedup_near", "q_split_leakage", "q_text_fuzzy",
-})
-
-# The r12 grading queue (second OPTIMIZATION round): every query whose
-# plan or source fingerprint drifted under an r12 change. All outputs are
-# value-identical (full differential sweep + targeted oracle runs on the
-# touched set: 0 failing), but a stale fingerprint means a stale driver
-# verdict, so each is queued for a fresh one. The remaining ~36 window
-# slots fall through to priority-3 re-confirmations ordered by STALENESS.
-_GRADE_FIRST = (
-    # CC edge-list symmetrization via explode (operators/cluster.py
-    # symmetrized_edges: one evaluation of the pair subtree instead of one
-    # per union branch). NOTE: these four's committed fingerprints happen
-    # NOT to drift (the analyzed plan truncates at the CC loop's
-    # checkpoint, and the change lives in operators/cluster.py, outside
-    # the per-query src hash) — queued anyway, conservatively, because
-    # the upstream implementation DID change (value-identical, verified):
-    "q_dedup_cluster", "q_dedup_soft", "q_dedup_canonical",
-    "q_dedup_canonical_best",
-    # ... and the supersteps' edge lists in the two graph-iteration
-    # queries, symmetrized the same way:
-    "q_graph_pagerank", "q_graph_label_prop",
-    # _mirror_pairs: the exact kNN graph's (src,nbr,cosine) mirror now
-    # evaluates the quadratic pairwise-cosine subtree once, not twice:
-    "q_knn_graph", "q_knn_graph_ann",
-    # Band build restructured: 4-way union of selects from the signature
-    # frame -> one posexplode + a materialized capped band table:
-    "q_dedup_minhash",
-    # Single-md5 feature hashing (each feature was md5'd twice inside an
-    # interpreted HOF where CSE does not apply):
-    "q_dedup_simhash",
-    # Guarded-embedding frame materialized once across the centroid
-    # collect, the IVF leg and the exact-twin leg (VERDICT r11 #3):
-    "q_sim_ann_ivf",
-    # Histogram checkpoint lazy -> eager (removes the concurrent-stage
-    # double-compute hazard; src drift):
-    "q_outlier_mad",
-    # materialize_once migration (same default localCheckpoint plan, src
-    # drift): the r11-queued pair that changed again in r12.
-    "q_emb_kmeans", "q_graph_triangles",
-)
+# The grading order is derived from committed JSON only: the driver's
+# per-round records (CORRECTNESS_r<N>.json at the repo root) and the
+# fingerprint manifest, whose entries `python -m tools.fingerprint --write`
+# stamps with the newest round on record when it re-verifies a query.
+_ROOT = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+FINGERPRINTS = os.path.join(_ROOT, "tools", "fingerprints.json")
+_RECORD = re.compile(r"CORRECTNESS_r(\d+)\.json")
 
 
-def _last_graded_rounds() -> dict[str, int]:
-    """name -> latest round with a driver verdict, read from the committed
-    CORRECTNESS_r*.json records at the repo root. Used ONLY to order
-    priority-3 re-confirmations by staleness; missing/unreadable records
-    degrade to registration order (round 0)."""
-    import glob
-    import json
-    import os
-    import re
+def _read_json_object(path: str) -> dict:
+    try:
+        with open(path) as fh:
+            obj = json.load(fh)
+    except (OSError, ValueError) as e:
+        raise ValueError(f"{path}: unreadable grading input ({e})") from e
+    if not isinstance(obj, dict):
+        raise ValueError(f"{path}: grading input is not a JSON object")
+    return obj
 
-    root = os.path.dirname(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    )
+
+def _last_graded_rounds(root: str = _ROOT) -> dict[str, int]:
+    """name -> newest round whose driver record grades it. A record that
+    cannot be read raises, naming the file: these records are the only
+    source of the grading order."""
     out: dict[str, int] = {}
-    for fp in sorted(glob.glob(os.path.join(root, "CORRECTNESS_r*.json"))):
-        m = re.search(r"CORRECTNESS_r(\d+)\.json$", fp)
-        if not m:
-            continue
-        try:
-            with open(fp) as fh:
-                rec = json.load(fh)
-        except (OSError, ValueError):
-            continue
-        rnd = int(m.group(1))
-        for name in rec:
-            out[name] = max(out.get(name, 0), rnd)
+    for fname in sorted(os.listdir(root)):
+        m = _RECORD.fullmatch(fname)
+        if m:
+            for name in _read_json_object(os.path.join(root, fname)):
+                out[name] = max(out.get(name, 0), int(m.group(1)))
     return out
 
 
-def _graded_last(d: dict) -> dict:
-    """Grading-priority order: (0) the explicit _GRADE_FIRST list — changed
-    implementations/oracles needing fresh verdicts; (1) other not-yet-graded
-    queries WITH an oracle, registration order — each window slot becomes a
-    conclusive hash verdict; (2) not-yet-graded rows-only queries — weaker
-    ran+rows record; (3) queries with a conclusive prior-round verdict,
-    least-recently-graded first (stable within a round: registration
-    order)."""
-
-    rank0 = {n: i for i, n in enumerate(_GRADE_FIRST)}
-    last = _last_graded_rounds()
+def _graded_last(d: dict, root: str = _ROOT, manifest: str = FINGERPRINTS) -> dict:
+    """Grading-priority order. A query leads iff its manifest entry was
+    re-verified at or after its last driver verdict (never-graded queries
+    included); every other query follows, least-recently graded first.
+    Ties keep registration order."""
+    last = _last_graded_rounds(root)
+    stamp = {n: e.get("round", 0) for n, e in _read_json_object(manifest).items()}
 
     def prio(name: str) -> tuple[int, int]:
-        if name in rank0 and name not in _PREVIOUSLY_GRADED:
-            return (0, rank0[name])
-        if name in _PREVIOUSLY_GRADED:
-            return (3, last.get(name, 0))
-        return (1, 0) if name in ORACLES else (2, 0)
+        graded = last.get(name, 0)
+        return (0, 0) if graded <= stamp.get(name, 0) else (1, graded)
 
-    names = sorted(d, key=lambda n: (prio(n), 0))
-    # sorted() is stable, so within each (priority, staleness) group the
-    # original registration order is preserved.
-    return {n: d[n] for n in names}
+    return {n: d[n] for n in sorted(d, key=prio)}
 
 
 def all_query_callables() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

@@ -23,7 +23,12 @@ from ..operators.dedup import (
     ngram_jaccard_pairs,
     simhash_near_dup_pairs,
 )
-from ..operators.similarity import brute_force_topk, lsh_topk, pairwise_similar
+from ..operators.similarity import (
+    brute_force_topk,
+    fits_exact_pairwise,
+    lsh_topk,
+    pairwise_similar,
+)
 from ..plans.tuning import ensure_parallelism, materialize_once
 from .base import emb, register, t
 
@@ -1394,19 +1399,18 @@ def q_knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     bit-for-bit (functions.vectors fold discipline).
 
     Size routing (VERDICT r2 #3): the exact half-matrix is quadratic per
-    block, so above SPARK_GRAFT_EXACT_KNN_MAX_VECS (default 50k) this
-    delegates to the sign-LSH candidate plan (knn_graph_ann — identical
-    output schema, recall floor pytest-pinned). Below it — including the
-    oracle gate — the exact plan runs and hash-matches DuckDB."""
-    import os
-
+    block, so above similarity.fits_exact_pairwise's limit
+    (SPARK_GRAFT_EXACT_PAIRWISE_MAX_VECS, default 50k — the same gate as
+    q_sim_pairs and q_dedup_embed) this delegates to the sign-LSH
+    candidate plan (knn_graph_ann — identical output schema, recall floor
+    pytest-pinned). Below it — including the oracle gate — the exact plan
+    runs and hash-matches DuckDB."""
     from pyspark.sql.window import Window
 
-    e = emb(spark, sf_dir).where(F.col("embedding").isNotNull())
-    max_exact = int(os.environ.get("SPARK_GRAFT_EXACT_KNN_MAX_VECS", "50000"))
-    from ..plans.tuning import log_route, routing_count
+    from ..plans.tuning import log_route
 
-    if routing_count(e) > max_exact:
+    e = emb(spark, sf_dir).where(F.col("embedding").isNotNull())
+    if not fits_exact_pairwise(e):
         from ..operators.similarity import knn_graph_ann
 
         log_route("q_knn_graph", "ann", approximate=True)

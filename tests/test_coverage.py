@@ -62,65 +62,133 @@ def test_registered_count_matches_survey_scale():
     assert len(all_query_callables()) >= 75
 
 
-def test_grading_queue_invariants():
-    """The driver grades ~50 queries in dict order per round; these
-    invariants keep that window pointed at fresh verdicts: no name sits in
-    both the re-grade front and the already-graded set (a _PREVIOUSLY_GRADED
-    entry wins priority and would silently eat the regrade), every queued
-    name really exists, and the queue front leads the emitted order."""
-    from quarkus_etl_spark.queries.base import (
-        _GRADE_FIRST,
-        _PREVIOUSLY_GRADED,
-        all_query_callables,
-    )
+def _write_json(path, obj) -> None:
+    import json
 
-    q = all_query_callables()
-    assert set(_GRADE_FIRST) & _PREVIOUSLY_GRADED == set()
-    assert set(_GRADE_FIRST) <= set(q)
-    assert _PREVIOUSLY_GRADED <= set(q)
-    assert len(_GRADE_FIRST) == len(set(_GRADE_FIRST))
-    names = list(q)
-    front = [n for n in _GRADE_FIRST if n not in _PREVIOUSLY_GRADED]
-    assert names[: len(front)] == front
+    path.write_text(json.dumps(obj))
+
+
+def test_grading_order_is_derived_from_records_and_manifest(tmp_path):
+    """The driver grades ~50 queries in dict order per round. A query
+    re-verified at or after its last verdict (or never graded) leads in
+    registration order; the rest follow least-recently graded first, ties
+    in registration order. Folding a new round's record needs no edit: a
+    query graded after its stamp leaves the front."""
+    from quarkus_etl_spark.queries.base import _graded_last
+
+    manifest = tmp_path / "fingerprints.json"
+    _write_json(manifest, {"q_c": {"src": "s", "round": 2},
+                           "q_d": {"src": "s", "round": 1},
+                           "q_e": {"src": "s", "round": 2},
+                           "q_a": {"src": "s"}})
+    _write_json(tmp_path / "CORRECTNESS_r01.json", {"q_a": {}, "q_c": {}, "q_d": {}, "q_g": {}})
+    _write_json(tmp_path / "CORRECTNESS_r02.json", {"q_b": {}, "q_e": {}})
+    registered = dict.fromkeys(["q_c", "q_b", "q_a", "q_g", "q_d", "q_e", "q_f"])
+
+    def order() -> list[str]:
+        return list(_graded_last(registered, root=str(tmp_path), manifest=str(manifest)))
+
+    assert order() == ["q_c", "q_d", "q_e", "q_f", "q_a", "q_g", "q_b"]
+    _write_json(tmp_path / "CORRECTNESS_r03.json", {"q_c": {}})
+    assert order() == ["q_d", "q_e", "q_f", "q_a", "q_g", "q_b", "q_c"]
+
+
+def test_unreadable_grading_record_fails_loudly(tmp_path):
+    """The records are the only source of the grading order, so a corrupt
+    one raises naming the file instead of silently reordering."""
+    import pytest
+
+    from quarkus_etl_spark.queries.base import _last_graded_rounds
+
+    _write_json(tmp_path / "CORRECTNESS_r01.json", {"q_a": {}})
+    assert _last_graded_rounds(str(tmp_path)) == {"q_a": 1}
+    (tmp_path / "CORRECTNESS_r02.json").write_text('{"q_a": ')
+    with pytest.raises(ValueError, match="CORRECTNESS_r02.json"):
+        _last_graded_rounds(str(tmp_path))
+    _write_json(tmp_path / "CORRECTNESS_r02.json", ["q_a"])
+    with pytest.raises(ValueError, match="CORRECTNESS_r02.json"):
+        _last_graded_rounds(str(tmp_path))
+
+
+def test_fingerprint_check_covers_every_registered_name():
+    """A drifted part, a registered query with no entry and an entry left
+    by an unregistered query are all reported; a cheap (src+oracle)
+    current ignores the plan part and the round stamp."""
+    from tools.fingerprint import diff_against_manifest
+
+    manifest = {"q_same": {"src": "A", "oracle": "B", "plan": "C", "round": 3},
+                "q_plan": {"src": "A", "oracle": "B", "plan": "C"},
+                "q_gone": {"src": "A", "oracle": "B"}}
+    current = {"q_same": {"src": "A", "oracle": "B", "plan": "C"},
+               "q_plan": {"src": "A", "oracle": "B", "plan": "DRIFTED"},
+               "q_new": {"src": "A", "oracle": "B", "plan": "C"}}
+    problems = diff_against_manifest(current, manifest)
+    assert set(problems) == {"q_plan", "q_new", "q_gone"}
+    assert "plan" in problems["q_plan"]
+    cheap = {n: {"src": "A", "oracle": "B"} for n in ("q_same", "q_plan")}
+    assert diff_against_manifest(cheap, manifest) == {
+        "q_gone": "entry for a query that is no longer registered"}
+
+
+def test_fingerprint_write_records_only_what_passes(tmp_path, monkeypatch):
+    """`--write` re-verifies exactly the drifted and unrecorded queries at
+    the grading scale factor, records the passing ones stamped with the
+    newest round on record, keeps a failing query's old entry, drops
+    unregistered entries and exits nonzero."""
+    import json
+
+    import quarkus_etl_spark.session
+    import quarkus_etl_spark.verify
+    import tools.fingerprint as fp
+    from quarkus_etl_spark.queries.base import _last_graded_rounds
+    from quarkus_etl_spark.verify import CompareResult
+
+    old = {"q_pass": {"src": "A", "oracle": "B", "plan": "old"},
+           "q_fail": {"src": "A", "oracle": "B", "plan": "old", "round": 1},
+           "q_same": {"src": "A", "oracle": "B", "plan": "C"},
+           "q_gone": {"src": "A", "oracle": "B", "plan": "C"}}
+    current = {"q_pass": {"src": "A", "oracle": "B", "plan": "new"},
+               "q_fail": {"src": "A", "oracle": "B", "plan": "new"},
+               "q_same": {"src": "A", "oracle": "B", "plan": "C"},
+               "q_new": {"src": "N", "oracle": "", "plan": "P"}}
+    manifest = tmp_path / "fingerprints.json"
+    _write_json(manifest, old)
+    verified = []
+
+    def fake_run_all(spark, sf_dir, names=None):
+        verified.append((sf_dir, names))
+        return [CompareResult(n, n != "q_fail", error="mismatch" if n == "q_fail" else "")
+                for n in names]
+
+    monkeypatch.setattr(fp, "MANIFEST", str(manifest))
+    monkeypatch.setattr(fp, "full_fingerprints", lambda spark, sf_dir: current)
+    monkeypatch.setattr(quarkus_etl_spark.session, "get_spark", lambda *a, **k: None)
+    monkeypatch.setattr(quarkus_etl_spark.verify, "run_all", fake_run_all)
+
+    assert fp.main(["--write"]) != 0
+    assert verified == [(fp.GRADE_SF_DIR, ["q_fail", "q_new", "q_pass"])]
+    newest = max(_last_graded_rounds().values())
+    assert json.loads(manifest.read_text()) == {
+        "q_pass": {**current["q_pass"], "round": newest},
+        "q_new": {**current["q_new"], "round": newest},
+        "q_fail": old["q_fail"],
+        "q_same": old["q_same"],
+    }
 
 
 def test_fingerprint_manifest_consistency():
-    """Regrade-queue automation (VERDICT r6 #3): every _PREVIOUSLY_GRADED
-    query's implementation source and oracle SQL must match the committed
-    fingerprint manifest frozen when it was graded. A mismatch means the
-    graded verdict no longer describes the code — move the query to
-    _GRADE_FIRST and regenerate with `python -m tools.fingerprint --write`.
-    (The plan-level part, which also catches shared-operator changes, is
-    checked by `python -m tools.fingerprint` in the round gate — it needs a
+    """Every registered query's implementation source and oracle SQL match
+    the entry recorded when it last passed the differential harness, and
+    the manifest holds no entry for an unregistered query. On a mismatch,
+    `python -m tools.fingerprint --write` re-verifies and records it. (The
+    plan part, which also catches shared-operator changes, is checked by
+    `python -m tools.fingerprint --check` in the round gate — it needs a
     live session per query, too heavy for every pytest run.)"""
     from tools.fingerprint import cheap_fingerprints, diff_against_manifest, load_manifest
 
     manifest = load_manifest()
     assert manifest, "tools/fingerprints.json missing — run tools.fingerprint --write"
-    current = cheap_fingerprints()
-    problems = [p for p in diff_against_manifest(current, manifest)
-                if "plan" not in p]
-    assert problems == []
-
-
-def test_fingerprint_drift_detection_fires():
-    """The manifest gate must actually fail on drift: a previously-graded
-    name with a changed src/oracle/plan hash is reported; _GRADE_FIRST
-    names are exempt (already queued)."""
-    from quarkus_etl_spark.queries.base import _GRADE_FIRST, _PREVIOUSLY_GRADED
-    from tools.fingerprint import diff_against_manifest
-
-    graded = sorted(_PREVIOUSLY_GRADED - set(_GRADE_FIRST))[0]
-    queued = next(n for n in _GRADE_FIRST if n not in _PREVIOUSLY_GRADED)
-    manifest = {graded: {"src": "AA", "oracle": "BB", "plan": "CC"},
-                queued: {"src": "XX", "oracle": "YY", "plan": "ZZ"}}
-    current = {graded: {"src": "AA", "oracle": "BB", "plan": "DRIFTED"},
-               queued: {"src": "drifted", "oracle": "drifted", "plan": "drifted"}}
-    # fabricated-world diff: only the graded name's plan drift is reported
-    problems = [p for p in diff_against_manifest(current, manifest)
-                if p.startswith((graded, queued))]
-    assert any(p.startswith(f"{graded}: plan") for p in problems)
-    assert not any(p.startswith(queued) for p in problems)
+    assert diff_against_manifest(cheap_fingerprints(), manifest) == {}
 
 
 def test_type_skew_manifest_is_frozen_and_wellformed():

@@ -122,7 +122,7 @@ def test_knn_graph_routes_to_ann_above_threshold(spark, sf_dir, monkeypatch):
     from quarkus_etl_spark.queries.northstar_q import q_knn_graph
 
     exact_cols = q_knn_graph(spark, sf_dir).columns
-    monkeypatch.setenv("SPARK_GRAFT_EXACT_KNN_MAX_VECS", "1")
+    monkeypatch.setenv("SPARK_GRAFT_EXACT_PAIRWISE_MAX_VECS", "1")
     routed = q_knn_graph(spark, sf_dir)
     assert routed.columns == exact_cols  # identical output contract
     rows = routed.collect()

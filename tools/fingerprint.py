@@ -1,10 +1,8 @@
-"""Query-implementation fingerprints: the regrade-queue automation
-(VERDICT r6 #3).
+"""Query-implementation fingerprints: the record of which implementation
+each query last passed the differential harness with.
 
-Rounds 5 and 6 both caught changed-output queries still sitting in
-`_PREVIOUSLY_GRADED` only by human diligence. This tool freezes, per
-registered query, a fingerprint of everything that determines its graded
-output:
+Per registered query, `tools/fingerprints.json` holds fingerprints of
+everything that determines its graded output:
 
 - **src**  — sha256 of the query function's docstring-stripped AST dump
   (direct implementation edits; cheap, no Spark);
@@ -12,25 +10,27 @@ output:
 - **plan** — sha256 of the NORMALIZED analyzed logical plan at sf0.001
   (catches shared-operator changes the function source can't see —
   r6's asof/cdc fixes are exactly this class). Plan strings are stable
-  across sessions once exprIds are normalized (probed; the manifest
-  regeneration itself re-proves it every round). Live-streaming queries
+  across sessions once exprIds are normalized. Live-streaming queries
   (q_stream_live_*) EXECUTE a stream when called and return a
   memory-sink scan, so their plan part is skipped — src+oracle still
   fingerprint them, and their semantics are pinned row-exact in
-  tests/test_streaming.py.
+  tests/test_streaming.py;
 
-The committed manifest is `tools/fingerprints.json`. Enforcement:
+plus **round** on entries written by `--write`: the newest driver round
+on record (CORRECTNESS_r<N>.json) when the entry was written; an entry
+without it counts as round 0. `queries.base._graded_last` puts a query
+first while its last driver verdict is no newer than that stamp.
 
-- tests/test_coverage.py checks the CHEAP parts (src+oracle) for every
-  `_PREVIOUSLY_GRADED` query on every pytest run;
-- `python -m tools.fingerprint --check` (a standing round gate in the
-  verify skill) additionally checks the plan part with a live session.
-
-A mismatch for a `_PREVIOUSLY_GRADED` name means: move the query into
-`_GRADE_FIRST`, then regenerate with `python -m tools.fingerprint --write`.
-`--write` refuses to overwrite a changed entry for a _PREVIOUSLY_GRADED
-name unless `--force` is given, so the manifest can't be silently
-refreshed past the queue discipline.
+- `python -m tools.fingerprint --check` (the round gate) reports every
+  registered query whose entry is missing or drifted, and every entry
+  left behind by a query that is no longer registered; `--cheap` skips
+  the plan part, which needs a live session. tests/test_coverage.py runs
+  the cheap check on every pytest run.
+- `python -m tools.fingerprint --write` is the one command that records a
+  query: it runs the differential harness (`verify.run_all`) at sf0.01
+  on every drifted or unrecorded query, records only those that pass,
+  drops the entries of unregistered names, and exits nonzero when any
+  query failed (its old entry is kept, so `--check` keeps reporting it).
 """
 
 from __future__ import annotations
@@ -48,8 +48,11 @@ import textwrap
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-MANIFEST = os.path.join(REPO, "tools", "fingerprints.json")
+from quarkus_etl_spark.queries.base import FINGERPRINTS as MANIFEST  # noqa: E402
+
 SF_DIR_DEFAULT = "/root/testdata/sf0.001"
+# the scale factor the driver grades at, next to the plan fixtures
+GRADE_SF_DIR = os.path.join(os.path.dirname(SF_DIR_DEFAULT), "sf0.01")
 
 # Queries whose callable executes a live micro-batch stream and returns a
 # memory-sink scan: the analyzed plan of the RETURNED frame is just the
@@ -146,14 +149,16 @@ def full_fingerprints(spark, sf_dir: str) -> dict[str, dict[str, str]]:
 
     out = cheap_fingerprints()
     qs = all_query_callables()
-    for name, fn in qs.items():
+    # name order, not grading order: recording a query moves it in the
+    # grading order, and a plan must not depend on what ran before it
+    for name in sorted(qs):
         if name.startswith(_NO_PLAN_PREFIXES):
             continue
-        out[name]["plan"] = plan_fingerprint(spark, sf_dir, fn)
+        out[name]["plan"] = plan_fingerprint(spark, sf_dir, qs[name])
     return out
 
 
-def load_manifest() -> dict[str, dict[str, str]]:
+def load_manifest() -> dict[str, dict]:
     try:
         with open(MANIFEST) as fh:
             return json.load(fh)
@@ -162,35 +167,53 @@ def load_manifest() -> dict[str, dict[str, str]]:
 
 
 def diff_against_manifest(
-    current: dict[str, dict[str, str]], manifest: dict[str, dict[str, str]]
-) -> list[str]:
-    """Human-readable drift list for PREVIOUSLY-GRADED names only: a
-    _GRADE_FIRST query is already queued for a fresh verdict, so its drift
-    is expected until the next manifest regeneration."""
-    from quarkus_etl_spark.queries.base import _GRADE_FIRST, _PREVIOUSLY_GRADED
-
-    problems = []
-    for name in sorted(_PREVIOUSLY_GRADED):
-        if name in _GRADE_FIRST:
-            continue
-        cur, old = current.get(name), manifest.get(name)
-        if cur is None:
-            problems.append(f"{name}: in _PREVIOUSLY_GRADED but not registered")
-            continue
+    current: dict[str, dict[str, str]], manifest: dict[str, dict]
+) -> dict[str, str]:
+    """name -> why its manifest entry does not describe the registered
+    query. Only the parts present in `current` are compared, so a cheap
+    (src+oracle) `current` ignores the plan part."""
+    problems = {}
+    for name, cur in current.items():
+        old = manifest.get(name)
         if old is None:
-            problems.append(f"{name}: no manifest entry — regenerate (--write)")
+            problems[name] = "no manifest entry"
             continue
-        for part, v in cur.items():
-            if part in old and old[part] != v:
-                problems.append(
-                    f"{name}: {part} fingerprint drifted — its driver verdict "
-                    "no longer matches this implementation; move it to "
-                    "_GRADE_FIRST and regenerate the manifest"
-                )
+        drifted = [part for part, v in cur.items() if old.get(part) != v]
+        if drifted:
+            problems[name] = "/".join(drifted) + " fingerprint drifted"
+    for name in manifest.keys() - current.keys():
+        problems[name] = "entry for a query that is no longer registered"
     return problems
 
 
-def main() -> int:
+def record(
+    spark, current: dict[str, dict[str, str]], manifest: dict[str, dict]
+) -> list[str]:
+    """Re-verify every drifted or unrecorded query at the driver's scale
+    factor and write the manifest: passing queries get their current
+    fingerprints stamped with the newest driver round on record, failing
+    ones keep their old entry, unregistered names are dropped. Returns
+    the failing queries."""
+    from quarkus_etl_spark.queries.base import _last_graded_rounds
+    from quarkus_etl_spark.verify import run_all
+
+    names = sorted(n for n in diff_against_manifest(current, manifest) if n in current)
+    # run_all treats an empty name list as "every query"
+    results = run_all(spark, GRADE_SF_DIR, names) if names else []
+    newest = max(_last_graded_rounds().values(), default=0)
+    out = {n: e for n, e in manifest.items() if n in current}
+    for r in results:
+        print(f"{'OK  ' if r.ok else 'FAIL'} {r.name} {r.error}")
+        if r.ok:
+            out[r.name] = {**current[r.name], "round": newest}
+    with open(MANIFEST, "w") as fh:
+        json.dump(out, fh, indent=1, sort_keys=True)
+        fh.write("\n")
+    print(f"wrote {len(out)} fingerprints -> {MANIFEST}")
+    return [r.name for r in results if not r.ok]
+
+
+def main(argv: list[str] | None = None) -> int:
     ap = argparse.ArgumentParser(description=__doc__)
     ap.add_argument("--check", action="store_true",
                     help="verify the manifest and exit nonzero on drift — the "
@@ -199,13 +222,12 @@ def main() -> int:
                          "manifest gates (plan_audit / type_audit / "
                          "fingerprint) with the same --check one-liner "
                          "(VERDICT r9 #7)")
-    ap.add_argument("--write", action="store_true", help="regenerate manifest")
-    ap.add_argument("--force", action="store_true",
-                    help="allow --write to overwrite drifted previously-graded entries")
+    ap.add_argument("--write", action="store_true",
+                    help="re-verify drifted queries and record those that pass")
     ap.add_argument("--cheap", action="store_true",
                     help="check only src+oracle parts (no Spark session)")
     ap.add_argument("--sf", default=os.environ.get("SPARK_GRAFT_SF_DIR_FP", SF_DIR_DEFAULT))
-    args = ap.parse_args()
+    args = ap.parse_args(argv)
     if args.check and args.write:
         ap.error("--check and --write are mutually exclusive")
 
@@ -216,30 +238,19 @@ def main() -> int:
 
         spark = get_spark()
         current = full_fingerprints(spark, args.sf)
-
     manifest = load_manifest()
-    problems = diff_against_manifest(current, manifest)
 
     if args.write:
-        # a missing entry is what --write exists to create; only DRIFT of an
-        # existing previously-graded entry blocks regeneration
-        problems = [p for p in problems if "no manifest entry" not in p]
-        if problems and not args.force:
-            print("REFUSING --write: previously-graded entries drifted "
-                  "(re-queue them in _GRADE_FIRST first, or --force):")
-            for p in problems:
-                print("  " + p)
-            return 1
-        with open(MANIFEST, "w") as fh:
-            json.dump(current, fh, indent=1, sort_keys=True)
-            fh.write("\n")
-        print(f"wrote {len(current)} fingerprints -> {MANIFEST}")
-        return 0
+        failed = record(spark, current, manifest)
+        if failed:
+            print(f"NOT RECORDED ({len(failed)} failing): {' '.join(failed)}")
+        return 1 if failed else 0
 
+    problems = diff_against_manifest(current, manifest)
     if problems:
-        print(f"FINGERPRINT DRIFT ({len(problems)}):")
-        for p in problems:
-            print("  " + p)
+        print(f"FINGERPRINT DRIFT ({len(problems)}) — run --write to re-verify and record:")
+        for name in sorted(problems):
+            print(f"  {name}: {problems[name]}")
         return 1
     print(f"fingerprints consistent: {len(current)} queries "
           f"({'cheap' if args.cheap else 'full'} check)")
