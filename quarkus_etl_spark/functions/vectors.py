@@ -166,13 +166,15 @@ def const_vec(vec: list[float]) -> Column:
 
 def sql_array(vec: list[float]) -> str:
     """`vec` as a parsed-SQL array<double> constant (see const_vec)."""
-    parts = []
-    for x in vec:
-        x = float(x)
-        if not math.isfinite(x):
-            raise ValueError(f"constant vector component is not finite: {x!r}")
-        parts.append(f"{x!r}D")
-    return "array(" + ", ".join(parts) + ")"
+    return "array(" + ", ".join(sql_double(x) for x in vec) + ")"
+
+
+def sql_double(x: float) -> str:
+    """`x` as a bit-exact parsed-SQL double literal (see const_vec)."""
+    x = float(x)
+    if not math.isfinite(x):
+        raise ValueError(f"constant vector component is not finite: {x!r}")
+    return f"{x!r}D"
 
 
 def py_l2_norm(vec: list[float]) -> float:
@@ -182,12 +184,10 @@ def py_l2_norm(vec: list[float]) -> float:
     return math.sqrt(sum(float(x) * float(x) for x in vec))
 
 
-def cosine_to_const(a: Column, vec: list[float], a_norm: Column | None = None) -> Column:
+def cosine_to_const(a: Column, vec: list[float]) -> Column:
     """cosine_similarity against a constant vector, with the constant's
     norm folded at plan-build time (per-row work halves: one zip_with fold
-    + the row norm instead of three folds). Pass `a_norm` to reuse an
-    already-computed row norm across many constants (IVF scoring)."""
-    na = l2_norm(a) if a_norm is None else a_norm
+    + the row norm instead of three folds)."""
     return guarded_cosine(
-        dot_product(a, const_vec(vec)), na * F.lit(py_l2_norm(vec))
+        dot_product(a, const_vec(vec)), l2_norm(a) * F.lit(py_l2_norm(vec))
     )

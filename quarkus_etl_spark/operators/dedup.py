@@ -446,12 +446,7 @@ EXHAUSTIVE_MAX_DOCS = 20_000
 
 
 def _fits_exhaustive(df: DataFrame) -> bool:
-    import os
-
-    # Env read stays at call time (tests flip it per-case); the count is
-    # cached per (session, plan) by routing_count.
-    limit = int(os.environ.get("SPARK_GRAFT_EXHAUSTIVE_MAX_DOCS", EXHAUSTIVE_MAX_DOCS))
-    return routing_count(df) <= limit
+    return routing_count(df) <= EXHAUSTIVE_MAX_DOCS
 
 
 def near_dup_edges(
@@ -468,7 +463,7 @@ def near_dup_edges(
     SoftDeDup weights, PageRank/LPA, leakage checks).
 
     strategy="auto" is the 100 TB routing contract (VERDICT r2 #2): below
-    `SPARK_GRAFT_EXHAUSTIVE_MAX_DOCS` it builds the exact exhaustive
+    `EXHAUSTIVE_MAX_DOCS` it builds the exact exhaustive
     blocked-Jaccard graph — bit-identical to the SQL oracles — and above
     it switches to MinHash-LSH candidate generation over the SAME hashed
     n-gram sets, verified with the SAME exact Jaccard (precision 1.0,
@@ -602,7 +597,7 @@ def incremental_jaccard_pairs(
     Returns (id_exist, id_new, jaccard) for pairs at/above threshold.
 
     strategy="auto" (the default) keeps this exact size-bucketed plan while
-    corpus+delta fit SPARK_GRAFT_EXHAUSTIVE_MAX_DOCS and switches to the
+    corpus+delta fit EXHAUSTIVE_MAX_DOCS and switches to the
     asymmetric MinHash-LSH candidate plan above it (band hashes computed
     per side, equi-join on (band, hash), exact verification — identical
     jaccard on every surviving pair, recall S-curve-bounded): at dense
@@ -616,9 +611,7 @@ def incremental_jaccard_pairs(
     if strategy == "auto":
         strategy = (
             "exact"
-            if routing_count(existing) + routing_count(incoming)
-            <= int(__import__("os").environ.get(
-                "SPARK_GRAFT_EXHAUSTIVE_MAX_DOCS", EXHAUSTIVE_MAX_DOCS))
+            if routing_count(existing) + routing_count(incoming) <= EXHAUSTIVE_MAX_DOCS
             else "lsh"
         )
         log_route(

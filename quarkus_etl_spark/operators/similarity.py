@@ -26,9 +26,12 @@ from ..functions.vectors import (
     dot_product,
     guarded_cosine,
     l2_norm,
+    py_l2_norm,
     sql_array,
+    sql_double,
     sql_ident,
     to_double_array,
+    vec_contract_to_null,
 )
 from ..plans.tuning import ensure_parallelism, log_route, routing_count
 
@@ -198,29 +201,26 @@ def _auto_planes(df: DataFrame, target_bucket: int) -> int:
     return min(max(3, p), AUTO_PLANES_MAX)
 
 
-def _vec_dim(df: DataFrame, vec_col: str) -> int:
-    """Vector dimensionality from the data (one limit-1 scan at plan build).
-    Hyperplanes must match the data's dim: a mismatched constant would
-    null every dot product and silently hash all rows to one bucket.
-    NULL/empty vectors are skipped — an arbitrary first() row being a
-    failed-encoder row must not abort the whole query (the probe is
-    partition-order-dependent); only an all-degenerate table raises.
-    Cached per (session, plan, files) via routing_meta — the dim cannot
-    change while all three are unchanged, and the probe cost (~0.25 s at
-    sf0.1) was paid on every operator invocation (r11)."""
-    from ..plans.tuning import routing_meta
+def _contract_projection(
+    df: DataFrame, id_col: str, vec_col: str, dim: int, block_col: str | None
+) -> DataFrame:
+    """The ANN operators' one input projection: (id, __v[, __blk]), where
+    __v is the vector widened to double under the `dim` contract. A vector
+    of another length (or with a non-finite component) becomes a missing
+    one, so hyperplanes sized to `dim` never meet ragged data, whose
+    NULL-padded dot products would hash every row to one bucket."""
+    cols = [F.col(id_col), to_double_array(vec_contract_to_null(vec_col, dim)).alias("__v")]
+    if block_col is not None:
+        cols.append(F.col(block_col).alias("__blk"))
+    return df.select(*cols)
 
-    def _compute(d: DataFrame):
-        return (
-            d.select(F.size(to_double_array(vec_col)).alias("d"))
-            .where(F.col("d") > 0)
-            .first()
-        )
 
-    row = routing_meta(df, f"vec_dim:{vec_col}", _compute)
-    if row is None or row["d"] is None or row["d"] <= 0:
-        raise ValueError(f"cannot derive vector dim from column {vec_col!r}")
-    return int(row["d"])
+def _sql_dot(a: str, b: str, prefix: str) -> str:
+    """`dot_product`'s left-to-right zip_with / aggregate fold as parsed
+    SQL, its lambda variables named with `prefix` (inside a lambda they
+    would shadow a column of the same name)."""
+    x, y, s = (prefix + n for n in "xys")
+    return f"aggregate(zip_with({a}, {b}, ({x}, {y}) -> {x} * {y}), 0D, ({s}, {x}) -> {s} + {x})"
 
 
 def add_lsh_bucket(
@@ -235,10 +235,7 @@ def add_lsh_bucket(
     round trips each). The lambda variables carry a `__lsh_` prefix:
     inside a lambda they would shadow a column of the same name."""
     v = f"CAST({sql_ident(vec_col)} AS ARRAY<DOUBLE>)"
-    dot = (
-        f"aggregate(zip_with({v}, __lsh_p, (__lsh_x, __lsh_y) -> __lsh_x * __lsh_y),"
-        " 0D, (__lsh_s, __lsh_x) -> __lsh_s + __lsh_x)"
-    )
+    dot = _sql_dot(v, "__lsh_p", "__lsh_")
     plane_mat = "array(" + ", ".join(sql_array(p) for p in planes) + ")"
     # bigint, not int: the auto-sized plane count grows with data volume
     # and 1 << i exceeds int32 from i=31.
@@ -346,21 +343,38 @@ def ivf_centroids(
 def add_ivf_cell(
     df: DataFrame, vec_col: str, centroids: list[list[float]], out_col: str = "cell"
 ) -> DataFrame:
-    """Assign each vector to its max-cosine centroid — pure Column algebra:
-    build the score array, take array_position of its max. Ties resolve to
-    the lowest cell id (array_position finds the first occurrence)."""
-    from ..functions.vectors import l2_norm
+    """Assign each vector to its max-cosine centroid: build the score
+    array, take array_position of its max. Ties resolve to the lowest cell
+    id (array_position finds the first occurrence); a NULL vector gets a
+    NULL cell.
 
-    v = to_double_array(vec_col)
-    # The row norm is shared by every centroid score: compute it once per
-    # row (a named column, not a repeated subtree) so scoring n_cells
-    # centroids costs n_cells dot-folds + ONE norm-fold, and the expression
-    # tree stays linear in n_cells (fast analysis/codegen).
-    nv = l2_norm(v)
-    scores = F.array(*[cosine_to_const(v, c, a_norm=F.col("__nv")) for c in centroids])
-    cell = (F.array_position(scores, F.array_max(scores)) - 1).cast("int")
+    One parsed expression over ONE centroid-matrix constant, so building
+    it costs a fixed few py4j round trips for any n_cells (a Column
+    cosine per centroid cost hundreds of round trips each). Each centroid
+    carries its norm, computed on the driver; the row norm is computed
+    once per row and shared by every centroid score. A score is
+    `cosine_to_const`'s: the same left-to-right dot fold and the same
+    guarded_cosine NULL, zero-norm and clamp legs."""
+    v = f"CAST({sql_ident(vec_col)} AS ARRAY<DOUBLE>)"
+    cents = "array(" + ", ".join(
+        f"named_struct('c', {sql_array(c)}, 'n', {sql_double(py_l2_norm(c))})"
+        for c in centroids
+    ) + ")"
+    dot = _sql_dot(v, "__ivf_e.c", "__ivf_")
+    denom = "(__nv * __ivf_e.n)"
+    score = (
+        f"CASE WHEN {dot} IS NOT NULL AND {denom} != 0D"
+        f" THEN least(greatest({dot} / {denom}, -1D), 1D)"
+        f" WHEN {denom} = 0D THEN 0D END"
+    )
     return (
-        df.withColumn("__nv", nv).withColumn(out_col, cell).drop("__nv")
+        df.withColumn("__nv", F.expr(f"sqrt({_sql_dot(v, v, '__ivf_')})"))
+        .withColumn("__ivf_s", F.expr(f"transform({cents}, __ivf_e -> {score})"))
+        .withColumn(
+            out_col,
+            F.expr("CAST(array_position(__ivf_s, array_max(__ivf_s)) - 1 AS INT)"),
+        )
+        .drop("__nv", "__ivf_s")
     )
 
 
@@ -463,6 +477,8 @@ def knn_graph_ann(
     df: DataFrame,
     id_col: str,
     vec_col: str,
+    *,
+    dim: int,
     k: int = 3,
     n_planes: int | None = None,
     seed: int = 42,
@@ -481,8 +497,9 @@ def knn_graph_ann(
     count is bumped by ceil(log2(L)) so the total candidate volume stays
     near the single-table budget ((P+8)/(P+1)x with the bounded hamming-2
     probes — 1.64x at P=10, falling toward 1 as P gets large). Measured on
-    fixtures: recall@3 0.62 -> 0.95 (sf0.01) / 0.97 (sf0.001); 200k-vec
-    stress 32 s -> 58 s. Plan per table: one map-only bucket assignment,
+    fixtures: recall@3 0.62 -> 0.95 (sf0.01) / 0.97 (sf0.001), but only
+    0.78 at sf0.1 (2000 vectors), under the 0.85 floor; 200k-vec stress
+    32 s -> 58 s. Plan per table: one map-only bucket assignment,
     a (1+P+C(h2,2))-way probe explode on the query side, a shuffled
     equi-join on the bucket id; tables union into one (src, nbr) dedup +
     bounded per-source window. Recall is approximate by design (pytest
@@ -503,12 +520,16 @@ def knn_graph_ann(
     per-group head list, merged with its
     representative's graph edges through one bounded top-k window. The
     group aggregate collapses duplicates MAP-SIDE (the exchange carries
-    ~distinct vectors) and a limit-1 existence probe routes
-    duplicate-free inputs straight to the plain LSH path, so pristine
-    data pays one map-combined aggregate and nothing else. For
-    all-distinct inputs the output is identical to the uncollapsed form
-    (pinned by test); LSH work is quadratic only in DISTINCT bucket
-    population, which auto_planes bounds."""
+    ~distinct vectors), and when it counts as many groups as input rows
+    the input is routed straight to the plain LSH path, so pristine data
+    pays one map-combined aggregate and nothing else. For all-distinct
+    inputs the output is identical to the uncollapsed form (pinned by
+    test); LSH work is quadratic only in DISTINCT bucket population,
+    which auto_planes bounds.
+
+    `dim` is the column's declared vector dimension (the load contract's,
+    e.g. queries.base.EMB_DIM): it sizes the hyperplanes, and a row whose
+    vector has another length is a missing vector and gets no edges."""
     from pyspark.sql import Window
 
     if n_tables < 1:
@@ -523,11 +544,7 @@ def knn_graph_ann(
             _auto_planes(df, target_bucket) + max(n_tables - 1, 0).bit_length(),
             AUTO_PLANES_MAX,
         )
-    dim = _vec_dim(df, vec_col)
-    cols = [F.col(id_col), to_double_array(vec_col).alias("__v")]
-    if block_col is not None:
-        cols.append(F.col(block_col).alias("__blk"))
-    raw = ensure_parallelism(df.select(*cols))
+    raw = ensure_parallelism(_contract_projection(df, id_col, vec_col, dim, block_col))
     members = None
     if collapse_duplicates:
         grp = ["__v"] + (["__blk"] if block_col is not None else [])
@@ -540,18 +557,11 @@ def knn_graph_ann(
         # Adaptive routing (same pattern as fits_exact_pairwise): the
         # expansion machinery only pays when duplicates EXIST. A corpus
         # that already ran exact dedup — or the pristine fixtures — takes
-        # the zero-extra-shuffle path; the probe is a limit-1 early-out,
-        # cached per (session, plan, files) like routing_count (the probe
-        # aggregate cost ~0.9 s per invocation at sf0.1 — r11; the boolean
-        # cannot change while session, plan and input files are unchanged).
-        from ..plans.tuning import routing_meta
-
-        has_dup = routing_meta(
-            groups,
-            "dup_probe",
-            lambda g: g.where(F.col("__m") > 1).limit(1).count() > 0,
-        )
-        if has_dup:
+        # the zero-extra-shuffle path. Group sizes sum to the row count,
+        # so fewer groups than rows is exactly "some group has __m > 1";
+        # both counts are cached routing_count scalars, and the row count
+        # is the one auto plane sizing already paid for.
+        if routing_count(groups) < routing_count(df):
             nodes = groups.select(F.col("__rep").alias(id_col), *grp)
             members = raw.join(groups, grp).select(
                 F.col(id_col).alias("__src"),
@@ -565,7 +575,9 @@ def knn_graph_ann(
             nodes = raw
     else:
         nodes = raw
-    base = nodes.withColumn("__n", l2_norm(F.col("__v")))
+    # A missing vector has no similarity: it would otherwise bucket as 0
+    # (it sets no bit) and take k NULL-cosine edges.
+    base = nodes.where(F.col("__v").isNotNull()).withColumn("__n", l2_norm(F.col("__v")))
 
     def table_pairs(table_seed: int) -> DataFrame:
         planes = random_hyperplanes(dim, n_planes, table_seed)
@@ -644,8 +656,8 @@ def knn_graph_ann(
     )
     fellows = (
         # NULL-vector groups are excluded entirely: with collapse off such
-        # rows never bucket-match (NULL bucket joins nothing) and emit zero
-        # edges, so the expansion must not mint edges for them either.
+        # rows never reach the bucket join and emit zero edges, so the
+        # expansion must not mint edges for them either.
         dup.where(F.col("__gn").isNotNull())
         .join(heads, "__rep")
         .select(
@@ -691,12 +703,7 @@ EXACT_PAIRWISE_MAX_VECS = 50_000
 
 
 def fits_exact_pairwise(df: DataFrame) -> bool:
-    import os
-
-    limit = int(
-        os.environ.get("SPARK_GRAFT_EXACT_PAIRWISE_MAX_VECS", EXACT_PAIRWISE_MAX_VECS)
-    )
-    return routing_count(df) <= limit
+    return routing_count(df) <= EXACT_PAIRWISE_MAX_VECS
 
 
 def ann_pairs(
@@ -704,6 +711,8 @@ def ann_pairs(
     id_col: str,
     vec_col: str,
     threshold: float,
+    *,
+    dim: int,
     block_col: str | None = None,
     n_planes: int | None = None,
     seed: int = 42,
@@ -726,16 +735,16 @@ def ann_pairs(
     any threshold — so collapse cannot help; quadratic cost is the
     declared all-pairs semantics. A duplicate-heavy corpus runs exact
     dedup (dedup_exact / dedup_keep_best) upstream first, which is the
-    pipeline order the curation queries already use."""
+    pipeline order the curation queries already use.
+
+    `dim` is the column's declared vector dimension, as for knn_graph_ann:
+    a row whose vector has another length gets no pairs."""
     if n_planes is None:
         n_planes = _auto_planes(df, target_bucket)
-    planes = random_hyperplanes(_vec_dim(df, vec_col), n_planes, seed)
-    cols = [F.col(id_col), to_double_array(vec_col).alias("__v")]
-    if block_col is not None:
-        cols.append(F.col(block_col).alias("__blk"))
-    base = ensure_parallelism(df.select(*cols)).withColumn(
-        "__n", l2_norm(F.col("__v"))
-    )
+    planes = random_hyperplanes(dim, n_planes, seed)
+    base = ensure_parallelism(
+        _contract_projection(df, id_col, vec_col, dim, block_col)
+    ).withColumn("__n", l2_norm(F.col("__v")))
     bucketed = add_lsh_bucket(base, "__v", planes, out_col="__b")
     probe_cols = [
         F.col(id_col).alias("__pid"),
@@ -774,13 +783,16 @@ def similar_pairs_auto(
     vec_col: str,
     block_col: str,
     threshold: float,
+    *,
+    dim: int,
 ) -> DataFrame:
     """Size-routed pair generation: exact blocked half-matrix below
     EXACT_PAIRWISE_MAX_VECS (the oracle-checked plan), sign-LSH candidates
     with exact verification above. Identical (id_a, id_b, cosine) contract
-    and identical values on every emitted pair."""
+    and identical values on every emitted pair. `dim` is the column's
+    declared vector dimension, which sizes the ANN branch's hyperplanes."""
     if fits_exact_pairwise(df):
         log_route("similar_pairs_auto", "exact", approximate=False)
         return pairwise_similar(df, id_col, vec_col, block_col, threshold)
     log_route("similar_pairs_auto", "ann", approximate=True)
-    return ann_pairs(df, id_col, vec_col, threshold, block_col=block_col)
+    return ann_pairs(df, id_col, vec_col, threshold, dim=dim, block_col=block_col)

@@ -23,47 +23,6 @@ from pyspark.sql import DataFrame
 _ROUTING_CACHE_MAX = 256
 _ROUTING_COUNT_CACHE: dict[tuple, int] = {}
 
-# Same cache discipline, generalized to other plan-ROUTING scalars (vector
-# dimensionality probes, duplicate-existence probes): metadata that shapes
-# the physical plan, never row values that reach an output. Keyed like
-# routing_count — (session, analyzed-plan semantic hash, input-file
-# tuple) — so an overwritten/appended table invalidates the entry.
-_ROUTING_META_CACHE: dict[tuple, object] = {}
-
-
-def _cache_put(cache: dict, key, value) -> None:
-    if len(cache) >= _ROUTING_CACHE_MAX:
-        cache.pop(next(iter(cache)))
-    cache[key] = value
-
-
-def routing_meta(df: DataFrame, tag: str, compute):
-    """Memoize a plan-routing scalar derived from `df` (r11 optimization:
-    the ANN operators re-ran a dim probe `first()` and a duplicate-probe
-    aggregate on every invocation — ~1.2 s per q_knn_graph_ann call at
-    sf0.1 — for answers that cannot change while the session, logical plan
-    and input files are all unchanged). Falls back to calling `compute`
-    uncached when the plan cannot be fingerprinted (Connect, API drift),
-    exactly like routing_count."""
-    from ..catalog import _session_key
-
-    try:
-        try:
-            files = tuple(sorted(df.inputFiles()))
-        except Exception:  # streaming/in-memory plans
-            files = ()
-        key = (
-            tag,
-            _session_key(df.sparkSession),
-            int(df._jdf.queryExecution().analyzed().semanticHash()),
-            files,
-        )
-    except Exception:  # pragma: no cover - Connect or API drift
-        return compute(df)
-    if key not in _ROUTING_META_CACHE:
-        _cache_put(_ROUTING_META_CACHE, key, compute(df))
-    return _ROUTING_META_CACHE[key]
-
 _route_logger = __import__("logging").getLogger("quarkus_etl_spark.routing")
 
 
@@ -121,7 +80,9 @@ def routing_count(df: DataFrame) -> int:
     n = _ROUTING_COUNT_CACHE.get(key)
     if n is None:
         n = df.count()
-        _cache_put(_ROUTING_COUNT_CACHE, key, n)
+        if len(_ROUTING_COUNT_CACHE) >= _ROUTING_CACHE_MAX:
+            _ROUTING_COUNT_CACHE.pop(next(iter(_ROUTING_COUNT_CACHE)))
+        _ROUTING_COUNT_CACHE[key] = n
     return n
 
 

@@ -812,7 +812,7 @@ def q_split_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcasts whichever side collapses below the threshold. The pair
     GENERATOR routes by corpus size (near_dup_edges auto): the exhaustive
     exact-Jaccard plan at audit/oracle scale, MinHash-LSH candidates with
-    exact verification above SPARK_GRAFT_EXHAUSTIVE_MAX_DOCS — the audit
+    exact verification above dedup.EXHAUSTIVE_MAX_DOCS — the audit
     aggregate is generator-agnostic (same (id_a, id_b) contract)."""
     from ..operators.dedup import near_dup_edges
 

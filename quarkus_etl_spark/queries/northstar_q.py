@@ -30,7 +30,7 @@ from ..operators.similarity import (
     pairwise_similar,
 )
 from ..plans.tuning import ensure_parallelism, materialize_once
-from .base import emb, register, t
+from .base import EMB_DIM, emb, register, t
 
 
 # --------------------------------------------------------------------------
@@ -344,14 +344,16 @@ def q_sim_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact pairwise cosine >= 0.4 within label blocks (the fixture
     embeddings are near-orthogonal random vectors; 0.4 sits in the top
     ~0.05% of the within-label cosine distribution). Size-routed: above
-    SPARK_GRAFT_EXACT_PAIRWISE_MAX_VECS (50k; exact half-matrix measured
+    similarity.EXACT_PAIRWISE_MAX_VECS (50k; exact half-matrix measured
     1109 s at 200k vecs) the pairs come from sign-LSH candidates with
     exact-cosine verification — identical values on every emitted pair,
     recall S-curve-bounded (operators/similarity.py ann_pairs)."""
     from ..operators.similarity import similar_pairs_auto
 
     e = emb(spark, sf_dir)
-    return similar_pairs_auto(e, "vec_id", "embedding", "label", threshold=0.4)
+    return similar_pairs_auto(
+        e, "vec_id", "embedding", "label", threshold=0.4, dim=EMB_DIM
+    )
 
 
 @register(
@@ -381,7 +383,9 @@ def q_dedup_embed(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.similarity import similar_pairs_auto
 
     e = emb(spark, sf_dir)
-    pairs = similar_pairs_auto(e, "vec_id", "embedding", "label", threshold=0.4)
+    pairs = similar_pairs_auto(
+        e, "vec_id", "embedding", "label", threshold=0.4, dim=EMB_DIM
+    )
     return drop_near_duplicates(e.select("vec_id", "label"), pairs, "vec_id")
 
 
@@ -1400,7 +1404,7 @@ def q_knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Size routing (VERDICT r2 #3): the exact half-matrix is quadratic per
     block, so above similarity.fits_exact_pairwise's limit
-    (SPARK_GRAFT_EXACT_PAIRWISE_MAX_VECS, default 50k — the same gate as
+    (EXACT_PAIRWISE_MAX_VECS, 50k — the same gate as
     q_sim_pairs and q_dedup_embed) this delegates to the sign-LSH
     candidate plan (knn_graph_ann — identical output schema, recall floor
     pytest-pinned). Below it — including the oracle gate — the exact plan
@@ -1414,7 +1418,9 @@ def q_knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
         from ..operators.similarity import knn_graph_ann
 
         log_route("q_knn_graph", "ann", approximate=True)
-        return knn_graph_ann(e, "vec_id", "embedding", k=3, block_col="label")
+        return knn_graph_ann(
+            e, "vec_id", "embedding", dim=EMB_DIM, k=3, block_col="label"
+        )
     log_route("q_knn_graph", "exact", approximate=False)
     pairs = pairwise_similar(e, "vec_id", "embedding", "label", threshold=-1.0)
     m = _mirror_pairs(pairs)
@@ -1464,13 +1470,14 @@ def q_knn_graph_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     - `n_vectors` / `n_exact_edges`: exact quantities, hash-checked vs the
       oracle's own exact-graph replica;
     - `recall_ok`: overlap*100 >= n_exact_edges*85 — the declared 0.85
-      edge-recall floor (measured 0.95 at sf0.01 / 0.97 at sf0.001),
-      pinned TRUE. Unlike q_sim_ann_ivf the raw overlap integer cannot be
-      an output column: the Gaussian plane family is not SQL-replicable
-      (that family stays the production default on purpose — see
-      q_sim_ann_lsh for the portable-md5 variant), so the oracle cannot
-      compute it; the floor boolean is the hash-gradable contract. The
-      85% floor sits a 10-point margin under measured recall, sized so
+      edge-recall floor (measured 0.95 at sf0.01 / 0.97 at sf0.001, but
+      0.78 at sf0.1, where it reads FALSE — an open defect), pinned TRUE
+      at the graded SF. Unlike q_sim_ann_ivf the raw overlap integer
+      cannot be an output column: the Gaussian plane family is not
+      SQL-replicable (that family stays the production default on purpose
+      — see q_sim_ann_lsh for the portable-md5 variant), so the oracle
+      cannot compute it; the floor boolean is the hash-gradable contract.
+      The 85% floor sits a 10-point margin under measured recall, sized so
       the bounded fuzz mutations (≤1% zero/const vectors, one 50-row hot
       duplicate group — tools/fuzz_diff.py _mutate_embeddings) cannot
       breach it: exact-duplicate groups collapse to fellow edges that
@@ -1492,18 +1499,19 @@ def q_knn_graph_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r12 re-measured the shared guarded-embedding checkpoint here
     # (VERDICT r11 #3) and RE-REJECTED it for this query: 5.363 s min ->
     # 6.031 with the frame materialized (6 interleaved pairs at sf0.1).
-    # Root cause: the routing_meta caches (vec-dim probe, duplicate probe,
-    # auto-plane count) key on the analyzed plan, and a checkpointed frame
-    # is a fresh RDD scan per invocation — every call re-paid 3 probe jobs
-    # that the raw-plan key amortizes to zero. The guard+scan subtree the
-    # checkpoint would deduplicate is 2000 rows — cheaper than one probe
-    # job. (q_sim_ann_ivf, which has no plan-keyed probes, KEEPS the
+    # Root cause: knn_graph_ann's routing_count scalars (the row count that
+    # sizes the planes, the group count that checks for duplicates) are
+    # cached on the analyzed plan, and a checkpointed frame is a fresh RDD
+    # scan per invocation — every call re-paid the count jobs that the
+    # raw-plan key amortizes to zero. The guard+scan subtree the
+    # checkpoint would deduplicate is 2000 rows — cheaper than one count
+    # job. (q_sim_ann_ivf, which has no plan-keyed counts, KEEPS the
     # checkpoint: 5.470 -> 4.112 s min.) The twin-leg duplication this
     # query did have was fixed structurally instead (_mirror_pairs).
     e = emb(spark, sf_dir).where(F.col("embedding").isNotNull())
-    ann = knn_graph_ann(e, "vec_id", "embedding", k=3, block_col="label").select(
-        "src", "nbr", F.lit(1).alias("__hit")
-    )
+    ann = knn_graph_ann(
+        e, "vec_id", "embedding", dim=EMB_DIM, k=3, block_col="label"
+    ).select("src", "nbr", F.lit(1).alias("__hit"))
     pairs = pairwise_similar(e, "vec_id", "embedding", "label", threshold=-1.0)
     m = _mirror_pairs(pairs)
     w = Window.partitionBy("src").orderBy(F.desc("cosine"), F.asc("nbr"))
@@ -1671,8 +1679,6 @@ def q_emb_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     # decimal, which is what keeps the fold/groupBy forms hash-equal).
     c0 = seeds.join(v, "vec_id").select("cluster", F.col("e").alias("carr"))
 
-    import os
-
     from ..operators.kmeans import (
         EXACT_KMEANS_MAX_K,
         kmeans_assign_pruned,
@@ -1680,9 +1686,6 @@ def q_emb_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     k = 4
-    max_exact_k = int(
-        os.environ.get("SPARK_GRAFT_EXACT_KMEANS_MAX_K", EXACT_KMEANS_MAX_K)
-    )
 
     def assign(centroids: DataFrame) -> DataFrame:
         # Large-k routing (VERDICT r3 #2): all-centroid scoring is n*k*dim
@@ -1691,7 +1694,7 @@ def q_emb_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
         # exact quantized metric on every scored candidate, candidate set
         # bounded by nprobe cells. Fixture k=4 stays on the exact
         # oracle-graded plan.
-        if k > max_exact_k:
+        if k > EXACT_KMEANS_MAX_K:
             return kmeans_assign_pruned(v, centroids)
         # Quantized squared-distance terms are <= 4e12 each, so a LONG fold
         # is exact up to ~2M dims — and stays in whole-stage codegen where

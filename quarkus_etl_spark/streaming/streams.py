@@ -144,9 +144,14 @@ def run_stream_to_memory(
 # class for small per-key state (a few dozen bytes) — comfortably inside a
 # task's memory and a sub-second per-batch commit — while capping the
 # per-micro-batch fixed cost (store init/versioning/commit per partition)
-# that motivated the r11 8->4 measurement. Tune per deployment; the env
-# override always wins over nothing, and an explicit n wins over both.
+# that motivated the r11 8->4 measurement. Tune per deployment; an
+# explicit n wins over it, and with neither n nor expected_keys the local
+# default applies.
 KEYS_PER_STATE_PARTITION = 1_000_000
+
+# The local default, sized to the fixtures' tiny state (and what the bench
+# fixtures run).
+LOCAL_STATE_PARTITIONS = 4
 
 
 @contextmanager
@@ -171,11 +176,12 @@ def state_partitions(
        KEYS_PER_STATE_PARTITION), clamped to [1, session shuffle
        partitions] so state sizing never exceeds what the session would
        use anyway;
-    3. SPARK_GRAFT_STREAM_STATE_PARTITIONS env, else 4 — the LOCAL
-       default, sized to the fixtures' tiny state (and what the bench
-       fixtures run)."""
-    import os
+    3. LOCAL_STATE_PARTITIONS (4).
 
+    The state-store provider is the session's own
+    `spark.sql.streaming.stateStore.providerClass` (RocksDB is the scale
+    choice when state outgrows executor memory); a deployment sets it on
+    its session."""
     if n is None and expected_keys is not None:
         upper = int(spark.conf.get("spark.sql.shuffle.partitions"))
         wanted = -(-int(expected_keys) // KEYS_PER_STATE_PARTITION)
@@ -187,57 +193,13 @@ def state_partitions(
             )
         n = max(1, min(upper, wanted))
     if n is None:
-        raw = os.environ.get("SPARK_GRAFT_STREAM_STATE_PARTITIONS", "4")
-        try:
-            n = int(raw)
-        except ValueError:
-            raise ValueError(
-                "SPARK_GRAFT_STREAM_STATE_PARTITIONS must be an integer, "
-                f"got {raw!r}"
-            ) from None
-    # State-store provider is likewise env-selectable (guide §9 /
-    # VERDICT r11 #6): the default HDFS-backed store keeps all state
-    # in executor memory with full-snapshot versioning; RocksDB keeps it
-    # off-heap with incremental versioning — the scale choice when state
-    # outgrows memory. A streaming query pins the provider at first start,
-    # so it must wrap the START like the partition count. `hdfs` sets its
-    # provider explicitly: a session already carrying RocksDB would
-    # otherwise silently keep it (ADVICE r12). Unset leaves the session's
-    # provider alone.
-    provider = (
-        os.environ.get("SPARK_GRAFT_STREAM_STATE_PROVIDER", "").strip().lower()
-    )
-    provider_conf = "spark.sql.streaming.stateStore.providerClass"
-    new_provider = None
-    if provider == "rocksdb":
-        new_provider = (
-            "org.apache.spark.sql.execution.streaming.state."
-            "RocksDBStateStoreProvider"
-        )
-    elif provider in ("hdfs", "default"):
-        new_provider = (
-            "org.apache.spark.sql.execution.streaming.state."
-            "HDFSBackedStateStoreProvider"
-        )
-    elif provider:
-        raise ValueError(
-            "SPARK_GRAFT_STREAM_STATE_PROVIDER must be 'rocksdb', 'hdfs' or "
-            f"unset, got {provider!r}"
-        )
+        n = LOCAL_STATE_PARTITIONS
     old = spark.conf.get("spark.sql.shuffle.partitions")
-    old_provider = spark.conf.get(provider_conf, None)
     spark.conf.set("spark.sql.shuffle.partitions", str(n))
-    if new_provider is not None:
-        spark.conf.set(provider_conf, new_provider)
     try:
         yield
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", old)
-        if new_provider is not None:
-            if old_provider is None:
-                spark.conf.unset(provider_conf)
-            else:
-                spark.conf.set(provider_conf, old_provider)
 
 
 def stream_etl_job(

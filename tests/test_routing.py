@@ -10,6 +10,7 @@ from __future__ import annotations
 
 import pytest
 
+from quarkus_etl_spark.operators import dedup, kmeans, similarity
 from quarkus_etl_spark.operators.dedup import near_dup_edges, ngram_jaccard_pairs
 from quarkus_etl_spark.plans import plan_string
 
@@ -51,7 +52,7 @@ def test_near_dup_edges_auto_routes_by_corpus_size(spark, sf_dir, monkeypatch):
     auto_small = near_dup_edges(d, "doc_id", "text", block_col="lang", threshold=0.7)
     assert "array_min" not in plan_string(auto_small)
     # force the threshold below the corpus size -> LSH candidates
-    monkeypatch.setenv("SPARK_GRAFT_EXHAUSTIVE_MAX_DOCS", "1")
+    monkeypatch.setattr(dedup, "EXHAUSTIVE_MAX_DOCS", 1)
     auto_big = near_dup_edges(d, "doc_id", "text", block_col="lang", threshold=0.7)
     assert "array_min" in plan_string(auto_big)
 
@@ -67,7 +68,7 @@ def test_ngram_jaccard_auto_routes_to_exact_prefix(spark, sf_dir, monkeypatch):
             d, "doc_id", "text", block_col="lang", threshold=0.7
         ).collect()
     }
-    monkeypatch.setenv("SPARK_GRAFT_EXHAUSTIVE_MAX_DOCS", "1")
+    monkeypatch.setattr(dedup, "EXHAUSTIVE_MAX_DOCS", 1)
     routed = ngram_jaccard_pairs(
         d, "doc_id", "text", block_col="lang", threshold=0.7
     )
@@ -105,7 +106,7 @@ def test_graph_family_valid_under_lsh_edge_build(spark, sf_dir, monkeypatch):
     clustering (cluster id == component minimum)."""
     from quarkus_etl_spark.queries.northstar_q import q_dedup_cluster
 
-    monkeypatch.setenv("SPARK_GRAFT_EXHAUSTIVE_MAX_DOCS", "1")
+    monkeypatch.setattr(dedup, "EXHAUSTIVE_MAX_DOCS", 1)
     out = q_dedup_cluster(spark, sf_dir)
     rows = out.collect()
     assert len(rows) > 0
@@ -122,7 +123,7 @@ def test_knn_graph_routes_to_ann_above_threshold(spark, sf_dir, monkeypatch):
     from quarkus_etl_spark.queries.northstar_q import q_knn_graph
 
     exact_cols = q_knn_graph(spark, sf_dir).columns
-    monkeypatch.setenv("SPARK_GRAFT_EXACT_PAIRWISE_MAX_VECS", "1")
+    monkeypatch.setattr(similarity, "EXACT_PAIRWISE_MAX_VECS", 1)
     routed = q_knn_graph(spark, sf_dir)
     assert routed.columns == exact_cols  # identical output contract
     rows = routed.collect()
@@ -158,7 +159,7 @@ def test_lsh_paths_never_plan_nested_loops(spark, sf_dir):
                 "doc_id", "text", "lang", 0.7, strategy="lsh",
             )
         ),
-        plan_string(ann_pairs(e, "vec_id", "embedding", 0.4,
+        plan_string(ann_pairs(e, "vec_id", "embedding", 0.4, dim=64,
                               block_col="label", n_planes=4)),
     ]
     for p in plans:
@@ -242,7 +243,7 @@ def test_incremental_auto_routes_by_size(spark, sf_dir, monkeypatch):
     delta = d.where(F.col("doc_id") % 5 == 0)
     small = incremental_jaccard_pairs(corpus, delta, "doc_id", "text", "lang", 0.7)
     assert "array_min" not in plan_string(small)  # exact plan
-    monkeypatch.setenv("SPARK_GRAFT_EXHAUSTIVE_MAX_DOCS", "1")
+    monkeypatch.setattr(dedup, "EXHAUSTIVE_MAX_DOCS", 1)
     big = incremental_jaccard_pairs(corpus, delta, "doc_id", "text", "lang", 0.7)
     assert "array_min" in plan_string(big)  # minhash signatures present
 
@@ -262,7 +263,7 @@ def test_ann_pairs_subset_with_identical_cosine(spark, sf_dir):
         ).collect()
     }
     ann_rows = ann_pairs(
-        e, "vec_id", "embedding", 0.4, block_col="label", n_planes=4
+        e, "vec_id", "embedding", 0.4, dim=64, block_col="label", n_planes=4
     ).collect()
     ann = {(r.id_a, r.id_b): r.cosine for r in ann_rows}
     assert len(ann_rows) == len(ann)  # each pair exactly once
@@ -282,7 +283,7 @@ def test_sim_pairs_routes_to_ann_above_threshold(spark, sf_dir, monkeypatch):
     from quarkus_etl_spark.queries.northstar_q import q_dedup_embed, q_sim_pairs
 
     exact_cols = q_sim_pairs(spark, sf_dir).columns
-    monkeypatch.setenv("SPARK_GRAFT_EXACT_PAIRWISE_MAX_VECS", "1")
+    monkeypatch.setattr(similarity, "EXACT_PAIRWISE_MAX_VECS", 1)
     routed = q_sim_pairs(spark, sf_dir)
     assert routed.columns == exact_cols
     assert routed.count() > 0
@@ -449,7 +450,7 @@ def test_emb_kmeans_routes_to_pruned_above_k_threshold(spark, sf_dir, monkeypatc
         r.cluster: (r.n_members, r.centroid_checksum)
         for r in q_emb_kmeans(spark, sf_dir).collect()
     }
-    monkeypatch.setenv("SPARK_GRAFT_EXACT_KMEANS_MAX_K", "1")
+    monkeypatch.setattr(kmeans, "EXACT_KMEANS_MAX_K", 1)
     routed = {
         r.cluster: (r.n_members, r.centroid_checksum)
         for r in q_emb_kmeans(spark, sf_dir).collect()

@@ -20,7 +20,7 @@ def test_knn_graph_ann_recall(spark, sf_dir):
     e = load_table(spark, sf_dir, "embeddings").where(F.col("embedding").isNotNull())
     approx = {
         (r["src"], r["nbr"])
-        for r in knn_graph_ann(e, "vec_id", "embedding", k=3, block_col="label").collect()
+        for r in knn_graph_ann(e, "vec_id", "embedding", dim=64, k=3, block_col="label").collect()
     }
     assert approx, "ANN graph is empty"
     recall = len(exact & approx) / len(exact)
@@ -80,9 +80,9 @@ def test_knn_graph_ann_collapse_parity_on_distinct(spark, sf_dir):
     from quarkus_etl_spark.operators.similarity import knn_graph_ann
 
     e = load_table(spark, sf_dir, "embeddings").where(F.col("embedding").isNotNull())
-    off = knn_graph_ann(e, "vec_id", "embedding", k=3, block_col="label",
+    off = knn_graph_ann(e, "vec_id", "embedding", dim=64, k=3, block_col="label",
                         collapse_duplicates=False)
-    on = knn_graph_ann(e, "vec_id", "embedding", k=3, block_col="label",
+    on = knn_graph_ann(e, "vec_id", "embedding", dim=64, k=3, block_col="label",
                        collapse_duplicates=True)
     assert sorted(map(tuple, off.collect())) == sorted(map(tuple, on.collect()))
 
@@ -109,7 +109,7 @@ def test_knn_graph_ann_duplicate_multiplicity_bounded(spark):
         "embedding",
         "label",
     )
-    rows = knn_graph_ann(dup, "vec_id", "embedding", k=3, block_col="label").collect()
+    rows = knn_graph_ann(dup, "vec_id", "embedding", dim=64, k=3, block_col="label").collect()
     per = Counter(r["src"] for r in rows)
     assert len(per) == 2000 and set(per.values()) == {3}
     assert all(
@@ -138,7 +138,7 @@ def test_knn_graph_ann_zero_and_null_vector_duplicates(spark):
     rows_in += [(i, None) for i in (300, 301, 302)]
     df = spark.createDataFrame(rows_in, "vec_id long, embedding array<double>")
 
-    rows = knn_graph_ann(df, "vec_id", "embedding", k=3).collect()
+    rows = knn_graph_ann(df, "vec_id", "embedding", dim=8, k=3).collect()
     by_src: dict = {}
     for r in rows:
         by_src.setdefault(r["src"], []).append(r)
@@ -226,3 +226,134 @@ def test_const_vec_is_bit_exact_and_rejects_non_finite(spark):
     for bad in (float("nan"), float("inf"), float("-inf")):
         with pytest.raises(ValueError, match="not finite"):
             const_vec([1.0, bad])
+
+
+def _vectors(n, dim, salt):
+    """`n` distinct deterministic vectors; `salt` keeps each test's frame
+    (and so its cached routing counts) its own."""
+    import random
+
+    rng = random.Random(salt)
+    return [(i, [rng.gauss(0.0, 1.0) for _ in range(dim)]) for i in range(n)]
+
+
+def test_knn_graph_ann_build_launches_only_the_routing_counts(spark, monkeypatch):
+    """Building the graph on a fresh duplicate-free frame runs no job of
+    its own: its only jobs are the two cached routing counts (rows, which
+    size the planes, and vector groups, which check for duplicates). A
+    second build of the same frame runs none. The dimension comes from
+    `dim`, not from a probe of the data."""
+    import uuid
+
+    from quarkus_etl_spark.operators import similarity
+
+    sc = spark.sparkContext
+    tag = uuid.uuid4().hex
+    real, counted = similarity.routing_count, []
+
+    def routing_count(df):
+        sc.setJobGroup(f"{tag}-count", "routing count")
+        try:
+            counted.append(df)
+            return real(df)
+        finally:
+            sc.setJobGroup(f"{tag}-build", "build")
+
+    monkeypatch.setattr(similarity, "routing_count", routing_count)
+    df = spark.createDataFrame(_vectors(60, 8, tag), "vec_id long, embedding array<double>")
+
+    def jobs(group):
+        return len(sc.statusTracker().getJobIdsForGroup(f"{tag}-{group}"))
+
+    try:
+        sc.setJobGroup(f"{tag}-build", "build")
+        similarity.knn_graph_ann(df, "vec_id", "embedding", dim=8, k=3)
+        # rows (counted twice, the second time from the cache) and groups
+        assert {tuple(c.columns) for c in counted} == {
+            ("vec_id", "embedding"), ("__v", "__rep", "__m")
+        }
+        assert jobs("build") == 0 and jobs("count") > 0
+        tag = uuid.uuid4().hex
+        sc.setJobGroup(f"{tag}-build", "build")
+        similarity.knn_graph_ann(df, "vec_id", "embedding", dim=8, k=3)
+        assert jobs("build") == 0 and jobs("count") == 0
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+
+
+def test_ann_operators_treat_off_contract_vectors_as_missing(spark):
+    """A vector that breaks the `dim` contract (another length, empty, a
+    non-finite component) is a missing vector: it gets no edges from
+    knn_graph_ann and no pairs from ann_pairs, and every other row's
+    output is the same as without it. One such row alone takes the plain
+    LSH path; several collapse into one missing-vector group and take the
+    duplicate path."""
+    from quarkus_etl_spark.operators.similarity import ann_pairs, knn_graph_ann
+
+    schema = "vec_id long, embedding array<double>"
+    rows = _vectors(60, 8, "contract")
+    off = [(900, [0.5] * 9), (901, [0.5] * 7), (902, []),
+           (903, [float("nan")] + [0.5] * 7), (904, None)]
+
+    def graph(extra):
+        df = spark.createDataFrame(rows + extra, schema)
+        return sorted(map(tuple, knn_graph_ann(df, "vec_id", "embedding", dim=8, k=3).collect()))
+
+    def pairs(extra):
+        df = spark.createDataFrame(rows + extra, schema)
+        return sorted(map(tuple, ann_pairs(
+            df, "vec_id", "embedding", -1.0, dim=8, n_planes=3
+        ).collect()))
+
+    edges, all_pairs = graph([]), pairs([])
+    assert edges and {r[0] for r in edges} == set(range(60)) and all_pairs
+    for extra in (off[:1], off):
+        assert graph(extra) == edges
+        assert pairs(extra) == all_pairs
+
+
+def test_add_ivf_cell_matches_driver_probe_routing(spark, sf_dir):
+    """The one-expression IVF cell is the max-cosine centroid under the
+    guarded_cosine convention, bit for bit what the driver-side
+    `_probe_cells` computes: a zero vector scores 0.0 everywhere, a zero
+    centroid scores 0.0, and ties go to the lowest cell id (centroid 3
+    repeats centroid 1, so it never wins). A NULL vector gets no cell."""
+    from quarkus_etl_spark.catalog import load_table
+    from quarkus_etl_spark.operators.similarity import _probe_cells, add_ivf_cell
+
+    e = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+    vecs = {r["vec_id"]: r["embedding"] for r in e.collect()}
+    cents = [list(map(float, vecs[i])) for i in sorted(vecs)[:6]]
+    cents[3] = list(cents[1])
+    cents[4] = [0.0] * 64
+    extra = spark.createDataFrame(
+        [(-1, [0.0] * 64), (-2, None), (-3, [-x for x in cents[0]])],
+        "vec_id long, embedding array<float>",
+    )
+    got = {
+        r["vec_id"]: r["cell"]
+        for r in add_ivf_cell(e.unionByName(extra), "embedding", cents).collect()
+    }
+    want = {
+        i: None if v is None else _probe_cells([float(x) for x in v], cents, 1)[0]
+        for i, v in {**vecs, -1: [0.0] * 64, -2: None, -3: [-x for x in cents[0]]}.items()
+    }
+    assert got == want
+    assert got[-2] is None and 3 not in got.values()
+
+
+def test_ivf_cell_round_trips_do_not_grow_with_n_cells(spark, round_trips):
+    """Scoring 4 centroids and 64 costs the same py4j round trips: the
+    cell is one parsed expression over one centroid-matrix constant (a
+    Column cosine per centroid cost hundreds of round trips each)."""
+    from quarkus_etl_spark.operators.similarity import add_ivf_cell, random_hyperplanes
+
+    df = spark.createDataFrame([([1.0] * 64,)], "v array<float>")
+    few, many = (random_hyperplanes(64, n) for n in (4, 64))
+
+    def fewest(fn):
+        return min(round_trips(fn) for _ in range(3))
+
+    assert fewest(lambda: add_ivf_cell(df, "v", few)) == fewest(
+        lambda: add_ivf_cell(df, "v", many)
+    )

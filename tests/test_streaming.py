@@ -979,10 +979,11 @@ def test_stream_join_epoch_floor_and_era_translation(spark, tmp_path):
 def test_state_partitions_expected_keys_sizing(spark):
     """VERDICT r11 #8: the production path sizes state partitions by key
     cardinality (ceil(keys / KEYS_PER_STATE_PARTITION), clamped to the
-    session's shuffle partitions); explicit n and the env/4 local default
-    keep their precedence."""
+    session's shuffle partitions); explicit n and the LOCAL_STATE_PARTITIONS
+    default (4) keep their precedence."""
     from quarkus_etl_spark.streaming.streams import (
         KEYS_PER_STATE_PARTITION,
+        LOCAL_STATE_PARTITIONS,
         state_partitions,
     )
 
@@ -1000,48 +1001,10 @@ def test_state_partitions_expected_keys_sizing(spark):
     assert inside(expected_keys=10**12) == upper
     # explicit n wins over expected_keys
     assert inside(n=2, expected_keys=10**12) == 2
-    # local default path unchanged (env unset in tests -> 4)
-    assert inside() == 4
+    # neither n nor expected_keys -> the local default
+    assert inside() == LOCAL_STATE_PARTITIONS == 4
     # conf restored on exit
     assert int(spark.conf.get("spark.sql.shuffle.partitions")) == upper
-
-
-def test_state_partitions_env_parse_error_names_variable(spark, monkeypatch):
-    import pytest as _pytest
-
-    from quarkus_etl_spark.streaming.streams import state_partitions
-
-    monkeypatch.setenv("SPARK_GRAFT_STREAM_STATE_PARTITIONS", "not-an-int")
-    with _pytest.raises(ValueError, match="SPARK_GRAFT_STREAM_STATE_PARTITIONS"):
-        with state_partitions(spark):
-            pass
-
-
-def test_state_partitions_hdfs_provider_replaces_session_rocksdb(spark, monkeypatch):
-    """SPARK_GRAFT_STREAM_STATE_PROVIDER=hdfs (or default) sets the
-    HDFS-backed provider explicitly, so a session already carrying RocksDB
-    does not silently keep it; the session's provider is restored on exit,
-    and with the variable unset it is left alone."""
-    from quarkus_etl_spark.streaming.streams import state_partitions
-
-    conf = "spark.sql.streaming.stateStore.providerClass"
-    pkg = "org.apache.spark.sql.execution.streaming.state."
-    prev = spark.conf.get(conf, None)
-    spark.conf.set(conf, pkg + "RocksDBStateStoreProvider")
-    try:
-        for value in ("hdfs", "default"):
-            monkeypatch.setenv("SPARK_GRAFT_STREAM_STATE_PROVIDER", value)
-            with state_partitions(spark):
-                assert spark.conf.get(conf) == pkg + "HDFSBackedStateStoreProvider"
-            assert spark.conf.get(conf) == pkg + "RocksDBStateStoreProvider"
-        monkeypatch.delenv("SPARK_GRAFT_STREAM_STATE_PROVIDER")
-        with state_partitions(spark):
-            assert spark.conf.get(conf) == pkg + "RocksDBStateStoreProvider"
-    finally:
-        if prev is None:
-            spark.conf.unset(conf)
-        else:
-            spark.conf.set(conf, prev)
 
 
 def test_state_partitions_warns_when_expected_keys_clamped(spark, caplog):

@@ -7,7 +7,7 @@ per-set min/median for both sides. Only this same-session interleaving is
 trustworthy on this host (documented 1.5-2.2x same-code cross-run swings).
 
 A candidate is measured through an environment variable the code already
-reads (e.g. SPARK_GRAFT_STREAM_STATE_PROVIDER=rocksdb); a code change
+reads (e.g. SPARK_GRAFT_MATERIALIZE=persist); a code change
 without one is gated by adding such a read at its call site for the
 duration of the measurement.
 
