@@ -2,7 +2,6 @@
 UDFs): vector math over array columns, text analytics primitives."""
 
 from .text import (  # noqa: F401
-    char_shingles,
     fingerprint_md5,
     fingerprint_rolling,
     language_scores,

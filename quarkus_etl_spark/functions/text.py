@@ -41,15 +41,6 @@ def fingerprint_md5(text: Column | str) -> Column:
     return F.md5(normalize_text(text))
 
 
-def char_shingles(text: Column | str, n: int = 5) -> Column:
-    """Distinct character n-grams (shingles) — the MinHash input set.
-    `transform(sequence(1, len-n+1), i -> substr(text, i, n))`, guarded for
-    short documents."""
-    text = F.col(text) if isinstance(text, str) else text
-    idx = F.sequence(F.lit(1), F.greatest(F.length(text) - (n - 1), F.lit(1)))
-    return F.array_distinct(F.transform(idx, lambda i: F.substr(text, i, F.lit(n))))
-
-
 def ngrams(tokens: Column, n: int = 2, sep: str = " ") -> Column:
     """Word n-grams from a token array: join of tokens[i..i+n-1].
 

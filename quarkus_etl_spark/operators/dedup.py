@@ -1,28 +1,40 @@
 """Deduplication operators for training-data pipelines (SURVEY.md Tier C
 q_dedup_*): exact, MinHash+LSH, SimHash, n-gram Jaccard.
 
+Every near-dup path is one candidate -> verify pipeline over one feature
+table (`_ngram_sets`: hashed word n-gram sets, optionally blocked):
+candidates come from the size-bucketed join, prefix filtering or LSH
+banding, and every candidate is verified with the same exact Jaccard.
+
 Scale design notes (the whole point at 100TB):
 - Exact dedup is ONE hash shuffle on the dedup key (window keep-first), not
   a global sort.
 - MinHash signatures are ZERO-shuffle: per-row array_min(transform(...))
   folds over hashed feature arrays; LSH banding turns the O(n²) candidate
   space into bucket-grouped pair expansion (one DAG evaluation, oversized
-  buckets dropped). Candidates are then verified with exact Jaccard so
-  precision is 1.0 (recall bounded by the LSH S-curve).
-- SimHash is likewise per-row: 64 bit-majority filter-counts over the
-  hashed token+bigram array; near-dup pairs come from banding the
-  fingerprint into 16-bit bands (pigeonhole: hamming<=3 on 4 bands
-  guarantees one equal band) and verifying with bit_count(xor).
+  buckets dropped). Candidates are then verified with exact Jaccard, so
+  precision is 1.0. A pair with Jaccard J shares a band with probability
+  1-(1-J^4)^16 (64 hashes in 16 bands of 4): 0.988 at J=0.7, 0.644 at
+  J=0.5. Recall over a corpus is higher than that floor, since most true
+  pairs sit well above the threshold.
+- SimHash is likewise per-row: one aggregate over the 64 bit positions
+  takes each bit's majority over the hashed token+bigram array; near-dup
+  pairs come from banding the fingerprint into 16-bit bands (pigeonhole:
+  hamming<=3 on 4 bands guarantees one equal band) and verifying with
+  bit_count(xor).
 - No Python UDFs anywhere — everything is codegen'd Column algebra.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+import math
+from collections.abc import Callable
+
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..functions.text import char_shingles, normalize_text
+from ..functions.text import ngram_hashes, ngrams, normalize_text
 from ..plans.tuning import (
     ensure_parallelism,
     log_route,
@@ -51,188 +63,127 @@ def dedup_exact(df: DataFrame, key_cols: list[str], order_col: str) -> DataFrame
 # MinHash + LSH near-dedup
 # --------------------------------------------------------------------------
 
-
-def feature_sets(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    feature: str = "bigram",
-    shingle_size: int = 5,
-) -> DataFrame:
-    """(id, __feat: array<long>) — the document's dedup feature set, hashed
-    to longs up front (identity is all Jaccard needs; long set ops are
-    several times cheaper than string set ops).
-
-    feature="bigram": word bigrams — order-sensitive, stays discriminative
-    over small vocabularies (char shingles from a ~45-word vocabulary
-    overlap heavily between unrelated documents, which floods LSH with
-    false candidates).
-    feature="char": classic character shingles of `shingle_size`.
-    """
-    from ..functions.text import ngram_hashes
-
-    pre = ensure_parallelism(
-        df.select(
-            F.col(id_col),
-            F.coalesce(normalize_text(text_col), F.lit("")).alias("__txt"),
-        )
-    )
-    toks = F.split(F.col("__txt"), "\\s+")
-    if feature == "bigram":
-        hashes = ngram_hashes(toks, 2)
-    elif feature == "char":
-        hashes = F.transform(char_shingles(F.col("__txt"), shingle_size), lambda g: F.xxhash64(g))
-    else:
-        raise ValueError(f"unknown feature mode: {feature}")
-    return pre.select(F.col(id_col), F.array_distinct(hashes).alias("__feat"))
+MINHASH_HASHES = 64
+LSH_BANDS = 16
+# Buckets above this size are dropped: an oversized bucket means a
+# non-discriminative band, and its quadratic pair list would dominate cost
+# for no precision.
+MAX_BUCKET = 1000
 
 
 def minhash_signatures(
-    feats: DataFrame, id_col: str, num_hashes: int = 64
+    sets: DataFrame, id_col: str, num_hashes: int = MINHASH_HASHES
 ) -> DataFrame:
-    """(id, h0..h{k-1}) MinHash signature per document from its feature set.
+    """(id, h0..h{k-1}) MinHash signature per document from its `__set`
+    feature array.
 
-    ZERO-shuffle formulation: each h_i is `array_min(transform(feat, x ->
+    ZERO-shuffle formulation: each h_i is `array_min(transform(__set, x ->
     hash(x, i)))` — a per-row fold over the (already materialized) feature
     array, embarrassingly parallel and fully codegen'd. An explode+groupBy
-    would pay a 64-column hash-aggregate for no benefit."""
-    sig_cols = [
-        F.array_min(
-            F.transform(F.col("__feat"), lambda x, i=i: F.hash(x, F.lit(i)))
-        ).alias(f"h{i}")
-        for i in range(num_hashes)
-    ]
-    return feats.select(id_col, *sig_cols)
-
-
-def lsh_candidate_pairs(
-    signatures: DataFrame, id_col: str, num_hashes: int = 64, bands: int = 16
-) -> DataFrame:
-    """Band the signature into `bands` groups of r=k/b rows; docs sharing any
-    band hash become candidate pairs (id_a < id_b, distinct)."""
-    rows_per_band = num_hashes // bands
-    band_cols = [
-        F.xxhash64(*[F.col(f"h{b * rows_per_band + i}") for i in range(rows_per_band)], F.lit(b)).alias(
-            f"band{b}"
-        )
-        for b in range(bands)
-    ]
-    banded = signatures.select(id_col, *band_cols)
-    exploded = banded.select(
+    would pay a 64-column hash-aggregate for no benefit. Each h_i is parsed
+    SQL with i as a literal: a Python `lambda x, i=i: ...` passed to
+    F.transform is read as the (element, index) form, so every h_i would
+    hash with the element's position instead of its own seed."""
+    return sets.select(
         id_col,
-        F.posexplode(F.array(*[F.col(f"band{b}") for b in range(bands)])).alias(
-            "band_idx", "band_hash"
-        ),
+        *[
+            F.expr(f"array_min(transform(__set, x -> hash(x, {i}))) AS h{i}")
+            for i in range(num_hashes)
+        ],
     )
-    # Group each LSH bucket and emit its pairs directly: evaluates the
-    # signature DAG ONCE (a self-join would compute it twice) and turns the
-    # candidate step into one aggregation. Buckets above `max_bucket` are
-    # dropped — an oversized bucket means a non-discriminative band hash,
-    # and its quadratic pair list would dominate cost for no precision.
-    # The size gate runs BEFORE any list materializes (r7, the
-    # knn_graph_ann multiplicity lesson): counts first via a map-side-
-    # combined aggregate, then collect_list only over rows of qualifying
-    # buckets — the old collect-then-filter form buffered a whole
-    # oversized bucket in ONE aggregation buffer, so a million-copy
-    # boilerplate cluster was an executor OOM, not just wasted work. Both
-    # aggregates and the join share the (band_idx, band_hash)
-    # partitioning, so this costs no extra exchange of the exploded rows.
-    # CAVEAT the drop implies (documented, not silent): docs whose FULL
-    # signature is identical collide in EVERY band, so a >max_bucket
-    # duplicate cluster has no smaller bucket to fall back to and emits
-    # no pairs — run exact dedup (dedup_exact / chunk hashing) upstream,
-    # which is the pipeline order the curation queries use; for merely
-    # near-identical docs the usual escape holds (some band hash differs,
-    # giving a smaller discriminative bucket).
-    max_bucket = 1000
-    # a WINDOW count over the same (band) partitioning gates the size with
-    # ONE evaluation of the signature DAG and ONE exchange (the window and
-    # the collect aggregate share it): a count-aggregate + join form
-    # evaluated the signatures twice, a collect-then-filter form buffered
-    # the oversized bucket before dropping it
-    bw = Window.partitionBy("band_idx", "band_hash")
-    gated = exploded.withColumn("__bn", F.count(F.lit(1)).over(bw)).where(
-        F.col("__bn").between(2, max_bucket)
+
+
+def _bucket_pairs(
+    banded: DataFrame,
+    bucket_cols: list[str],
+    member: Column,
+    pair: Callable[[Column, Column], Column],
+) -> DataFrame:
+    """One `__p` row per pair of members sharing a bucket: `member` is
+    collected sorted per bucket and `pair(x, y)` builds the struct for each
+    x before y.
+
+    Grouping each bucket and emitting its pairs directly evaluates the
+    banded DAG ONCE (a self-join would compute it twice). The size gate
+    runs BEFORE any list materializes (r7, the knn_graph_ann multiplicity
+    lesson): a WINDOW count over the bucket partitioning shares its one
+    exchange with the collect aggregate, where a count-aggregate + join
+    evaluated the DAG twice and a collect-then-filter form buffered a
+    whole oversized bucket in ONE aggregation buffer (a million-copy
+    boilerplate cluster was an executor OOM, not just wasted work).
+    CAVEAT the drop implies (documented, not silent): identical documents
+    collide in EVERY band, so a >MAX_BUCKET duplicate cluster has no
+    smaller bucket to fall back to and emits no pairs — run exact dedup
+    (dedup_exact / chunk hashing) upstream, which is the pipeline order the
+    curation queries use; merely near-identical docs escape through a band
+    that differs."""
+    bw = Window.partitionBy(*bucket_cols)
+    gated = banded.withColumn("__bn", F.count(F.lit(1)).over(bw)).where(
+        F.col("__bn").between(2, MAX_BUCKET)
     )
-    buckets = gated.groupBy("band_idx", "band_hash").agg(
-        F.sort_array(F.collect_list(id_col)).alias("__ids")
+    buckets = gated.groupBy(*bucket_cols).agg(
+        F.sort_array(F.collect_list(member)).alias("__m")
     )
     pair_structs = F.flatten(
         F.transform(
-            F.col("__ids"),
+            F.col("__m"),
             lambda x, i: F.transform(
-                F.slice(F.col("__ids"), i + 2, F.size("__ids")),
-                lambda y: F.struct(x.alias("id_a"), y.alias("id_b")),
+                F.slice(F.col("__m"), i + 2, F.size("__m")), lambda y: pair(x, y)
             ),
         )
     )
-    return (
-        buckets.select(F.explode(pair_structs).alias("__p"))
-        .select(F.col("__p.id_a").alias("id_a"), F.col("__p.id_b").alias("id_b"))
-        .distinct()
-    )
+    return buckets.select(F.explode(pair_structs).alias("__p"))
 
 
-def exact_jaccard(
-    feats: DataFrame, pairs: DataFrame, id_col: str
+def _verify(
+    cands: DataFrame, sa: DataFrame, sb: DataFrame, id_col: str, threshold: float
 ) -> DataFrame:
-    """Attach exact feature-set Jaccard to candidate pairs (verification
-    step — precision 1.0). The feature-set side is the FULL corpus, so it
-    gets no broadcast hint: these are ordinary equi-joins on id where
-    Catalyst auto-broadcasts only when its size estimate says the build side
-    fits, and shuffles on id otherwise (candidates after LSH are sparse, so
-    the shuffle is proportional to the candidate count, not n^2)."""
-    sets = feats.select(F.col(id_col), F.col("__feat").alias("__set"))
+    """Exact Jaccard on candidate pairs, kept at/above `threshold`
+    (precision 1.0). `cands` holds two id columns, naming the output's:
+    the first is looked up in `sa`, the second in `sb`. Pairs across
+    blocks and pairs with an empty set (undefined Jaccard) are dropped.
+
+    Plain equi-joins on id (no broadcast hint): candidates are sparse and
+    the feature-set sides are the full corpus, so Catalyst auto-broadcasts
+    only when its size estimate says a side fits and shuffles on id
+    otherwise — a shuffle proportional to the candidate count, not n²."""
+    ia, ib = cands.columns
+
+    def side(sets: DataFrame, id_name: str, s: str) -> DataFrame:
+        return sets.select(
+            F.col(id_col).alias(id_name),
+            F.col("__blk").alias(f"__blk_{s}"),
+            F.col("__set").alias(f"set_{s}"),
+            F.col("__len").alias(f"l{s}"),
+        )
+
     inter = F.size(F.array_intersect("set_a", "set_b")).cast("double")
-    union = F.size("set_a") + F.size("set_b") - inter
-    # Guarded division: two featureless docs (possible LSH bucket-mates via
-    # equal empty-set signatures) have undefined Jaccard — emit NULL, which
-    # every downstream `>= threshold` filter drops, instead of tripping
-    # ANSI DIVIDE_BY_ZERO.
+    j = inter / (F.col("la") + F.col("lb") - inter)  # |A∪B| = |A|+|B|-|A∩B|
     return (
-        pairs.join(
-            sets.withColumnRenamed(id_col, "id_a").withColumnRenamed("__set", "set_a"),
-            "id_a",
+        cands.join(side(sa, ia, "a"), ia)
+        .join(side(sb, ib, "b"), ib)
+        .where(
+            (F.col("__blk_a") == F.col("__blk_b"))
+            & (F.least(F.col("la"), F.col("lb")) > 0)
         )
-        .join(
-            sets.withColumnRenamed(id_col, "id_b").withColumnRenamed("__set", "set_b"),
-            "id_b",
-        )
-        .select(
-            "id_a",
-            "id_b",
-            F.when(union > 0, inter / union).alias("jaccard"),
-        )
+        .select(ia, ib, j.alias("jaccard"))
+        .where(F.col("jaccard") >= threshold)
     )
 
 
 def minhash_near_dup_pairs(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    threshold: float = 0.8,
-    num_hashes: int = 64,
-    bands: int = 16,
-    feature: str = "bigram",
-    shingle_size: int = 5,
+    df: DataFrame, id_col: str, text_col: str, threshold: float = 0.8
 ) -> DataFrame:
-    """Full near-dedup pipeline: feature sets -> signatures -> LSH
-    candidates -> exact verification at `threshold`."""
-    # The hashed feature table feeds THREE consumers (the signature DAG and
-    # both sides of the verification join); materialize it once so the
-    # tokenize->hash extraction runs once, not three times — the guide-§8
-    # "fingerprints only" intermediate. r11 A/B over the dedup family at
-    # sf0.1: -8% min / -12% median, broadcast strategies unchanged.
-    # materialize_once executes Spark jobs at CONSTRUCTION time (eager) —
-    # plan-capture callers pay the extraction before any action; eager is
-    # required because the consumers land in one job (concurrent stages
-    # double-compute a lazy intermediate). Scale strategy per VERDICT r11
-    # #5: env-gated in plans/tuning.py (localCheckpoint default,
-    # fault-tolerant persist at SPARK_GRAFT_MATERIALIZE=persist).
-    feats = materialize_once(feature_sets(df, id_col, text_col, feature, shingle_size))
-    sigs = minhash_signatures(feats, id_col, num_hashes)
-    cands = lsh_candidate_pairs(sigs, id_col, num_hashes, bands)
-    return exact_jaccard(feats, cands, id_col).where(F.col("jaccard") >= threshold)
+    """Unblocked near-dedup: word-bigram sets -> MinHash signatures -> LSH
+    candidates -> exact verification at `threshold` (id_a, id_b, jaccard).
+
+    The feature table feeds three consumers (the signature DAG and both
+    sides of the verification join), so it is materialized once — eagerly
+    (construction-time jobs: the consumers land in one job, and concurrent
+    stages double-compute a lazy intermediate) and env-gated for fault
+    tolerance at scale (plans/tuning.materialize_once, VERDICT r11 #5)."""
+    sets = materialize_once(_ngram_sets(df, id_col, text_col, None, 2))
+    return _jaccard_lsh(sets, id_col, threshold)
 
 
 # --------------------------------------------------------------------------
@@ -255,17 +206,8 @@ def simhash(
     the q_dedup_minhash pattern so DuckDB can replicate the fingerprint
     bit-for-bit; materializes bigram strings — the conclusive-oracle pin,
     not the cheap path)."""
-    from ..functions.text import ngram_hashes, ngrams
-
     if hash_family not in ("xxhash64", "md5"):
         raise ValueError(f"unknown simhash hash_family: {hash_family!r}")
-    one = F.lit(1).cast("long")
-    # ZERO-shuffle: hash the feature set once per row, then each bit's
-    # majority is a per-row filter-count over the hashed array — no explode,
-    # no 64-column aggregate, fully codegen'd. Features are hashed token +
-    # token-bigram longs (no n-gram strings ever materialize).
-    # (shiftleft wraps to the sign bit at i=63, which is exactly the mask we
-    # want; a 1<<63 literal would overflow the long.)
     pre = ensure_parallelism(
         df.select(
             F.col(id_col), F.coalesce(normalize_text(text_col), F.lit("")).alias("__txt")
@@ -299,13 +241,16 @@ def simhash(
             F.array_distinct(ngram_hashes(toks, 2)),
         )
     base = pre.select(F.col(id_col), hashed.alias("__f")).withColumn("__n", F.size("__f"))
-    fingerprint = F.lit(0).cast("long")
-    for i in range(SIMHASH_BITS):
-        mask = F.shiftleft(one, i)
-        pos = F.size(F.filter(F.col("__f"), lambda v: v.bitwiseAND(mask) != 0))
-        fingerprint = fingerprint.bitwiseOR(
-            F.when(pos * 2 > F.col("__n"), mask).otherwise(F.lit(0).cast("long"))
-        )
+    # ZERO-shuffle: each bit's majority is a per-row filter-count over the
+    # hashed array, folded over the bit positions in ONE parsed expression
+    # (no explode, no 64-column aggregate, and a build cost in py4j round
+    # trips that does not grow with the width). shiftleft wraps to the sign
+    # bit at i=63, which is exactly the mask we want.
+    fingerprint = F.expr(
+        f"aggregate(sequence(0, {SIMHASH_BITS - 1}), 0L, (acc, i) -> acc | "
+        "IF(size(filter(__f, v -> (v & shiftleft(1L, i)) != 0)) * 2 > __n, "
+        "shiftleft(1L, i), 0L))"
+    )
     return base.select(id_col, fingerprint.alias("simhash"))
 
 
@@ -320,7 +265,8 @@ def simhash_near_dup_pairs(
 
     Banding the 64-bit fingerprint into (max_hamming+1) 16-bit bands gives the
     pigeonhole guarantee: any pair within the radius shares at least one
-    exact band — candidates come from equality joins, never a cross join."""
+    exact band — candidates come from the gated in-bucket pair expansion
+    shared with MinHash-LSH, never a cross join."""
     bands = max_hamming + 1
     width = SIMHASH_BITS // bands
     fp = simhash(df, id_col, text_col, hash_family=hash_family)
@@ -338,36 +284,17 @@ def simhash_near_dup_pairs(
             )
         ).alias("band_idx", "band_val"),
     )
-    # Bucket-group + in-bucket pair expansion: one evaluation of the simhash
-    # DAG (vs two for a self-join); oversized buckets dropped as
-    # non-discriminative (same rationale — and same count-before-collect
-    # OOM discipline — as lsh_candidate_pairs: the size gate must run
-    # before any bucket list materializes, or one duplicate mega-cluster
-    # buffers whole in a single aggregation buffer).
-    bw = Window.partitionBy("band_idx", "band_val")
-    gated = banded.withColumn("__bn", F.count(F.lit(1)).over(bw)).where(
-        F.col("__bn").between(2, 1000)
-    )
-    buckets = gated.groupBy("band_idx", "band_val").agg(
-        F.sort_array(
-            F.collect_list(F.struct(F.col(id_col), F.col("simhash")))
-        ).alias("__m")
-    )
-    pair_structs = F.flatten(
-        F.transform(
-            F.col("__m"),
-            lambda x, i: F.transform(
-                F.slice(F.col("__m"), i + 2, F.size("__m")),
-                lambda y: F.struct(
-                    x[id_col].alias("id_a"),
-                    y[id_col].alias("id_b"),
-                    F.bit_count(x["simhash"].bitwiseXOR(y["simhash"])).alias("hamming"),
-                ),
+    return (
+        _bucket_pairs(
+            banded,
+            ["band_idx", "band_val"],
+            F.struct(F.col(id_col), F.col("simhash")),
+            lambda x, y: F.struct(
+                x[id_col].alias("id_a"),
+                y[id_col].alias("id_b"),
+                F.bit_count(x["simhash"].bitwiseXOR(y["simhash"])).alias("hamming"),
             ),
         )
-    )
-    return (
-        buckets.select(F.explode(pair_structs).alias("__p"))
         .select("__p.id_a", "__p.id_b", "__p.hamming")
         .where(F.col("hamming") <= max_hamming)
         .distinct()
@@ -467,10 +394,10 @@ def near_dup_edges(
     blocked-Jaccard graph — bit-identical to the SQL oracles — and above
     it switches to MinHash-LSH candidate generation over the SAME hashed
     n-gram sets, verified with the SAME exact Jaccard (precision 1.0,
-    recall bounded by the LSH S-curve; every surviving edge carries a
-    value identical to what the exhaustive plan would emit). Candidate
-    cost goes from quadratic-per-block to near-linear bucket expansion
-    with the 1000-row bucket cap.
+    recall per the LSH S-curve in the module docstring; every surviving
+    edge carries a value identical to what the exhaustive plan would
+    emit). Candidate cost goes from quadratic-per-block to near-linear
+    bucket expansion with the MAX_BUCKET cap.
 
     Feature table materialized once for the same multi-consumer reason as
     ngram_jaccard_pairs (r11; eager + env-gated, see materialize_once)."""
@@ -487,57 +414,35 @@ def near_dup_edges(
     raise ValueError(f"unknown strategy: {strategy}")
 
 
-def _jaccard_lsh(
-    sets: DataFrame,
-    id_col: str,
-    threshold: float,
-    num_hashes: int = 64,
-    bands: int = 16,
-) -> DataFrame:
-    """MinHash-LSH candidates over the hashed n-gram sets, exact-verified.
-
-    Reuses minhash_signatures/lsh_candidate_pairs on the `__set` arrays so
-    the verified jaccard is IDENTICAL to the exhaustive plan's value for
-    every pair LSH surfaces; block equality is enforced at verification
-    (bands don't see `__blk`, so cross-block candidates are possible but
-    sparse, and the verify join drops them)."""
-    feats = sets.select(id_col, F.col("__set").alias("__feat"))
-    sigs = minhash_signatures(feats, id_col, num_hashes)
-    cands = lsh_candidate_pairs(sigs, id_col, num_hashes, bands)
-    sa = sets.select(
-        F.col(id_col).alias("id_a"),
-        F.col("__blk").alias("__blk_a"),
-        F.col("__set").alias("set_a"),
-        F.col("__len").alias("la"),
-    )
-    sb = sets.select(
-        F.col(id_col).alias("id_b"),
-        F.col("__blk").alias("__blk_b"),
-        F.col("__set").alias("set_b"),
-        F.col("__len").alias("lb"),
-    )
-    inter = F.size(F.array_intersect("set_a", "set_b")).cast("double")
-    j = inter / (F.col("la") + F.col("lb") - inter)
-    return (
-        cands.join(sa, "id_a")
-        .join(sb, "id_b")
-        .where(
-            (F.col("__blk_a") == F.col("__blk_b"))
-            & (F.least(F.col("la"), F.col("lb")) > 0)
+def _jaccard_lsh(sets: DataFrame, id_col: str, threshold: float) -> DataFrame:
+    """MinHash-LSH candidates over the hashed n-gram sets, exact-verified:
+    every pair LSH surfaces carries the jaccard the exhaustive plan would
+    emit. Bands don't see `__blk`, so cross-block candidates are possible
+    but sparse, and verification drops them."""
+    cands = (
+        _bucket_pairs(
+            _banded(sets, id_col),
+            ["band_idx", "band_hash"],
+            F.col(id_col),
+            lambda x, y: F.struct(x.alias("id_a"), y.alias("id_b")),
         )
-        .select("id_a", "id_b", j.alias("jaccard"))
-        .where(F.col("jaccard") >= threshold)
+        .select("__p.id_a", "__p.id_b")
+        .distinct()
     )
+    return _verify(cands, sets, sets, id_col, threshold)
 
 
 def _ngram_sets(
-    df: DataFrame, id_col: str, text_col: str, block_col: str, n: int
+    df: DataFrame, id_col: str, text_col: str, block_col: str | None, n: int
 ) -> DataFrame:
-    """(id, __blk, __set, __len) hashed-n-gram feature table.
+    """(id, __blk, __set, __len) hashed-n-gram feature table; block_col=None
+    puts every document in one block.
 
     Hash each n-gram to a long up front: set intersection over longs is
     several times cheaper than over strings, and Jaccard only needs
-    identity, not content.
+    identity, not content. Word n-grams (bigrams by default) stay
+    discriminative over small vocabularies, where character shingles of
+    unrelated documents overlap heavily and flood LSH with candidates.
     Stage discipline (this was a 10x bug, visible only in the plan):
     1. Repartition the RAW rows first — `repartition()` sits above its
        child, so projecting features before it would run the whole
@@ -552,12 +457,11 @@ def _ngram_sets(
        the feature expression — a repeated expression tree here is
        recomputed per row once anything defeats subexpression elimination.
     """
-    from ..functions.text import ngram_hashes
-
+    blk = F.lit("") if block_col is None else F.coalesce(F.col(block_col), F.lit(""))
     pre = ensure_parallelism(
         df.select(
             F.col(id_col),
-            F.coalesce(F.col(block_col), F.lit("")).alias("__blk"),
+            blk.alias("__blk"),
             # tokenized as a REAL column: ngram_hashes' general-n path
             # indexes the token array inside a lambda, and a derived
             # expression there would re-split per element (interpreted
@@ -588,12 +492,12 @@ def incremental_jaccard_pairs(
     pattern where re-running all-pairs dedup over corpus+delta would redo
     quadratic(corpus) work for a delta-sized question.
 
-    Same blocked size-bucketed machinery as ngram_jaccard_pairs, but the
-    join is existing x incoming only (no existing-existing or
-    incoming-incoming pairs, no id ordering needed). At scale the small
-    delta side auto-broadcasts under Catalyst's size estimate, so the big
-    corpus is never shuffled; when the delta is also large, the join
-    shuffles on the (__blk, __bkt) equi-keys with AQE skew splitting.
+    Same blocked size-bucketed join as ngram_jaccard_pairs, but
+    existing x incoming only (no existing-existing or incoming-incoming
+    pairs, no id ordering needed). At scale the small delta side
+    auto-broadcasts under Catalyst's size estimate, so the big corpus is
+    never shuffled; when the delta is also large, the join shuffles on the
+    (__blk, __bkt) equi-keys with AQE skew splitting.
     Returns (id_exist, id_new, jaccard) for pairs at/above threshold.
 
     strategy="auto" (the default) keeps this exact size-bucketed plan while
@@ -604,8 +508,6 @@ def incremental_jaccard_pairs(
     duplicate density the bucketed exact join degrades toward
     corpus-quadratic (measured 653 s at 500k x 500k replicated docs; the
     LSH plan is candidate-linear)."""
-    import math
-
     sa = _ngram_sets(existing, id_col, text_col, block_col, n)
     sb = _ngram_sets(incoming, id_col, text_col, block_col, n)
     if strategy == "auto":
@@ -621,101 +523,45 @@ def incremental_jaccard_pairs(
         return _incremental_lsh(sa, sb, id_col, threshold)
     if strategy != "exact":
         raise ValueError(f"unknown strategy: {strategy}")
-    log_base = math.log(1.0 / threshold)
-    bucket = F.floor(
-        F.log(F.greatest(F.col("__len"), F.lit(1)).cast("double")) / log_base
-    )
-    a = sa.withColumn("__bkt", bucket).alias("a")
-    b = sb.withColumn(
-        "__bkt", F.explode(F.array(bucket - 1, bucket, bucket + 1))
-    ).alias("b")
-    la, lb = F.col("a.__len"), F.col("b.__len")
-    inter = F.size(F.array_intersect("a.__set", "b.__set")).cast("double")
-    j = inter / (la + lb - inter)
-    return a.join(
-        b,
-        (F.col("a.__blk") == F.col("b.__blk"))
-        & (F.col("a.__bkt") == F.col("b.__bkt"))
-        & (F.least(la, lb) > 0)
-        & (F.least(la, lb) >= F.lit(threshold) * F.greatest(la, lb))
-        & (inter * (1.0 + threshold) >= F.lit(threshold) * (la + lb)),
-    ).select(
-        F.col(f"a.{id_col}").alias("id_exist"),
-        F.col(f"b.{id_col}").alias("id_new"),
-        j.alias("jaccard"),
-    )
+    return _jaccard_exhaustive(sa, id_col, threshold, incoming=sb)
 
 
-def _banded(sets: DataFrame, id_col: str, num_hashes: int, bands: int) -> DataFrame:
-    """(id, band_idx, band_hash) from a hashed-feature-set frame — the LSH
-    banding step shared by the symmetric and asymmetric candidate plans."""
-    feats = sets.select(id_col, F.col("__set").alias("__feat"))
-    sigs = minhash_signatures(feats, id_col, num_hashes)
-    rows_per_band = num_hashes // bands
-    band_cols = [
-        F.xxhash64(
-            *[F.col(f"h{b * rows_per_band + i}") for i in range(rows_per_band)],
-            F.lit(b),
-        ).alias(f"band{b}")
-        for b in range(bands)
-    ]
-    return sigs.select(id_col, *band_cols).select(
-        id_col,
-        F.posexplode(F.array(*[F.col(f"band{b}") for b in range(bands)])).alias(
-            "band_idx", "band_hash"
-        ),
+def _banded(sets: DataFrame, id_col: str) -> DataFrame:
+    """(id, band_idx, band_hash): the signature cut into LSH_BANDS bands
+    of r = MINHASH_HASHES / LSH_BANDS rows, one output row per band."""
+    r = MINHASH_HASHES // LSH_BANDS
+    bands = ", ".join(
+        f"xxhash64({', '.join(f'h{b * r + i}' for i in range(r))}, {b})"
+        for b in range(LSH_BANDS)
+    )
+    return minhash_signatures(sets, id_col).select(
+        id_col, F.expr(f"posexplode(array({bands})) AS (band_idx, band_hash)")
     )
 
 
 def _incremental_lsh(
-    sa: DataFrame,
-    sb: DataFrame,
-    id_col: str,
-    threshold: float,
-    num_hashes: int = 64,
-    bands: int = 16,
+    sa: DataFrame, sb: DataFrame, id_col: str, threshold: float
 ) -> DataFrame:
     """Asymmetric LSH candidates: corpus and delta are banded separately,
     candidates come from the (band_idx, band_hash) equi-join — shuffle
     volume is rows x bands on each side, never corpus x corpus — and every
-    candidate is verified with the same exact Jaccard as the exact plan
-    (plus block equality). distinct() collapses multi-band collisions."""
-    ba = _banded(sa, id_col, num_hashes, bands).select(
+    candidate is verified with the same exact Jaccard as the exact plan.
+    distinct() collapses multi-band collisions."""
+    ba = _banded(sa, id_col).select(
         F.col(id_col).alias("id_exist"), "band_idx", "band_hash"
     )
-    bb = _banded(sb, id_col, num_hashes, bands).select(
+    bb = _banded(sb, id_col).select(
         F.col(id_col).alias("id_new"), "band_idx", "band_hash"
     )
     cands = ba.join(bb, ["band_idx", "band_hash"]).select("id_exist", "id_new").distinct()
-    va = sa.select(
-        F.col(id_col).alias("id_exist"),
-        F.col("__blk").alias("__blk_a"),
-        F.col("__set").alias("set_a"),
-        F.col("__len").alias("la"),
-    )
-    vb = sb.select(
-        F.col(id_col).alias("id_new"),
-        F.col("__blk").alias("__blk_b"),
-        F.col("__set").alias("set_b"),
-        F.col("__len").alias("lb"),
-    )
-    inter = F.size(F.array_intersect("set_a", "set_b")).cast("double")
-    j = inter / (F.col("la") + F.col("lb") - inter)
-    return (
-        cands.join(va, "id_exist")
-        .join(vb, "id_new")
-        .where(
-            (F.col("__blk_a") == F.col("__blk_b"))
-            & (F.least(F.col("la"), F.col("lb")) > 0)
-        )
-        .select("id_exist", "id_new", j.alias("jaccard"))
-        .where(F.col("jaccard") >= threshold)
-    )
+    return _verify(cands, sa, sb, id_col, threshold)
 
 
-def _jaccard_exhaustive(sets: DataFrame, id_col: str, threshold: float) -> DataFrame:
-    import math
-
+def _jaccard_exhaustive(
+    sets: DataFrame, id_col: str, threshold: float, incoming: DataFrame | None = None
+) -> DataFrame:
+    """Size-bucketed exact join: the self-join of `sets` (id_a < id_b)
+    when `incoming` is None, else sets x incoming (id_exist, id_new)."""
     # Length filter (set-similarity-join standard): J >= t forces
     # min(|A|,|B|) >= t*max(|A|,|B|), so in log_{1/t}(len) space a true
     # pair's buckets differ by at most 1. The build side is exploded to
@@ -731,7 +577,7 @@ def _jaccard_exhaustive(sets: DataFrame, id_col: str, threshold: float) -> DataF
     # `sets` is already spread by the caller's ensure_parallelism on the
     # raw rows — a second guard here would both re-probe and re-shuffle.
     a = sets.withColumn("__bkt", bucket).alias("a")
-    b = sets.withColumn(
+    b = (sets if incoming is None else incoming).withColumn(
         "__bkt", F.explode(F.array(bucket - 1, bucket, bucket + 1))
     ).alias("b")
     la, lb = F.col("a.__len"), F.col("b.__len")
@@ -744,28 +590,28 @@ def _jaccard_exhaustive(sets: DataFrame, id_col: str, threshold: float) -> DataF
     # PushPredicateThroughJoin (observed in the plan). The threshold is
     # applied in linear form (inter*(1+t) >= t*(|A|+|B|)) so the intersect
     # appears once; the output jaccard uses the division form, identical
-    # to the SQL oracle. Probe side spread across cores
-    # (ensure_parallelism); join strategy left to Catalyst's size estimate
-    # (auto-broadcast small, shuffle + AQE skew split large).
-    return a.join(
-        b,
-        (F.col("a.__blk") == F.col("b.__blk"))
-        & (F.col("a.__bkt") == F.col("b.__bkt"))
-        & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
-        # NB: no single-side predicates here — a probe-only conjunct (e.g.
-        # `la > 0`) gets pushed below the exchange into the scan stage with
-        # the entire feature expression inlined, re-running extraction on
-        # one core. Both-side conjuncts stay in the join. least(la,lb) > 0
-        # is such a conjunct: docs with no features (under 2 tokens) have
-        # undefined Jaccard and must not pair — without it an empty-empty
-        # pair passes the ratio filter and the output division is 0/0
-        # (DIVIDE_BY_ZERO under ANSI; pinned by tests/test_edges.py).
+    # to the SQL oracle.
+    cond = (F.col("a.__blk") == F.col("b.__blk")) & (F.col("a.__bkt") == F.col("b.__bkt"))
+    if incoming is None:
+        cond = cond & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
+    # NB: no single-side predicates here — a probe-only conjunct (e.g.
+    # `la > 0`) gets pushed below the exchange into the scan stage with
+    # the entire feature expression inlined, re-running extraction on
+    # one core. Both-side conjuncts stay in the join. least(la,lb) > 0
+    # is such a conjunct: docs with no features (under 2 tokens) have
+    # undefined Jaccard and must not pair — without it an empty-empty
+    # pair passes the ratio filter and the output division is 0/0
+    # (DIVIDE_BY_ZERO under ANSI; pinned by tests/test_edges.py).
+    cond = (
+        cond
         & (F.least(la, lb) > 0)
         & (F.least(la, lb) >= F.lit(threshold) * F.greatest(la, lb))
-        & (inter * (1.0 + threshold) >= F.lit(threshold) * (la + lb)),
-    ).select(
-        F.col(f"a.{id_col}").alias("id_a"),
-        F.col(f"b.{id_col}").alias("id_b"),
+        & (inter * (1.0 + threshold) >= F.lit(threshold) * (la + lb))
+    )
+    ids = ("id_a", "id_b") if incoming is None else ("id_exist", "id_new")
+    return a.join(b, cond).select(
+        F.col(f"a.{id_col}").alias(ids[0]),
+        F.col(f"b.{id_col}").alias(ids[1]),
         j.alias("jaccard"),
     )
 
@@ -809,25 +655,7 @@ def _jaccard_prefix(sets: DataFrame, id_col: str, threshold: float) -> DataFrame
         )
         .distinct()
     )
-
-    # -- Exact verification on the surviving candidates --------------------
-    # Plain equi-joins on id (no broadcast hint): candidates are sparse, the
-    # feature-set side is the full corpus — same sizing rationale as
-    # exact_jaccard above.
-    sa = sets.select(
-        F.col(id_col).alias("id_a"), F.col("__set").alias("set_a"), F.col("__len").alias("la")
-    )
-    sb = sets.select(
-        F.col(id_col).alias("id_b"), F.col("__set").alias("set_b"), F.col("__len").alias("lb")
-    )
-    inter = F.size(F.array_intersect("set_a", "set_b")).cast("double")
-    j = inter / (F.col("la") + F.col("lb") - inter)  # |A∪B| = |A|+|B|-|A∩B|
-    return (
-        cand.join(sa, "id_a")
-        .join(sb, "id_b")
-        .select("id_a", "id_b", j.alias("jaccard"))
-        .where(F.col("jaccard") >= threshold)
-    )
+    return _verify(cand, sets, sets, id_col, threshold)
 
 
 # --------------------------------------------------------------------------

@@ -1194,9 +1194,11 @@ def q_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     (h_i = first 32 bits of md5(i || ':' || feature)) so the whole
     pipeline — word-bigram shingles, k=8 signature minima, r=2 banding,
     bucket self-join — is hash-verified against DuckDB value-for-value.
-    q_dedup_near keeps xxhash64 (JVM-native, ~10x cheaper) for the
-    production path; THIS query is the conclusive correctness pin for the
-    identical algorithm. Plan: one explode -> distinct (doc, bigram)
+    It pins this md5, k=8, r=2 variant only, not the production operator:
+    q_dedup_near runs minhash_near_dup_pairs (xxhash64-hashed bigram sets,
+    Murmur3-seeded k=64 minima, r=4 banding, exact Jaccard verification),
+    whose own checks are the Python-reference property tests. Plan: one
+    explode -> distinct (doc, bigram)
     shuffle, one per-doc aggregate, and a shuffled self-equi-join on
     (band_id, band_key) — LSH's whole point is that this join is
     bucket-local; no broadcast of anything corpus-sized."""

@@ -137,6 +137,62 @@ def test_simhash_radius(spark):
     assert (1, 3) not in pairs
 
 
+def test_minhash_signature_is_per_hash_and_order_free(spark):
+    """Each h_i hashes with its own seed i: the 64 minima of one feature
+    set are not all equal, and a permutation of the set gives the same
+    signature (a MinHash is a set function)."""
+    from quarkus_etl_spark.operators.dedup import MINHASH_HASHES, minhash_signatures
+
+    feats = list(range(1, 41))
+    df = spark.createDataFrame(
+        [(1, feats), (2, feats[::-1]), (3, feats[20:] + feats[:20])],
+        "doc_id long, __set array<long>",
+    )
+    sigs = {
+        r["doc_id"]: tuple(r[f"h{i}"] for i in range(MINHASH_HASHES))
+        for r in minhash_signatures(df, "doc_id").collect()
+    }
+    assert len(set(sigs[1])) > 1
+    assert sigs[1] == sigs[2] == sigs[3]
+
+
+def test_simhash_round_trips_do_not_grow_with_bits(spark, round_trips, monkeypatch):
+    """The SimHash fingerprint is one parsed fold over the bit positions:
+    32 bits and 64 cost the same py4j round trips (one Python-lambda
+    filter per bit cost ~150 round trips a bit)."""
+    from quarkus_etl_spark.operators import dedup
+
+    df = spark.createDataFrame([(1, "a b c")], "doc_id long, text string")
+
+    def fewest(bits):
+        monkeypatch.setattr(dedup, "SIMHASH_BITS", bits)
+        return min(
+            round_trips(lambda: dedup.simhash(df, "doc_id", "text")) for _ in range(3)
+        )
+
+    assert fewest(32) == fewest(64)
+
+
+def test_no_lambda_has_a_defaulted_parameter():
+    """`lambda x, i=i: ...` handed to F.transform is read as the
+    (element, index) form, so `i` silently becomes the element index. No
+    lambda in the package may carry a defaulted parameter."""
+    import ast
+    import pathlib
+
+    import quarkus_etl_spark
+
+    root = pathlib.Path(quarkus_etl_spark.__file__).parent
+    offenders = [
+        f"{path.relative_to(root)}:{node.lineno}"
+        for path in sorted(root.rglob("*.py"))
+        for node in ast.walk(ast.parse(path.read_text()))
+        if isinstance(node, ast.Lambda)
+        and (node.args.defaults or any(node.args.kw_defaults))
+    ]
+    assert not offenders, offenders
+
+
 def test_lsh_topk_recall_vs_brute_force(spark, sf_dir):
     e = load_table(spark, sf_dir, "embeddings")
     probe = [float(x) for x in e.where(F.col("vec_id") == 0).first()["embedding"]]

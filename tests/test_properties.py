@@ -287,11 +287,18 @@ def _py_jaccard_pairs(docs, threshold):
 
 
 def test_near_dup_edges_strategies_on_random_corpora(spark):
-    """On seeded random corpora with planted near-duplicates: exhaustive ==
-    prefix == the Python reference exactly, and the LSH plan emits a subset
-    with identical values. Exercises shapes the fixture corpus doesn't
-    (tiny blocks, empty docs, single-token docs)."""
-    from quarkus_etl_spark.operators.dedup import near_dup_edges
+    """On seeded random corpora with planted near-duplicates, every caller
+    of the shared candidate/verify steps against the Python reference: the
+    exact plans (near_dup_edges exhaustive and prefix, incremental exact)
+    emit exactly the reference pairs, and the LSH plans (near_dup_edges,
+    incremental, unblocked minhash_near_dup_pairs) emit a subset. Every
+    emitted pair carries the reference jaccard. Exercises shapes the
+    fixture corpus doesn't (tiny blocks, empty docs, single-token docs)."""
+    from quarkus_etl_spark.operators.dedup import (
+        incremental_jaccard_pairs,
+        minhash_near_dup_pairs,
+        near_dup_edges,
+    )
 
     rng = random.Random(7)
     vocab = [f"w{i}" for i in range(30)]
@@ -304,33 +311,60 @@ def test_near_dup_edges_strategies_on_random_corpora(spark):
         docs.append((did, blk, text))
         did += 1
         if rng.random() < 0.4 and n > 3:
-            # planted near-duplicate: perturb one token
+            # planted near-duplicate: perturb one token; half land in the
+            # other block, where the blocked plans must not pair them
             toks = text.split()
             toks[rng.randrange(len(toks))] = rng.choice(vocab)
-            docs.append((did, blk, " ".join(toks)))
+            docs.append((did, rng.choice(["en", "fr"]), " ".join(toks)))
             did += 1
     df = spark.createDataFrame(docs, "doc_id long, lang string, text string")
     want = _py_jaccard_pairs(docs, 0.6)
-    for strategy in ("exhaustive", "prefix"):
-        got = {
-            (r.id_a, r.id_b): r.jaccard
-            for r in near_dup_edges(
+    # even ids exist, odd ids arrive: a planted copy takes the next id, so
+    # most planted pairs cross the split; the reference pairs that cross it,
+    # oriented (existing, incoming), are the incremental join's answer
+    existing, incoming = df.where(F.col("doc_id") % 2 == 0), df.where(F.col("doc_id") % 2 == 1)
+    want_inc = {
+        (a, b) if a % 2 == 0 else (b, a): v for (a, b), v in want.items() if (a + b) % 2
+    }
+    unblocked = [(i, "", text) for i, _, text in docs]
+    runs = [
+        (
+            f"near_dup_edges {strategy}",
+            near_dup_edges(
                 df, "doc_id", "text", block_col="lang", threshold=0.6,
                 strategy=strategy,
-            ).collect()
-        }
-        assert set(got) == set(want), strategy
+            ),
+            want,
+            strategy != "lsh",
+        )
+        for strategy in ("exhaustive", "prefix", "lsh")
+    ] + [
+        (
+            f"incremental {strategy}",
+            incremental_jaccard_pairs(
+                existing, incoming, "doc_id", "text", block_col="lang",
+                threshold=0.6, strategy=strategy,
+            ),
+            want_inc,
+            strategy == "exact",
+        )
+        for strategy in ("exact", "lsh")
+    ] + [
+        (
+            "minhash_near_dup_pairs",
+            minhash_near_dup_pairs(df, "doc_id", "text", threshold=0.6),
+            _py_jaccard_pairs(unblocked, 0.6),
+            False,
+        )
+    ]
+    for name, pairs, ref, exact in runs:
+        got = {(r[0], r[1]): r["jaccard"] for r in pairs.collect()}
+        assert got, name
+        if exact:
+            assert set(got) == set(ref), name
+        assert set(got) <= set(ref), name
         for k, v in got.items():
-            assert math.isclose(v, want[k], rel_tol=1e-12), (strategy, k)
-    lsh = {
-        (r.id_a, r.id_b): r.jaccard
-        for r in near_dup_edges(
-            df, "doc_id", "text", block_col="lang", threshold=0.6, strategy="lsh"
-        ).collect()
-    }
-    assert set(lsh) <= set(want)
-    for k, v in lsh.items():
-        assert math.isclose(v, want[k], rel_tol=1e-12)
+            assert math.isclose(v, ref[k], rel_tol=1e-12), (name, k)
 
 
 def _py_ares_sample(docs, per_group=20):

@@ -40,8 +40,9 @@ def test_lsh_edges_are_subset_with_identical_jaccard(spark, sf_dir):
     assert set(lsh) <= set(exact)
     for k, v in lsh.items():
         assert v == exact[k]
-    # recall at fixture density (64 hashes / 16 bands, t=0.7 -> band-collision
-    # probability ~0.99 per true pair) must be near-total
+    # recall must be near-total: 64 hashes in 16 bands of 4 put a true pair
+    # at J=0.7 in a shared band with probability 1-(1-0.7^4)^16 = 0.988,
+    # and pairs above the threshold higher still
     assert len(lsh) >= 0.9 * len(exact) > 0
 
 
