@@ -8,7 +8,7 @@ Three tiers, slowest-exact to fastest-approximate:
   the block column bounds the quadratic).
 - `lsh_topk` / random-hyperplane bucketing: the 100TB path — sign-bit
   signatures from d fixed hyperplanes put each vector in one of 2^d buckets;
-  probing the query's bucket (+ optional multi-probe neighbors at hamming
+  probing the query's bucket (+ multi-probe neighbors at hamming
   distance 1) reduces candidates by ~2^d while keeping recall high for
   high-cosine neighbors. Hyperplanes are seeded-deterministic.
 """
@@ -53,8 +53,6 @@ def pairwise_similar(
     df: DataFrame, id_col: str, vec_col: str, block_col: str, threshold: float
 ) -> DataFrame:
     """All pairs within a block with cosine >= threshold (exact)."""
-    from ..functions.vectors import dot_product, l2_norm
-
     # Precompute each vector's norm ONCE (n sqrt-folds) instead of twice per
     # pair (n^2). Repartition the RAW vectors BEFORE the norm projection —
     # repartition() sits above its child, so projecting first would compute
@@ -185,19 +183,30 @@ def md5_hyperplanes(dim: int, n_planes: int) -> list[list[float]]:
 
 
 # Cap for the auto-sized plane count: 2^32 buckets covers n/target up to
-# ~4.3e9 (≈860 billion vectors at target_bucket=200) and keeps the
+# ~4.3e9 (≈860 billion vectors at TARGET_BUCKET) and keeps the
 # multi-probe fan-out (1+P per row) bounded. Bucket ids are bigint so the
 # cap is about probe cost, not bit width.
 AUTO_PLANES_MAX = 32
 
+# Expected vectors per bucket that auto plane sizing aims for.
+TARGET_BUCKET = 200
 
-def _auto_planes(df: DataFrame, target_bucket: int) -> int:
-    """P = log2(n/target): expected bucket population stays ~target at any
-    scale (fixed P goes quadratic — measured, see knn_graph_ann). The
-    count() is a plan-build-time action — metadata-cheap on raw scans;
+# Seed of the Gaussian plane family (lsh_topk, ann_pairs) and of the
+# first of knn_graph_ann's independent plane tables.
+LSH_SEED = 42
+
+# knn_graph_ann's plane-table seeds: two independent families, the
+# classic recall lever (union of L S-curves: 1-(1-p)^L).
+KNN_TABLE_SEEDS = (LSH_SEED, LSH_SEED + 7919)
+
+
+def _auto_planes(df: DataFrame) -> int:
+    """P = log2(n/TARGET_BUCKET): expected bucket population stays ~target
+    at any scale (fixed P goes quadratic — measured, see knn_graph_ann).
+    The count() is a plan-build-time action — metadata-cheap on raw scans;
     callers passing derived frames pay one evaluation of their plan."""
     n_rows = max(routing_count(df), 1)
-    p = math.ceil(math.log2(max(n_rows / target_bucket, 1.0)))
+    p = math.ceil(math.log2(max(n_rows / TARGET_BUCKET, 1.0)))
     return min(max(3, p), AUTO_PLANES_MAX)
 
 
@@ -223,17 +232,12 @@ def _sql_dot(a: str, b: str, prefix: str) -> str:
     return f"aggregate(zip_with({a}, {b}, ({x}, {y}) -> {x} * {y}), 0D, ({s}, {x}) -> {s} + {x})"
 
 
-def add_lsh_bucket(
-    df: DataFrame, vec_col: str, planes: list[list[float]], out_col: str = "bucket"
-) -> DataFrame:
-    """Sign-bit bucket id from the hyperplane dot products: bit i is set iff
-    dot(v, planes[i]) >= 0 (a NULL or ragged vector sets no bit). One
-    parsed expression over ONE plane-matrix constant — a transform over
-    the planes whose dot is `dot_product`'s left-to-right zip_with /
-    aggregate fold — so building it costs a fixed few py4j round trips
-    for any plane count and dim (a Column expression per plane cost ~270
-    round trips each). The lambda variables carry a `__lsh_` prefix:
-    inside a lambda they would shadow a column of the same name."""
+def _lsh_bucket_sql(vec_col: str, planes: list[list[float]]) -> str:
+    """The sign-bit bucket id of `vec_col` as parsed SQL: a transform over
+    ONE plane-matrix constant whose dot is `dot_product`'s left-to-right
+    zip_with / aggregate fold, summed into a bigint. The lambda variables
+    carry a `__lsh_` prefix: inside a lambda they would shadow a column of
+    the same name."""
     v = f"CAST({sql_ident(vec_col)} AS ARRAY<DOUBLE>)"
     dot = _sql_dot(v, "__lsh_p", "__lsh_")
     plane_mat = "array(" + ", ".join(sql_array(p) for p in planes) + ")"
@@ -243,9 +247,18 @@ def add_lsh_bucket(
         f"transform({plane_mat},"
         f" (__lsh_p, __lsh_i) -> IF({dot} >= 0, shiftleft(1L, __lsh_i), 0L))"
     )
-    return df.withColumn(
-        out_col, F.expr(f"aggregate({bits}, 0L, (__lsh_s, __lsh_b) -> __lsh_s + __lsh_b)")
-    )
+    return f"aggregate({bits}, 0L, (__lsh_s, __lsh_b) -> __lsh_s + __lsh_b)"
+
+
+def add_lsh_bucket(
+    df: DataFrame, vec_col: str, planes: list[list[float]], out_col: str = "bucket"
+) -> DataFrame:
+    """Sign-bit bucket id from the hyperplane dot products: bit i is set iff
+    dot(v, planes[i]) >= 0 (a NULL or ragged vector sets no bit). One
+    parsed expression (`_lsh_bucket_sql`), so building it costs a fixed
+    few py4j round trips for any plane count and dim (a Column expression
+    per plane cost ~270 round trips each)."""
+    return df.withColumn(out_col, F.expr(_lsh_bucket_sql(vec_col, planes)))
 
 
 def _bucket_of(probe: list[float], planes: list[list[float]]) -> int:
@@ -256,6 +269,18 @@ def _bucket_of(probe: list[float], planes: list[list[float]]) -> int:
     return b
 
 
+def _probe_masks(n_planes: int, h2: int = 0) -> list[int]:
+    """XOR masks of a multi-probe set: 0 (the own bucket), every hamming-1
+    flip, and the hamming-2 flips over the first `h2` planes only — a
+    fixed +C(h2,2) probes that buy the S-curve tail without scaling the
+    fan-out with P (full hamming-2 would add C(P,2) ~ P^2/2 probes)."""
+    return (
+        [0]
+        + [1 << i for i in range(n_planes)]
+        + [(1 << i) | (1 << j) for i in range(h2) for j in range(i + 1, h2)]
+    )
+
+
 def lsh_topk(
     df: DataFrame,
     vec_col: str,
@@ -263,25 +288,23 @@ def lsh_topk(
     probe: list[float],
     k: int = 10,
     n_planes: int = 8,
-    seed: int = 42,
-    multiprobe: bool = True,
     plane_family: str = "gauss",
 ) -> DataFrame:
-    """ANN top-k: score only vectors in the probe's bucket (plus hamming-1
-    neighbor buckets when multiprobe) — candidate set ~n/2^planes * (1 +
-    planes). Recall is approximate by design; exactness is brute_force_topk's
-    job. plane_family "md5" swaps in the engine-portable hyperplanes so an
-    SQL oracle can replicate the candidate set exactly."""
+    """ANN top-k: score only vectors in the probe's bucket and its hamming-1
+    neighbor buckets — candidate set ~n/2^planes * (1 + planes). Recall is
+    approximate by design; exactness is brute_force_topk's job.
+    plane_family "md5" swaps in the engine-portable hyperplanes so an SQL
+    oracle can replicate the candidate set exactly."""
     if plane_family not in ("gauss", "md5"):
         raise ValueError(f"unknown plane_family: {plane_family!r}")
     dim = len(probe)
     planes = (
         md5_hyperplanes(dim, n_planes)
         if plane_family == "md5"
-        else random_hyperplanes(dim, n_planes, seed)
+        else random_hyperplanes(dim, n_planes, LSH_SEED)
     )
     target = _bucket_of(probe, planes)
-    probe_buckets = [target] + ([target ^ (1 << i) for i in range(n_planes)] if multiprobe else [])
+    probe_buckets = [target ^ m for m in _probe_masks(n_planes)]
     bucketed = add_lsh_bucket(df, vec_col, planes)
     cands = bucketed.where(F.col("bucket").isin(probe_buckets))
     v = to_double_array(vec_col)
@@ -473,6 +496,60 @@ def ivf_topk(
     )
 
 
+def _lsh_candidates(
+    nodes: DataFrame,
+    id_col: str,
+    *,
+    dim: int,
+    n_planes: int,
+    seeds: tuple[int, ...],
+    masks: list[int],
+    blocked: bool,
+) -> DataFrame:
+    """Directed sign-LSH candidates (__src, __nbr, cosine) from ONE bucket
+    join over every plane table. `nodes` is (id, __v[, __blk]); a row with
+    a missing vector takes no part. One projection computes the row's
+    bucket under each table (one seeded plane family per entry of
+    `seeds`) and posexplodes them into (__t, __b). The query side turns
+    each (__t, __b) into the probes __b XOR mask, one per entry of
+    `masks` (0 probes the own bucket), and one equi-join on
+    (__t, __b[, __blk]) with src != nbr meets every bucket member. Each
+    candidate carries the exact guarded cosine, so a pair that several
+    tables reach repeats with the identical value."""
+    planes = [random_hyperplanes(dim, n_planes, s) for s in seeds]
+    buckets = "array(" + ", ".join(_lsh_bucket_sql("__v", p) for p in planes) + ")"
+    probe_of = (
+        "transform(array(" + ", ".join(f"{m}L" for m in masks) + "), __lsh_m -> __b ^ __lsh_m)"
+    )
+    blk = ["__blk"] if blocked else []
+    bucketed = (
+        nodes.where(F.col("__v").isNotNull())
+        .withColumn("__n", l2_norm(F.col("__v")))
+        .select(id_col, "__v", "__n", *blk, F.posexplode(F.expr(buckets)).alias("__t", "__b"))
+    )
+    probes = bucketed.select(
+        F.col(id_col).alias("__src"),
+        F.col("__v").alias("__pv"),
+        F.col("__n").alias("__pn"),
+        *[F.col(c).alias("__pblk") for c in blk],
+        F.col("__t").alias("__pt"),
+        F.explode(F.expr(probe_of)).alias("__pb"),
+    )
+    cond = (
+        (F.col("__pt") == F.col("__t"))
+        & (F.col("__pb") == F.col("__b"))
+        & (F.col("__src") != F.col(id_col))
+    )
+    if blocked:
+        cond = cond & (F.col("__pblk") == F.col("__blk"))
+    sim = guarded_cosine(
+        dot_product(F.col("__pv"), F.col("__v")), F.col("__pn") * F.col("__n")
+    )
+    return probes.join(bucketed, cond).select(
+        "__src", F.col(id_col).alias("__nbr"), sim.alias("cosine")
+    )
+
+
 def knn_graph_ann(
     df: DataFrame,
     id_col: str,
@@ -480,37 +557,31 @@ def knn_graph_ann(
     *,
     dim: int,
     k: int = 3,
-    n_planes: int | None = None,
-    seed: int = 42,
     block_col: str | None = None,
-    target_bucket: int = 200,
-    n_tables: int = 2,
     collapse_duplicates: bool = True,
 ) -> DataFrame:
     """APPROXIMATE k-NN graph — the scale path for exact blocked kNN
-    (quadratic per block): each vector's candidates are the members of its
-    sign-LSH bucket plus all hamming-1 neighbor buckets (multi-probe on
-    the QUERY side only, so each candidate pair appears exactly once per
-    table), across `n_tables` INDEPENDENT plane families, exact-cosine
-    reranked to the top k per source. Independent tables are the classic
-    recall lever (union of L S-curves: 1-(1-p)^L); each table's plane
-    count is bumped by ceil(log2(L)) so the total candidate volume stays
-    near the single-table budget ((P+8)/(P+1)x with the bounded hamming-2
-    probes — 1.64x at P=10, falling toward 1 as P gets large). Measured on
-    fixtures: recall@3 0.62 -> 0.95 (sf0.01) / 0.97 (sf0.001), but only
-    0.78 at sf0.1 (2000 vectors), under the 0.85 floor; 200k-vec stress
-    32 s -> 58 s. Plan per table: one map-only bucket assignment,
-    a (1+P+C(h2,2))-way probe explode on the query side, a shuffled
-    equi-join on the bucket id; tables union into one (src, nbr) dedup +
-    bounded per-source window. Recall is approximate by design (pytest
-    pins a floor vs the exact graph).
+    (quadratic per block): exact-cosine top k per source over the
+    sign-LSH candidates of `_lsh_candidates`, one bucket join across the
+    independent plane tables of KNN_TABLE_SEEDS. Each vector probes its
+    own bucket, every hamming-1 neighbor and the hamming-2 neighbors over
+    the first 4 planes (query side only, so a pair appears once per
+    table that reaches it). Independent tables are the classic recall
+    lever (union of L S-curves: 1-(1-p)^L); the auto-sized plane count
+    gets +ceil(log2(L)) so the total candidate volume stays near the
+    single-table budget ((P+8)/(P+1)x with the hamming-2 probes — 1.64x
+    at P=10, falling toward 1 as P grows). The candidates reduce to one
+    row per (src, nbr), then a bounded per-source window keeps the top k.
+    Measured edge recall@3 against the exact graph: 0.95 (sf0.01) and
+    0.97 (sf0.001), but 0.78 at sf0.1 (2000 vectors), under the 0.85
+    floor pytest pins. Recall is approximate by design.
 
-    EXACT-DUPLICATE COLLAPSE (default on; the r7 scale fix): identical
-    vectors share every sign bit under every plane family, so no plane
-    count can split them — bucket population is >= the duplicate
-    multiplicity and the bucket join is QUADRATIC in it. Measured: 2M
-    vectors as 2000 distinct x 1000 copies (one hot boilerplate page per
-    distinct doc — a real web-corpus shape) did not finish in 10 minutes.
+    EXACT-DUPLICATE COLLAPSE (default on): identical vectors share every
+    sign bit under every plane family, so no plane count can split them
+    — bucket population is >= the duplicate multiplicity and the bucket
+    join is QUADRATIC in it. Measured: 2M vectors as 2000 distinct x 1000
+    copies (one hot boilerplate page per distinct doc — a real web-corpus
+    shape) did not finish in 10 minutes.
     The graph is therefore built on DISTINCT (vector[, block]) groups
     (one representative each), then expanded: each copy's first k
     neighbors are fellow copies (exact duplicates ARE the true top-k,
@@ -532,18 +603,14 @@ def knn_graph_ann(
     vector has another length is a missing vector and gets no edges."""
     from pyspark.sql import Window
 
-    if n_tables < 1:
-        raise ValueError(f"n_tables must be >= 1, got {n_tables}")
-    if n_planes is None:
-        # P MUST grow with n: the per-bucket population is n_block/2^P and
-        # candidate volume is quadratic in it, so a fixed P turns the
-        # bucket join quadratic as data grows (measured: P=3 fine at 20k
-        # vectors, effectively unbounded at 200k). The +log2(L) keeps the
-        # L-table union at the single-table candidate budget.
-        n_planes = min(
-            _auto_planes(df, target_bucket) + max(n_tables - 1, 0).bit_length(),
-            AUTO_PLANES_MAX,
-        )
+    # P MUST grow with n: the per-bucket population is n_block/2^P and
+    # candidate volume is quadratic in it, so a fixed P turns the bucket
+    # join quadratic as data grows (measured: P=3 fine at 20k vectors,
+    # effectively unbounded at 200k). The +log2(L) keeps the L-table
+    # union at the single-table candidate budget.
+    n_planes = min(
+        _auto_planes(df) + (len(KNN_TABLE_SEEDS) - 1).bit_length(), AUTO_PLANES_MAX
+    )
     raw = ensure_parallelism(_contract_projection(df, id_col, vec_col, dim, block_col))
     members = None
     if collapse_duplicates:
@@ -575,55 +642,18 @@ def knn_graph_ann(
             nodes = raw
     else:
         nodes = raw
-    # A missing vector has no similarity: it would otherwise bucket as 0
-    # (it sets no bit) and take k NULL-cosine edges.
-    base = nodes.where(F.col("__v").isNotNull()).withColumn("__n", l2_norm(F.col("__v")))
-
-    def table_pairs(table_seed: int) -> DataFrame:
-        planes = random_hyperplanes(dim, n_planes, table_seed)
-        bucketed = add_lsh_bucket(base, "__v", planes, out_col="__b")
-        # Probe set: self bucket, all hamming-1 flips, and hamming-2 flips
-        # over the FIRST `h2` planes only — a fixed +C(h2,2) probes that
-        # buys the S-curve tail without scaling the fan-out with P (full
-        # hamming-2 would add C(P,2) ~ P^2/2 probes).
-        h2 = min(n_planes, 4)
-        probe_buckets = F.array(
-            F.col("__b"),
-            *[F.col("__b").bitwiseXOR(F.lit(1 << i)) for i in range(n_planes)],
-            *[
-                F.col("__b").bitwiseXOR(F.lit((1 << i) | (1 << j)))
-                for i in range(h2)
-                for j in range(i + 1, h2)
-            ],
-        )
-        probe_cols = [
-            F.col(id_col).alias("__src"),
-            F.col("__v").alias("__pv"),
-            F.col("__n").alias("__pn"),
-            F.explode(probe_buckets).alias("__pb"),
-        ]
-        if block_col is not None:
-            probe_cols.insert(3, F.col("__blk").alias("__pblk"))
-        probes = bucketed.select(*probe_cols)
-        sim = guarded_cosine(
-            dot_product(F.col("__pv"), F.col("__v")), F.col("__pn") * F.col("__n")
-        )
-        cond = (F.col("__pb") == F.col("__b")) & (F.col("__src") != F.col(id_col))
-        if block_col is not None:
-            cond = cond & (F.col("__pblk") == F.col("__blk"))
-        return probes.join(bucketed, cond).select(
-            "__src", F.col(id_col).alias("__nbr"), sim.alias("cosine")
-        )
-
-    pairs = table_pairs(seed)
-    for t in range(1, n_tables):
-        pairs = pairs.unionByName(table_pairs(seed + 7919 * t))
-    if n_tables > 1:
-        # A pair found by several tables carries the identical cosine (same
-        # deterministic fold on the same vectors), so max() is pure dedup;
-        # the groupBy partitions by __src like the window right after, and
-        # AQE coalesces the back-to-back exchanges.
-        pairs = pairs.groupBy("__src", "__nbr").agg(F.max("cosine").alias("cosine"))
+    # A missing vector has no similarity: _lsh_candidates drops it, where
+    # it would otherwise bucket as 0 (it sets no bit) and take k
+    # NULL-cosine edges.
+    pairs = _lsh_candidates(
+        nodes, id_col, dim=dim, n_planes=n_planes, seeds=KNN_TABLE_SEEDS,
+        masks=_probe_masks(n_planes, min(n_planes, 4)), blocked=block_col is not None,
+    )
+    # A pair found by several tables carries the identical cosine (same
+    # deterministic fold on the same vectors), so max() is pure dedup; the
+    # groupBy partitions by __src like the window right after, and AQE
+    # coalesces the back-to-back exchanges.
+    pairs = pairs.groupBy("__src", "__nbr").agg(F.max("cosine").alias("cosine"))
 
     w = Window.partitionBy("__src").orderBy(F.desc("cosine"), F.asc("__nbr"))
     rep_graph = (
@@ -670,9 +700,9 @@ def knn_graph_ann(
             # identical NONZERO vectors: the true cosine, not the float
             # fold. Identical ZERO vectors (failed-encoder rows duplicate
             # naturally) follow the guarded_cosine convention — 0.0, not
-            # 1.0 — so collapse on/off agree on where they rank (ADVICE
-            # r7: a 1.0 here made zero vectors top-ranked neighbors while
-            # the uncollapsed path ranks them last at 0.0).
+            # 1.0 — so collapse on/off agree on where they rank (a 1.0
+            # here would make zero vectors top-ranked neighbors while the
+            # uncollapsed path ranks them last at 0.0).
             F.when(F.col("__gn") > 0, F.lit(1.0))
             .otherwise(F.lit(0.0))
             .alias("cosine"),
@@ -715,19 +745,18 @@ def ann_pairs(
     dim: int,
     block_col: str | None = None,
     n_planes: int | None = None,
-    seed: int = 42,
-    target_bucket: int = 200,
 ) -> DataFrame:
     """APPROXIMATE all-pairs at cosine >= threshold: the scale path for
-    `pairwise_similar`. Same multi-probe sign-LSH candidate plan as
-    knn_graph_ann — each vector probes its own bucket plus all hamming-1
-    neighbors, and the `probe.id < base.id` conjunct makes every unordered
-    pair appear EXACTLY once (same-bucket pairs surface only from the
-    smaller id's self-probe; one-bit-apart pairs only from the smaller id's
-    neighbor-probe) — verified with the exact cosine fold, so every emitted
-    pair carries the identical value the exhaustive plan would produce.
-    Auto-sized P = log2(n/target) keeps expected bucket size constant as
-    data grows (fixed P goes quadratic — measured, see knn_graph_ann).
+    `pairwise_similar`. The candidates are knn_graph_ann's one bucket
+    join (`_lsh_candidates`) over a single plane table, each vector
+    probing its own bucket plus all hamming-1 neighbors. Keeping
+    src < nbr makes every unordered pair appear EXACTLY once (same-bucket
+    pairs surface only from the smaller id's self-probe; one-bit-apart
+    pairs only from the smaller id's neighbor-probe), and the exact
+    cosine fold gives every emitted pair the identical value the
+    exhaustive plan would produce. Auto-sized P = log2(n/TARGET_BUCKET)
+    keeps expected bucket size constant as data grows (fixed P goes
+    quadratic — measured, see knn_graph_ann).
 
     Duplicate-multiplicity caveat (differs from knn_graph_ann's collapse):
     identical vectors defeat plane splitting, but here the OUTPUT itself
@@ -740,41 +769,15 @@ def ann_pairs(
     `dim` is the column's declared vector dimension, as for knn_graph_ann:
     a row whose vector has another length gets no pairs."""
     if n_planes is None:
-        n_planes = _auto_planes(df, target_bucket)
-    planes = random_hyperplanes(dim, n_planes, seed)
-    base = ensure_parallelism(
-        _contract_projection(df, id_col, vec_col, dim, block_col)
-    ).withColumn("__n", l2_norm(F.col("__v")))
-    bucketed = add_lsh_bucket(base, "__v", planes, out_col="__b")
-    probe_cols = [
-        F.col(id_col).alias("__pid"),
-        F.col("__v").alias("__pv"),
-        F.col("__n").alias("__pn"),
-        F.explode(
-            F.array(
-                F.col("__b"),
-                *[F.col("__b").bitwiseXOR(F.lit(1 << i)) for i in range(n_planes)],
-            )
-        ).alias("__pb"),
-    ]
-    if block_col is not None:
-        probe_cols.insert(3, F.col("__blk").alias("__pblk"))
-    probes = bucketed.select(*probe_cols)
-    sim = guarded_cosine(
-        dot_product(F.col("__pv"), F.col("__v")), F.col("__pn") * F.col("__n")
+        n_planes = _auto_planes(df)
+    pairs = _lsh_candidates(
+        ensure_parallelism(_contract_projection(df, id_col, vec_col, dim, block_col)),
+        id_col, dim=dim, n_planes=n_planes, seeds=(LSH_SEED,),
+        masks=_probe_masks(n_planes), blocked=block_col is not None,
     )
-    cond = (F.col("__pb") == F.col("__b")) & (F.col("__pid") < F.col(id_col))
-    if block_col is not None:
-        cond = cond & (F.col("__pblk") == F.col("__blk"))
-    return (
-        probes.join(bucketed, cond)
-        .select(
-            F.col("__pid").alias("id_a"),
-            F.col(id_col).alias("id_b"),
-            sim.alias("cosine"),
-        )
-        .where(F.col("cosine") >= threshold)
-    )
+    return pairs.where(
+        (F.col("__src") < F.col("__nbr")) & (F.col("cosine") >= threshold)
+    ).select(F.col("__src").alias("id_a"), F.col("__nbr").alias("id_b"), "cosine")
 
 
 def similar_pairs_auto(

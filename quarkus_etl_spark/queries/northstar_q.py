@@ -1372,6 +1372,20 @@ def _mirror_pairs(pairs: DataFrame) -> DataFrame:
     )
 
 
+def _exact_knn3(e: DataFrame) -> DataFrame:
+    """The exact label-blocked top-3 graph: every pair's cosine from the
+    half-matrix, mirrored, ranked per source; (src, nbr, cosine, rn)."""
+    from pyspark.sql.window import Window
+
+    pairs = pairwise_similar(e, "vec_id", "embedding", "label", threshold=-1.0)
+    w = Window.partitionBy("src").orderBy(F.desc("cosine"), F.asc("nbr"))
+    return (
+        _mirror_pairs(pairs)
+        .withColumn("rn", F.row_number().over(w))
+        .where(F.col("rn") <= 3)
+    )
+
+
 @register(
     "q_knn_graph",
     oracle="""
@@ -1411,8 +1425,6 @@ def q_knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidate plan (knn_graph_ann — identical output schema, recall floor
     pytest-pinned). Below it — including the oracle gate — the exact plan
     runs and hash-matches DuckDB."""
-    from pyspark.sql.window import Window
-
     from ..plans.tuning import log_route
 
     e = emb(spark, sf_dir).where(F.col("embedding").isNotNull())
@@ -1424,14 +1436,7 @@ def q_knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
             e, "vec_id", "embedding", dim=EMB_DIM, k=3, block_col="label"
         )
     log_route("q_knn_graph", "exact", approximate=False)
-    pairs = pairwise_similar(e, "vec_id", "embedding", "label", threshold=-1.0)
-    m = _mirror_pairs(pairs)
-    w = Window.partitionBy("src").orderBy(F.desc("cosine"), F.asc("nbr"))
-    return (
-        m.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= 3)
-        .select("src", "nbr", "cosine", F.col("rn").alias("nn_rank"))
-    )
+    return _exact_knn3(e).select("src", "nbr", "cosine", F.col("rn").alias("nn_rank"))
 
 
 @register(
@@ -1494,8 +1499,6 @@ def q_knn_graph_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     At 100 TB only the ANN side runs; the exact twin here exists FOR the
     contract (2000 vectors at the bench gate — the exact half-matrix is
     the cheap side at fixture scale)."""
-    from pyspark.sql.window import Window
-
     from ..operators.similarity import knn_graph_ann
 
     # r12 re-measured the shared guarded-embedding checkpoint here
@@ -1514,14 +1517,7 @@ def q_knn_graph_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     ann = knn_graph_ann(
         e, "vec_id", "embedding", dim=EMB_DIM, k=3, block_col="label"
     ).select("src", "nbr", F.lit(1).alias("__hit"))
-    pairs = pairwise_similar(e, "vec_id", "embedding", "label", threshold=-1.0)
-    m = _mirror_pairs(pairs)
-    w = Window.partitionBy("src").orderBy(F.desc("cosine"), F.asc("nbr"))
-    exact = (
-        m.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= 3)
-        .select("src", "nbr")
-    )
+    exact = _exact_knn3(e).select("src", "nbr")
     # one LEFT join + one aggregate yields the edge count AND the overlap
     # together (count skips NULL __hit) — the quadratic exact subtree
     # evaluates once, not once per contract column

@@ -24,6 +24,31 @@ from .base import dec2, register, sql_dsum, t
 _SUM_VAL = sql_dsum("value", "sum_value")
 
 
+def _replay_events(spark: SparkSession, sf_dir: str, name: str) -> str:
+    """Re-materialize the events table as a 4-file parquet directory (the
+    process scratch dir `name`, ts cast to the watermarkable `timestamp`)
+    and return its path: a file stream reads each file as micro-batch
+    input."""
+    from .lifecycle_q import _scratch
+
+    path = _scratch(sf_dir, name)
+    ev = t(spark, sf_dir, "events")
+    ev.withColumn("ts", F.col("ts").cast("timestamp")).repartition(4).write.mode(
+        "overwrite"
+    ).parquet(path)
+    return path
+
+
+def _run_live(spark: SparkSession, stream: DataFrame, name: str, output_mode: str) -> DataFrame:
+    """Run `stream` to completion into the memory sink `name` under the
+    state-sized shuffle partitions and return the sink's table."""
+    from ..streaming.streams import run_stream_to_memory, state_partitions
+
+    with state_partitions(spark):
+        run_stream_to_memory(stream, name, output_mode=output_mode).stop()
+    return spark.table(name)
+
+
 @register(
     "q_stream_tumbling",
     oracle=f"""
@@ -173,15 +198,9 @@ def q_stream_live_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash-matches the same SQL the batch q_stream_tumbling family uses —
     the incremental execution path itself is what's under test. Output
     timestamps are cast back to ntz (UTC session makes values coincide)."""
-    from ..streaming.streams import file_stream, run_stream_to_memory, state_partitions
+    from ..streaming.streams import file_stream
 
-    from .lifecycle_q import _scratch
-
-    path = _scratch(sf_dir, "events_stream")
-    ev = t(spark, sf_dir, "events")
-    ev.withColumn("ts", F.col("ts").cast("timestamp")).repartition(4).write.mode(
-        "overwrite"
-    ).parquet(path)
+    path = _replay_events(spark, sf_dir, "events_stream")
     agg = (
         file_stream(spark, path, max_files_per_trigger=2)
         .withWatermark("ts", "10 minutes")
@@ -191,10 +210,7 @@ def q_stream_live_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(dec2("value")).cast("double").alias("sum_value"),
         )
     )
-    with state_partitions(spark):
-        q = run_stream_to_memory(agg, "live_tumbling", output_mode="complete")
-        q.stop()
-    return spark.table("live_tumbling").select(
+    return _run_live(spark, agg, "live_tumbling", "complete").select(
         F.col("window.start").cast("timestamp_ntz").alias("window_start"),
         F.col("window.end").cast("timestamp_ntz").alias("window_end"),
         "event_type",
@@ -217,24 +233,15 @@ def q_stream_live_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     arbitrary which-duplicate-won choice). State is bounded by the key
     domain; the watermarked variant (q_stream_dedup + streams.py
     dedup_within_watermark) bounds it by time instead."""
-    from ..streaming.streams import file_stream, run_stream_to_memory, state_partitions
+    from ..streaming.streams import file_stream
 
-    from .lifecycle_q import _scratch
-
-    path = _scratch(sf_dir, "events_stream_dd")
-    ev = t(spark, sf_dir, "events")
-    ev.withColumn("ts", F.col("ts").cast("timestamp")).repartition(4).write.mode(
-        "overwrite"
-    ).parquet(path)
+    path = _replay_events(spark, sf_dir, "events_stream_dd")
     dd = (
         file_stream(spark, path, max_files_per_trigger=2)
         .select("user_id", "event_type")
         .dropDuplicates(["user_id", "event_type"])
     )
-    with state_partitions(spark):
-        q = run_stream_to_memory(dd, "live_dedup", output_mode="append")
-        q.stop()
-    return spark.table("live_dedup")
+    return _run_live(spark, dd, "live_dedup", "append")
 
 
 @register(
@@ -286,20 +293,9 @@ def q_stream_live_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     Production would size the watermark to the real out-of-orderness and
     accept dropping older-than-watermark arrivals, keeping per-key state
     bounded by watermark + window."""
-    from ..streaming.streams import (
-        file_stream,
-        run_stream_to_memory,
-        state_partitions,
-        stream_stream_interval_join,
-    )
+    from ..streaming.streams import file_stream, stream_stream_interval_join
 
-    from .lifecycle_q import _scratch
-
-    path = _scratch(sf_dir, "events_stream_ssj")
-    ev = t(spark, sf_dir, "events")
-    ev.withColumn("ts", F.col("ts").cast("timestamp")).repartition(4).write.mode(
-        "overwrite"
-    ).parquet(path)
+    path = _replay_events(spark, sf_dir, "events_stream_ssj")
     # era translation (see docstring): both sides shifted identically, so
     # the join condition and lag_s are unchanged while pre-epoch rows
     # clear Spark's non-negative watermark domain
@@ -337,10 +333,7 @@ def q_stream_live_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         "user_id",
         F.expr("(unix_micros(p_ts) - unix_micros(v_ts)) DIV 1000000").alias("lag_s"),
     )
-    with state_partitions(spark):
-        q = run_stream_to_memory(out, "live_ssj", output_mode="append")
-        q.stop()
-    return spark.table("live_ssj")
+    return _run_live(spark, out, "live_ssj", "append")
 
 
 @register(
@@ -365,15 +358,9 @@ def q_stream_live_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
     readStream micro-batches into a complete-mode memory sink. Completes
     the executed-streaming family: tumbling, sliding, keyed dedup,
     stream-stream join."""
-    from ..streaming.streams import file_stream, run_stream_to_memory, state_partitions
+    from ..streaming.streams import file_stream
 
-    from .lifecycle_q import _scratch
-
-    path = _scratch(sf_dir, "events_stream_sl")
-    ev = t(spark, sf_dir, "events")
-    ev.withColumn("ts", F.col("ts").cast("timestamp")).repartition(4).write.mode(
-        "overwrite"
-    ).parquet(path)
+    path = _replay_events(spark, sf_dir, "events_stream_sl")
     agg = (
         file_stream(spark, path, max_files_per_trigger=2)
         .withWatermark("ts", "10 minutes")
@@ -383,10 +370,7 @@ def q_stream_live_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(dec2("value")).cast("double").alias("sum_value"),
         )
     )
-    with state_partitions(spark):
-        q = run_stream_to_memory(agg, "live_sliding", output_mode="complete")
-        q.stop()
-    return spark.table("live_sliding").select(
+    return _run_live(spark, agg, "live_sliding", "complete").select(
         F.col("window.start").cast("timestamp_ntz").alias("window_start"),
         F.col("window.end").cast("timestamp_ntz").alias("window_end"),
         "cnt",
@@ -424,15 +408,9 @@ def q_stream_live_session(spark: SparkSession, sf_dir: str) -> DataFrame:
     in complete mode — which over a finite source equals the batch
     gaps-and-islands answer. Completes the executed-streaming family:
     every window kind the batch surface declares also RUNS incrementally."""
-    from ..streaming.streams import file_stream, run_stream_to_memory, state_partitions
+    from ..streaming.streams import file_stream
 
-    from .lifecycle_q import _scratch
-
-    path = _scratch(sf_dir, "events_stream_se")
-    ev = t(spark, sf_dir, "events")
-    ev.withColumn("ts", F.col("ts").cast("timestamp")).repartition(4).write.mode(
-        "overwrite"
-    ).parquet(path)
+    path = _replay_events(spark, sf_dir, "events_stream_se")
     agg = (
         file_stream(spark, path, max_files_per_trigger=2)
         .groupBy(F.session_window("ts", "5 minutes"), "user_id")
@@ -441,10 +419,7 @@ def q_stream_live_session(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(dec2("value")).cast("double").alias("sum_value"),
         )
     )
-    with state_partitions(spark):
-        q = run_stream_to_memory(agg, "live_session", output_mode="complete")
-        q.stop()
-    return spark.table("live_session").select(
+    return _run_live(spark, agg, "live_session", "complete").select(
         "user_id",
         F.col("session_window.start").cast("timestamp_ntz").alias("session_start"),
         F.col("session_window.end").cast("timestamp_ntz").alias("session_end"),
@@ -474,15 +449,9 @@ def q_stream_live_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     Reference parity: the reference's continuous JDBC copy enriched at
     the destination engine (EtlMain.kt:103-108); this is the Spark-native
     in-flight form."""
-    from ..streaming.streams import file_stream, run_stream_to_memory, state_partitions
+    from ..streaming.streams import file_stream
 
-    from .lifecycle_q import _scratch
-
-    path = _scratch(sf_dir, "events_stream_sj")
-    ev = t(spark, sf_dir, "events")
-    ev.withColumn("ts", F.col("ts").cast("timestamp")).repartition(4).write.mode(
-        "overwrite"
-    ).parquet(path)
+    path = _replay_events(spark, sf_dir, "events_stream_sj")
     cust = t(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
     joined = (
         file_stream(spark, path, max_files_per_trigger=2)
@@ -495,10 +464,7 @@ def q_stream_live_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             dec2("value").cast("double").alias("value"),
         )
     )
-    with state_partitions(spark):
-        q = run_stream_to_memory(joined, "live_static_join", output_mode="append")
-        q.stop()
-    return spark.table("live_static_join")
+    return _run_live(spark, joined, "live_static_join", "append")
 
 
 @register("q_stream_live_eviction")
@@ -544,7 +510,7 @@ def q_stream_live_eviction(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from ..streaming.streams import file_stream, run_stream_to_memory, state_partitions
+    from ..streaming.streams import file_stream
 
     from .lifecycle_q import _scratch
 
@@ -586,10 +552,7 @@ def q_stream_live_eviction(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.window("ts", "15 minutes"), "event_type")
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
-    with state_partitions(spark):
-        q = run_stream_to_memory(agg, "live_eviction", output_mode="append")
-        q.stop()
-    return spark.table("live_eviction").select(
+    return _run_live(spark, agg, "live_eviction", "append").select(
         F.col("window.start").cast("timestamp_ntz").alias("window_start"),
         F.col("window.end").cast("timestamp_ntz").alias("window_end"),
         "event_type",

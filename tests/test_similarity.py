@@ -206,6 +206,46 @@ def test_const_vec_round_trips_do_not_grow_with_dim(spark, round_trips):
     )
 
 
+def test_knn_graph_ann_plans_one_bucket_join_for_all_tables(spark, sf_dir):
+    """Every plane table shares one bucket join keyed on (table, bucket):
+    the executed plan has no Union and exactly one join, and that join
+    matches probes to buckets."""
+    import re
+
+    from pyspark.sql import functions as F
+
+    from quarkus_etl_spark.catalog import load_table
+    from quarkus_etl_spark.operators.similarity import knn_graph_ann
+
+    e = load_table(spark, sf_dir, "embeddings").where(F.col("embedding").isNotNull())
+    g = knn_graph_ann(e, "vec_id", "embedding", dim=64, k=3, block_col="label")
+    assert g.collect()
+    plan = g._jdf.queryExecution().executedPlan().toString()
+    final = plan.split("== Initial Plan ==")[0]
+    joins = [ln for ln in final.splitlines() if re.search(r"\w+Join ", ln)]
+    assert "Union" not in final, final
+    assert len(joins) == 1 and "__pb" in joins[0], joins
+
+
+def test_ann_pairs_round_trips_do_not_grow_with_planes(spark, sf_dir, round_trips):
+    """The probe set is one parsed XOR-mask constant, so building the pair
+    plan costs the same py4j round trips at 4 planes and 20 (a Column
+    XOR per plane cost ~28 round trips each)."""
+    from quarkus_etl_spark.catalog import load_table
+    from quarkus_etl_spark.operators.similarity import ann_pairs
+
+    e = load_table(spark, sf_dir, "embeddings")
+
+    def fewest(n_planes):
+        return min(
+            round_trips(lambda: ann_pairs(e, "vec_id", "embedding", 0.4, dim=64,
+                                          block_col="label", n_planes=n_planes))
+            for _ in range(3)
+        )
+
+    assert fewest(4) == fewest(20)
+
+
 def test_const_vec_is_bit_exact_and_rejects_non_finite(spark):
     """Every component survives the parsed literal bit for bit: signed
     zeros, subnormals, the extremes of the double range and values with
