@@ -11,10 +11,8 @@ from .text import (  # noqa: F401
     tokenize,
 )
 from .vectors import (  # noqa: F401
-    const_vec,
     cosine_similarity,
     cosine_to_const,
-    dot_product,
     l2_norm,
     to_double_array,
 )

@@ -31,8 +31,10 @@ from __future__ import annotations
 
 import math
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from ..functions.vectors import sql_array, sql_fold, sql_ident
 
 # Above this centroid count the Lloyd assignment routes to the pruned plan
 # (q_emb_kmeans keeps the exact plan at its oracle-graded fixture k=4).
@@ -82,15 +84,12 @@ def coarse_cells(
     return coarse, assign
 
 
-def quantized_sq_dist(a, b):
+def quantized_sq_dist(a: str, b: str) -> Column:
     """The exact fixed-point squared distance both kmeans plans share:
     per-dimension terms floored to a 1e12 grid, summed as LONG (terms are
-    bounded, so the fold is exact and stays in whole-stage codegen)."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, c: F.floor((x - c) * (x - c) * F.lit(1e12))),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
+    bounded, so the fold is exact and stays in whole-stage codegen).
+    `a` and `b` are SQL array<double> operands (see vectors.sql_fold)."""
+    return F.expr(sql_fold(a, b, "floor(({x} - {y}) * ({x} - {y}) * 1.0E12D)", "0L"))
 
 
 def kmeans_assign_pruned(
@@ -107,7 +106,6 @@ def kmeans_assign_pruned(
     the small (cluster, carr) frame the exact plan would broadcast; it is
     collected driver-side (k rows — the accepted tiny-collect class) to
     build the coarse cells."""
-    from ..functions.vectors import const_vec
     from ..plans.tuning import log_route
 
     rows = centroids.select(
@@ -131,7 +129,7 @@ def kmeans_assign_pruned(
     cell_scores = F.array(
         *[
             F.struct(
-                quantized_sq_dist(F.col(vec_col), const_vec(c)).alias("d"),
+                quantized_sq_dist(sql_ident(vec_col), sql_array(c)).alias("d"),
                 F.lit(j).cast("int").alias("cell"),
             )
             for j, c in enumerate(coarse)
@@ -163,7 +161,7 @@ def kmeans_assign_pruned(
             "cluster long, carr array<double>, __cell int",
         )
     )
-    qdist = quantized_sq_dist(F.col(vec_col), F.col("carr"))
+    qdist = quantized_sq_dist(sql_ident(vec_col), "carr")
     return (
         probed.join(cent_cells, "__cell")
         .select(

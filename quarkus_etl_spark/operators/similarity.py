@@ -23,12 +23,12 @@ from pyspark.sql import functions as F
 
 from ..functions.vectors import (
     cosine_to_const,
-    dot_product,
-    guarded_cosine,
     l2_norm,
     py_l2_norm,
     sql_array,
+    sql_cosine,
     sql_double,
+    sql_fold,
     sql_ident,
     to_double_array,
     vec_contract_to_null,
@@ -40,8 +40,7 @@ def brute_force_topk(
     df: DataFrame, vec_col: str, id_col: str, probe: list[float], k: int = 10
 ) -> DataFrame:
     """Exact top-k by cosine vs `probe`, deterministic tiebreak on id."""
-    v = to_double_array(vec_col)
-    sim = cosine_to_const(v, probe)
+    sim = cosine_to_const(vec_col, probe)
     return (
         ensure_parallelism(df).select(F.col(id_col), sim.alias("cosine"))
         .orderBy(F.col("cosine").desc(), F.col(id_col).asc())
@@ -69,11 +68,9 @@ def pairwise_similar(
             F.col(id_col), F.col(block_col).alias("__blk"), to_double_array(vec_col).alias("__v")
         )
     )
-    base = pre.select(F.col(id_col), "__blk", "__v", l2_norm(F.col("__v")).alias("__n"))
+    base = pre.select(F.col(id_col), "__blk", "__v", l2_norm("__v").alias("__n"))
     a, b = base.alias("a"), base.alias("b")
-    sim = guarded_cosine(
-        dot_product(F.col("a.__v"), F.col("b.__v")), F.col("a.__n") * F.col("b.__n")
-    )
+    sim = F.expr(sql_cosine("a.__v", "b.__v", "a.__n", "b.__n"))
     return (
         a.join(
             b,
@@ -113,18 +110,19 @@ def batch_topk(
     Norms are computed once per side; the cosine fold matches DuckDB's
     `list_cosine_similarity` bit-for-bit (see functions.vectors), and the
     double negation used for the struct sort is an exact IEEE involution,
-    so the tournament is value-identical to a global ORDER BY."""
+    so the tournament is value-identical to a global
+    `ORDER BY cosine DESC NULLS LAST, id`: the sort struct leads with
+    `cosine IS NULL`, because a NULL field sorts first and a NULL-vector
+    candidate would otherwise take a top-k slot."""
     base = (
         ensure_parallelism(df)
         .select(F.col(id_col), to_double_array(vec_col).alias("__v"))
-        .withColumn("__n", l2_norm(F.col("__v")))
+        .withColumn("__n", l2_norm("__v"))
     )
     p = probes.select(
         F.col(probe_id_col).alias("__pid"), to_double_array(probe_vec_col).alias("__pv")
-    ).withColumn("__pn", l2_norm(F.col("__pv")))
-    sim = guarded_cosine(
-        dot_product(F.col("__pv"), F.col("__v")), F.col("__pn") * F.col("__n")
-    )
+    ).withColumn("__pn", l2_norm("__pv"))
+    sim = F.expr(sql_cosine("__pv", "__v", "__pn", "__n"))
     scored = base.crossJoin(F.broadcast(p)).select(
         "__pid",
         F.col(id_col),
@@ -135,7 +133,11 @@ def batch_topk(
         F.slice(
             F.array_sort(
                 F.collect_list(
-                    F.struct((-F.col("cosine")).alias("nc"), F.col(id_col).alias("id"))
+                    F.struct(
+                        F.col("cosine").isNull().alias("nul"),
+                        (-F.col("cosine")).alias("nc"),
+                        F.col(id_col).alias("id"),
+                    )
                 )
             ),
             1,
@@ -224,22 +226,13 @@ def _contract_projection(
     return df.select(*cols)
 
 
-def _sql_dot(a: str, b: str, prefix: str) -> str:
-    """`dot_product`'s left-to-right zip_with / aggregate fold as parsed
-    SQL, its lambda variables named with `prefix` (inside a lambda they
-    would shadow a column of the same name)."""
-    x, y, s = (prefix + n for n in "xys")
-    return f"aggregate(zip_with({a}, {b}, ({x}, {y}) -> {x} * {y}), 0D, ({s}, {x}) -> {s} + {x})"
-
-
 def _lsh_bucket_sql(vec_col: str, planes: list[list[float]]) -> str:
     """The sign-bit bucket id of `vec_col` as parsed SQL: a transform over
-    ONE plane-matrix constant whose dot is `dot_product`'s left-to-right
-    zip_with / aggregate fold, summed into a bigint. The lambda variables
-    carry a `__lsh_` prefix: inside a lambda they would shadow a column of
-    the same name."""
+    ONE plane-matrix constant whose dot is the vector fold (`sql_fold`),
+    summed into a bigint. The lambda variables carry a `__lsh_` prefix:
+    inside a lambda they would shadow a column of the same name."""
     v = f"CAST({sql_ident(vec_col)} AS ARRAY<DOUBLE>)"
-    dot = _sql_dot(v, "__lsh_p", "__lsh_")
+    dot = sql_fold(v, "__lsh_p")
     plane_mat = "array(" + ", ".join(sql_array(p) for p in planes) + ")"
     # bigint, not int: the auto-sized plane count grows with data volume
     # and 1 << i exceeds int32 from i=31.
@@ -307,8 +300,7 @@ def lsh_topk(
     probe_buckets = [target ^ m for m in _probe_masks(n_planes)]
     bucketed = add_lsh_bucket(df, vec_col, planes)
     cands = bucketed.where(F.col("bucket").isin(probe_buckets))
-    v = to_double_array(vec_col)
-    sim = cosine_to_const(v, probe)
+    sim = cosine_to_const(vec_col, probe)
     return (
         cands.select(F.col(id_col), sim.alias("cosine"))
         .orderBy(F.col("cosine").desc(), F.col(id_col).asc())
@@ -376,22 +368,15 @@ def add_ivf_cell(
     cosine per centroid cost hundreds of round trips each). Each centroid
     carries its norm, computed on the driver; the row norm is computed
     once per row and shared by every centroid score. A score is
-    `cosine_to_const`'s: the same left-to-right dot fold and the same
-    guarded_cosine NULL, zero-norm and clamp legs."""
+    `cosine_to_const`'s: the one guarded cosine (`sql_cosine`)."""
     v = f"CAST({sql_ident(vec_col)} AS ARRAY<DOUBLE>)"
     cents = "array(" + ", ".join(
         f"named_struct('c', {sql_array(c)}, 'n', {sql_double(py_l2_norm(c))})"
         for c in centroids
     ) + ")"
-    dot = _sql_dot(v, "__ivf_e.c", "__ivf_")
-    denom = "(__nv * __ivf_e.n)"
-    score = (
-        f"CASE WHEN {dot} IS NOT NULL AND {denom} != 0D"
-        f" THEN least(greatest({dot} / {denom}, -1D), 1D)"
-        f" WHEN {denom} = 0D THEN 0D END"
-    )
+    score = sql_cosine(v, "__ivf_e.c", "__nv", "__ivf_e.n")
     return (
-        df.withColumn("__nv", F.expr(f"sqrt({_sql_dot(v, v, '__ivf_')})"))
+        df.withColumn("__nv", l2_norm(vec_col))
         .withColumn("__ivf_s", F.expr(f"transform({cents}, __ivf_e -> {score})"))
         .withColumn(
             out_col,
@@ -401,27 +386,26 @@ def add_ivf_cell(
     )
 
 
-def _probe_cells(probe: list[float], centroids: list[list[float]], nprobe: int) -> list[int]:
-    """Driver-side probe->cell routing, BIT-IDENTICAL to the engine/oracle
-    cosine convention (functions.vectors guarded_cosine + DuckDB
+def _py_cosine(a: list[float], b: list[float]) -> float:
+    """Driver-side cosine of two present vectors, BIT-IDENTICAL to the
+    engine/oracle convention (functions.vectors sql_cosine + DuckDB
     list_cosine_similarity): left-to-right folds, separately-rooted norms,
-    zero-norm -> 0.0 (NOT -1.0 — a zero centroid must rank exactly where the
-    Column/SQL forms rank it), result clamped to [-1, 1], ties -> lowest
-    cell id. The q_sim_ann_ivf recall-contract oracle replicates this
-    routing in SQL, so any convention drift here is a hash FAIL, not a
-    silent recall blip."""
+    zero-norm -> 0.0 (NOT -1.0 — a zero centroid must rank exactly where
+    the SQL forms rank it), result clamped to [-1, 1]."""
+    dot = sum(float(x) * float(y) for x, y in zip(a, b))
+    denom = py_l2_norm(a) * py_l2_norm(b)
+    if denom == 0.0:
+        return 0.0
+    return min(max(dot / denom, -1.0), 1.0)
 
-    def cos(a: list[float], b: list[float]) -> float:
-        dot = sum(float(x) * float(y) for x, y in zip(a, b))
-        denom = math.sqrt(sum(float(x) * float(x) for x in a)) * math.sqrt(
-            sum(float(y) * float(y) for y in b)
-        )
-        if denom == 0.0:
-            return 0.0
-        return min(max(dot / denom, -1.0), 1.0)
 
+def _probe_cells(probe: list[float], centroids: list[list[float]], nprobe: int) -> list[int]:
+    """Driver-side probe->cell routing by `_py_cosine`, ties -> lowest cell
+    id. The q_sim_ann_ivf recall-contract oracle replicates this routing
+    in SQL, so any convention drift here is a hash FAIL, not a silent
+    recall blip."""
     ranked = sorted(
-        range(len(centroids)), key=lambda i: (-cos(probe, centroids[i]), i)
+        range(len(centroids)), key=lambda i: (-_py_cosine(probe, centroids[i]), i)
     )
     return ranked[:nprobe]
 
@@ -462,7 +446,7 @@ def ivf_query_indexed(
     partitions (PartitionFilters — pinned by test), score, top-k."""
     cells = _probe_cells(probe, centroids, nprobe)
     stored = spark.read.parquet(path).where(F.col("cell").isin(cells))
-    sim = cosine_to_const(to_double_array(vec_col), probe)
+    sim = cosine_to_const(vec_col, probe)
     return (
         stored.select(F.col(id_col), sim.alias("cosine"))
         .orderBy(F.col("cosine").desc(), F.col(id_col).asc())
@@ -488,7 +472,7 @@ def ivf_topk(
     cells = _probe_cells(probe, cents, nprobe)
     bucketed = add_ivf_cell(ensure_parallelism(df), vec_col, cents)
     cands = bucketed.where(F.col("cell").isin(cells))
-    sim = cosine_to_const(to_double_array(vec_col), probe)
+    sim = cosine_to_const(vec_col, probe)
     return (
         cands.select(F.col(id_col), sim.alias("cosine"))
         .orderBy(F.col("cosine").desc(), F.col(id_col).asc())
@@ -524,7 +508,7 @@ def _lsh_candidates(
     blk = ["__blk"] if blocked else []
     bucketed = (
         nodes.where(F.col("__v").isNotNull())
-        .withColumn("__n", l2_norm(F.col("__v")))
+        .withColumn("__n", l2_norm("__v"))
         .select(id_col, "__v", "__n", *blk, F.posexplode(F.expr(buckets)).alias("__t", "__b"))
     )
     probes = bucketed.select(
@@ -542,9 +526,7 @@ def _lsh_candidates(
     )
     if blocked:
         cond = cond & (F.col("__pblk") == F.col("__blk"))
-    sim = guarded_cosine(
-        dot_product(F.col("__pv"), F.col("__v")), F.col("__pn") * F.col("__n")
-    )
+    sim = F.expr(sql_cosine("__pv", "__v", "__pn", "__n"))
     return probes.join(bucketed, cond).select(
         "__src", F.col(id_col).alias("__nbr"), sim.alias("cosine")
     )
@@ -586,7 +568,7 @@ def knn_graph_ann(
     (one representative each), then expanded: each copy's first k
     neighbors are fellow copies (exact duplicates ARE the true top-k,
     cosine 1.0 for nonzero vectors; 0.0 for identical ZERO vectors and
-    no fellow edges at all for NULL vectors, matching the guarded_cosine
+    no fellow edges at all for NULL vectors, matching the sql_cosine
     convention the uncollapsed path applies) from a k+1-bounded
     per-group head list, merged with its
     representative's graph edges through one bounded top-k window. The
@@ -635,8 +617,8 @@ def knn_graph_ann(
                 "__rep",
                 "__m",
                 # group norm, carried so the fellow-edge shortcut can honor
-                # the guarded_cosine convention (see the fellows projection)
-                l2_norm(F.col("__v")).alias("__gn"),
+                # the sql_cosine convention (see the fellows projection)
+                l2_norm("__v").alias("__gn"),
             )
         else:
             nodes = raw
@@ -699,7 +681,7 @@ def knn_graph_ann(
             ).alias("__nbr"),
             # identical NONZERO vectors: the true cosine, not the float
             # fold. Identical ZERO vectors (failed-encoder rows duplicate
-            # naturally) follow the guarded_cosine convention — 0.0, not
+            # naturally) follow the sql_cosine convention — 0.0, not
             # 1.0 — so collapse on/off agree on where they rank (a 1.0
             # here would make zero vectors top-ranked neighbors while the
             # uncollapsed path ranks them last at 0.0).

@@ -25,6 +25,7 @@ from ..functions.text import (
     redact_pii,
     tokenize,
 )
+from ..functions.vectors import duck_cosine
 from ..plans.tuning import ensure_parallelism
 from .base import emb, register, t
 
@@ -216,14 +217,14 @@ def q_text_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_sim_batch",
-    oracle="""
+    oracle=f"""
     WITH v AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings
                WHERE embedding IS NOT NULL AND len(embedding) = 64 AND len(list_filter(embedding, x -> NOT isfinite(x))) = 0),
     p AS (SELECT vec_id AS probe_id, e AS pe FROM v WHERE vec_id < 8),
     c AS (SELECT vec_id, e FROM v WHERE vec_id >= 8),
     scored AS (
         SELECT p.probe_id, c.vec_id,
-               CASE WHEN (c.e) IS NULL OR (p.pe) IS NULL THEN NULL WHEN list_dot_product(c.e, c.e) = 0 OR list_dot_product(p.pe, p.pe) = 0 THEN 0.0 ELSE list_cosine_similarity(c.e, p.pe) END AS cosine
+               {duck_cosine('c.e', 'p.pe')} AS cosine
         FROM p CROSS JOIN c
     )
     SELECT probe_id, vec_id, cosine FROM (
@@ -1676,7 +1677,7 @@ _RRF_K, _RRF_TOPK, _RRF_OUT = 60, 100, 50
         FROM (SELECT * FROM bm ORDER BY bm25 DESC, doc_id ASC LIMIT {_RRF_TOPK})
     ), den0 AS (
         SELECT vec_id,
-               CASE WHEN (embedding::DOUBLE[]) IS NULL OR (p.probe) IS NULL THEN NULL WHEN list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[]) = 0 OR list_dot_product(p.probe, p.probe) = 0 THEN 0.0 ELSE list_cosine_similarity(embedding::DOUBLE[], p.probe) END AS cosine
+               {duck_cosine('embedding::DOUBLE[]', 'p.probe')} AS cosine
         FROM embeddings
         CROSS JOIN (SELECT embedding::DOUBLE[] AS probe
                     FROM embeddings WHERE vec_id = 0) p

@@ -14,6 +14,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.text import STOPWORDS, language_scores, normalize_text, quality_score, tokenize
+from ..functions.vectors import duck_cosine
 from ..operators.asof import asof_join
 from ..operators.dedup import (
     dedup_exact,
@@ -308,9 +309,9 @@ def _probe_vec(spark: SparkSession, sf_dir: str) -> list[float]:
 
 @register(
     "q_sim_topk",
-    oracle="""
+    oracle=f"""
     SELECT vec_id,
-           CASE WHEN (embedding::DOUBLE[]) IS NULL OR (p.probe) IS NULL THEN NULL WHEN list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[]) = 0 OR list_dot_product(p.probe, p.probe) = 0 THEN 0.0 ELSE list_cosine_similarity(embedding::DOUBLE[], p.probe) END AS cosine
+           {duck_cosine('embedding::DOUBLE[]', 'p.probe')} AS cosine
     FROM embeddings
     CROSS JOIN (SELECT embedding::DOUBLE[] AS probe FROM embeddings WHERE vec_id = 0) p
     WHERE embedding IS NOT NULL AND len(embedding) = 64 AND len(list_filter(embedding, x -> NOT isfinite(x))) = 0
@@ -326,7 +327,7 @@ def q_sim_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_sim_pairs",
-    oracle="""
+    oracle=f"""
     -- NULL embeddings are filtered STRUCTURALLY, not by the CASE guard:
     -- DuckDB's vectorized CASE still feeds NULL lists into
     -- list_inner_product inside the join, which raises instead of
@@ -335,9 +336,9 @@ def q_sim_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITH v AS (SELECT vec_id, label, embedding::DOUBLE[] AS e FROM embeddings
                WHERE embedding IS NOT NULL AND len(embedding) = 64 AND len(list_filter(embedding, x -> NOT isfinite(x))) = 0)
     SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-           CASE WHEN (a.e) IS NULL OR (b.e) IS NULL THEN NULL WHEN list_dot_product(a.e, a.e) = 0 OR list_dot_product(b.e, b.e) = 0 THEN 0.0 ELSE list_cosine_similarity(a.e, b.e) END AS cosine
+           {duck_cosine('a.e', 'b.e')} AS cosine
     FROM v a JOIN v b ON a.label = b.label AND a.vec_id < b.vec_id
-    WHERE CASE WHEN (a.e) IS NULL OR (b.e) IS NULL THEN NULL WHEN list_dot_product(a.e, a.e) = 0 OR list_dot_product(b.e, b.e) = 0 THEN 0.0 ELSE list_cosine_similarity(a.e, b.e) END >= 0.4
+    WHERE {duck_cosine('a.e', 'b.e')} >= 0.4
     """,
 )
 def q_sim_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -358,7 +359,7 @@ def q_sim_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_dedup_embed",
-    oracle="""
+    oracle=f"""
     -- structural NULL-embedding filter: see q_sim_pairs (NULL rows can
     -- never be losers; the final SELECT keeps them as survivors)
     WITH v AS (SELECT vec_id, label, embedding::DOUBLE[] AS e FROM embeddings
@@ -366,7 +367,7 @@ def q_sim_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     losers AS (
         SELECT DISTINCT b.vec_id
         FROM v a JOIN v b ON a.label = b.label AND a.vec_id < b.vec_id
-        WHERE CASE WHEN (a.e) IS NULL OR (b.e) IS NULL THEN NULL WHEN list_dot_product(a.e, a.e) = 0 OR list_dot_product(b.e, b.e) = 0 THEN 0.0 ELSE list_cosine_similarity(a.e, b.e) END >= 0.4
+        WHERE {duck_cosine('a.e', 'b.e')} >= 0.4
     )
     SELECT vec_id, label FROM embeddings
     WHERE vec_id NOT IN (SELECT vec_id FROM losers)
@@ -391,7 +392,7 @@ def q_dedup_embed(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_sim_ann_lsh",
-    oracle="""
+    oracle=f"""
     WITH pv AS (
         SELECT i, d,
                (CAST(('0x' || substr(md5(CAST(i AS VARCHAR) || ':' ||
@@ -420,7 +421,7 @@ def q_dedup_embed(spark: SparkSession, sf_dir: str) -> DataFrame:
         SELECT xor(b, CAST(power(2, i) AS BIGINT))
         FROM pbucket, generate_series(0, 7) s(i)
     )
-    SELECT v.vec_id, CASE WHEN (v.e) IS NULL OR ((SELECT pe FROM probe)) IS NULL THEN NULL WHEN list_dot_product(v.e, v.e) = 0 OR list_dot_product((SELECT pe FROM probe), (SELECT pe FROM probe)) = 0 THEN 0.0 ELSE list_cosine_similarity(v.e, (SELECT pe FROM probe)) END AS cosine
+    SELECT v.vec_id, {duck_cosine('v.e', '(SELECT pe FROM probe)')} AS cosine
     FROM v JOIN bucketed USING (vec_id)
     WHERE bucketed.bucket IN (SELECT b FROM targets)
     ORDER BY cosine DESC, vec_id ASC LIMIT 10
@@ -1388,12 +1389,12 @@ def _exact_knn3(e: DataFrame) -> DataFrame:
 
 @register(
     "q_knn_graph",
-    oracle="""
+    oracle=f"""
     WITH v AS (SELECT vec_id, label, embedding::DOUBLE[] AS e FROM embeddings
                WHERE embedding IS NOT NULL AND len(embedding) = 64 AND len(list_filter(embedding, x -> NOT isfinite(x))) = 0),
     p AS (
         SELECT a.vec_id AS ia, b.vec_id AS ib,
-               CASE WHEN (a.e) IS NULL OR (b.e) IS NULL THEN NULL WHEN list_dot_product(a.e, a.e) = 0 OR list_dot_product(b.e, b.e) = 0 THEN 0.0 ELSE list_cosine_similarity(a.e, b.e) END AS c
+               {duck_cosine('a.e', 'b.e')} AS c
         FROM v a JOIN v b ON a.label = b.label AND a.vec_id < b.vec_id
     ), m AS (
         SELECT ia AS src, ib AS nbr, c FROM p
@@ -1441,12 +1442,12 @@ def q_knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_knn_graph_ann",
-    oracle="""
+    oracle=f"""
     WITH v AS (SELECT vec_id, label, embedding::DOUBLE[] AS e FROM embeddings
                WHERE embedding IS NOT NULL AND len(embedding) = 64 AND len(list_filter(embedding, x -> NOT isfinite(x))) = 0),
     p AS (
         SELECT a.vec_id AS ia, b.vec_id AS ib,
-               CASE WHEN (a.e) IS NULL OR (b.e) IS NULL THEN NULL WHEN list_dot_product(a.e, a.e) = 0 OR list_dot_product(b.e, b.e) = 0 THEN 0.0 ELSE list_cosine_similarity(a.e, b.e) END AS c
+               {duck_cosine('a.e', 'b.e')} AS c
         FROM v a JOIN v b ON a.label = b.label AND a.vec_id < b.vec_id
     ), m AS (
         SELECT ia AS src, ib AS nbr, c FROM p
@@ -1700,7 +1701,7 @@ def q_emb_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
         # the 200k-vector stress). The centroid MEANS still ride decimal
         # (their sums overflow long at data scale); only the bounded
         # per-pair distance uses long.
-        qdist = quantized_sq_dist(F.col("e"), F.col("carr"))
+        qdist = quantized_sq_dist("e", "carr")
         return (
             v.crossJoin(F.broadcast(centroids))
             .select(
@@ -1762,12 +1763,12 @@ def q_emb_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
 # pipeline — relevance vs redundancy trade-off, unrolled and oracle-exact.
 # --------------------------------------------------------------------------
 
-_MMR_ORACLE = """
+_MMR_ORACLE = f"""
     WITH v AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings
                WHERE embedding IS NOT NULL AND len(embedding) = 64 AND len(list_filter(embedding, x -> NOT isfinite(x))) = 0),
     p AS (SELECT e AS pe FROM v WHERE vec_id = 0),
     rel AS (
-        SELECT vec_id, e, CASE WHEN (e) IS NULL OR (pe) IS NULL THEN NULL WHEN list_dot_product(e, e) = 0 OR list_dot_product(pe, pe) = 0 THEN 0.0 ELSE list_cosine_similarity(e, pe) END AS rel
+        SELECT vec_id, e, {duck_cosine('e', 'pe')} AS rel
         FROM v CROSS JOIN p WHERE vec_id <> 0
     ),
     cands AS (SELECT * FROM rel ORDER BY rel DESC, vec_id ASC LIMIT 8),
@@ -1775,7 +1776,7 @@ _MMR_ORACLE = """
            ORDER BY rel DESC, vec_id ASC LIMIT 1),
     r1 AS (SELECT c.* FROM cands c
            WHERE c.vec_id NOT IN (SELECT vec_id FROM s1)),
-    m2 AS (SELECT r.vec_id, MAX(CASE WHEN (r.e) IS NULL OR (s.e) IS NULL THEN NULL WHEN list_dot_product(r.e, r.e) = 0 OR list_dot_product(s.e, s.e) = 0 THEN 0.0 ELSE list_cosine_similarity(r.e, s.e) END) AS maxsim
+    m2 AS (SELECT r.vec_id, MAX({duck_cosine('r.e', 's.e')}) AS maxsim
            FROM r1 r CROSS JOIN s1 s GROUP BY r.vec_id),
     sc2 AS (SELECT r.vec_id, r.e, r.rel,
                    0.7 * r.rel - 0.3 * m.maxsim AS score
@@ -1784,7 +1785,7 @@ _MMR_ORACLE = """
     sel AS (SELECT vec_id, e FROM s1 UNION ALL SELECT vec_id, e FROM s2),
     r2 AS (SELECT c.* FROM cands c
            WHERE c.vec_id NOT IN (SELECT vec_id FROM sel)),
-    m3 AS (SELECT r.vec_id, MAX(CASE WHEN (r.e) IS NULL OR (s.e) IS NULL THEN NULL WHEN list_dot_product(r.e, r.e) = 0 OR list_dot_product(s.e, s.e) = 0 THEN 0.0 ELSE list_cosine_similarity(r.e, s.e) END) AS maxsim
+    m3 AS (SELECT r.vec_id, MAX({duck_cosine('r.e', 's.e')}) AS maxsim
            FROM r2 r CROSS JOIN sel s GROUP BY r.vec_id),
     sc3 AS (SELECT r.vec_id, r.rel, 0.7 * r.rel - 0.3 * m.maxsim AS score
             FROM r2 r JOIN m3 m USING (vec_id)),
@@ -1824,7 +1825,7 @@ def q_sim_mmr(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "vec_id",
             "e",
-            cosine_similarity(F.col("e"), F.col("pe")).alias("rel"),
+            cosine_similarity("e", "pe").alias("rel"),
         )
     )
     # The ONE data-sized stage: materialize the 8-row candidate set eagerly
@@ -1843,7 +1844,7 @@ def q_sim_mmr(spark: SparkSession, sf_dir: str) -> DataFrame:
         sims = (
             rest.crossJoin(F.broadcast(selected.select(F.col("e").alias("se"))))
             .groupBy("vec_id")
-            .agg(F.max(cosine_similarity(F.col("e"), F.col("se"))).alias("maxsim"))
+            .agg(F.max(cosine_similarity("e", "se")).alias("maxsim"))
         )
         scored = rest.join(sims, "vec_id").select(
             "vec_id",
@@ -1953,13 +1954,13 @@ def q_graph_label_prop(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_rank_ndcg",
-    oracle="""
+    oracle=f"""
     WITH v AS (SELECT vec_id, label, embedding::DOUBLE[] AS e FROM embeddings
                WHERE embedding IS NOT NULL AND len(embedding) = 64 AND len(list_filter(embedding, x -> NOT isfinite(x))) = 0),
     p AS (SELECT e AS pe, label AS plabel FROM v WHERE vec_id = 0),
     ranked AS (
         SELECT vec_id, label, plabel,
-               CASE WHEN (e) IS NULL OR (pe) IS NULL THEN NULL WHEN list_dot_product(e, e) = 0 OR list_dot_product(pe, pe) = 0 THEN 0.0 ELSE list_cosine_similarity(e, pe) END AS cosine
+               {duck_cosine('e', 'pe')} AS cosine
         FROM v CROSS JOIN p WHERE vec_id <> 0
         ORDER BY cosine DESC, vec_id ASC LIMIT 10
     ), pos AS (
@@ -2021,7 +2022,7 @@ def q_rank_ndcg(spark: SparkSession, sf_dir: str) -> DataFrame:
             "vec_id",
             "label",
             "plabel",
-            cosine_similarity(F.col("e"), F.col("pe")).alias("cosine"),
+            cosine_similarity("e", "pe").alias("cosine"),
         )
         .orderBy(F.desc("cosine"), F.asc("vec_id"))
         .limit(10)
@@ -2187,6 +2188,7 @@ def q_emb_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
 
     from ..functions.vectors import to_double_array
+    from ..operators.kmeans import quantized_sq_dist
 
     e = emb(spark, sf_dir)
     v = ensure_parallelism(e).select(
@@ -2206,18 +2208,15 @@ def q_emb_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     cb = seeds.join(v, "vec_id").select("c", F.col("e").alias("ce"))
 
-    def subdist(s):
-        sl_e = F.slice(F.col("e"), s * 16 + 1, 16)
-        sl_c = F.slice(F.col("ce"), s * 16 + 1, 16)
-        return F.aggregate(
-            F.zip_with(sl_e, sl_c, lambda x, c: F.floor((x - c) * (x - c) * F.lit(1e12))),
-            F.lit(0).cast("long"),
-            lambda acc, x: acc + x,
-        )
-
     dists = v.crossJoin(F.broadcast(cb)).select(
         "vec_id",
-        *[F.struct(subdist(s).alias("d"), F.col("c").alias("c")).alias(f"s{s}") for s in range(4)],
+        *[
+            F.struct(
+                quantized_sq_dist(f"slice(e, {i}, 16)", f"slice(ce, {i}, 16)").alias("d"),
+                F.col("c").alias("c"),
+            ).alias(f"s{s}")
+            for s, i in enumerate(range(1, 65, 16))
+        ],
     )
     picks = dists.groupBy("vec_id").agg(
         *[F.min(f"s{s}").alias(f"m{s}") for s in range(4)]

@@ -29,9 +29,7 @@ def test_guarded_cosine_zero_norm_is_zero(spark):
     )
     got = {
         r["id"]: r["c"]
-        for r in df.select(
-            "id", cosine_similarity(F.col("a"), F.col("b")).alias("c")
-        ).collect()
+        for r in df.select("id", cosine_similarity("a", "b").alias("c")).collect()
     }
     assert got == {1: 0.0, 2: 0.0, 3: 0.0, 4: 1.0, 5: -1.0}
 
@@ -44,9 +42,7 @@ def test_cosine_to_const_zero_norm_is_zero(spark):
     )
     got = {
         r["id"]: r["c"]
-        for r in df.select(
-            "id", cosine_to_const(F.col("a"), [1.0, 0.0]).alias("c")
-        ).collect()
+        for r in df.select("id", cosine_to_const("a", [1.0, 0.0]).alias("c")).collect()
     }
     assert got[1] == 0.0 and got[2] == pytest.approx(0.6)
 
@@ -369,15 +365,14 @@ def test_vec_nonfinite_to_null_is_missing(spark):
         ],
         "id long, a array<double>",
     )
+    guarded = df.select(
+        "id",
+        vec_nonfinite_to_null("a").alias("g"),
+        F.lit([1.0, 0.0]).cast("array<double>").alias("p"),
+    )
     out = {
         r["id"]: (r["g"], r["c"])
-        for r in df.select(
-            "id",
-            vec_nonfinite_to_null("a").alias("g"),
-            cosine_similarity(
-                vec_nonfinite_to_null("a"), F.lit([1.0, 0.0]).cast("array<double>")
-            ).alias("c"),
-        ).collect()
+        for r in guarded.select("id", "g", cosine_similarity("g", "p").alias("c")).collect()
     }
     assert out[1] == ([1.0, 2.0], pytest.approx(1.0 / 5**0.5))
     assert out[2] == (None, None) and out[3] == (None, None)

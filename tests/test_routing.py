@@ -379,7 +379,7 @@ def test_kmeans_pruned_assignment_exact_at_full_probe(spark, sf_dir):
             .select(
                 "vec_id",
                 F.struct(
-                    quantized_sq_dist(F.col("e"), F.col("carr")).alias("dist"),
+                    quantized_sq_dist("e", "carr").alias("dist"),
                     F.col("cluster").alias("cluster"),
                 ).alias("dc"),
             )

@@ -121,7 +121,7 @@ def test_knn_graph_ann_duplicate_multiplicity_bounded(spark):
 def test_knn_graph_ann_zero_and_null_vector_duplicates(spark):
     """ADVICE r7: identical ZERO vectors duplicate naturally (failed
     encoders emit them, and the fuzz mutators mint them at phase>=2) —
-    the duplicate-collapse expansion must follow the guarded_cosine
+    the duplicate-collapse expansion must follow the sql_cosine
     convention: fellow edges at 0.0 (they rank LAST, as the uncollapsed
     path ranks them), never the hardcoded 1.0 that made dead rows
     top-ranked neighbors. NULL-vector copies get no edges at all (with
@@ -147,7 +147,7 @@ def test_knn_graph_ann_zero_and_null_vector_duplicates(spark):
     for s in (200, 201, 202):
         assert s in by_src, "zero-vector copy lost its edges"
         assert all(r["cosine"] == 0.0 for r in by_src[s]), (
-            "zero-vector duplicate ranked above the guarded_cosine 0.0"
+            "zero-vector duplicate ranked above the sql_cosine 0.0"
         )
     for s in (100, 101, 102):
         fellows = [r for r in by_src[s] if r["nbr"] in (100, 101, 102)]
@@ -183,11 +183,11 @@ def test_add_lsh_bucket_matches_driver_bucket_of(spark, sf_dir, n_planes):
 
 
 def test_const_vec_round_trips_do_not_grow_with_dim(spark, round_trips):
-    """A constant vector costs the same py4j round trips at dim 4 and 256
-    (F.lit(list) made one call per component), and an LSH bucket the same
-    at 8 planes and 33 (one dot-product expression per plane made ~270
-    calls each)."""
-    from quarkus_etl_spark.functions.vectors import const_vec
+    """A cosine against a constant vector costs the same py4j round trips
+    at dim 4 and 256 (F.lit(list) made one call per component), and an
+    LSH bucket the same at 8 planes and 33 (one dot-product expression
+    per plane made ~270 calls each)."""
+    from quarkus_etl_spark.functions.vectors import cosine_to_const
     from quarkus_etl_spark.operators.similarity import (
         add_lsh_bucket,
         random_hyperplanes,
@@ -196,8 +196,8 @@ def test_const_vec_round_trips_do_not_grow_with_dim(spark, round_trips):
     def fewest(fn):
         return min(round_trips(fn) for _ in range(3))
 
-    assert fewest(lambda: const_vec([0.5] * 4)) == fewest(
-        lambda: const_vec([0.5] * 256)
+    assert fewest(lambda: cosine_to_const("v", [0.5] * 4)) == fewest(
+        lambda: cosine_to_const("v", [0.5] * 256)
     )
     df = spark.createDataFrame([([1.0] * 64,)], "v array<float>")
     few, many = (random_hyperplanes(64, p) for p in (8, 33))
@@ -247,13 +247,16 @@ def test_ann_pairs_round_trips_do_not_grow_with_planes(spark, sf_dir, round_trip
 
 
 def test_const_vec_is_bit_exact_and_rejects_non_finite(spark):
-    """Every component survives the parsed literal bit for bit: signed
-    zeros, subnormals, the extremes of the double range and values with
-    17 significant digits. NaN and ±Inf raise at build time."""
+    """Every component of a constant vector survives the parsed literal
+    (`sql_array`) bit for bit: signed zeros, subnormals, the extremes of
+    the double range and values with 17 significant digits. NaN and ±Inf
+    raise at build time."""
     import random
     import struct
 
-    from quarkus_etl_spark.functions.vectors import const_vec
+    from pyspark.sql import functions as F
+
+    from quarkus_etl_spark.functions.vectors import sql_array
 
     rng = random.Random(7)
     vec = [0.0, -0.0, 5e-324, -5e-324, 2.2250738585072014e-308, 1e-300,
@@ -261,11 +264,11 @@ def test_const_vec_is_bit_exact_and_rejects_non_finite(spark):
     vec += [rng.gauss(0.0, 1.0) for _ in range(200)]
     vec += [struct.unpack(">d", rng.randbytes(8))[0] for _ in range(200)]
     vec = [x for x in vec if x == x and abs(x) != float("inf")]
-    got = spark.range(1).select(const_vec(vec).alias("c")).first()["c"]
+    got = spark.range(1).select(F.expr(sql_array(vec)).alias("c")).first()["c"]
     assert [struct.pack(">d", x) for x in got] == [struct.pack(">d", x) for x in vec]
     for bad in (float("nan"), float("inf"), float("-inf")):
         with pytest.raises(ValueError, match="not finite"):
-            const_vec([1.0, bad])
+            sql_array([1.0, bad])
 
 
 def _vectors(n, dim, salt):
@@ -354,7 +357,7 @@ def test_ann_operators_treat_off_contract_vectors_as_missing(spark):
 
 def test_add_ivf_cell_matches_driver_probe_routing(spark, sf_dir):
     """The one-expression IVF cell is the max-cosine centroid under the
-    guarded_cosine convention, bit for bit what the driver-side
+    sql_cosine convention, bit for bit what the driver-side
     `_probe_cells` computes: a zero vector scores 0.0 everywhere, a zero
     centroid scores 0.0, and ties go to the lowest cell id (centroid 3
     repeats centroid 1, so it never wins). A NULL vector gets no cell."""
@@ -397,3 +400,129 @@ def test_ivf_cell_round_trips_do_not_grow_with_n_cells(spark, round_trips):
     assert fewest(lambda: add_ivf_cell(df, "v", few)) == fewest(
         lambda: add_ivf_cell(df, "v", many)
     )
+
+
+def test_vector_kernels_build_in_constant_round_trips(spark, round_trips):
+    """Every vector kernel is one parsed expression: the pair cosine over
+    precomputed norms, cosine_to_const, l2_norm and quantized_sq_dist
+    each build in at most 5 py4j round trips (the Python-lambda Column
+    folds cost 78 to 266)."""
+    from pyspark.sql import functions as F
+
+    from quarkus_etl_spark.functions.vectors import (
+        cosine_to_const,
+        l2_norm,
+        sql_array,
+        sql_cosine,
+    )
+    from quarkus_etl_spark.operators.kmeans import quantized_sq_dist
+
+    probe = [0.25] * 64
+    builds = {
+        "pair cosine": lambda: F.expr(sql_cosine("a", "b", "na", "nb")),
+        "cosine_to_const": lambda: cosine_to_const("a", probe),
+        "l2_norm": lambda: l2_norm("a"),
+        "quantized_sq_dist": lambda: quantized_sq_dist("a", sql_array(probe)),
+    }
+    fewest = {name: min(round_trips(fn) for _ in range(3)) for name, fn in builds.items()}
+    assert all(n <= 5 for n in fewest.values()), fewest
+
+
+def test_cosine_forms_match_duckdb_and_driver_bit_for_bit(spark):
+    """Seeded property: on ~200 random 64-dim pairs plus zero, NULL,
+    subnormal, opposite, self and near-parallel rows, the Spark cosine
+    (pair form over precomputed norms, cosine_similarity, and
+    cosine_to_const against three constants) equals bit for bit DuckDB's
+    guarded list_cosine_similarity (`duck_cosine`) and the driver-side
+    `_py_cosine` that routes IVF probes."""
+    import random
+    import struct
+
+    import duckdb
+    from pyspark.sql import functions as F
+
+    from quarkus_etl_spark.functions.vectors import (
+        cosine_similarity,
+        cosine_to_const,
+        duck_cosine,
+        l2_norm,
+        sql_cosine,
+    )
+    from quarkus_etl_spark.operators.similarity import _py_cosine
+
+    rng = random.Random(11)
+
+    def gauss():
+        return [rng.gauss(0.0, 1.0) for _ in range(64)]
+
+    zero, tiny = [0.0] * 64, [5e-324] + [0.0] * 63
+    pairs = [(gauss(), gauss()) for _ in range(200)]
+    u = gauss()
+    pairs += [
+        (zero, u), (u, zero), (zero, zero), (None, u), (u, None), (None, None),
+        (tiny, u), (tiny, tiny), (u, [-x for x in u]), (u, list(u)),
+        (u, [x * (1 + 1e-15) for x in u]), ([2.2250738585072014e-308] * 64, u),
+    ]
+    rows = [(i, a, b) for i, (a, b) in enumerate(pairs)]
+    consts = {"c0": pairs[0][1], "zero": zero, "tiny": tiny}
+
+    df = spark.createDataFrame(rows, "id long, a array<double>, b array<double>")
+    out = df.select(
+        "id",
+        cosine_similarity("a", "b").alias("pair"),
+        *[cosine_to_const("a", v).alias(k) for k, v in consts.items()],
+    )
+    normed = df.select("id", "a", "b", l2_norm("a").alias("na"), l2_norm("b").alias("nb"))
+    out = out.join(
+        normed.select("id", F.expr(sql_cosine("a", "b", "na", "nb")).alias("normed")), "id"
+    )
+    spark_got = {r["id"]: r.asDict() for r in out.collect()}
+
+    con = duckdb.connect()
+    con.execute("CREATE TABLE t (id BIGINT, a DOUBLE[], b DOUBLE[])")
+    con.executemany("INSERT INTO t VALUES (?, ?, ?)", rows)
+    duck_cols = ", ".join(
+        [duck_cosine("a", "b") + " AS pair"]
+        + [duck_cosine("a", f"${j + 1}::DOUBLE[]") + f" AS {k}" for j, k in enumerate(consts)]
+    )
+    duck_got = {
+        r[0]: dict(zip(["pair", *consts], r[1:]))
+        for r in con.execute(f"SELECT id, {duck_cols} FROM t", list(consts.values())).fetchall()
+    }
+
+    def bits(x):
+        return None if x is None else struct.pack(">d", x)
+
+    for i, a, b in rows:
+        got = spark_got[i]
+        want = {
+            "pair": None if a is None or b is None else _py_cosine(a, b),
+            **{k: None if a is None else _py_cosine(a, v) for k, v in consts.items()},
+        }
+        assert bits(got["normed"]) == bits(got["pair"]), (i, got)
+        for k, w in want.items():
+            assert bits(got[k]) == bits(duck_got[i][k]) == bits(w), (i, k, got[k], duck_got[i][k], w)
+
+
+def test_batch_topk_ranks_null_vectors_last(spark):
+    """NULL-vector candidates have a NULL cosine and rank after every
+    scored one, as a global ORDER BY cosine DESC (NULLS LAST) does: in one
+    partition holding ids 1-3 and two NULL vectors, probe [1, 0] keeps
+    ids 1 and 2 at k=2, and a NULL row fills only a slot left empty."""
+    from pyspark.sql import functions as F
+
+    from quarkus_etl_spark.operators.similarity import batch_topk
+
+    # enough partitions that batch_topk keeps them, every row in one
+    cands = spark.createDataFrame(
+        [(1, [1.0, 0.0]), (2, [0.9, 0.1]), (3, [0.0, 1.0]), (4, None), (5, None)],
+        "id long, v array<double>",
+    ).repartition(spark.sparkContext.defaultParallelism, F.lit(0))
+    probes = spark.createDataFrame([(0, [1.0, 0.0])], "pid long, pv array<double>")
+
+    def top(k):
+        rows = batch_topk(cands, "v", "id", probes, "pid", "pv", k=k).collect()
+        return sorted((r["id"], r["cosine"]) for r in rows)
+
+    assert [i for i, _ in top(2)] == [1, 2]
+    assert top(4) == [(1, 1.0), (2, top(2)[1][1]), (3, 0.0), (4, None)]

@@ -65,7 +65,7 @@ def main() -> None:
             .select(
                 "vec_id",
                 F.struct(
-                    quantized_sq_dist(F.col("e"), F.col("carr")).alias("dist"),
+                    quantized_sq_dist("e", "carr").alias("dist"),
                     F.col("cluster").alias("cluster"),
                 ).alias("dc"),
             )
