@@ -40,15 +40,6 @@ class DuplicateColumnError(RuntimeError):
     """Mirror of the reference's hard error (ClassMapMapper.kt:22-24)."""
 
 
-def assert_no_duplicate_columns(df: DataFrame) -> DataFrame:
-    seen: set[str] = set()
-    for name in df.columns:
-        if name in seen:
-            raise DuplicateColumnError(f"column {name} appeared twice in this resultset!")
-        seen.add(name)
-    return df
-
-
 def normalize_identifiers(df: DataFrame) -> DataFrame:
     """Uppercase every output column (alias ≻ name is implicit: Spark's
     .alias already replaced the base name). Mirrors ClassMapMapper.kt:19-24,
@@ -135,14 +126,21 @@ def ensure_worker_imports(spark: SparkSession) -> None:
     scratch.mkdir(exist_ok=True)
     zpath = scratch / "quarkus_etl_spark_pyfiles.zip"
     sources = sorted(pkg_root.rglob("*.py"))
-    stale = (not zpath.exists()) or any(
-        p.stat().st_mtime > zpath.stat().st_mtime for p in sources
-    )
+    names = [f"{pkg_root.name}/{p.relative_to(pkg_root)}" for p in sources]
+    try:
+        with zipfile.ZipFile(zpath) as zf:
+            # A deleted module leaves no newer mtime behind, so the entry
+            # set must match too, or workers keep importing the old module.
+            stale = set(zf.namelist()) != set(names) or any(
+                p.stat().st_mtime > zpath.stat().st_mtime for p in sources
+            )
+    except (FileNotFoundError, zipfile.BadZipFile):
+        stale = True
     if stale:
         tmp = zpath.with_suffix(f".tmp{os.getpid()}")
         with zipfile.ZipFile(tmp, "w") as zf:
-            for p in sources:
-                zf.write(p, f"{pkg_root.name}/{p.relative_to(pkg_root)}")
+            for p, name in zip(sources, names):
+                zf.write(p, name)
         os.replace(tmp, zpath)  # atomic: concurrent harness processes race
     spark.sparkContext.addPyFile(str(zpath))
     _WORKER_IMPORTS_READY.add(key)

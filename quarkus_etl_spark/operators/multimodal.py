@@ -26,7 +26,6 @@ from collections.abc import Iterator
 import pandas as pd
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 MEDIA_SCHEMA = (
     "media_id long, payload binary, "
@@ -107,26 +106,6 @@ def decode_media(df: DataFrame, codec: str = "synthetic") -> DataFrame:
             yield pd.DataFrame(out)
 
     return df.select("media_id", "payload").mapInPandas(decode, schema=DECODED_SCHEMA)
-
-
-def resize_images(df: DataFrame, target_w: int, target_h: int, codec: str = "synthetic") -> DataFrame:
-    """'Resize' = rewrite the synthetic header dims (a real backend would
-    transcode pixels here). Demonstrates binary-in/binary-out mapInPandas."""
-    if codec not in SUPPORTED_CODECS:
-        raise NotImplementedError(f"codec {codec!r} unavailable (stub environment)")
-
-    def resize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for payload in pdf["payload"]:
-                raw = bytes(payload)
-                kind = raw[3] if raw[:3] == b"SYN" and len(raw) >= 8 else 0
-                payloads.append(b"SYN" + struct.pack(">BHH", kind, target_w, target_h) + raw[8:])
-            yield pd.DataFrame({"media_id": pdf["media_id"], "payload": payloads})
-
-    return df.select("media_id", "payload").mapInPandas(
-        resize, schema="media_id long, payload binary"
-    )
 
 
 def sample_frames(
@@ -302,14 +281,3 @@ def audio_windows(
             yield pd.DataFrame(out)
 
     return df.select("media_id", "payload").mapInPandas(windows, schema=out_schema)
-
-
-def media_stats(df: DataFrame) -> DataFrame:
-    """Pure-Column stats over binary payloads (no Python): byte length,
-    header magic check — the cheap pre-filter before any decode fan-out."""
-    return df.select(
-        "media_id",
-        F.octet_length("payload").alias("n_bytes"),
-        (F.substring("payload", 1, 3) == F.lit(b"SYN")).alias("has_magic"),
-        F.col("meta.kind").alias("declared_kind"),
-    )

@@ -410,50 +410,6 @@ def _probe_cells(probe: list[float], centroids: list[list[float]], nprobe: int) 
     return ranked[:nprobe]
 
 
-def ivf_write_index(
-    df: DataFrame,
-    vec_col: str,
-    id_col: str,
-    path: str,
-    n_cells: int = 16,
-    refine_iters: int = 1,
-) -> list[list[float]]:
-    """Materialize the IVF index AT REST: assign every vector to its cell
-    and write hive-partitioned by `cell`. This is the claim `ivf_topk`'s
-    docstring makes, made literal — after this, a probe query is partition
-    PRUNING, not filtering: Spark's planner selects only the nprobe cell
-    directories, so the scan reads ~nprobe/n_cells of the data with zero
-    query-time shuffle. Returns the centroids (the only driver-side state;
-    at scale these persist next to the index)."""
-    cents = ivf_centroids(df, vec_col, id_col, n_cells, refine_iters=refine_iters)
-    assigned = add_ivf_cell(ensure_parallelism(df), vec_col, cents)
-    assigned.write.mode("overwrite").partitionBy("cell").parquet(path)
-    return cents
-
-
-def ivf_query_indexed(
-    spark,
-    path: str,
-    vec_col: str,
-    id_col: str,
-    probe: list[float],
-    centroids: list[list[float]],
-    k: int = 10,
-    nprobe: int = 3,
-) -> DataFrame:
-    """ANN top-k over a stored IVF index: route the probe to its nprobe
-    cells driver-side (tiny centroid math), scan ONLY those hive
-    partitions (PartitionFilters — pinned by test), score, top-k."""
-    cells = _probe_cells(probe, centroids, nprobe)
-    stored = spark.read.parquet(path).where(F.col("cell").isin(cells))
-    sim = cosine_to_const(vec_col, probe)
-    return (
-        stored.select(F.col(id_col), sim.alias("cosine"))
-        .orderBy(F.col("cosine").desc(), F.col(id_col).asc())
-        .limit(k)
-    )
-
-
 def ivf_topk(
     df: DataFrame,
     vec_col: str,

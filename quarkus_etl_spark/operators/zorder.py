@@ -1,4 +1,4 @@
-"""Z-order (Morton) multi-dimensional clustering for data-skipping writes.
+"""Z-order (Morton) sort keys for multi-dimensional data-skipping layouts.
 
 A 1-dim sort narrows parquet min/max statistics for ONE column; queries
 filtering the other dimensions still touch every file. Interleaving the
@@ -6,7 +6,7 @@ bits of several quantized dimensions into one sort key gives every file a
 narrow range in EVERY participating dimension, so predicate pushdown can
 row-group-skip on any of them — the lakehouse table-layout technique
 (Delta/Iceberg `OPTIMIZE ZORDER BY`) expressed as plain Spark: a pure
-Column sort key + `repartitionByRange` + `sortWithinPartitions`.
+Column sort key for a writer's `repartitionByRange` + `sortWithinPartitions`.
 
 Everything here is integer/bit column algebra — portable, deterministic,
 and codegen-friendly; no UDFs, no driver-side work beyond an optional
@@ -77,28 +77,3 @@ def column_bounds(df: DataFrame, cols: list[str]) -> dict[str, tuple[float, floa
         *[F.max(c).alias(f"mx_{c}") for c in cols],
     ).first()
     return {c: (float(row[f"mn_{c}"]), float(row[f"mx_{c}"])) for c in cols}
-
-
-def write_zordered(
-    df: DataFrame,
-    path: str,
-    cols: list[str],
-    num_files: int = 8,
-    bits: int = 16,
-    bounds: dict[str, tuple[float, float]] | None = None,
-) -> None:
-    """Cluster-write: range-partition on the Z-key (num_files files of
-    near-equal rows), sort within each partition, write parquet. Parquet
-    row-group min/max stats then cover a narrow range of EVERY zordered
-    column per file, so a pushed filter on any of them row-group-skips."""
-    if bounds is None:
-        bounds = column_bounds(df, cols)
-    zk = zorder_key(df, cols, bits=bits, bounds=bounds).alias("__zkey")
-    (
-        df.withColumn("__zkey", zk)
-        .repartitionByRange(num_files, "__zkey")
-        .sortWithinPartitions("__zkey")
-        .drop("__zkey")
-        .write.mode("overwrite")
-        .parquet(path)
-    )

@@ -687,9 +687,10 @@ def q_sim_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
       input). pytest additionally pins the 10-probe mean floor
       (tests/test_similarity.py).
 
-    At 100 TB only the IVF path runs (cell routing = partition pruning on
-    the at-rest index, operators/similarity.py ivf_write_index); the exact
-    top-10 here exists FOR the contract, same as hll_merge's exact counts."""
+    At 100 TB only the IVF path runs (cell routing = a filter on the pure
+    `cell` column expression, which a stored table can partition by); the
+    exact top-10 here exists FOR the contract, same as hll_merge's exact
+    counts."""
     from ..operators.similarity import brute_force_topk, ivf_topk
 
     e = emb(spark, sf_dir).where(F.col("embedding").isNotNull())

@@ -4,8 +4,8 @@ The reference's pipeline is itself a streaming producer/consumer
 (EtlMain.kt:51-56); its Spark analog is Structured Streaming. These queries
 pin the *event-time semantics* (tumbling / sliding / session windows,
 keyed dedup) in batch mode, where DuckDB can oracle them; the live
-readStream variants (watermarks, dropDuplicatesWithinWatermark,
-applyInPandasWithState) live in quarkus_etl_spark.streaming and are
+readStream variants (watermarks, dropDuplicatesWithinWatermark, the
+stream-stream interval join) live in quarkus_etl_spark.streaming and are
 smoke-tested in tests/ (rows-only — no SQL oracle exists for state).
 
 Window-alignment note: Spark's `window()` aligns to the epoch; DuckDB's

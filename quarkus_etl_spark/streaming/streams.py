@@ -21,16 +21,6 @@ from pyspark.sql.streaming import StreamingQuery
 
 from ..config import WriteTarget
 from ..sources.writers import write_dataframe
-from ..vendor import ensure_protobuf
-
-# The tws runner (user_stats_tws) speaks a protobuf state protocol; make
-# `google.protobuf` importable BEFORE pyspark's state clients load their
-# generated module. At module-import time so it also runs on WORKERS when
-# the pickled-by-reference WelfordProcessor is unpickled there (worker
-# unpickles the UDF before constructing StatefulProcessorApiClient).
-# Prefers a real protobuf install; the vendored minimal runtime only fills
-# the gap (quarkus_etl_spark/vendor/gproto).
-ensure_protobuf()
 
 log = logging.getLogger("quarkus_etl_spark.streaming")
 
@@ -220,206 +210,6 @@ def stream_etl_job(
         stream_df.writeStream.foreachBatch(write_batch)
         .option("checkpointLocation", checkpoint_dir)
         .start()
-    )
-
-
-def running_user_totals(
-    events: DataFrame,
-    watermark: str = "10 minutes",
-    ts_col: str = "ts",
-) -> DataFrame:
-    """Custom stateful operator via applyInPandasWithState: per-user running
-    event count + value total, emitted once per micro-batch per active user.
-
-    This is the escape hatch for stateful logic the built-in windows can't
-    express (counters, custom sessionization, small per-key ML state). State
-    is a 3-tuple per user; the watermark bounds how long idle keys live via
-    the processing-timeout, so state can't grow unboundedly (the engine's
-    standing rule — see module docstring)."""
-    import pandas as pd  # noqa: PLC0415
-
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout  # noqa: PLC0415
-
-    output_schema = "user_id long, n_events long, total_value double"
-    state_schema = "n long, total double"
-    idle_reap_ms = 60 * 60 * 1000  # reap keys idle for 1h of EVENT time
-
-    def update(key, pdfs, state: GroupState):
-        if state.hasTimedOut:
-            state.remove()
-            return
-        n, total = state.get if state.exists else (0, 0.0)
-        for pdf in pdfs:
-            n += len(pdf)
-            total += float(pdf["value"].sum())
-        state.update((n, total))
-        # Event-time timeout: reaping rides the watermark, so it is
-        # deterministic in replay and settles in tests (a processing-time
-        # timeout keeps the query busy forever from processAllAvailable's
-        # point of view).
-        state.setTimeoutTimestamp(state.getCurrentWatermarkMs() + idle_reap_ms)
-        yield pd.DataFrame(
-            {"user_id": [key[0]], "n_events": [n], "total_value": [total]}
-        )
-
-    return (
-        events.withWatermark(ts_col, watermark)
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            update,
-            outputStructType=output_schema,
-            stateStructType=state_schema,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.EventTimeTimeout,
-        )
-    )
-
-
-def incremental_rollup(
-    stream_df: DataFrame,
-    table_path: str,
-    checkpoint_dir: str,
-    window: str = "5 minutes",
-    watermark: str = "10 minutes",
-    ts_col: str = "ts",
-) -> StreamingQuery:
-    """Incrementally-maintained materialized aggregate — the streaming form
-    of q_time_rollup: watermarked windowed counts/sums run in UPDATE mode,
-    and every micro-batch's changed windows are merged into a parquet
-    table with the CDC last-writer-wins merge (operators/cdc.py) keyed on
-    (window_start, event_type). The table converges to exactly what the
-    batch aggregate over all input would produce (pytest pins it).
-
-    This is the standard lambda-architecture collapse: one streaming query
-    maintains the serving table; readers see complete, non-duplicated
-    windows without re-scanning history. State is bounded by the
-    watermark; the merge touches only changed keys per batch. (A real
-    lakehouse would use a transactional MERGE sink; the parquet
-    rewrite-on-merge here keeps the demo dependency-free, and the merge
-    operator itself is the scale-correct one-shuffle window dedup.)"""
-    import os  # noqa: PLC0415
-
-    from ..operators.cdc import merge_upsert  # noqa: PLC0415
-
-    agg = tumbling_stream(stream_df, window=window, watermark=watermark, ts_col=ts_col)
-    keys = ["window_start", "event_type"]
-
-    def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        compact = batch_df.dropDuplicates(keys)  # one row per key per batch
-        if os.path.isdir(table_path):
-            base = spark.read.parquet(table_path)
-            merged = merge_upsert(base, compact, keys).drop("__version")
-        else:
-            merged = compact
-        tmp = table_path.rstrip("/") + ".__staging__"
-        merged.write.mode("overwrite").parquet(tmp)
-        import shutil  # noqa: PLC0415
-
-        if os.path.isdir(table_path):
-            shutil.rmtree(table_path)
-        os.rename(tmp, table_path)
-
-    return (
-        agg.writeStream.outputMode("update")
-        .foreachBatch(merge_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
-    )
-
-
-def stream_static_enrich(
-    stream_df: DataFrame,
-    dim_df: DataFrame,
-    on: list[str],
-    how: str = "left",
-) -> DataFrame:
-    """Stream-static join: every micro-batch joins against the static dim
-    (re-resolved per batch, so slowly-changing dims refresh on file
-    updates). Broadcast keeps the stream side shuffle-free — the standard
-    enrichment topology; stateless, so no watermark is required."""
-    return stream_df.join(F.broadcast(dim_df), on, how)
-
-
-class WelfordProcessor:
-    """The per-key stateful processor behind user_stats_tws, hoisted to
-    module scope so its CONTRACT (state round-trip via the handle's
-    ValueState, multi-batch Welford merge, emitted frame schema) is
-    pytest-exercised directly even where the tws Python runner's protobuf
-    dependency is absent (see tests/test_streaming.py). Subclasses
-    StatefulProcessor lazily at class-construction time below — the base
-    class import is dependency-free; only the RUNNER needs protobuf."""
-
-    def init(self, handle) -> None:
-        self._stats = handle.getValueState("stats", "n long, mean double, m2 double")
-
-    def handleInputRows(self, key, rows, timerValues):
-        import pandas as pd  # noqa: PLC0415
-
-        prev = self._stats.get()
-        n, mean, m2 = prev if prev is not None else (0, 0.0, 0.0)
-        for pdf in rows:
-            for v in pdf["value"]:
-                n += 1
-                d = float(v) - mean
-                mean += d / n
-                m2 += d * (float(v) - mean)
-        self._stats.update((n, mean, m2))
-        var = m2 / (n - 1) if n > 1 else 0.0
-        yield pd.DataFrame(
-            {
-                "user_id": [key[0]],
-                "n_events": [n],
-                "mean_value": [mean],
-                "var_value": [var],
-            }
-        )
-
-    def close(self) -> None:
-        pass
-
-
-def _welford_processor_instance():
-    """WelfordProcessor as a pyspark StatefulProcessor subclass (dynamic
-    subclassing keeps module import free of pyspark.streaming internals)."""
-    from pyspark.sql.streaming.stateful_processor import (  # noqa: PLC0415
-        StatefulProcessor,
-    )
-
-    cls = type("WelfordStatefulProcessor", (WelfordProcessor, StatefulProcessor), {})
-    return cls()
-
-
-def user_stats_tws(
-    events: DataFrame,
-    watermark: str = "10 minutes",
-    ts_col: str = "ts",
-) -> DataFrame:
-    """Per-user running count / mean / variance (Welford) on Spark 4's
-    `transformWithStateInPandas` — the arbitrary-state successor to
-    applyInPandasWithState: typed named state variables on a processor
-    handle instead of one opaque tuple, explicit timers, and an initial-
-    state hook. Demonstrated here with one ValueState; the operator shape
-    is what per-key online ML state (feature EMAs, drift detectors) builds
-    on at scale.
-
-    Requires the RocksDB state-store provider
-    (spark.sql.streaming.stateStore.providerClass) — the HDFS-backed
-    default does not support the new state API — and `protobuf` in the
-    Python env (the tws runner's state-server protocol; absent from this
-    image, so the e2e test import-gates on it). Welford's update is
-    single-pass and numerically stable, so per-key state is three numbers
-    regardless of stream length; the watermark + Update mode bound what a
-    micro-batch reprocesses."""
-    return (
-        events.withWatermark(ts_col, watermark)
-        .groupBy("user_id")
-        .transformWithStateInPandas(
-            statefulProcessor=_welford_processor_instance(),
-            outputStructType="user_id long, n_events long, mean_value double, var_value double",
-            outputMode="Update",
-            timeMode="EventTime",
-        )
     )
 
 

@@ -10,7 +10,6 @@ from pyspark.sql import functions as F
 
 from quarkus_etl_spark.catalog import (
     DuplicateColumnError,
-    assert_no_duplicate_columns,
     load_table,
     normalize_identifiers,
 )
@@ -32,10 +31,41 @@ def test_duplicate_column_guard_fires(spark):
     df = spark.range(1).select(F.lit(1).alias("a"), F.lit(2).alias("A"))
     with pytest.raises(DuplicateColumnError, match="appeared twice"):
         normalize_identifiers(df)
-    # pre-normalization exact duplicates also fail fast
+    # exact duplicates fail fast too
     df2 = df.toDF("a", "a")
-    with pytest.raises(DuplicateColumnError):
-        assert_no_duplicate_columns(df2)
+    with pytest.raises(DuplicateColumnError, match="A appeared twice"):
+        normalize_identifiers(df2)
+
+
+def test_worker_zip_drops_modules_deleted_from_the_package(spark, monkeypatch):
+    """Deleting a module leaves no source newer than the worker zip, so the
+    zip must also count as stale when its entries differ from the
+    package's *.py files; otherwise workers keep importing the module."""
+    import os
+    import time
+    import zipfile
+    from pathlib import Path
+
+    from quarkus_etl_spark import catalog
+
+    zpath = (
+        Path(catalog.__file__).resolve().parents[1]
+        / ".scratch"
+        / "quarkus_etl_spark_pyfiles.zip"
+    )
+    monkeypatch.setattr(catalog, "_WORKER_IMPORTS_READY", set())
+    catalog.ensure_worker_imports(spark)
+    ghost = "quarkus_etl_spark/deleted_module.py"
+    with zipfile.ZipFile(zpath, "a") as zf:
+        zf.writestr(ghost, "X = 1\n")
+    future = time.time() + 3600
+    os.utime(zpath, (future, future))
+    catalog._WORKER_IMPORTS_READY.clear()
+    catalog.ensure_worker_imports(spark)
+    with zipfile.ZipFile(zpath) as zf:
+        names = set(zf.namelist())
+    assert ghost not in names
+    assert "quarkus_etl_spark/catalog.py" in names
 
 
 # --- A12: config parsing (dict + reference .properties syntax) ---------------

@@ -65,60 +65,3 @@ def test_compact_partitioned_keeps_layout(spark, sf_dir, tmp_path):
     assert "event_type" in pf and "click" in pf
     assert back.count() == ev.count()
     assert back.select("event_id").exceptAll(ev.select("event_id")).count() == 0
-
-
-def test_zordered_write_narrows_every_dimension(spark, sf_dir, tmp_path):
-    """A Z-ordered write gives every file a narrow min/max range in BOTH
-    clustered columns (the data-skipping property); a 1-dim sorted write
-    narrows only its own column, leaving the other near-full-span."""
-    import pyarrow.parquet as pq
-    from pathlib import Path
-
-    from quarkus_etl_spark.catalog import load_table
-    from quarkus_etl_spark.operators.zorder import write_zordered
-
-    li = load_table(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_partkey", "l_suppkey"
-    )
-    gp = li.agg(
-        F.max("l_partkey") - F.min("l_partkey"),
-        F.max("l_suppkey") - F.min("l_suppkey"),
-    ).first()
-    span_p, span_s = float(gp[0]), float(gp[1])
-
-    def per_file_spans(path):
-        spans = []
-        for f in Path(path).glob("*.parquet"):
-            t = pq.read_table(f, columns=["l_partkey", "l_suppkey"])
-            p, s = t.column("l_partkey"), t.column("l_suppkey")
-            import pyarrow.compute as pc
-            spans.append((
-                (pc.max(p).as_py() - pc.min(p).as_py()) / span_p,
-                (pc.max(s).as_py() - pc.min(s).as_py()) / span_s,
-            ))
-        return spans
-
-    zpath = str(tmp_path / "zordered")
-    write_zordered(li, zpath, ["l_partkey", "l_suppkey"], num_files=8)
-    zspans = per_file_spans(zpath)
-    assert len(zspans) >= 4
-    avg_p = sum(s[0] for s in zspans) / len(zspans)
-    avg_s = sum(s[1] for s in zspans) / len(zspans)
-    # Morton locality: a 1/8 curve segment spans well under the full
-    # domain in each dimension.
-    assert avg_p < 0.7 and avg_s < 0.7, (avg_p, avg_s)
-
-    spath = str(tmp_path / "sorted1d")
-    (
-        li.repartitionByRange(8, "l_partkey")
-        .sortWithinPartitions("l_partkey")
-        .write.mode("overwrite")
-        .parquet(spath)
-    )
-    sspans = per_file_spans(spath)
-    avg_s1 = sum(s[1] for s in sspans) / len(sspans)
-    assert avg_s1 > 0.9, avg_s1  # the unsorted dim stays full-span
-    assert avg_s < avg_s1 - 0.2  # zorder strictly narrows it
-    # and the values round-trip
-    back = spark.read.parquet(zpath)
-    assert back.count() == li.count()

@@ -18,8 +18,6 @@ from quarkus_etl_spark.operators.dedup import (
 from quarkus_etl_spark.operators.multimodal import (
     sample_frames,
     decode_media,
-    media_stats,
-    resize_images,
     synthetic_media,
 )
 from quarkus_etl_spark.operators.similarity import brute_force_topk, lsh_topk
@@ -217,21 +215,10 @@ def test_multimodal_decode_roundtrip(spark):
         assert r["kind"] == meta[mid]["kind"]
 
 
-def test_multimodal_resize_and_stats(spark):
-    media = synthetic_media(spark, 20)
-    resized = resize_images(media, 32, 24)
-    decoded = decode_media(resized)
-    assert decoded.where((F.col("width") != 32) | (F.col("height") != 24)).count() == 0
-    stats = media_stats(media)
-    assert stats.where(~F.col("has_magic")).count() == 0
-
-
 def test_multimodal_real_codec_is_stubbed(spark):
     media = synthetic_media(spark, 5)
     with pytest.raises(NotImplementedError, match="codec"):
         decode_media(media, codec="pil")
-    with pytest.raises(NotImplementedError):
-        resize_images(media, 10, 10, codec="ffmpeg")
     with pytest.raises(NotImplementedError):
         sample_frames(media, codec="ffmpeg")
 
@@ -699,31 +686,6 @@ def test_salted_join_parity_and_spread(spark, sf_dir):
     # the physical join keys include the salt (spread is real, not cosmetic)
     plan = salted._jdf.queryExecution().executedPlan().toString()
     assert "__salt" in plan
-
-
-def test_ivf_index_at_rest_prunes_and_matches(spark, sf_dir, tmp_path):
-    """The stored IVF index must (a) answer via partition PRUNING — the
-    probe's cells appear in the scan's PartitionFilters — and (b) return
-    exactly what the in-memory ivf_topk returns for the same centroids."""
-    from quarkus_etl_spark.catalog import load_table
-    from quarkus_etl_spark.operators.similarity import (
-        ivf_query_indexed,
-        ivf_topk,
-        ivf_write_index,
-    )
-
-    e = load_table(spark, sf_dir, "embeddings")
-    probe = [float(x) for x in e.where(F.col("vec_id") == 0).first()["embedding"]]
-    path = str(tmp_path / "ivf_index")
-    cents = ivf_write_index(e, "embedding", "vec_id", path, n_cells=8, refine_iters=1)
-    got = ivf_query_indexed(
-        spark, path, "embedding", "vec_id", probe, cents, k=10, nprobe=2
-    )
-    plan = got._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan
-    assert "cell" in plan.split("PartitionFilters:")[1].split("]")[0]
-    mem = ivf_topk(e, "embedding", "vec_id", probe, k=10, n_cells=8, nprobe=2, refine_iters=1)
-    assert [tuple(r) for r in got.collect()] == [tuple(r) for r in mem.collect()]
 
 
 def test_audio_windows_segmentation(spark):
