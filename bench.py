@@ -354,7 +354,7 @@ def main() -> None:
             "q_dedup_simhash",
             "q_dedup_ngram",
             "q_sim_pairs",
-            "q_dedup_cluster",  # also compiles the connected-components round shapes
+            "q_dedup_cluster",  # also starts the union-find task's Python worker
             "q_decontaminate",  # wide gram-projection codegen
             "q_sim_ann_ivf",
             "q_sim_ann_lsh",
@@ -443,9 +443,9 @@ def main() -> None:
     # comparisons from chasing one lucky/unlucky pass. `queries` stays the
     # min (the cross-round comparable); `slowest10_median3` is the noise-
     # robust view of the head.
-    # The iterative CC/label-prop family (the CC_NOISE_EXPECTED_SPREAD
-    # keys) is the documented cross-run noise source (VERDICT r8 #7: q_graph_label_prop 1.66-2.86 s, q_dedup_cluster
-    # ±40% on UNCHANGED code — loop-carried localCheckpoint/blockmanager
+    # The iterative label-prop family (the CC_NOISE_EXPECTED_SPREAD
+    # keys) is the documented cross-run noise source (VERDICT r8 #7: q_graph_label_prop 1.66-2.86 s
+    # on UNCHANGED code — loop-carried localCheckpoint/blockmanager
     # timing, not plan drift): always top these up to >= 3 samples so their
     # recorded min comes from a wider draw and stops tripping the
     # flagged_regressions bar on one unlucky pass. The statistic stays MIN

@@ -2,31 +2,43 @@
 a dedup pipeline (near-dup PAIRS -> duplicate GROUPS -> one keeper per
 group).
 
-Spark-first iterative design (no GraphFrames dependency):
+`connected_components` materializes the symmetrized, distinct edge list
+once (a lazy `localCheckpoint` plus one `count()`, the only build-time
+action) and then picks one of two solvers by that count:
 
-- labels start as each node's own id; every round each node takes the min
-  label over itself and its neighbors (one shuffle join + groupBy), then a
-  pointer-jump round (label := label(label)) doubles propagation distance,
-  giving O(log diameter) convergence on chain-shaped clusters instead of
-  O(diameter).
-- every round ends in `localCheckpoint` — iterative plans otherwise grow a
-  lineage Catalyst re-analyzes each round (planning cost explodes by ~10
-  rounds) and re-executes from the source on failure.
-- convergence is detected with a count of changed labels (one extra action
-  per round, on the already-checkpointed frame).
+- At or under `LOCAL_EDGE_CAP` edges (every fixture graph: 6-79 pairs)
+  the whole graph goes to ONE grouped-map task, `groupBy(lit(0))
+  .applyInPandas`, which runs a numpy union-find with min-id roots
+  (`_min_roots`). The solve is part of the query's own plan, so it adds
+  no build job and no per-round checkpoint block. This is the "finish
+  locally once the graph is small" step of large-star/small-star
+  (Kiveris et al., SoCC 2014).
+- Over the cap, hash-to-min rounds run in Spark: each node takes the min
+  label over itself and its neighbours (one shuffle join + groupBy), then
+  a pointer jump (label := label(label)) doubles the propagation
+  distance, so chain-shaped clusters converge in O(log diameter) rounds.
+  Each round ends in a `localCheckpoint` (an iterative plan otherwise
+  grows a lineage Catalyst re-analyzes every round) and a `count()` of
+  changed labels. A loop that hits `max_iter` before a no-change round
+  raises rather than return half-propagated labels.
 
-At 100 TB the same loop holds: each round is a self-equi-join shuffle on
-node id (AQE-splittable), state is one (node, label) row per node, and
-round count is logarithmic in the largest cluster's diameter — dedup
-clusters are near-cliques, so 2-4 rounds in practice. This is the
-hash-to-min algorithm; GraphFrames' large-star/small-star is the same idea
-with a different edge rewrite.
+Both solvers give every non-NULL endpoint its smallest reachable id. An
+edge with a NULL endpoint connects nothing, and there is no NULL node.
 """
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+# Distinct directed edges (both directions of each pair) at or under which
+# the graph is solved in one grouped-map task. Measured at the cap on a
+# 4-core host (local[4]): a random graph of 1M pairs (~2M directed edges)
+# solved in one task in 1.2-1.3 s warm, 2.4 s cold, of which the numpy
+# union-find is ~0.4 s; the task holds two int64 columns, ~32 MB. The
+# Spark rounds took 29-35 s on the same graph.
+LOCAL_EDGE_CAP = 2_000_000
 
 
 def symmetrized_edges(
@@ -62,19 +74,73 @@ def symmetrized_edges(
     )
 
 
+def _min_roots(u: np.ndarray, v: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """(nodes, comp) for the graph with edges u[i]-v[i]: every id in u or v
+    once, sorted, and the smallest id it reaches. Root hooking: ids become
+    dense sorted indices, so the min index is the min id; each round hooks
+    the larger root of every edge whose ends still differ onto the smaller
+    one (`np.minimum.at`, so one root hooked by several edges keeps the
+    least), then shortcuts every label to its root until nothing moves.
+    A randomly numbered 1M-node chain settles in 14 rounds, 0.4 s."""
+    nodes, idx = np.unique(np.concatenate([u, v]), return_inverse=True)
+    a, b = idx[: len(u)], idx[len(u) :]
+    lab = np.arange(len(nodes))
+    while True:
+        ra, rb = lab[a], lab[b]
+        live = ra != rb
+        if not live.any():
+            return nodes, nodes[lab]
+        a, b, ra, rb = a[live], b[live], ra[live], rb[live]
+        np.minimum.at(lab, np.maximum(ra, rb), np.minimum(ra, rb))
+        while True:
+            up = lab[lab]
+            if np.array_equal(up, lab):
+                break
+            lab = up
+
+
+def _solve_group(pdf):
+    """The grouped-map body: the whole edge list in, (u, comp) out. pandas
+    is imported here, on the worker, so importing the package stays
+    pandas-free."""
+    import pandas as pd
+
+    nodes, comp = _min_roots(pdf["u"].to_numpy(), pdf["v"].to_numpy())
+    return pd.DataFrame({"u": nodes, "comp": comp})
+
+
 def connected_components(
     pairs: DataFrame,
     src: str,
     dst: str,
     max_iter: int = 20,
 ) -> DataFrame:
-    """(node, component) for every node appearing in `pairs`; component is
-    the smallest node id reachable via pair edges (deterministic)."""
+    """(node, component) for every non-NULL node appearing in `pairs`;
+    component is the smallest node id reachable via pair edges
+    (deterministic). `max_iter` bounds the over-cap Spark loop, which
+    raises when it runs out before converging."""
+    from ..catalog import ensure_worker_imports
+
+    # A NULL endpoint becomes a self-loop on the other end: that node
+    # stays a node, the edge joins nothing, and no NULL node appears.
     edges = (
         symmetrized_edges(pairs, src, dst)
+        .where(F.col("u").isNotNull())
+        .select("u", F.coalesce(F.col("v"), F.col("u")).alias("v"))
         .distinct()
         .localCheckpoint(eager=False)
     )
+    n_edges = edges.count()
+    if n_edges <= LOCAL_EDGE_CAP:
+        ensure_worker_imports(pairs.sparkSession)
+        id_type = edges.schema["u"].dataType.simpleString()
+        # An aliased literal key: a bare lit(0) reads as GROUP BY ordinal.
+        return (
+            edges.groupBy(F.lit(0).alias("__one"))
+            .applyInPandas(_solve_group, f"u {id_type}, comp {id_type}")
+            .select(F.col("u").alias("node"), F.col("comp").alias("component"))
+        )
+
     labels = edges.select("u").distinct().withColumn("comp", F.col("u"))
 
     # r12 re-measured the VERDICT-r11-#4 cadence idea (convergence count
@@ -119,8 +185,11 @@ def connected_components(
         changed = new_labels.where(F.col("comp") != F.col("__prev")).count()
         labels = new_labels.select("u", "comp")
         if changed == 0:
-            break
-    return labels.select(F.col("u").alias("node"), F.col("comp").alias("component"))
+            return labels.select(F.col("u").alias("node"), F.col("comp").alias("component"))
+    raise RuntimeError(
+        f"connected_components: labels still changed after max_iter={max_iter} "
+        f"rounds on {n_edges} edges; the components would be partial"
+    )
 
 
 def dedup_keep_canonical(
@@ -166,8 +235,8 @@ def dedup_keep_best(
     (an 8 MB document's n_chars — a real web-corpus value; ANSI throws,
     one row kills the job), and DECIMAL keys are not an option because
     DuckDB 1.0's arg_max picks a non-extreme row on them (NOTES Round 6).
-    Component building is the same hash-to-min + pointer-jumping pass as
-    every other cluster consumer."""
+    Components come from the same `connected_components` as every other
+    cluster consumer."""
     comp = connected_components(pairs, src, dst)
     scored = comp.join(
         df.select(F.col(id_col).alias("node"), F.col(score_col).alias("__score")),

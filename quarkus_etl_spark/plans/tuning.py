@@ -12,6 +12,8 @@ relative to the cluster.
 
 from __future__ import annotations
 
+import threading
+
 from pyspark.sql import DataFrame
 
 # Key carries the input-file TUPLE itself, not hash(files) (ADVICE r11):
@@ -19,9 +21,30 @@ from pyspark.sql import DataFrame
 # stale routing scalar, and the tuples are small (fixture tables are a
 # handful of part files). Bounded: routing keys are one entry per distinct
 # (session, plan, files) triple — a long-lived session that keeps reading
-# new file sets evicts oldest-first at the cap instead of growing forever.
+# new file sets evicts the least recently used entry at the cap instead of
+# growing forever. A hit moves its key to the back; every read and write of
+# the dict holds the lock, so concurrent routers cannot interleave an
+# eviction with an insert. The count() itself runs outside the lock.
 _ROUTING_CACHE_MAX = 256
 _ROUTING_COUNT_CACHE: dict[tuple, int] = {}
+_ROUTING_CACHE_LOCK = threading.Lock()
+
+
+def _routing_cache_get(key: tuple) -> int | None:
+    with _ROUTING_CACHE_LOCK:
+        n = _ROUTING_COUNT_CACHE.pop(key, None)
+        if n is not None:
+            _ROUTING_COUNT_CACHE[key] = n
+        return n
+
+
+def _routing_cache_put(key: tuple, n: int) -> None:
+    with _ROUTING_CACHE_LOCK:
+        _ROUTING_COUNT_CACHE.pop(key, None)
+        if len(_ROUTING_COUNT_CACHE) >= _ROUTING_CACHE_MAX:
+            _ROUTING_COUNT_CACHE.pop(next(iter(_ROUTING_COUNT_CACHE)))
+        _ROUTING_COUNT_CACHE[key] = n
+
 
 _route_logger = __import__("logging").getLogger("quarkus_etl_spark.routing")
 
@@ -77,12 +100,10 @@ def routing_count(df: DataFrame) -> int:
         )
     except Exception:  # pragma: no cover - Connect or API drift
         return df.count()
-    n = _ROUTING_COUNT_CACHE.get(key)
+    n = _routing_cache_get(key)
     if n is None:
         n = df.count()
-        if len(_ROUTING_COUNT_CACHE) >= _ROUTING_CACHE_MAX:
-            _ROUTING_COUNT_CACHE.pop(next(iter(_ROUTING_COUNT_CACHE)))
-        _ROUTING_COUNT_CACHE[key] = n
+        _routing_cache_put(key, n)
     return n
 
 

@@ -60,35 +60,51 @@ def test_vs_prev_flags_real_regression_at_compare_bar(tmp_path, monkeypatch):
     assert sec["flagged_regressions"] == ["q_slow"]
 
 
-def test_vs_prev_cc_noise_family_annotated_not_flagged(tmp_path, monkeypatch):
+def test_vs_prev_cc_noise_family_annotated_not_flagged(tmp_path, monkeypatch, capsys):
     """VERDICT r10 #3: an over-the-bar entry from the frozen CC-noise
     family that stays INSIDE its reviewed same-code spread bound is
     recorded under expected_variance (with the bound), not as a flagged
     regression; a breach of the bound stays a real flag, and non-family
     queries are untouched by the list."""
     prev = {
-        "queries": {"q_dedup_cluster": 2.0, "q_graph_label_prop": 2.0,
-                    "q_slow": 1.0},
+        "queries": {"q_dedup_incremental": 2.0, "q_graph_label_prop": 2.0,
+                    "q_dedup_cluster": 2.0, "q_slow": 1.0},
         "calib3_sec": 0.1,
     }
     p = tmp_path / "prev.json"
     p.write_text(json.dumps(prev))
     monkeypatch.setenv("SPARK_GRAFT_BENCH_PREV", str(p))
-    # cluster 2.0 -> 3.2 (1.6x: inside the 1.8 bound -> annotated);
-    # label_prop 2.0 -> 4.0 (2.0x: BREACHES the bound -> real flag);
-    # q_slow 1.0 -> 2.1 (2.1x, not in the family -> real flag, ranks first)
-    sec = bench._vs_prev_section(
-        {"q_dedup_cluster": 3.2, "q_graph_label_prop": 4.0, "q_slow": 2.1}, 0.1
-    )
-    assert sec["flagged_regressions"] == ["q_slow", "q_graph_label_prop"]
+    # incremental 2.0 -> 4.2 (2.1x: inside the 2.4 bound -> annotated);
+    # label_prop 2.0 -> 4.0 (2.0x: BREACHES the 1.8 bound -> real flag);
+    # q_dedup_cluster 2.0 -> 3.2 (1.6x: left the family -> real flag);
+    # q_slow 1.0 -> 2.2 (2.2x, not in the family -> real flag, ranks first)
+    new = {"q_dedup_incremental": 4.2, "q_graph_label_prop": 4.0,
+           "q_dedup_cluster": 3.2, "q_slow": 2.2}
+    sec = bench._vs_prev_section(new, 0.1)
+    assert sec["flagged_regressions"] == [
+        "q_slow", "q_graph_label_prop", "q_dedup_cluster"
+    ]
     assert sec["expected_variance"] == [
-        {"query": "q_dedup_cluster", "normalized_ratio": 1.6,
-         "expected_bound": 1.8}
+        {"query": "q_dedup_incremental", "normalized_ratio": 2.1,
+         "expected_bound": 2.4}
+    ]
+    # bench_compare prints the same split over the same pair of artifacts
+    q = tmp_path / "new.json"
+    q.write_text(json.dumps({"queries": new, "calib3_sec": 0.1}))
+    monkeypatch.setattr(sys, "argv", ["bench_compare", str(p), str(q)])
+    with pytest.raises(SystemExit) as exc:
+        bench_compare.main()
+    assert exc.value.code == 1
+    lines = capsys.readouterr().out.splitlines()
+    assert [ln.split()[1] for ln in lines if ln.startswith("REGRESSION")] == (
+        sec["flagged_regressions"]
+    )
+    assert [ln.split()[1] for ln in lines if ln.startswith("expected-var")] == [
+        "q_dedup_incremental"
     ]
     # every frozen name is a registered bench query name (no typos rotting)
     assert set(harness.CC_NOISE_EXPECTED_SPREAD) == {
-        "q_dedup_cluster", "q_dedup_soft", "q_dedup_canonical",
-        "q_dedup_canonical_best", "q_graph_label_prop",
+        "q_graph_label_prop",
         # r11 addition: measured 2.19x same-session spread (bound 2.4)
         "q_dedup_incremental",
     }
@@ -163,8 +179,12 @@ def test_bench_compare_agrees_with_vs_prev_on_committed_pair(monkeypatch, capsys
     )
     assert sec["calib_probe_used"] == "v3"
     assert sec["normalized_vs_prev"] == 1.0961
-    assert sec["flagged_regressions"] == ["q_dedup_cluster", "q_gen_pysource"]
-    assert [e["query"] for e in sec["expected_variance"]] == ["q_dedup_soft"]
+    # q_dedup_soft, an expected-variance entry while the CC queries were in
+    # the noise family, is an ordinary regression flag on this pair now
+    assert sec["flagged_regressions"] == [
+        "q_dedup_cluster", "q_gen_pysource", "q_dedup_soft"
+    ]
+    assert sec["expected_variance"] == []
 
     monkeypatch.setattr(sys, "argv", ["bench_compare", old, new])
     with pytest.raises(SystemExit) as exc:

@@ -444,8 +444,7 @@ def test_video_features_fused_matches_two_stage(spark):
 
 def test_connected_components_chain_and_islands(spark):
     """A 12-node chain (worst-case diameter), a triangle, and a lone pair
-    all collapse to min-id components; pointer jumping converges the chain
-    well inside the iteration cap."""
+    all collapse to min-id components."""
     from quarkus_etl_spark.operators.cluster import connected_components
 
     chain = [(i, i + 1) for i in range(100, 111)]        # 100-...-111
@@ -460,6 +459,161 @@ def test_connected_components_chain_and_islands(spark):
     assert comp[1] == comp[2] == comp[3] == 1
     assert comp[50] == comp[51] == 50
     assert len(comp) == 12 + 3 + 2
+
+
+def _reference_components(pairs):
+    """Dict union-find with path halving over pairs without a NULL end;
+    a node seen only in a pair with a NULL end is its own component."""
+    parent = {}
+
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in pairs:
+        for x in (a, b):
+            if x is not None:
+                find(x)
+        if a is not None and b is not None:
+            ra, rb = find(a), find(b)
+            parent[max(ra, rb)] = min(ra, rb)
+    return {(x, find(x)) for x in parent}
+
+
+def _random_graph(rng, id_max):
+    """Chains, stars, cliques and singletons on random ids, a few edges
+    across them, self-loops, and duplicate and reversed pairs."""
+    ids = rng.sample(range(1, id_max), 60)
+    pairs, rest = [], iter(ids)
+    for _ in range(rng.randint(1, 3)):
+        chain = [next(rest) for _ in range(rng.randint(2, 8))]
+        pairs += list(zip(chain, chain[1:]))
+    for _ in range(rng.randint(1, 2)):
+        hub = next(rest)
+        pairs += [(hub, next(rest)) for _ in range(rng.randint(1, 5))]
+    for _ in range(rng.randint(1, 2)):
+        clique = [next(rest) for _ in range(rng.randint(3, 5))]
+        pairs += [(a, b) for a in clique for b in clique if a < b]
+    pairs += [(x, x) for x in [next(rest) for _ in range(rng.randint(1, 3))]]
+    seen = [x for p in pairs for x in p]
+    pairs += [(rng.choice(seen), rng.choice(seen)) for _ in range(rng.randint(0, 3))]
+    pairs += [rng.choice(pairs) for _ in range(3)]
+    pairs += [(b, a) for a, b in rng.sample(pairs, 3)]
+    rng.shuffle(pairs)
+    return pairs
+
+
+@pytest.mark.parametrize("cap", [None, 0], ids=["default_cap", "cap_0"])
+def test_connected_components_null_endpoints(spark, monkeypatch, cap):
+    """A NULL endpoint connects nothing, the non-NULL end stays a node, and
+    no NULL node appears, on the local solve and on the Spark rounds."""
+    from quarkus_etl_spark.operators import cluster
+
+    if cap is not None:
+        monkeypatch.setattr(cluster, "LOCAL_EDGE_CAP", cap)
+    pairs = spark.createDataFrame(
+        [(1, 2), (2, None), (None, 3), (5, 5), (7, 6)], "id_a long, id_b long"
+    )
+    rows = cluster.connected_components(pairs, "id_a", "id_b").collect()
+    assert {tuple(r) for r in rows} == {(1, 1), (2, 1), (3, 3), (5, 5), (6, 6), (7, 6)}
+    assert len(rows) == 6
+
+
+@pytest.mark.parametrize(
+    "id_type, id_max", [("int", 2**31 - 1), ("bigint", 2**62)], ids=["int", "long"]
+)
+def test_connected_components_same_rows_at_every_cap(spark, monkeypatch, id_type, id_max):
+    """Random graphs give the reference union-find's rows through the Spark
+    rounds (cap 0), a cap some graphs exceed and the default cap."""
+    import random
+
+    from quarkus_etl_spark.operators import cluster
+
+    rng = random.Random(id_max)
+    caps = (0, 40, cluster.LOCAL_EDGE_CAP)
+    for _ in range(3):
+        pairs = _random_graph(rng, id_max)
+        df = spark.createDataFrame(pairs, f"id_a {id_type}, id_b {id_type}")
+        expected = _reference_components(pairs)
+        for cap in caps:
+            monkeypatch.setattr(cluster, "LOCAL_EDGE_CAP", cap)
+            comp = cluster.connected_components(df, "id_a", "id_b")
+            assert comp.schema.simpleString() == (
+                f"struct<node:{id_type},component:{id_type}>"
+            )
+            assert {tuple(r) for r in comp.collect()} == expected, (cap, pairs)
+    empty = spark.createDataFrame([], f"id_a {id_type}, id_b {id_type}")
+    for cap in caps:
+        monkeypatch.setattr(cluster, "LOCAL_EDGE_CAP", cap)
+        assert cluster.connected_components(empty, "id_a", "id_b").collect() == []
+
+
+def test_local_union_find_matches_reference_and_scales():
+    """The local solver alone: 300 random multigraphs match the reference
+    union-find, and one randomly numbered 200k-node chain (a min-over-
+    neighbours loop needs ~diameter rounds there) settles in seconds."""
+    import random
+    import time
+
+    import numpy as np
+
+    from quarkus_etl_spark.operators.cluster import _min_roots
+
+    rng = random.Random(7)
+    for _ in range(300):
+        n = rng.randint(1, 60)
+        pairs = [(rng.randrange(n), rng.randrange(n)) for _ in range(rng.randint(1, 80))]
+        u, v = (np.array(c, dtype=np.int64) for c in zip(*pairs))
+        nodes, comp = _min_roots(u, v)
+        assert set(zip(nodes.tolist(), comp.tolist())) == _reference_components(pairs)
+
+    chain = np.random.default_rng(7).permutation(200_000).astype(np.int64) * 3 + 5
+    start = time.perf_counter()
+    nodes, comp = _min_roots(chain[:-1], chain[1:])
+    assert time.perf_counter() - start < 10
+    assert len(nodes) == 200_000 and (comp == 5).all()
+
+
+def test_connected_components_build_jobs_do_not_grow_with_the_graph(spark):
+    """Under the cap the build runs the same jobs for a 10-node and a
+    1 000-node chain: only the edge count() (which AQE runs as up to three
+    jobs, one per shuffle stage); no round depends on the graph."""
+    import uuid
+
+    from quarkus_etl_spark.operators.cluster import connected_components
+
+    sc = spark.sparkContext
+
+    def build_jobs(n):
+        pairs = spark.createDataFrame(
+            [(i, i + 1) for i in range(n - 1)], "id_a long, id_b long"
+        )
+        group = uuid.uuid4().hex
+        sc.setJobGroup(group, "connected_components build")
+        try:
+            connected_components(pairs, "id_a", "id_b")
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    small, large = build_jobs(10), build_jobs(1000)
+    assert small == large and 1 <= small <= 3
+
+
+def test_connected_components_raises_when_rounds_run_out(spark, monkeypatch):
+    """Over the cap, a loop that hits max_iter before a no-change round
+    raises instead of returning half-propagated labels."""
+    from quarkus_etl_spark.operators import cluster
+
+    monkeypatch.setattr(cluster, "LOCAL_EDGE_CAP", 0)
+    pairs = spark.createDataFrame(
+        [(i, i + 1) for i in range(63)], "id_a long, id_b long"
+    )
+    with pytest.raises(RuntimeError, match="max_iter=1"):
+        cluster.connected_components(pairs, "id_a", "id_b", max_iter=1)
 
 
 @pytest.mark.parametrize(

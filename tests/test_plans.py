@@ -509,3 +509,55 @@ def test_materialize_once_modes_value_identical(spark, monkeypatch):
     monkeypatch.setenv("SPARK_GRAFT_MATERIALIZE", "bogus")
     with _pytest.raises(ValueError, match="SPARK_GRAFT_MATERIALIZE"):
         materialize_once(df)
+
+
+def test_routing_count_cache_keeps_a_hot_key(spark, monkeypatch):
+    """The routing-count cache evicts the least recently used entry: a key
+    read between inserts survives 256 of them, where oldest-first eviction
+    dropped it at the 256th, and the coldest key goes instead."""
+    from quarkus_etl_spark.plans import tuning
+
+    monkeypatch.setattr(tuning, "_ROUTING_COUNT_CACHE", {})
+    df = spark.range(10)
+    assert tuning.routing_count(df) == 10
+    (hot,) = tuning._ROUTING_COUNT_CACHE
+    for i in range(tuning._ROUTING_CACHE_MAX):
+        tuning._routing_cache_put(("cold", i), i)
+        assert tuning.routing_count(df) == 10
+    cache = tuning._ROUTING_COUNT_CACHE
+    assert hot in cache and ("cold", 0) not in cache
+    assert len(cache) == tuning._ROUTING_CACHE_MAX
+
+
+def test_routing_count_cache_survives_concurrent_routers(monkeypatch):
+    """Threads inserting and reading at once never break the cache: no
+    error from an eviction racing an insert, and it stays at its cap."""
+    import sys
+    import threading
+
+    from quarkus_etl_spark.plans import tuning
+
+    monkeypatch.setattr(tuning, "_ROUTING_COUNT_CACHE", {})
+    errors = []
+
+    def router(t):
+        try:
+            for i in range(2000):
+                tuning._routing_cache_put((t, i), i)
+                tuning._routing_cache_get((t, i // 2))
+        except Exception as e:  # noqa: BLE001 - recorded, asserted below
+            errors.append(e)
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=router, args=(t,)) for t in range(8)]
+        for th in threads:
+            th.start()
+        for th in threads:
+            th.join(timeout=60)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(th.is_alive() for th in threads)
+    assert errors == []
+    assert len(tuning._ROUTING_COUNT_CACHE) == tuning._ROUTING_CACHE_MAX
