@@ -3,7 +3,6 @@ UDFs): vector math over array columns, text analytics primitives."""
 
 from .text import (  # noqa: F401
     fingerprint_md5,
-    fingerprint_rolling,
     language_scores,
     ngrams,
     normalize_text,

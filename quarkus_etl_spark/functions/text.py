@@ -85,25 +85,6 @@ def quality_score(text: Column | str) -> Column:
     return (len_score * 0.4 + alpha_ratio * 0.4 + tok_score * 0.2)
 
 
-def fingerprint_rolling(text: Column | str, base: int = 257, mod: int = (1 << 31) - 1) -> Column:
-    """Polynomial rolling hash over the normalized text's characters:
-    h = Σ code(c_i)·base^(n-1-i) mod 2^31-1, computed as a sequential
-    aggregate fold (h*base + code) — pure Column algebra, one pass.
-    The Mersenne-31 modulus keeps every intermediate < 2^40, safely inside
-    long arithmetic under ANSI overflow checking.
-
-    Complements fingerprint_md5: the rolling form is incrementally
-    updatable (windowed fingerprints over chunk boundaries at scale), at
-    the cost of weaker collision resistance."""
-    norm = normalize_text(text)
-    codes = F.transform(F.split(norm, ""), lambda ch: F.ascii(ch).cast("long"))
-    return F.aggregate(
-        codes,
-        F.lit(0).cast("long"),
-        lambda acc, c: F.pmod(acc * base + c, F.lit(mod).cast("long")),
-    )
-
-
 # PII patterns, kept to constructs with identical semantics in Java regex
 # (Spark) and RE2 (DuckDB): character classes, bounded repetition, \d.
 EMAIL_RE = r"[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}"
@@ -130,43 +111,22 @@ def pii_counts(text: Column | str) -> list[Column]:
     ]
 
 
-def token_chunks(tokens: Column, window: int = 20, stride: int = 15) -> Column:
-    """Overlapping token windows (the LLM-training chunker): starts at
-    0, stride, 2·stride, … while start < n_tokens; each chunk is
-    tokens[start .. start+window-1], the tail chunk ragged. Returns an
-    array of (chunk_id, start, chunk) structs for one posexplode — all
-    per-row column algebra, zero shuffle at any scale."""
-    starts = F.sequence(F.lit(0), F.greatest(F.size(tokens) - 1, F.lit(0)), F.lit(stride))
-    # NULL token arrays chunk to NULL (zero rows after explode), not to one
-    # ghost chunk — same contract as `chunked` below.
-    starts = F.when(tokens.isNotNull(), starts)
-    return F.transform(
-        starts,
-        lambda s, i: F.struct(
-            i.cast("long").alias("chunk_id"),
-            s.cast("long").alias("start_tok"),
-            F.slice(tokens, s + 1, window).alias("chunk"),
-        ),
-    )
-
-
 def chunked(df, tokens: Column, window: int = 20, stride: int = 15, keep=None):
-    """Fan a document out to one row per sliding token chunk — the
-    DataFrame-level form of `explode(token_chunks(...))`, restructured so
-    the Generate node stays fast at scale.
+    """Fan a document out to one row per sliding token chunk (the
+    LLM-training chunker): starts at 0, stride, 2·stride, … while
+    start < n_tokens; each chunk is tokens[start .. start+window-1], the
+    tail chunk ragged. Per-row column algebra, zero shuffle at any scale.
 
-    Higher-order-function lambdas are CodegenFallback: when the
-    struct-building `transform(...)` of token_chunks is the CHILD of an
-    explode, the whole lambda tree evaluates interpreted inside the
-    Generate node, per output row (measured 3-8x slower on the fixture
-    corpus, worse with longer docs). Here only `sequence(0, n-1, stride)`
-    — a plain codegen'd expression — is exploded; the chunk itself is
-    sliced from the projected token array ABOVE the Generate, inside
-    whole-stage codegen.
+    Higher-order-function lambdas are CodegenFallback: an explode over a
+    struct-building `transform(...)` evaluates the whole lambda tree
+    interpreted inside the Generate node, per output row (measured 3-8x
+    slower on the fixture corpus, worse with longer docs). Here only
+    `sequence(0, n-1, stride)` — a plain codegen'd expression — is
+    exploded; the chunk itself is sliced from the projected token array
+    ABOVE the Generate, inside whole-stage codegen.
 
     Returns `keep` columns (default: all input columns) plus
-    (chunk_id, start_tok, chunk); values are identical to the
-    token_chunks/explode composition (parity-pinned in tests).
+    (chunk_id, start_tok, chunk).
     """
     cols = list(keep if keep is not None else df.columns)
     base = df.select(*cols, tokens.alias("__tk"))

@@ -31,24 +31,6 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
-def vec_nonfinite_to_null(c: str) -> Column:
-    """Failed-encoder guard (r11 fuzz phase 7): a vector containing any
-    NaN/±Inf component carries no usable geometry — and letting one reach
-    the cosine path is actively dangerous: NaN/NaN = NaN, and the [-1,1]
-    clamp's null-skipping `least(greatest(NaN, -1), 1)` silently rewrites
-    it to 1.0 in Spark (self-similar to everything), while DuckDB orders
-    the raw NaN greatest — a cross-engine divergence AND a wrong answer.
-    Map such vectors to NULL at load so the round-4 missing-embedding
-    conventions (structural filters, NULL cosine, survivors-not-losers)
-    cover them with no further per-query logic. NULL stays NULL; -0.0 and
-    subnormal components are legitimate geometry and pass through.
-
-    Three codegen'd O(dim) scans per row at load — map-only, no shuffle,
-    negligible next to the cosine math it protects."""
-    # CASE without ELSE: nonfinite -> NULL, NULL input -> NULL
-    return F.expr(f"CASE WHEN NOT {_sql_has_nonfinite(c)} THEN {sql_ident(c)} END")
-
-
 def _sql_has_nonfinite(c: str) -> str:
     """TRUE if any component of column `c` is NaN or ±Inf; else NULL if
     any component is NULL; else FALSE (NULL for a NULL vector): the
@@ -68,11 +50,22 @@ def _sql_has_nonfinite(c: str) -> str:
 
 
 def vec_contract_to_null(c: str, dim: int) -> Column:
-    """The full embedding-column contract guard (r11 fuzz phases 7+8):
-    vec_nonfinite_to_null PLUS a dimension check — a vector whose length
-    differs from the column's declared dimension (encoder version drift,
-    truncated writes, empty lists) is equally unusable geometry and maps
-    to NULL/missing. The dimension leg is not optional hygiene: Spark's
+    """The full embedding-column contract guard (r11 fuzz phases 7+8).
+
+    Non-finite leg: a vector containing any NaN/±Inf component carries no
+    usable geometry — and letting one reach the cosine path is actively
+    dangerous: NaN/NaN = NaN, and the [-1,1] clamp's null-skipping
+    `least(greatest(NaN, -1), 1)` silently rewrites it to 1.0 in Spark
+    (self-similar to everything), while DuckDB orders the raw NaN
+    greatest — a cross-engine divergence AND a wrong answer. Mapping such
+    vectors to NULL at load lets the missing-embedding conventions
+    (structural filters, NULL cosine, survivors-not-losers) cover them
+    with no further per-query logic. NULL stays NULL; -0.0 and subnormal
+    components are legitimate geometry and pass through.
+
+    Dimension leg: a vector whose length differs from the column's
+    declared dimension (encoder version drift, truncated writes, empty
+    lists) is equally unusable geometry and maps to NULL/missing. The dimension leg is not optional hygiene: Spark's
     zip_with silently NULL-pads the shorter side (a ragged dot product
     quietly becomes NULL), while DuckDB's list_cosine_similarity raises
     on mismatched lengths and an EMPTY list trips an INTERNAL error that

@@ -35,12 +35,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..functions.text import ngram_hashes, ngrams, normalize_text
-from ..plans.tuning import (
-    ensure_parallelism,
-    log_route,
-    materialize_once,
-    routing_count,
-)
+from ..plans.tuning import ensure_parallelism, log_route, routing_count
 
 
 # --------------------------------------------------------------------------
@@ -178,11 +173,10 @@ def minhash_near_dup_pairs(
     candidates -> exact verification at `threshold` (id_a, id_b, jaccard).
 
     The feature table feeds three consumers (the signature DAG and both
-    sides of the verification join), so it is materialized once — eagerly
+    sides of the verification join), so it is checkpointed eagerly
     (construction-time jobs: the consumers land in one job, and concurrent
-    stages double-compute a lazy intermediate) and env-gated for fault
-    tolerance at scale (plans/tuning.materialize_once, VERDICT r11 #5)."""
-    sets = materialize_once(_ngram_sets(df, id_col, text_col, None, 2))
+    stages double-compute a lazy intermediate)."""
+    sets = _ngram_sets(df, id_col, text_col, None, 2).localCheckpoint()
     return _jaccard_lsh(sets, id_col, threshold)
 
 
@@ -340,10 +334,9 @@ def ngram_jaccard_pairs(
     three times), so without truncation the extraction pipeline re-runs
     per consumer (r11 A/B: -8% min over the dedup family at sf0.1; at
     scale it is the materialize-the-fingerprints step of guide §8).
-    Materialization is EAGER (construction-time jobs — concurrent
-    consumers make lazy unsafe) and env-gated for fault tolerance at
-    scale (plans/tuning.materialize_once, VERDICT r11 #5)."""
-    sets = materialize_once(_ngram_sets(df, id_col, text_col, block_col, n))
+    The checkpoint is EAGER (construction-time jobs — concurrent consumers
+    make lazy unsafe)."""
+    sets = _ngram_sets(df, id_col, text_col, block_col, n).localCheckpoint()
     if strategy == "auto":
         # Both branches are EXACT (prefix filtering loses no recall), so
         # auto-routing never changes the result set — only the candidate
@@ -399,16 +392,14 @@ def near_dup_edges(
     emit). Candidate cost goes from quadratic-per-block to near-linear
     bucket expansion with the MAX_BUCKET cap.
 
-    Feature table materialized once for the same multi-consumer reason as
-    ngram_jaccard_pairs (r11; eager + env-gated, see materialize_once)."""
-    sets = materialize_once(_ngram_sets(df, id_col, text_col, block_col, n))
+    Feature table checkpointed eagerly for the same multi-consumer reason
+    as ngram_jaccard_pairs."""
+    sets = _ngram_sets(df, id_col, text_col, block_col, n).localCheckpoint()
     if strategy == "auto":
         strategy = "exhaustive" if _fits_exhaustive(df) else "lsh"
         log_route("near_dup_edges", strategy, approximate=strategy == "lsh")
     if strategy == "exhaustive":
         return _jaccard_exhaustive(sets, id_col, threshold)
-    if strategy == "prefix":
-        return _jaccard_prefix(sets, id_col, threshold)
     if strategy == "lsh":
         return _jaccard_lsh(sets, id_col, threshold)
     raise ValueError(f"unknown strategy: {strategy}")

@@ -2,13 +2,13 @@
 q_multimodal_cols + north-star "multimodal columns").
 
 Media are opaque `binary` payload columns with typed struct metadata.
-Decode / feature-extraction run as Arrow-batched `mapInPandas` over the
-binary column — the Spark-side plumbing (schemas, batch iteration,
-partition-preserving map) is real and tested; the actual codec calls are
-STUBBED (this environment ships no image/audio libraries): payloads use a
-deterministic synthetic header that `decode_media` parses, and requesting a
-real codec raises NotImplementedError at the exact point a PIL/ffmpeg call
-would slot in.
+Frame sampling, feature extraction and audio windowing run as Arrow-batched
+`mapInPandas` over the binary column — the Spark-side plumbing (schemas,
+batch iteration, partition-preserving map) is real and tested; the actual
+codec calls are STUBBED (no image/audio libraries are a dependency):
+payloads use a deterministic synthetic header that the operators parse, and
+requesting a real codec raises NotImplementedError at the exact point a
+PIL/ffmpeg call would slot in.
 
 Synthetic payload layout (big-endian):
   magic   3 bytes  b"SYN"
@@ -30,10 +30,6 @@ from pyspark.sql import DataFrame
 MEDIA_SCHEMA = (
     "media_id long, payload binary, "
     "meta struct<kind: string, declared_w: int, declared_h: int>"
-)
-
-DECODED_SCHEMA = (
-    "media_id long, kind string, width int, height int, n_bytes int, ok boolean"
 )
 
 _KINDS = ("image", "audio", "video")
@@ -77,110 +73,7 @@ def synthetic_media(spark, n: int = 100, partitions: int | None = None) -> DataF
     return rng.mapInPandas(gen, schema=MEDIA_SCHEMA)
 
 
-def decode_media(df: DataFrame, codec: str = "synthetic") -> DataFrame:
-    """Parse payload headers into typed columns via Arrow-batched
-    mapInPandas. `codec` selects the decode backend; only the synthetic
-    header parser exists in this environment."""
-    if codec not in SUPPORTED_CODECS:
-        raise NotImplementedError(
-            f"codec {codec!r}: real decoders (PIL/ffmpeg) are not available in "
-            "this environment; the mapInPandas plumbing below is where they "
-            "plug in"
-        )
-
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {"media_id": [], "kind": [], "width": [], "height": [], "n_bytes": [], "ok": []}
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                raw = bytes(payload)
-                ok = raw[:3] == b"SYN" and len(raw) >= 8
-                kind, w, h = (
-                    struct.unpack(">BHH", raw[3:8]) if ok else (0, 0, 0)
-                )
-                out["media_id"].append(mid)
-                out["kind"].append(_KINDS[kind] if ok and kind < 3 else "unknown")
-                out["width"].append(w)
-                out["height"].append(h)
-                out["n_bytes"].append(len(raw))
-                out["ok"].append(ok)
-            yield pd.DataFrame(out)
-
-    return df.select("media_id", "payload").mapInPandas(decode, schema=DECODED_SCHEMA)
-
-
-def sample_frames(
-    df: DataFrame, n_frames: int = 4, codec: str = "synthetic"
-) -> DataFrame:
-    """Frame sampling (1 video row -> n_frames frame rows) via mapInPandas —
-    the UDTF-shaped expansion a video pipeline needs before per-frame
-    feature extraction. Frames are evenly spaced over a nominal duration.
-    The synthetic backend derives each frame's bytes deterministically from
-    the payload body; a real backend would seek/decode with ffmpeg here.
-
-    Scale shape: the expansion is per-row and partition-preserving (no
-    shuffle); downstream per-frame work inherits the input partitioning, so
-    fan-out N never concentrates on one executor."""
-    if codec not in SUPPORTED_CODECS:
-        raise NotImplementedError(f"codec {codec!r} unavailable (stub environment)")
-
-    out_schema = "media_id long, frame_idx int, frame_ts_ms int, frame binary"
-
-    def sample(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {"media_id": [], "frame_idx": [], "frame_ts_ms": [], "frame": []}
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                raw = bytes(payload)
-                ok = raw[:3] == b"SYN" and len(raw) >= 8
-                body = raw[8:] if ok else b""
-                nominal_ms = 1000 * (1 + len(body) % 7)  # synthetic duration
-                for i in range(n_frames):
-                    out["media_id"].append(mid)
-                    out["frame_idx"].append(i)
-                    out["frame_ts_ms"].append(i * nominal_ms // max(n_frames - 1, 1))
-                    # a real decoder would seek to frame_ts_ms; the stub
-                    # rolls the body bytes so frames differ deterministically
-                    out["frame"].append(body[i % max(len(body), 1):] + body[: i % max(len(body), 1)])
-            yield pd.DataFrame(out)
-
-    return df.select("media_id", "payload").mapInPandas(sample, schema=out_schema)
-
-
 FEATURE_DIM = 16
-
-
-def extract_features(
-    df: DataFrame,
-    payload_col: str = "payload",
-    id_cols: tuple[str, ...] = ("media_id",),
-) -> DataFrame:
-    """Feature extraction: binary payload -> fixed-dim float vector
-    (*id_cols, feature array<float>). The synthetic featurizer is an
-    L2-normalized 16-bin byte histogram — deterministic, so tests can pin
-    values; a real backend (CLIP/CNN forward pass) slots into the same
-    Arrow-batched mapInPandas seam with the same output schema, ready for
-    the similarity/dedup operators that consume array<float> columns.
-    `id_cols` pass through, so per-frame featurization keys on
-    (media_id, frame_idx)."""
-    from pyspark.sql.types import ArrayType, FloatType, StructField, StructType
-
-    id_fields = df.select(*id_cols).schema.fields
-    out_schema = StructType([*id_fields, StructField("feature", ArrayType(FloatType()))])
-
-    def featurize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in batches:
-            feats = []
-            for payload in pdf[payload_col]:
-                arr = np.frombuffer(bytes(payload), dtype=np.uint8)
-                hist = np.bincount(arr >> 4, minlength=FEATURE_DIM).astype("float64")
-                norm = float(np.sqrt((hist * hist).sum()))
-                feats.append((hist / norm if norm else hist).astype("float32"))
-            out = {c: pdf[c] for c in id_cols}
-            out["feature"] = feats
-            yield pd.DataFrame(out)
-
-    return df.select(*id_cols, payload_col).mapInPandas(featurize, schema=out_schema)
 
 
 def video_features(
@@ -189,13 +82,21 @@ def video_features(
     """Fused frame-sample + featurize: ONE Arrow stage from video payload to
     (media_id, frame_idx, frame_ts_ms, feature).
 
-    `sample_frames` |> `extract_features` is the composable form, but each
-    mapInPandas is its own Python-worker stage, and the intermediate frame
-    BYTES cross the Arrow boundary twice. A production video pipeline
-    decodes and featurizes in the same process pass precisely to avoid
-    re-serializing frames; this operator is that pass — same per-frame
-    results as the two-stage composition (pytest pins parity), one worker
-    chain, frames never leave Python."""
+    Frames are evenly spaced over a nominal duration; the synthetic backend
+    derives each frame's bytes by rolling the payload body, where a real
+    backend would seek/decode with ffmpeg. The featurizer is an
+    L2-normalized 16-bin byte histogram — deterministic, so tests can pin
+    values; a real backend (CLIP/CNN forward pass) slots into the same seam
+    with the same output schema, ready for the similarity/dedup operators
+    that consume array<float> columns.
+
+    Sampling and featurizing as two mapInPandas stages would make two
+    Python-worker stages and send the intermediate frame BYTES across the
+    Arrow boundary twice. A production video pipeline decodes and
+    featurizes in the same process pass precisely to avoid re-serializing
+    frames; this operator is that pass — one worker chain, frames never
+    leave Python. The expansion is per-row and partition-preserving (no
+    shuffle), so fan-out never concentrates on one executor."""
     if codec not in SUPPORTED_CODECS:
         raise NotImplementedError(f"codec {codec!r} unavailable (stub environment)")
 
@@ -233,7 +134,7 @@ def audio_windows(
 ) -> DataFrame:
     """Audio window segmentation + per-window features: 1 audio row ->
     ceil(duration/window) rows of (media_id, win_idx, win_start_ms, rms,
-    zero_crossings, n_samples) — the audio analog of `sample_frames`
+    zero_crossings, n_samples) — the audio analog of video frame sampling
     (VAD, diarization, and audio-embedding pipelines all start with this
     cut). The synthetic backend treats body bytes as uint8 samples at the
     header's declared rate; a real backend would pydub/torchaudio-decode

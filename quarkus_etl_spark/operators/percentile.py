@@ -36,24 +36,15 @@ def exact_percentiles_multi(
     df: DataFrame,
     keys: list[str],
     specs: dict[str, dict[str, float]],
-    strategy: str = "window",
 ) -> DataFrame:
     """One row per key carrying every requested percentile.
 
     `specs` maps value_col -> {output alias -> percentile p in [0, 1]}.
     Exact interpolated (quantile_cont) values, computed from value
-    histograms so no task ever buffers a group's raw rows.
-
-    `strategy` picks how the cumulative counts are computed:
-    - "window": one ordered window per (key, col) — each group's whole
-      histogram sorts in ONE task. Domain-bounded (fine up to ~10M
-      distinct values per group) and the fewest shuffles.
-    - "prefix": two-level distributed prefix sum — histogram rows are
-      range-bucketed by value, cumsums run per (key, col, bucket) in
-      PARALLEL, and per-bucket totals (groups x B tiny rows) provide the
-      offsets. Same exact output (parity-tested); use when a single
-      group's distinct-value count is itself too large for one task's
-      sort — the remaining per-task work is 1/B of the domain."""
+    histograms so no task ever buffers a group's raw rows. The cumulative
+    counts run over one ordered window per (key, col), so each group's
+    whole histogram sorts in ONE task: domain-bounded (fine up to ~10M
+    distinct values per group) and the fewest shuffles."""
     from ..plans.tuning import ensure_parallelism
 
     cols = list(specs)
@@ -66,7 +57,7 @@ def exact_percentiles_multi(
     ).where(F.col("__v").isNotNull())
 
     hist = stacked.groupBy(*keys, "__col", "__v").agg(F.count(F.lit(1)).alias("__c"))
-    return _percentiles_over_hist(hist, keys, specs, strategy)
+    return _percentiles_over_hist(hist, keys, specs)
 
 
 def percentiles_from_hist(
@@ -75,7 +66,6 @@ def percentiles_from_hist(
     value_col: str,
     count_col: str,
     targets: dict[str, float],
-    strategy: str = "window",
 ) -> DataFrame:
     """Exact percentiles from a PRE-BUILT (key, value) -> count histogram.
 
@@ -84,7 +74,7 @@ def percentiles_from_hist(
     passes — q_outlier_mad), this skips the raw-row stage entirely and
     runs the identical cumsum + quantile_cont machinery over the supplied
     counts. NULL-valued histogram cells are ignored, matching
-    exact_percentiles' treatment of NULL rows. Duplicate (key, value)
+    exact_percentiles_multi's treatment of NULL rows. Duplicate (key, value)
     cells are re-aggregated first so cumulative ranges stay a partition
     of the rank space."""
     h = (
@@ -93,72 +83,25 @@ def percentiles_from_hist(
         .agg(F.sum(F.col(count_col).cast("long")).alias("__c"))
         .select(*keys, F.lit(value_col).alias("__col"), "__v", "__c")
     )
-    return _percentiles_over_hist(h, keys, {value_col: targets}, strategy)
+    return _percentiles_over_hist(h, keys, {value_col: targets})
 
 
 def _percentiles_over_hist(
     hist: DataFrame,
     keys: list[str],
     specs: dict[str, dict[str, float]],
-    strategy: str,
 ) -> DataFrame:
     """Steps 2-4 of the module docstring: cumulative counts + rank
     arithmetic + interpolation over a (keys, __col, __v) -> __c histogram."""
     wn = Window.partitionBy(*keys, "__col")
-    if strategy == "window":
-        w = Window.partitionBy(*keys, "__col").orderBy("__v")
-        # Both frames share one exchange + one sort: wn's required
-        # clustering (keys, __col) is what w already hash-partitions on.
-        joined = (
-            hist.withColumn("__end", F.sum("__c").over(w))
-            .withColumn("__start", F.col("__end") - F.col("__c"))
-            .withColumn("__n", F.sum("__c").over(wn))
-        )
-    elif strategy == "prefix":
-        B = 32
-        # Range-bucket each histogram row by its value's position in the
-        # group's [min, max] span. Bounds come from a tiny aggregate over
-        # the histogram (map-side-combined, parallel) broadcast back — NOT
-        # a window, which would haul each group into one task, the exact
-        # bottleneck this strategy removes; AQE reuses the histogram's
-        # shuffle stage for both consumers. Bucketing only routes rows;
-        # values never change, so output is bit-identical to "window".
-        bounds = hist.groupBy(*keys, "__col").agg(
-            F.min("__v").alias("__mn"), F.max("__v").alias("__mx")
-        )
-        hb = hist.join(F.broadcast(bounds), [*keys, "__col"])
-        mn, mx = F.col("__mn"), F.col("__mx")
-        span = F.when(mx > mn, mx - mn).otherwise(F.lit(1.0))
-        bucket = F.least(
-            F.floor((F.col("__v") - mn) / span * B).cast("int"), F.lit(B - 1)
-        )
-        hb = hb.withColumn("__b", bucket).drop("__mn", "__mx")
-        # Level 2 FIRST (so its subtree excludes the level-1 sort): offsets
-        # from per-bucket totals (groups x B rows — tiny; its window and
-        # the broadcast join back are negligible).
-        btot = hb.groupBy(*keys, "__col", "__b").agg(F.sum("__c").alias("__bt"))
-        # Level 1: cumsum WITHIN each (key, col, bucket) — B-way parallel.
-        wloc = Window.partitionBy(*keys, "__col", "__b").orderBy("__v")
-        hb = hb.withColumn("__local_end", F.sum("__c").over(wloc))
-        woff = (
-            Window.partitionBy(*keys, "__col")
-            .orderBy("__b")
-            .rowsBetween(Window.unboundedPreceding, -1)
-        )
-        btot = btot.select(
-            *keys,
-            "__col",
-            "__b",
-            F.coalesce(F.sum("__bt").over(woff), F.lit(0)).alias("__off"),
-            F.sum("__bt").over(Window.partitionBy(*keys, "__col")).alias("__n"),
-        )
-        joined = (
-            hb.join(F.broadcast(btot), [*keys, "__col", "__b"])
-            .withColumn("__end", F.col("__local_end") + F.col("__off"))
-            .withColumn("__start", F.col("__end") - F.col("__c"))
-        )
-    else:  # pragma: no cover - caller error
-        raise ValueError(f"unknown strategy {strategy!r}")
+    w = Window.partitionBy(*keys, "__col").orderBy("__v")
+    # Both frames share one exchange + one sort: wn's required clustering
+    # (keys, __col) is what w already hash-partitions on.
+    joined = (
+        hist.withColumn("__end", F.sum("__c").over(w))
+        .withColumn("__start", F.col("__end") - F.col("__c"))
+        .withColumn("__n", F.sum("__c").over(wn))
+    )
 
     # Hoist each target's rank arithmetic (r = p*(n-1), floor/ceil) into
     # named columns computed ONCE per histogram row: the aggregate
@@ -223,12 +166,3 @@ def _percentiles_over_hist(
             )
     return joined.groupBy(*keys).agg(*aggs)
 
-
-def exact_percentiles(
-    df: DataFrame,
-    keys: list[str],
-    value_col: str,
-    targets: dict[str, float],
-) -> DataFrame:
-    """Single-column convenience wrapper over exact_percentiles_multi."""
-    return exact_percentiles_multi(df, keys, {value_col: targets})

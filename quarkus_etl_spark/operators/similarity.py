@@ -496,7 +496,6 @@ def knn_graph_ann(
     dim: int,
     k: int = 3,
     block_col: str | None = None,
-    collapse_duplicates: bool = True,
 ) -> DataFrame:
     """APPROXIMATE k-NN graph — the scale path for exact blocked kNN
     (quadratic per block): exact-cosine top k per source over the
@@ -514,7 +513,7 @@ def knn_graph_ann(
     0.97 (sf0.001), but 0.78 at sf0.1 (2000 vectors), under the 0.85
     floor pytest pins. Recall is approximate by design.
 
-    EXACT-DUPLICATE COLLAPSE (default on): identical vectors share every
+    EXACT-DUPLICATE COLLAPSE: identical vectors share every
     sign bit under every plane family, so no plane count can split them
     — bucket population is >= the duplicate multiplicity and the bucket
     join is QUADRATIC in it. Measured: 2M vectors as 2000 distinct x 1000
@@ -525,16 +524,15 @@ def knn_graph_ann(
     neighbors are fellow copies (exact duplicates ARE the true top-k,
     cosine 1.0 for nonzero vectors; 0.0 for identical ZERO vectors and
     no fellow edges at all for NULL vectors, matching the sql_cosine
-    convention the uncollapsed path applies) from a k+1-bounded
+    convention the plain path applies) from a k+1-bounded
     per-group head list, merged with its
     representative's graph edges through one bounded top-k window. The
     group aggregate collapses duplicates MAP-SIDE (the exchange carries
     ~distinct vectors), and when it counts as many groups as input rows
     the input is routed straight to the plain LSH path, so pristine data
-    pays one map-combined aggregate and nothing else. For all-distinct
-    inputs the output is identical to the uncollapsed form (pinned by
-    test); LSH work is quadratic only in DISTINCT bucket population,
-    which auto_planes bounds.
+    pays one map-combined aggregate and nothing else. LSH work is
+    quadratic only in DISTINCT bucket population, which auto_planes
+    bounds.
 
     `dim` is the column's declared vector dimension (the load contract's,
     e.g. queries.base.EMB_DIM): it sizes the hyperplanes, and a row whose
@@ -550,36 +548,32 @@ def knn_graph_ann(
         _auto_planes(df) + (len(KNN_TABLE_SEEDS) - 1).bit_length(), AUTO_PLANES_MAX
     )
     raw = ensure_parallelism(_contract_projection(df, id_col, vec_col, dim, block_col))
-    members = None
-    if collapse_duplicates:
-        grp = ["__v"] + (["__blk"] if block_col is not None else [])
-        # hash aggregate keyed on the vector itself (bit-exact grouping, no
-        # collision risk) — map-side partials collapse duplicates BEFORE
-        # the shuffle, so the exchange carries ~distinct vectors only
-        groups = raw.groupBy(*grp).agg(
-            F.min(id_col).alias("__rep"), F.count(F.lit(1)).alias("__m")
+    grp = ["__v"] + (["__blk"] if block_col is not None else [])
+    # hash aggregate keyed on the vector itself (bit-exact grouping, no
+    # collision risk) — map-side partials collapse duplicates BEFORE the
+    # shuffle, so the exchange carries ~distinct vectors only
+    groups = raw.groupBy(*grp).agg(
+        F.min(id_col).alias("__rep"), F.count(F.lit(1)).alias("__m")
+    )
+    # Adaptive routing (same pattern as fits_exact_pairwise): the expansion
+    # machinery only pays when duplicates EXIST. A corpus that already ran
+    # exact dedup — or the pristine fixtures — takes the zero-extra-shuffle
+    # plain path. Group sizes sum to the row count, so fewer groups than
+    # rows is exactly "some group has __m > 1"; both counts are cached
+    # routing_count scalars, and the row count is the one auto plane
+    # sizing already paid for.
+    if routing_count(groups) < routing_count(df):
+        nodes = groups.select(F.col("__rep").alias(id_col), *grp)
+        members = raw.join(groups, grp).select(
+            F.col(id_col).alias("__src"),
+            "__rep",
+            "__m",
+            # group norm, carried so the fellow-edge shortcut can honor the
+            # sql_cosine convention (see the fellows projection)
+            l2_norm("__v").alias("__gn"),
         )
-        # Adaptive routing (same pattern as fits_exact_pairwise): the
-        # expansion machinery only pays when duplicates EXIST. A corpus
-        # that already ran exact dedup — or the pristine fixtures — takes
-        # the zero-extra-shuffle path. Group sizes sum to the row count,
-        # so fewer groups than rows is exactly "some group has __m > 1";
-        # both counts are cached routing_count scalars, and the row count
-        # is the one auto plane sizing already paid for.
-        if routing_count(groups) < routing_count(df):
-            nodes = groups.select(F.col("__rep").alias(id_col), *grp)
-            members = raw.join(groups, grp).select(
-                F.col(id_col).alias("__src"),
-                "__rep",
-                "__m",
-                # group norm, carried so the fellow-edge shortcut can honor
-                # the sql_cosine convention (see the fellows projection)
-                l2_norm("__v").alias("__gn"),
-            )
-        else:
-            nodes = raw
     else:
-        nodes = raw
+        nodes, members = raw, None
     # A missing vector has no similarity: _lsh_candidates drops it, where
     # it would otherwise bucket as 0 (it sets no bit) and take k
     # NULL-cosine edges.
@@ -623,7 +617,7 @@ def knn_graph_ann(
         .agg(F.sort_array(F.collect_list(F.col("__src"))).alias("__head"))
     )
     fellows = (
-        # NULL-vector groups are excluded entirely: with collapse off such
+        # NULL-vector groups are excluded entirely: on the plain path such
         # rows never reach the bucket join and emit zero edges, so the
         # expansion must not mint edges for them either.
         dup.where(F.col("__gn").isNotNull())
@@ -638,9 +632,9 @@ def knn_graph_ann(
             # identical NONZERO vectors: the true cosine, not the float
             # fold. Identical ZERO vectors (failed-encoder rows duplicate
             # naturally) follow the sql_cosine convention — 0.0, not
-            # 1.0 — so collapse on/off agree on where they rank (a 1.0
-            # here would make zero vectors top-ranked neighbors while the
-            # uncollapsed path ranks them last at 0.0).
+            # 1.0 — so both paths agree on where they rank (a 1.0 here
+            # would make zero vectors top-ranked neighbors while the plain
+            # path ranks them last at 0.0).
             F.when(F.col("__gn") > 0, F.lit(1.0))
             .otherwise(F.lit(0.0))
             .alias("cosine"),

@@ -1,12 +1,5 @@
-"""Plan inspection & tuning helpers (SURVEY.md §4): pushdown/broadcast
-assertions for tests, and partitioning guards for compute-heavy operators."""
+"""Plan inspection & tuning helpers (SURVEY.md §4): plan text capture, and
+partitioning guards for compute-heavy operators."""
 
-from .explain import (  # noqa: F401
-    assert_broadcast_join,
-    assert_in_plan,
-    assert_pushed_filter,
-    assert_read_schema_only,
-    assert_take_ordered,
-    plan_string,
-)
+from .explain import plan_string  # noqa: F401
 from .tuning import ensure_parallelism  # noqa: F401

@@ -1,10 +1,8 @@
-"""Physical-plan assertions (SURVEY.md §4.2: "don't defeat Catalyst").
+"""Plan text capture (SURVEY.md §4.2: "don't defeat Catalyst").
 
-Test helpers that inspect `explain(formatted)` output to pin the plans we
-rely on for scale: filters pushed into the parquet scan, column-pruned read
-schemas, broadcast joins where hinted, TakeOrderedAndProject for top-k.
-A passing value-check with a regressed plan is exactly the failure mode
-these exist to catch.
+`plan_string` returns a frame's `explain(mode)` output as a string, for the
+plan dumps of the measurement tools and the plan assertions in
+tests/test_plans.py.
 """
 
 from __future__ import annotations
@@ -20,42 +18,3 @@ def plan_string(df: DataFrame, mode: str = "formatted") -> str:
     with redirect_stdout(buf):
         df.explain(mode=mode)
     return buf.getvalue()
-
-
-def assert_in_plan(df: DataFrame, fragment: str, mode: str = "formatted") -> None:
-    plan = plan_string(df, mode)
-    assert fragment in plan, f"expected {fragment!r} in plan:\n{plan}"
-
-
-def assert_pushed_filter(df: DataFrame, column: str) -> None:
-    """The parquet scan must carry a pushed filter on `column`."""
-    plan = plan_string(df)
-    pushed = [line for line in plan.splitlines() if "PushedFilters" in line]
-    assert pushed, f"no PushedFilters line in plan:\n{plan}"
-    assert any(column in line for line in pushed), (
-        f"filter on {column!r} not pushed to scan: {pushed}\n{plan}"
-    )
-
-
-def assert_read_schema_only(df: DataFrame, columns: set[str]) -> None:
-    """Column pruning: the scan's ReadSchema must contain exactly/only the
-    expected columns (a scan reading all columns for a narrow projection is
-    wrong at any scale)."""
-    plan = plan_string(df)
-    read_lines = [line for line in plan.splitlines() if "ReadSchema" in line]
-    assert read_lines, f"no ReadSchema in plan:\n{plan}"
-    for line in read_lines:
-        schema_part = line.split("ReadSchema:", 1)[1]
-        present = {
-            tok.split(":")[0].strip() for tok in schema_part.strip(" struct<>").split(",") if tok
-        }
-        extra = present - columns
-        assert not extra, f"scan reads unneeded columns {extra} (wanted {columns}):\n{plan}"
-
-
-def assert_broadcast_join(df: DataFrame) -> None:
-    assert_in_plan(df, "BroadcastHashJoin")
-
-
-def assert_take_ordered(df: DataFrame) -> None:
-    assert_in_plan(df, "TakeOrderedAndProject")

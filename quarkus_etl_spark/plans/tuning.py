@@ -107,52 +107,8 @@ def routing_count(df: DataFrame) -> int:
     return n
 
 
-def materialize_once(df: DataFrame, eager: bool = True) -> DataFrame:
-    """Materialize a multi-consumer intermediate once so its (expensive)
-    subtree does not re-execute per consumer — the guide-§8.4 "compute the
-    fingerprints once" step. Strategy is env-gated (VERDICT r11 #5: the
-    right mechanism differs by deployment, so it must be a conf, not a
-    hard-coded call):
-
-    - SPARK_GRAFT_MATERIALIZE=local (default): `localCheckpoint` —
-      executor-local blocks, lineage truncated, cheapest. NOT
-      fault-tolerant: after an executor loss the blocks are unrecoverable
-      and the job dies (guide §5) — the right trade on a sandbox/bench or
-      short job where executor loss is rare and a retry is cheap.
-    - SPARK_GRAFT_MATERIALIZE=persist: `persist(MEMORY_AND_DISK)` (+ an
-      eager materializing count when `eager`) — keeps lineage, so a lost
-      partition recomputes from source instead of killing the job: the
-      fault-tolerant form for long cluster runs (SCALE.md §materialization;
-      the write-out-and-read-back of guide §8.1 is the third rung when
-      even recomputation is too expensive).
-
-    `eager` stays True for frames whose consumers land in one job:
-    concurrent stages each compute an unmaterialized lazy intermediate
-    (the r11 CC rejection-#4 double-compute), so laziness is only safe
-    when a single action (e.g. a convergence count) runs first.
-    Lifetime note: blocks/cache live until session end, same as the
-    pre-existing localCheckpoint call sites — these are per-query frames
-    at fixture scale; a long-lived session at `persist` can unpersist()."""
-    import os
-
-    mode = os.environ.get("SPARK_GRAFT_MATERIALIZE", "local").strip().lower()
-    if mode == "persist":
-        from pyspark.storagelevel import StorageLevel
-
-        out = df.persist(StorageLevel.MEMORY_AND_DISK)
-        if eager:
-            out.count()
-        return out
-    if mode not in ("", "local"):
-        raise ValueError(
-            f"SPARK_GRAFT_MATERIALIZE must be 'local' or 'persist', got {mode!r}"
-        )
-    return df.localCheckpoint(eager=eager)
-
-
-def ensure_parallelism(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
-    spark = df.sparkSession
-    target = min_partitions or spark.sparkContext.defaultParallelism
+def ensure_parallelism(df: DataFrame) -> DataFrame:
+    target = df.sparkSession.sparkContext.defaultParallelism
     # Probe with inputFiles() — file listing over the analyzed plan only.
     # The previous probe (df.rdd.getNumPartitions()) runs the FULL
     # optimizer + physical-planning pipeline on the driver: measured 4.6 s

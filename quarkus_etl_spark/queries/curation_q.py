@@ -1346,11 +1346,8 @@ def q_graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     # consumers land in one job, where a lazy checkpoint can double-compute
     # under concurrent stages). r11 A/B at sf0.1: 2.02 -> 1.90 s min; at
     # scale this removes 3 redundant evaluations of the quadratic-per-order
-    # pair build. Env-gated strategy for scale (VERDICT r11 #5): default
-    # localCheckpoint, SPARK_GRAFT_MATERIALIZE=persist for fault tolerance.
-    from ..plans.tuning import materialize_once
-
-    e = materialize_once(e)
+    # pair build.
+    e = e.localCheckpoint()
     e1, e2, e3 = e.alias("e1"), e.alias("e2"), e.alias("e3")
     tri = (
         e1.join(e2, F.col("e2.pa") == F.col("e1.pb"))

@@ -30,7 +30,7 @@ from ..operators.similarity import (
     lsh_topk,
     pairwise_similar,
 )
-from ..plans.tuning import ensure_parallelism, materialize_once
+from ..plans.tuning import ensure_parallelism
 from .base import EMB_DIM, emb, register, t
 
 
@@ -701,7 +701,7 @@ def q_sim_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     # min over 6 pairs at sf0.1; this query has no plan-keyed routing
     # probes on the hot path, unlike q_knn_graph_ann where the same change
     # was re-rejected — see that site).
-    e = materialize_once(ensure_parallelism(e))
+    e = ensure_parallelism(e).localCheckpoint()
     probe = _probe_vec(spark, sf_dir)
     ann = ivf_topk(
         e, "embedding", "vec_id", probe, k=10, n_cells=16, nprobe=3
@@ -980,9 +980,11 @@ def q_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate-message pattern Pregel reduces to on a relational engine:
     join scores to edges, divide by out-degree, sum messages per target —
     one shuffle per iteration, all map-side combinable. Fixed small k
-    unrolls into one plan; for open-ended convergence loops persist +
-    checkpoint each round to truncate lineage (operators/cluster.py does
-    exactly that for connected components). Determinism across engines:
+    unrolls into one plan; an open-ended convergence loop would checkpoint
+    each round to truncate lineage, as operators/cluster.py's
+    connected_components does in its hash-to-min rounds above
+    LOCAL_EDGE_CAP edges (at or under the cap it solves the whole graph in
+    one grouped-map task instead). Determinism across engines:
     each message quantizes to DECIMAL(18,9) BEFORE the order-sensitive
     sum, so partial-aggregation order cannot skew the double."""
     d = t(spark, sf_dir, "documents")
@@ -992,9 +994,9 @@ def q_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The pair graph is referenced by every superstep: localCheckpoint
     # truncates the (expensive) similarity-join lineage so it executes
     # once, not once per iteration — same discipline as
-    # connected_components. Lazy: materializes on first use. Symmetrized
-    # via explode (r12): the union form evaluated the Jaccard-join pair
-    # subtree once per branch.
+    # connected_components' edge checkpoint. Lazy: materializes on first
+    # use. Symmetrized via explode (r12): the union form evaluated the
+    # Jaccard-join pair subtree once per branch.
     from ..operators.cluster import symmetrized_edges
 
     edges = symmetrized_edges(pairs, "id_a", "id_b").localCheckpoint(eager=False)
@@ -1269,7 +1271,7 @@ def q_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     # of the bucket self-join read it instead of re-deriving the
     # signature pipeline (eager: the join sides land in one job).
     # Interleaved A/B (with the explode rewrite): 3.069 -> 1.678 s min.
-    bands = materialize_once(bands)
+    bands = bands.localCheckpoint()
     a, b = bands.alias("a"), bands.alias("b")
     return (
         a.join(
@@ -1743,11 +1745,9 @@ def q_emb_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     c1 = update(a1)
     # The final result reads a2 through TWO branches (sizes directly,
     # checksums via c2); without truncation each branch re-runs the whole
-    # iterative chain. a2 is |n| x 2 longs — materialize it once
-    # (cluster.py's iterative-plan rule; eager — both consumers land in
-    # one job — and env-gated for scale, plans/tuning.materialize_once),
-    # so the chain executes once.
-    a2 = materialize_once(assign(to_arrays(c1)))
+    # iterative chain. a2 is |n| x 2 longs — checkpoint it (eager: both
+    # consumers land in one job), so the chain executes once.
+    a2 = assign(to_arrays(c1)).localCheckpoint()
     c2 = update(a2)
 
     sizes = a2.groupBy("cluster").agg(F.count(F.lit(1)).alias("n_members"))

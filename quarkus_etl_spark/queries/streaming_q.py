@@ -3,10 +3,10 @@
 The reference's pipeline is itself a streaming producer/consumer
 (EtlMain.kt:51-56); its Spark analog is Structured Streaming. These queries
 pin the *event-time semantics* (tumbling / sliding / session windows,
-keyed dedup) in batch mode, where DuckDB can oracle them; the live
-readStream variants (watermarks, dropDuplicatesWithinWatermark, the
-stream-stream interval join) live in quarkus_etl_spark.streaming and are
-smoke-tested in tests/ (rows-only — no SQL oracle exists for state).
+keyed dedup) in batch mode, where DuckDB can oracle them; the
+q_stream_live_* queries below run the same shapes as real readStream
+micro-batch executions over `quarkus_etl_spark.streaming`'s file source
+and memory sink.
 
 Window-alignment note: Spark's `window()` aligns to the epoch; DuckDB's
 `time_bucket` sub-day origin is 2000-01-01, which is itself 5-minute-aligned
@@ -231,8 +231,8 @@ def q_stream_live_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     micro-batches split — which is what makes a live stateful-dedup
     execution oracle-checkable (non-key columns would expose the engine's
     arbitrary which-duplicate-won choice). State is bounded by the key
-    domain; the watermarked variant (q_stream_dedup + streams.py
-    dedup_within_watermark) bounds it by time instead."""
+    domain; a watermarked `dropDuplicatesWithinWatermark` would bound it
+    by time instead (q_stream_dedup is its batch analog)."""
     from ..streaming.streams import file_stream
 
     path = _replay_events(spark, sf_dir, "events_stream_dd")

@@ -329,7 +329,7 @@ def q_win_session_native(spark: SparkSession, sf_dir: str) -> DataFrame:
     session_window(ts, gap) merges each user's events into dynamic
     sessions executor-side — no window-function pass, and the same
     primitive runs unchanged under Structured Streaming with state-store
-    session merging (streaming/streams.py::sessionized_stream).
+    session merging (q_stream_live_session).
 
     Semantics pinned by the oracle: Spark merges an event into the open
     session iff it starts strictly before last_ts + gap, so an event at

@@ -7,5 +7,5 @@ matrix (parquet/csv/json/orc + jdbc) with the reference's transport defaults
 (2000-row write batches) preserved on the JDBC path.
 """
 
-from .readers import read_csv, read_jdbc, read_json, read_parquet  # noqa: F401
+from .readers import read_jdbc  # noqa: F401
 from .writers import write_dataframe, write_jdbc  # noqa: F401

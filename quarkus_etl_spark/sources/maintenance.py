@@ -5,23 +5,15 @@ pipeline runs continuously:
   date/key predicates prune whole directories at the SCAN (PartitionFilters
   in the plan), the single biggest lever for time-ranged queries over an
   append-only corpus.
-- `compact_small_files`: bin-pack a fragmented dataset into ~target-size
-  files. Streaming sinks and per-batch appends produce thousands of KB-size
-  files; each costs a task + open + footer read per query. Compaction
-  rewrites to size-targeted files without changing values.
 
 The reference has no table maintenance at all (its sink is an RDBMS —
-EtlMain.kt:76-88); these are the Spark-native equivalents its users get for
-free from the warehouse.
+EtlMain.kt:76-88); this is the Spark-native equivalent of what its users get
+for free from the warehouse.
 """
 
 from __future__ import annotations
 
-import math
-import os
-
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 
 
 def write_partitioned(
@@ -34,56 +26,3 @@ def write_partitioned(
     columns scan only matching directories — partition pruning happens at
     planning, before any file is opened."""
     df.write.mode(mode).partitionBy(*partition_by).parquet(path)
-
-
-def _data_files(path: str) -> list[str]:
-    out = []
-    for root, _dirs, files in os.walk(path):
-        out.extend(
-            os.path.join(root, f)
-            for f in files
-            if f.endswith(".parquet") and not f.startswith(("_", "."))
-        )
-    return out
-
-
-def compact_small_files(
-    spark: SparkSession,
-    path: str,
-    target_file_bytes: int = 128 * 1024 * 1024,
-    partition_by: list[str] | None = None,
-) -> int:
-    """Rewrite `path` so each output file is ~`target_file_bytes`. Returns
-    the new file count.
-
-    File count = ceil(current_bytes / target): computed from the existing
-    footprint (already-compressed bytes — no sampling pass). Values are
-    preserved exactly; only layout changes. With `partition_by`, the
-    repartition key includes the partition columns so each hive directory
-    is written by the tasks that own it (no cross-partition shuffle fanout:
-    one file per partition-dir per owning task, not per task x dir).
-
-    At cluster scale the same routine runs per-partition-predicate (compact
-    yesterday's dt= directory) instead of whole-table; the rewrite itself
-    is one narrow-to-shuffle job either way."""
-    files = _data_files(path)
-    total = sum(os.path.getsize(f) for f in files)
-    n_out = max(1, math.ceil(total / target_file_bytes))
-    df = spark.read.parquet(path)
-    tmp = path.rstrip("/") + ".__compacting__"
-    if partition_by:
-        # spread within each hive partition: shuffle on (partition cols,
-        # uniform salt) so every directory gets ≤ its share of files
-        per_dir = max(1, n_out)
-        repartitioned = df.repartition(
-            per_dir, *[F.col(c) for c in partition_by], F.spark_partition_id()
-        )
-        repartitioned.write.mode("overwrite").partitionBy(*partition_by).parquet(tmp)
-    else:
-        df.repartition(n_out).write.mode("overwrite").parquet(tmp)
-    # atomic-ish swap (single filesystem): remove old, move new into place
-    import shutil
-
-    shutil.rmtree(path)
-    os.rename(tmp, path)
-    return len(_data_files(path))

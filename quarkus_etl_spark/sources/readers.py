@@ -6,45 +6,14 @@ engine and streams the cursor (EtlMain.kt:103-108). Spark equivalents:
 - JDBC: `format("jdbc").option("query", sql)` — the *whole query* is pushed
   down, exactly like the reference; `partition_column/num_partitions` add
   what the reference never had: parallel range-partitioned reads.
-- Files: native parquet/csv/json readers with schema inference (A4) —
-  Catalyst prunes columns and pushes predicates into the scan.
+- Files: Spark's native parquet/csv/json readers, called directly
+  (`spark.read...`) — Catalyst prunes columns and pushes predicates into
+  the scan.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.types import StructType
-
-
-def read_parquet(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.parquet(path)
-
-
-def read_csv(
-    spark: SparkSession,
-    path: str,
-    schema: StructType | str | None = None,
-    header: bool = True,
-    **options: str,
-) -> DataFrame:
-    reader = spark.read.option("header", str(header).lower())
-    if schema is not None:
-        reader = reader.schema(schema)
-    else:
-        reader = reader.option("inferSchema", "true")  # A4 dynamic inference
-    return reader.options(**options).csv(path)
-
-
-def read_json(
-    spark: SparkSession,
-    path: str,
-    schema: StructType | str | None = None,
-    **options: str,
-) -> DataFrame:
-    reader = spark.read
-    if schema is not None:
-        reader = reader.schema(schema)
-    return reader.options(**options).json(path)
 
 
 def jdbc_read_options(

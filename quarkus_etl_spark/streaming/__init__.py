@@ -9,11 +9,7 @@ the 2000-row chunk becomes the sink's own batchsize).
 """
 
 from .streams import (  # noqa: F401
-    dedup_within_watermark,
     file_stream,
     run_stream_to_memory,
-    sessionized_stream,
-    stream_etl_job,
     stream_stream_interval_join,
-    tumbling_stream,
 )

@@ -5,24 +5,16 @@ Design rules for scale:
   and late data has a defined drop point — an unbounded-state streaming agg
   is the same bug as the reference's UNLIMITED channel (EtlMain.kt:51),
   which we deliberately do not replicate.
-- Sinks go through foreachBatch -> the batch writers, so every sink format
-  (parquet/jdbc/table) and the 2000-row JDBC batching work identically in
-  streaming and batch.
+- Size stateful shuffle partitions to state volume (`state_partitions`).
 """
 
 from __future__ import annotations
 
-import logging
 from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
-
-from ..config import WriteTarget
-from ..sources.writers import write_dataframe
-
-log = logging.getLogger("quarkus_etl_spark.streaming")
 
 # Watermarks require TIMESTAMP (instant) semantics — Spark rejects
 # TIMESTAMP_NTZ event time — so streaming schemas use `timestamp`; with the
@@ -45,61 +37,6 @@ def file_stream(
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
     return reader.load(source_dir)
-
-
-def tumbling_stream(
-    events: DataFrame,
-    window: str = "5 minutes",
-    watermark: str = "10 minutes",
-    ts_col: str = "ts",
-) -> DataFrame:
-    """Watermarked tumbling-window counts/sums per event type. Late rows
-    beyond the watermark are dropped (defined, bounded state)."""
-    return (
-        events.withWatermark(ts_col, watermark)
-        .groupBy(F.window(ts_col, window), "event_type")
-        .agg(F.count(F.lit(1)).alias("cnt"), F.sum("value").alias("sum_value"))
-        .select(
-            F.col("window.start").alias("window_start"),
-            F.col("window.end").alias("window_end"),
-            "event_type",
-            "cnt",
-            "sum_value",
-        )
-    )
-
-
-def sessionized_stream(
-    events: DataFrame,
-    gap: str = "5 minutes",
-    watermark: str = "10 minutes",
-    ts_col: str = "ts",
-) -> DataFrame:
-    """Watermarked session windows (inactivity gap) per user — built-in
-    `session_window` keeps merge state per key, bounded by the watermark."""
-    return (
-        events.withWatermark(ts_col, watermark)
-        .groupBy(F.session_window(ts_col, gap), "user_id")
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .select(
-            "user_id",
-            F.col("session_window.start").alias("session_start"),
-            F.col("session_window.end").alias("session_end"),
-            "n_events",
-        )
-    )
-
-
-def dedup_within_watermark(
-    events: DataFrame,
-    keys: list[str],
-    watermark: str = "10 minutes",
-    ts_col: str = "ts",
-) -> DataFrame:
-    """Stateful streaming dedup: drops key-duplicates arriving within the
-    watermark horizon; state for a key expires once the watermark passes it
-    (vs. dropDuplicates, whose state grows forever on a stream)."""
-    return events.withWatermark(ts_col, watermark).dropDuplicatesWithinWatermark(keys)
 
 
 # Executed-plan capture for the live-streaming plan-audit pin (VERDICT r8
@@ -129,25 +66,13 @@ def run_stream_to_memory(
     return q
 
 
-# Sizing heuristic for the expected_keys production path: one state
-# partition per ~1M live keys keeps a partition's store in the tens-of-MB
-# class for small per-key state (a few dozen bytes) — comfortably inside a
-# task's memory and a sub-second per-batch commit — while capping the
-# per-micro-batch fixed cost (store init/versioning/commit per partition)
-# that motivated the r11 8->4 measurement. Tune per deployment; an
-# explicit n wins over it, and with neither n nor expected_keys the local
-# default applies.
-KEYS_PER_STATE_PARTITION = 1_000_000
-
-# The local default, sized to the fixtures' tiny state (and what the bench
-# fixtures run).
+# Stateful-streaming shuffle partitions, sized to the fixtures' tiny state
+# (and what the bench fixtures run).
 LOCAL_STATE_PARTITIONS = 4
 
 
 @contextmanager
-def state_partitions(
-    spark: SparkSession, n: int | None = None, expected_keys: int | None = None
-):
+def state_partitions(spark: SparkSession):
     """Size stateful-streaming shuffle partitions to STATE volume, not CPU
     count: every state partition carries its own state store (a
     stream-stream join keeps FOUR per partition), each paying per-batch
@@ -157,60 +82,18 @@ def state_partitions(
     median over the 4-query live family at 8 -> 4 (r11 interleaved A/B;
     2 lost to under-parallelism). A streaming query pins its partition
     count at first start (from the checkpoint), so this must wrap the
-    START.
-
-    Sizing precedence (VERDICT r11 #3/#8 — the bare constant was a
-    fixture-sized foot-gun for production callers):
-    1. explicit `n`;
-    2. `expected_keys` — the PRODUCTION path: ceil(expected_keys /
-       KEYS_PER_STATE_PARTITION), clamped to [1, session shuffle
-       partitions] so state sizing never exceeds what the session would
-       use anyway;
-    3. LOCAL_STATE_PARTITIONS (4).
+    START. The session's own setting is restored on exit.
 
     The state-store provider is the session's own
     `spark.sql.streaming.stateStore.providerClass` (RocksDB is the scale
     choice when state outgrows executor memory); a deployment sets it on
     its session."""
-    if n is None and expected_keys is not None:
-        upper = int(spark.conf.get("spark.sql.shuffle.partitions"))
-        wanted = -(-int(expected_keys) // KEYS_PER_STATE_PARTITION)
-        if wanted > upper:
-            log.warning(
-                "state_partitions: expected_keys=%d asks for %d state "
-                "partitions; clamped to spark.sql.shuffle.partitions=%d",
-                expected_keys, wanted, upper,
-            )
-        n = max(1, min(upper, wanted))
-    if n is None:
-        n = LOCAL_STATE_PARTITIONS
     old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(n))
+    spark.conf.set("spark.sql.shuffle.partitions", str(LOCAL_STATE_PARTITIONS))
     try:
         yield
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", old)
-
-
-def stream_etl_job(
-    stream_df: DataFrame,
-    target: WriteTarget,
-    checkpoint_dir: str,
-) -> StreamingQuery:
-    """Streaming ETL sink via foreachBatch -> the batch writers: the exact
-    streaming analog of the reference's consumer loop (EtlMain.kt:64-93) —
-    each micro-batch is written with the same code path (and JDBC batchsize)
-    as a batch job, with checkpointed progress instead of the reference's
-    at-most-once, no-resume semantics."""
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        write_dataframe(batch_df, target)
-
-    return (
-        stream_df.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
-    )
 
 
 def stream_stream_interval_join(

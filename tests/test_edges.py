@@ -44,8 +44,7 @@ def test_chunked_empty_and_degenerate(spark, empty_docs, messy_docs):
     for r in out:
         by_doc.setdefault(r["doc_id"], []).append(r)
     # null text -> ZERO chunks (a missing doc has nothing to chunk; the
-    # oracles' unnest-of-NULL emits no rows) — identical to the
-    # explode(token_chunks(...)) composition's behavior
+    # oracles' unnest-of-NULL emits no rows)
     assert 0 not in by_doc
     # empty/whitespace text -> [""] single token -> exactly one chunk
     assert [len(by_doc[i]) for i in (1, 2, 3)] == [1, 1, 1]

@@ -164,13 +164,13 @@ def test_jdbc_sink_rejects_non_positive_num_partitions(spark, derby_url):
 def test_streaming_etl_into_jdbc_live(spark, sf_dir, derby_url, tmp_path):
     """The reference's consumer loop, live AND streaming: a file stream
     micro-batched through foreachBatch into Derby via the batched JDBC
-    writer (streams.py::stream_etl_job) — every source row lands in the
+    writer (writers.py::write_dataframe) — every source row lands in the
     target table exactly once (checkpointed progress + append batches)."""
     from pyspark.sql import functions as F  # noqa: F811
     from quarkus_etl_spark.catalog import load_table
     from quarkus_etl_spark.config import WriteTarget
-    from quarkus_etl_spark.sources.writers import jdbc_write_options
-    from quarkus_etl_spark.streaming.streams import file_stream, stream_etl_job
+    from quarkus_etl_spark.sources.writers import jdbc_write_options, write_dataframe
+    from quarkus_etl_spark.streaming.streams import file_stream
 
     ev = load_table(spark, sf_dir, "events").withColumn(
         "ts", F.col("ts").cast("timestamp")
@@ -186,18 +186,17 @@ def test_streaming_etl_into_jdbc_live(spark, sf_dir, derby_url, tmp_path):
         **jdbc_write_options(derby_url, "EVENTS_STREAMED", driver=DERBY_DRIVER)
     ).mode("overwrite").save()
 
-    q = stream_etl_job(
-        file_stream(spark, src, max_files_per_trigger=2).select(
-            "event_id", "user_id", "value"
-        ),
-        WriteTarget(
-            format="jdbc",
-            mode="append",
-            options=jdbc_write_options(
-                derby_url, "EVENTS_STREAMED", driver=DERBY_DRIVER
-            ),
-        ),
-        checkpoint_dir=str(tmp_path / "cp"),
+    target = WriteTarget(
+        format="jdbc",
+        mode="append",
+        options=jdbc_write_options(derby_url, "EVENTS_STREAMED", driver=DERBY_DRIVER),
+    )
+    q = (
+        file_stream(spark, src, max_files_per_trigger=2)
+        .select("event_id", "user_id", "value")
+        .writeStream.foreachBatch(lambda batch, _id: write_dataframe(batch, target))
+        .option("checkpointLocation", str(tmp_path / "cp"))
+        .start()
     )
     q.processAllAvailable()
     q.stop()

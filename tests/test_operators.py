@@ -16,9 +16,9 @@ from quarkus_etl_spark.operators.dedup import (
     simhash_near_dup_pairs,
 )
 from quarkus_etl_spark.operators.multimodal import (
-    sample_frames,
-    decode_media,
+    audio_windows,
     synthetic_media,
+    video_features,
 )
 from quarkus_etl_spark.operators.similarity import brute_force_topk, lsh_topk
 
@@ -201,33 +201,57 @@ def test_lsh_topk_recall_vs_brute_force(spark, sf_dir):
     assert len(set(exact) & set(approx)) >= 2
 
 
+def _py_video_features(payload: bytes, n_frames: int):
+    """Python reference for video_features, in two stages: sample the
+    frames (rolls of the payload body over a nominal duration), then
+    featurize each (L2-normalized 16-bin histogram of the byte high
+    nibbles)."""
+    import math
+
+    body = payload[8:] if payload[:3] == b"SYN" and len(payload) >= 8 else b""
+    nominal_ms = 1000 * (1 + len(body) % 7)
+    frames = []
+    for i in range(n_frames):
+        roll = i % max(len(body), 1)
+        frames.append((i, i * nominal_ms // max(n_frames - 1, 1), body[roll:] + body[:roll]))
+    out = []
+    for i, ts, frame in frames:
+        hist = [0.0] * 16
+        for b in frame:
+            hist[b >> 4] += 1.0
+        norm = math.sqrt(sum(h * h for h in hist))
+        out.append((i, ts, [h / norm if norm else h for h in hist]))
+    return out
+
+
 def test_multimodal_decode_roundtrip(spark):
+    """The synthetic payload header (the bytes the codec stubs parse)
+    round-trips the declared metadata: kind, width, height."""
+    import struct
+
     media = synthetic_media(spark, 50)
-    decoded = decode_media(media)
-    rows = {r["media_id"]: r for r in decoded.collect()}
+    rows = media.select("media_id", "payload", "meta.*").collect()
     assert len(rows) == 50
-    assert all(r["ok"] for r in rows.values())
-    # decoded dims must equal the declared metadata (header round-trip)
-    meta = {r["media_id"]: r for r in media.select("media_id", "meta.*").collect()}
-    for mid, r in rows.items():
-        assert r["width"] == meta[mid]["declared_w"]
-        assert r["height"] == meta[mid]["declared_h"]
-        assert r["kind"] == meta[mid]["kind"]
+    for r in rows:
+        raw = bytes(r["payload"])
+        assert raw[:3] == b"SYN"
+        kind, w, h = struct.unpack(">BHH", raw[3:8])
+        assert ("image", "audio", "video")[kind] == r["kind"]
+        assert (w, h) == (r["declared_w"], r["declared_h"])
 
 
 def test_multimodal_real_codec_is_stubbed(spark):
     media = synthetic_media(spark, 5)
     with pytest.raises(NotImplementedError, match="codec"):
-        decode_media(media, codec="pil")
-    with pytest.raises(NotImplementedError):
-        sample_frames(media, codec="ffmpeg")
+        video_features(media, codec="ffmpeg")
+    with pytest.raises(NotImplementedError, match="codec"):
+        audio_windows(media, codec="pydub")
 
 
 def test_multimodal_frame_sampling(spark):
     """1 -> n_frames expansion, deterministic frames, monotone timestamps."""
     media = synthetic_media(spark, 30)
-    frames = sample_frames(media, n_frames=4)
-    rows = frames.collect()
+    rows = video_features(media, n_frames=4).collect()
     assert len(rows) == 120
     per = {}
     for r in rows:
@@ -237,32 +261,26 @@ def test_multimodal_frame_sampling(spark):
         assert [r["frame_idx"] for r in fr] == [0, 1, 2, 3]
         ts = [r["frame_ts_ms"] for r in fr]
         assert ts == sorted(ts) and ts[0] == 0
-        # frame 0 is the raw body; all frames are rotations of it
-        body = bytes(fr[0]["frame"])
-        assert all(sorted(bytes(r["frame"])) == sorted(body) for r in fr)
     # deterministic across runs
-    again = {(r["media_id"], r["frame_idx"]): bytes(r["frame"])
-             for r in sample_frames(media, n_frames=4).collect()}
-    assert {(r["media_id"], r["frame_idx"]): bytes(r["frame"]) for r in rows} == again
+    again = {(r["media_id"], r["frame_idx"]): list(r["feature"])
+             for r in video_features(media, n_frames=4).collect()}
+    assert {(r["media_id"], r["frame_idx"]): list(r["feature"]) for r in rows} == again
 
 
 def test_multimodal_feature_extraction(spark):
-    """Features are L2-normalized 16-bin histograms keyed by the id cols."""
+    """Features are L2-normalized 16-bin histograms keyed by (media_id,
+    frame_idx)."""
     import math
 
-    from quarkus_etl_spark.operators.multimodal import FEATURE_DIM, extract_features
+    from quarkus_etl_spark.operators.multimodal import FEATURE_DIM
 
-    media = synthetic_media(spark, 25)
-    feats = {r["media_id"]: r["feature"] for r in extract_features(media).collect()}
-    assert len(feats) == 25
-    for v in feats.values():
-        assert len(v) == FEATURE_DIM
-        assert math.isclose(sum(x * x for x in v), 1.0, rel_tol=1e-5)
-    # composite id pass-through (per-frame featurization)
-    frames = sample_frames(media, n_frames=2)
-    per_frame = extract_features(frames, payload_col="frame", id_cols=("media_id", "frame_idx"))
-    assert per_frame.columns == ["media_id", "frame_idx", "feature"]
-    assert per_frame.count() == 50
+    feats = video_features(synthetic_media(spark, 25), n_frames=2)
+    assert feats.columns == ["media_id", "frame_idx", "frame_ts_ms", "feature"]
+    rows = feats.collect()
+    assert len(rows) == 50
+    for r in rows:
+        assert len(r["feature"]) == FEATURE_DIM
+        assert math.isclose(sum(x * x for x in r["feature"]), 1.0, rel_tol=1e-5)
 
 
 def test_ngram_jaccard_strategies_agree(spark, sf_dir):
@@ -291,18 +309,6 @@ def test_drop_near_duplicates_resolution(spark):
     )
     kept = sorted(r["doc_id"] for r in drop_near_duplicates(df, pairs, "doc_id").collect())
     assert kept == [0, 1, 2]
-
-
-def test_rolling_fingerprint_properties(spark):
-    from quarkus_etl_spark.functions.text import fingerprint_rolling
-
-    df = spark.createDataFrame(
-        [("same text",), ("same  text",), ("other text",)], "text string"
-    )
-    fps = [r["fp"] for r in df.select(fingerprint_rolling("text").alias("fp")).collect()]
-    assert fps[0] == fps[1]  # whitespace-normalized
-    assert fps[0] != fps[2]
-    assert all(fp >= 0 for fp in fps)
 
 
 def test_asof_join_matches_pandas_merge_asof(spark):
@@ -357,7 +363,7 @@ def test_exact_percentiles_edges(spark):
     """Histogram percentiles match statistics.quantiles-style quantile_cont
     on hand-checked edges: integral ranks, p=0/1, duplicated values,
     single-row groups."""
-    from quarkus_etl_spark.operators.percentile import exact_percentiles
+    from quarkus_etl_spark.operators.percentile import exact_percentiles_multi
 
     df = spark.createDataFrame(
         [("a", 1.0), ("a", 2.0), ("a", 2.0), ("a", 4.0), ("a", 10.0), ("b", 7.5)],
@@ -365,8 +371,8 @@ def test_exact_percentiles_edges(spark):
     )
     out = {
         r["k"]: r
-        for r in exact_percentiles(
-            df, ["k"], "v", {"p0": 0.0, "p25": 0.25, "p50": 0.5, "p75": 0.75, "p100": 1.0}
+        for r in exact_percentiles_multi(
+            df, ["k"], {"v": {"p0": 0.0, "p25": 0.25, "p50": 0.5, "p75": 0.75, "p100": 1.0}}
         ).collect()
     }
     # group a sorted: [1, 2, 2, 4, 10]; r = p*(n-1) over n=5
@@ -377,17 +383,17 @@ def test_exact_percentiles_edges(spark):
     assert out["a"]["p100"] == 10.0       # top rank, hi absent
     assert out["b"]["p50"] == 7.5         # single-row group
     # fractional rank: p=0.6 -> r=2.4 -> 2*(3-2.4) + 4*(2.4-2) = 2.8
-    frac = exact_percentiles(df, ["k"], "v", {"p60": 0.6}).where(F.col("k") == "a").first()
+    frac = exact_percentiles_multi(df, ["k"], {"v": {"p60": 0.6}}).where(F.col("k") == "a").first()
     assert abs(frac["p60"] - 2.8) < 1e-12
 
 
 def test_percentiles_from_hist_matches_raw_rows(spark):
     """percentiles_from_hist over a pre-aggregated (key, value) -> count
-    histogram returns bit-identical values to exact_percentiles over the
+    histogram returns bit-identical values to exact_percentiles_multi over the
     raw rows — including fractional ranks, duplicate values, NULL cells
     (ignored), and duplicate histogram rows for one value (re-aggregated)."""
     from quarkus_etl_spark.operators.percentile import (
-        exact_percentiles,
+        exact_percentiles_multi,
         percentiles_from_hist,
     )
 
@@ -402,7 +408,7 @@ def test_percentiles_from_hist_matches_raw_rows(spark):
         "k string, v double, c long",
     )
     targets = {"p0": 0.0, "p37": 0.37, "p50": 0.5, "p60": 0.6, "p100": 1.0}
-    want = {r["k"]: r for r in exact_percentiles(raw, ["k"], "v", targets).collect()}
+    want = {r["k"]: r for r in exact_percentiles_multi(raw, ["k"], {"v": targets}).collect()}
     got = {
         r["k"]: r
         for r in percentiles_from_hist(hist, ["k"], "v", "c", targets).collect()
@@ -414,32 +420,22 @@ def test_percentiles_from_hist_matches_raw_rows(spark):
 
 
 def test_video_features_fused_matches_two_stage(spark):
-    """The fused sample+featurize operator returns exactly what the
-    composable sample_frames |> extract_features pipeline returns."""
-    from quarkus_etl_spark.operators.multimodal import (
-        extract_features,
-        video_features,
-    )
+    """The fused sample+featurize operator returns what a two-stage Python
+    reference (sample frames, then featurize each) returns, to float32."""
+    import numpy as np
 
     media = synthetic_media(spark, 20)
     fused = {
         (r["media_id"], r["frame_idx"]): (r["frame_ts_ms"], list(r["feature"]))
         for r in video_features(media, n_frames=4).collect()
     }
-    frames = sample_frames(media, n_frames=4)
-    ts = {
-        (r["media_id"], r["frame_idx"]): r["frame_ts_ms"] for r in frames.collect()
-    }
     staged = {
-        (r["media_id"], r["frame_idx"]): list(r["feature"])
-        for r in extract_features(
-            frames, payload_col="frame", id_cols=("media_id", "frame_idx")
-        ).collect()
+        (r["media_id"], i): (ts, [float(np.float32(x)) for x in vec])
+        for r in media.select("media_id", "payload").collect()
+        for i, ts, vec in _py_video_features(bytes(r["payload"]), 4)
     }
-    assert set(fused) == set(staged) and len(fused) == 80
-    for key, (fts, fvec) in fused.items():
-        assert fts == ts[key]
-        assert fvec == staged[key]
+    assert len(fused) == 80
+    assert fused == staged
 
 
 def test_connected_components_chain_and_islands(spark):
@@ -754,16 +750,12 @@ def test_token_chunks_cover_and_overlap(spark):
     """Chunks tile the token sequence: starts at every stride multiple below
     n, each chunk <= window tokens, concatenation of stride-prefixes
     reconstructs the document."""
-    from quarkus_etl_spark.functions.text import token_chunks, tokenize
+    from quarkus_etl_spark.functions.text import chunked, tokenize
 
     df = spark.createDataFrame(
         [(1, " ".join(f"t{i}" for i in range(47))), (2, "a b c")], ["id", "text"]
     )
-    rows = (
-        df.select("id", F.explode(token_chunks(tokenize("text"), 20, 15)).alias("s"))
-        .select("id", "s.chunk_id", "s.start_tok", "s.chunk")
-        .collect()
-    )
+    rows = chunked(df, tokenize("text"), 20, 15, keep=["id"]).collect()
     by_doc: dict[int, list] = {}
     for r in rows:
         by_doc.setdefault(r["id"], []).append(r)
@@ -936,24 +928,6 @@ def test_decontaminate_broadcasts_benchmark_side(spark, sf_dir):
     assert "BroadcastHashJoin" in plan
     # flagged docs must actually share grams: counts strictly positive
     assert df.where(F.col("n_shared") <= 0).count() == 0
-
-
-def test_percentile_prefix_strategy_parity(spark, sf_dir):
-    """The two-level distributed prefix-sum strategy (parallel per-bucket
-    cumsums + tiny offset table) must produce bit-identical percentiles
-    to the single-window strategy — it's the same histogram, only routed
-    through B-way parallel sorts for domains too large for one task."""
-    from quarkus_etl_spark.catalog import load_table
-    from quarkus_etl_spark.operators.percentile import exact_percentiles_multi
-
-    li = load_table(spark, sf_dir, "lineitem")
-    specs = {
-        "l_quantity": {"p50": 0.5, "p99": 0.99},
-        "l_extendedprice": {"p25": 0.25, "p90": 0.9},
-    }
-    a = exact_percentiles_multi(li, ["l_returnflag"], specs, strategy="window")
-    b = exact_percentiles_multi(li, ["l_returnflag"], specs, strategy="prefix")
-    assert sorted(map(tuple, a.collect())) == sorted(map(tuple, b.collect()))
 
 
 def test_hll_merge_estimate_tracks_exact(spark, sf_dir):

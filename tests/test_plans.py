@@ -7,20 +7,52 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from quarkus_etl_spark.plans import (
-    assert_broadcast_join,
-    assert_in_plan,
-    assert_pushed_filter,
-    assert_read_schema_only,
-    assert_take_ordered,
-    plan_string,
-)
+from quarkus_etl_spark.plans import plan_string
 from quarkus_etl_spark.queries.relational import (
     q_agg_groupby,
     q_filter_projection,
     q_join_broadcast,
     q_topk,
 )
+
+
+def assert_in_plan(df, fragment: str, mode: str = "formatted") -> None:
+    plan = plan_string(df, mode)
+    assert fragment in plan, f"expected {fragment!r} in plan:\n{plan}"
+
+
+def assert_pushed_filter(df, column: str) -> None:
+    """The parquet scan must carry a pushed filter on `column`."""
+    plan = plan_string(df)
+    pushed = [line for line in plan.splitlines() if "PushedFilters" in line]
+    assert pushed, f"no PushedFilters line in plan:\n{plan}"
+    assert any(column in line for line in pushed), (
+        f"filter on {column!r} not pushed to scan: {pushed}\n{plan}"
+    )
+
+
+def assert_read_schema_only(df, columns: set[str]) -> None:
+    """Column pruning: the scan's ReadSchema must contain exactly/only the
+    expected columns (a scan reading all columns for a narrow projection is
+    wrong at any scale)."""
+    plan = plan_string(df)
+    read_lines = [line for line in plan.splitlines() if "ReadSchema" in line]
+    assert read_lines, f"no ReadSchema in plan:\n{plan}"
+    for line in read_lines:
+        schema_part = line.split("ReadSchema:", 1)[1]
+        present = {
+            tok.split(":")[0].strip() for tok in schema_part.strip(" struct<>").split(",") if tok
+        }
+        extra = present - columns
+        assert not extra, f"scan reads unneeded columns {extra} (wanted {columns}):\n{plan}"
+
+
+def assert_broadcast_join(df) -> None:
+    assert_in_plan(df, "BroadcastHashJoin")
+
+
+def assert_take_ordered(df) -> None:
+    assert_in_plan(df, "TakeOrderedAndProject")
 
 
 def test_filter_is_pushed_to_parquet_scan(spark, sf_dir):
@@ -327,11 +359,11 @@ def test_percentile_final_aggregate_sees_only_bracket_rows(spark, sf_dir):
     filter and counting survivors."""
     from pyspark.sql import functions as F  # noqa: F811
     from quarkus_etl_spark.catalog import load_table
-    from quarkus_etl_spark.operators.percentile import exact_percentiles
+    from quarkus_etl_spark.operators.percentile import exact_percentiles_multi
 
     li = load_table(spark, sf_dir, "lineitem")
-    out = exact_percentiles(
-        li, ["l_returnflag"], "l_quantity", {"p50": 0.5, "p90": 0.9}
+    out = exact_percentiles_multi(
+        li, ["l_returnflag"], {"l_quantity": {"p50": 0.5, "p90": 0.9}}
     )
     # correctness of the filtered plan vs Spark's own exact percentile
     expected = {
@@ -476,39 +508,6 @@ def test_sketch_aggregates_stay_out_of_the_distinct_expand(spark, sf_dir):
         ._jdf.queryExecution().executedPlan().toString()
     )
     assert "Expand" not in plan_m, plan_m
-
-
-def test_materialize_once_modes_value_identical(spark, monkeypatch):
-    """VERDICT r11 #5: the multi-consumer materialization strategy is
-    env-gated — localCheckpoint by default (lineage truncated), fault-
-    tolerant persist(MEMORY_AND_DISK) at SPARK_GRAFT_MATERIALIZE=persist —
-    and both modes return identical values."""
-    import pytest as _pytest
-
-    from quarkus_etl_spark.plans.tuning import materialize_once
-
-    df = spark.range(100).withColumn("v", F.col("id") % 7)
-    expected = sorted((r.id, r.v) for r in df.collect())
-
-    monkeypatch.delenv("SPARK_GRAFT_MATERIALIZE", raising=False)
-    local = materialize_once(df)
-    assert sorted((r.id, r.v) for r in local.collect()) == expected
-    # default mode truncates lineage (checkpointed plan)
-    assert "Scan ExistingRDD" in local._jdf.queryExecution().analyzed().toString() \
-        or "LogicalRDD" in local._jdf.queryExecution().analyzed().toString()
-
-    monkeypatch.setenv("SPARK_GRAFT_MATERIALIZE", "persist")
-    p = materialize_once(df)
-    try:
-        assert sorted((r.id, r.v) for r in p.collect()) == expected
-        # persist mode keeps lineage (recomputable after executor loss)
-        assert p.storageLevel.useMemory and p.storageLevel.useDisk
-    finally:
-        p.unpersist()
-
-    monkeypatch.setenv("SPARK_GRAFT_MATERIALIZE", "bogus")
-    with _pytest.raises(ValueError, match="SPARK_GRAFT_MATERIALIZE"):
-        materialize_once(df)
 
 
 def test_routing_count_cache_keeps_a_hot_key(spark, monkeypatch):

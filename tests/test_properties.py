@@ -11,7 +11,7 @@ import random
 
 from pyspark.sql import functions as F
 
-from quarkus_etl_spark.operators.percentile import exact_percentiles
+from quarkus_etl_spark.operators.percentile import exact_percentiles_multi
 from quarkus_etl_spark.operators.timeseries import sessionize
 
 EPOCH = dt.datetime(2024, 3, 1)
@@ -69,7 +69,7 @@ def test_exact_percentiles_match_python_reference(spark):
     df = spark.createDataFrame(rows, "k string, v double")
     targets = {"p10": 0.1, "p50": 0.5, "p99": 0.99}
     got = {
-        r["k"]: r for r in exact_percentiles(df, ["k"], "v", targets).collect()
+        r["k"]: r for r in exact_percentiles_multi(df, ["k"], {"v": targets}).collect()
     }
     by_k: dict = {}
     for k, v in rows:
@@ -114,7 +114,7 @@ def _py_chunks(tokens, window, stride):
 
 
 def test_token_chunks_matches_python_reference(spark):
-    from quarkus_etl_spark.functions.text import token_chunks, tokenize
+    from quarkus_etl_spark.functions.text import chunked, tokenize
 
     rng = random.Random(7)
     vocab = ["alpha", "beta", "gamma", "delta", "x", "longtokenword"]
@@ -125,9 +125,7 @@ def test_token_chunks_matches_python_reference(spark):
     df = spark.createDataFrame(rows, "id long, text string")
     for window, stride in ((20, 15), (8, 8), (5, 3)):
         got: dict = {}
-        out = df.select(
-            "id", F.explode(token_chunks(tokenize("text"), window, stride)).alias("s")
-        ).select("id", "s.chunk_id", "s.start_tok", "s.chunk")
+        out = chunked(df, tokenize("text"), window, stride, keep=["id"])
         for r in out.collect():
             got.setdefault(r["id"], []).append(
                 (r["chunk_id"], r["start_tok"], list(r["chunk"]))
@@ -139,11 +137,26 @@ def test_token_chunks_matches_python_reference(spark):
             )
 
 
+def _token_chunks_explode(tokens, window, stride):
+    """The array-valued chunker `chunked` replaced: one struct per chunk,
+    built by a `transform` lambda over the chunk starts, then exploded."""
+    starts = F.sequence(F.lit(0), F.greatest(F.size(tokens) - 1, F.lit(0)), F.lit(stride))
+    chunks = F.transform(
+        F.when(tokens.isNotNull(), starts),
+        lambda s, i: F.struct(
+            i.cast("long").alias("chunk_id"),
+            s.cast("long").alias("start_tok"),
+            F.slice(tokens, s + 1, window).alias("chunk"),
+        ),
+    )
+    return F.explode(chunks)
+
+
 def test_chunked_matches_token_chunks_explode(spark):
     """chunked() (index-explode, codegen-fast Generate) must produce the
-    exact rows of the explode(token_chunks(...)) composition it replaces
-    in the hot chunker paths."""
-    from quarkus_etl_spark.functions.text import chunked, token_chunks, tokenize
+    exact rows of the explode-of-structs composition it replaced in the
+    hot chunker paths."""
+    from quarkus_etl_spark.functions.text import chunked, tokenize
 
     rng = random.Random(11)
     vocab = ["alpha", "beta", "gamma", "delta", "x", "longtokenword"]
@@ -154,7 +167,7 @@ def test_chunked_matches_token_chunks_explode(spark):
     df = spark.createDataFrame(rows, "id long, text string")
     for window, stride in ((20, 15), (8, 8), (5, 3)):
         via_array = df.select(
-            "id", F.explode(token_chunks(tokenize("text"), window, stride)).alias("s")
+            "id", _token_chunks_explode(tokenize("text"), window, stride).alias("s")
         ).select("id", "s.chunk_id", "s.start_tok", "s.chunk")
         via_index = chunked(df, tokenize("text"), window, stride, keep=["id"]).select(
             "id", "chunk_id", "start_tok", "chunk"
@@ -289,7 +302,8 @@ def _py_jaccard_pairs(docs, threshold):
 def test_near_dup_edges_strategies_on_random_corpora(spark):
     """On seeded random corpora with planted near-duplicates, every caller
     of the shared candidate/verify steps against the Python reference: the
-    exact plans (near_dup_edges exhaustive and prefix, incremental exact)
+    exact plans (near_dup_edges exhaustive, ngram_jaccard_pairs prefix,
+    incremental exact)
     emit exactly the reference pairs, and the LSH plans (near_dup_edges,
     incremental, unblocked minhash_near_dup_pairs) emit a subset. Every
     emitted pair carries the reference jaccard. Exercises shapes the
@@ -298,6 +312,7 @@ def test_near_dup_edges_strategies_on_random_corpora(spark):
         incremental_jaccard_pairs,
         minhash_near_dup_pairs,
         near_dup_edges,
+        ngram_jaccard_pairs,
     )
 
     rng = random.Random(7)
@@ -337,7 +352,17 @@ def test_near_dup_edges_strategies_on_random_corpora(spark):
             want,
             strategy != "lsh",
         )
-        for strategy in ("exhaustive", "prefix", "lsh")
+        for strategy in ("exhaustive", "lsh")
+    ] + [
+        (
+            "ngram_jaccard_pairs prefix",
+            ngram_jaccard_pairs(
+                df, "doc_id", "text", block_col="lang", threshold=0.6,
+                strategy="prefix",
+            ),
+            want,
+            True,
+        )
     ] + [
         (
             f"incremental {strategy}",

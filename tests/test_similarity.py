@@ -72,21 +72,6 @@ def test_ivf_topk_recall_floor(spark, sf_dir):
     assert min(recalls) >= 0.6, f"per-probe recall floor broken: {recalls}"
 
 
-def test_knn_graph_ann_collapse_parity_on_distinct(spark, sf_dir):
-    """Duplicate collapse must be a pure optimization on all-distinct
-    input: identical output (same edges, cosines, ranks) with it on/off."""
-    from pyspark.sql import functions as F
-    from quarkus_etl_spark.catalog import load_table
-    from quarkus_etl_spark.operators.similarity import knn_graph_ann
-
-    e = load_table(spark, sf_dir, "embeddings").where(F.col("embedding").isNotNull())
-    off = knn_graph_ann(e, "vec_id", "embedding", dim=64, k=3, block_col="label",
-                        collapse_duplicates=False)
-    on = knn_graph_ann(e, "vec_id", "embedding", dim=64, k=3, block_col="label",
-                       collapse_duplicates=True)
-    assert sorted(map(tuple, off.collect())) == sorted(map(tuple, on.collect()))
-
-
 def test_knn_graph_ann_duplicate_multiplicity_bounded(spark):
     """The r7 scale fix: identical vectors share every LSH bucket at any
     plane count, so pre-collapse the bucket join was quadratic in
@@ -122,10 +107,10 @@ def test_knn_graph_ann_zero_and_null_vector_duplicates(spark):
     """ADVICE r7: identical ZERO vectors duplicate naturally (failed
     encoders emit them, and the fuzz mutators mint them at phase>=2) —
     the duplicate-collapse expansion must follow the sql_cosine
-    convention: fellow edges at 0.0 (they rank LAST, as the uncollapsed
-    path ranks them), never the hardcoded 1.0 that made dead rows
-    top-ranked neighbors. NULL-vector copies get no edges at all (with
-    collapse off they never bucket-match). Nonzero duplicates keep their
+    convention: fellow edges at 0.0 (they rank LAST, as the plain path
+    ranks them), never the hardcoded 1.0 that made dead rows top-ranked
+    neighbors. NULL-vector copies get no edges at all (on the plain path
+    they never bucket-match). Nonzero duplicates keep their
     true-cosine 1.0 fellows."""
     from quarkus_etl_spark.operators.similarity import knn_graph_ann
 

@@ -1,6 +1,7 @@
 """Structured Streaming smoke tests (SURVEY.md §2 streaming rows-only items):
-real readStream pipelines — watermarked tumbling windows, stateful dedup,
-foreachBatch ETL sink — checked against their batch equivalents."""
+real readStream pipelines over `file_stream` and `run_stream_to_memory` —
+watermarked tumbling windows, stateful dedup, a foreachBatch ETL sink through
+the batch writer — checked against their batch equivalents."""
 
 from __future__ import annotations
 
@@ -9,14 +10,24 @@ from pyspark.sql import functions as F
 
 from quarkus_etl_spark.catalog import load_table
 from quarkus_etl_spark.config import WriteTarget
-from quarkus_etl_spark.streaming import (
-    dedup_within_watermark,
-    file_stream,
-    run_stream_to_memory,
-    sessionized_stream,
-    stream_etl_job,
-    tumbling_stream,
-)
+from quarkus_etl_spark.sources.writers import write_dataframe
+from quarkus_etl_spark.streaming import file_stream, run_stream_to_memory
+
+
+def _tumbling_counts(events, window="5 minutes", watermark="10 minutes"):
+    """Watermarked tumbling-window count/sum per event type."""
+    return (
+        events.withWatermark("ts", watermark)
+        .groupBy(F.window("ts", window), "event_type")
+        .agg(F.count(F.lit(1)).alias("cnt"), F.sum("value").alias("sum_value"))
+        .select(
+            F.col("window.start").alias("window_start"),
+            F.col("window.end").alias("window_end"),
+            "event_type",
+            "cnt",
+            "sum_value",
+        )
+    )
 
 
 def test_streaming_import_leaves_interpreter_alone():
@@ -53,7 +64,7 @@ def events_dir(spark, sf_dir, tmp_path_factory):
 
 
 def test_tumbling_stream_matches_batch(spark, sf_dir, events_dir):
-    stream = tumbling_stream(file_stream(spark, events_dir))
+    stream = _tumbling_counts(file_stream(spark, events_dir))
     q = run_stream_to_memory(stream, "tumbling_smoke", output_mode="append")
     try:
         got = spark.table("tumbling_smoke")
@@ -81,7 +92,18 @@ def test_tumbling_stream_matches_batch(spark, sf_dir, events_dir):
 
 
 def test_session_stream_runs(spark, events_dir):
-    stream = sessionized_stream(file_stream(spark, events_dir))
+    stream = (
+        file_stream(spark, events_dir)
+        .withWatermark("ts", "10 minutes")
+        .groupBy(F.session_window("ts", "5 minutes"), "user_id")
+        .agg(F.count(F.lit(1)).alias("n_events"))
+        .select(
+            "user_id",
+            F.col("session_window.start").alias("session_start"),
+            F.col("session_window.end").alias("session_end"),
+            "n_events",
+        )
+    )
     q = run_stream_to_memory(stream, "session_smoke", output_mode="append")
     try:
         got = spark.table("session_smoke")
@@ -93,8 +115,10 @@ def test_session_stream_runs(spark, events_dir):
 
 
 def test_dedup_within_watermark(spark, sf_dir, events_dir):
-    stream = dedup_within_watermark(
-        file_stream(spark, events_dir), keys=["user_id", "event_type"]
+    stream = (
+        file_stream(spark, events_dir)
+        .withWatermark("ts", "10 minutes")
+        .dropDuplicatesWithinWatermark(["user_id", "event_type"])
     )
     q = run_stream_to_memory(stream, "dedup_smoke", output_mode="append")
     try:
@@ -114,10 +138,16 @@ def test_dedup_within_watermark(spark, sf_dir, events_dir):
 
 
 def test_stream_etl_job_foreachbatch(spark, events_dir, tmp_path):
+    """A file stream sunk through foreachBatch -> the batch writer lands
+    every source row once, with the source's columns."""
     out = str(tmp_path / "etl_out")
     target = WriteTarget(format="parquet", path=out, mode="append")
     stream = file_stream(spark, events_dir).where(F.col("event_type") == "purchase")
-    q = stream_etl_job(stream, target, checkpoint_dir=str(tmp_path / "ckpt"))
+    q = (
+        stream.writeStream.foreachBatch(lambda batch, _id: write_dataframe(batch, target))
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .start()
+    )
     try:
         q.processAllAvailable()
     finally:
@@ -143,7 +173,7 @@ def test_watermark_drops_late_data(spark, tmp_path):
     schema = "event_id long, ts timestamp, user_id long, event_type string, value double, props string"
     spark.createDataFrame(fresh, schema).coalesce(1).write.mode("overwrite").parquet(src)
 
-    stream = tumbling_stream(
+    stream = _tumbling_counts(
         file_stream(spark, src, max_files_per_trigger=1), window="5 minutes", watermark="10 minutes"
     )
     q = stream.writeStream.format("memory").queryName("late_smoke").outputMode("append").start()
@@ -734,53 +764,11 @@ def test_stream_join_epoch_floor_and_era_translation(spark, tmp_path):
 
 
 def test_state_partitions_expected_keys_sizing(spark):
-    """VERDICT r11 #8: the production path sizes state partitions by key
-    cardinality (ceil(keys / KEYS_PER_STATE_PARTITION), clamped to the
-    session's shuffle partitions); explicit n and the LOCAL_STATE_PARTITIONS
-    default (4) keep their precedence."""
-    from quarkus_etl_spark.streaming.streams import (
-        KEYS_PER_STATE_PARTITION,
-        LOCAL_STATE_PARTITIONS,
-        state_partitions,
-    )
+    """Stateful streams start under LOCAL_STATE_PARTITIONS (4) shuffle
+    partitions, and the session's own setting is restored on exit."""
+    from quarkus_etl_spark.streaming.streams import LOCAL_STATE_PARTITIONS, state_partitions
 
-    upper = int(spark.conf.get("spark.sql.shuffle.partitions"))
-
-    def inside(**kw):
-        with state_partitions(spark, **kw):
-            return int(spark.conf.get("spark.sql.shuffle.partitions"))
-
-    # production sizing: 2.5M keys -> ceil = 3 partitions (if session allows)
-    assert inside(expected_keys=int(2.5 * KEYS_PER_STATE_PARTITION)) == min(upper, 3)
-    # tiny cardinality never drops below 1
-    assert inside(expected_keys=1) == 1
-    # clamped above by the session's shuffle partitions
-    assert inside(expected_keys=10**12) == upper
-    # explicit n wins over expected_keys
-    assert inside(n=2, expected_keys=10**12) == 2
-    # neither n nor expected_keys -> the local default
-    assert inside() == LOCAL_STATE_PARTITIONS == 4
-    # conf restored on exit
-    assert int(spark.conf.get("spark.sql.shuffle.partitions")) == upper
-
-
-def test_state_partitions_warns_when_expected_keys_clamped(spark, caplog):
-    """expected_keys sizing that exceeds the session's shuffle partitions is
-    clamped with a WARN naming both numbers; sizing inside the cap is
-    silent."""
-    import logging
-
-    from quarkus_etl_spark.streaming.streams import state_partitions
-
-    upper = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    with caplog.at_level(logging.WARNING, logger="quarkus_etl_spark.streaming"):
-        with state_partitions(spark, expected_keys=1):
-            pass
-        assert not caplog.records
-        with state_partitions(spark, expected_keys=10**12):
-            pass
-    (record,) = caplog.records
-    assert record.levelno == logging.WARNING
-    msg = record.getMessage()
-    assert "clamped" in msg and "asks for 1000000" in msg
-    assert f"spark.sql.shuffle.partitions={upper}" in msg
+    before = spark.conf.get("spark.sql.shuffle.partitions")
+    with state_partitions(spark):
+        assert int(spark.conf.get("spark.sql.shuffle.partitions")) == LOCAL_STATE_PARTITIONS == 4
+    assert spark.conf.get("spark.sql.shuffle.partitions") == before

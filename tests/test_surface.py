@@ -1,16 +1,16 @@
 """Guard against package surface that only tests reach.
 
 Every top-level def or class in `quarkus_etl_spark/` that is not a
-`@register`ed query must be named somewhere outside its own definition:
-in the package, `tools/`, `perfbench/`, `bench.py` or `__spark_entry__.py`.
+`@register`ed query must be referenced by code outside its own body: in
+the package, `tools/`, `perfbench/`, `bench.py` or `__spark_entry__.py`.
 `tests/` does not count, so a function kept alive only by its own tests
-fails here. The match is by whole word, so a mention in another module's
-docstring or a re-export also counts."""
+fails here. A reference is an AST `Name` or `Attribute` node carrying the
+def's name. Docstrings, other strings and the names in an `import` (so a
+re-export) do not count."""
 
 from __future__ import annotations
 
 import ast
-import re
 from pathlib import Path
 
 ROOT = Path(__file__).resolve().parents[1]
@@ -29,22 +29,67 @@ def _is_registered_query(node: ast.AST) -> bool:
     )
 
 
+def _referenced_names(tree: ast.AST, skip: ast.AST | None = None) -> set[str]:
+    """Names that code in `tree` reads or calls, outside the subtree `skip`."""
+    names: set[str] = set()
+    stack = [tree]
+    while stack:
+        node = stack.pop()
+        if node is skip:
+            continue
+        if isinstance(node, ast.Name):
+            names.add(node.id)
+        elif isinstance(node, ast.Attribute):
+            names.add(node.attr)
+        stack.extend(ast.iter_child_nodes(node))
+    return names
+
+
 def test_every_package_def_is_referenced_outside_tests():
-    texts = {f: f.read_text() for p in SCOPE for f in _py_files(p)}
+    trees = {f: ast.parse(f.read_text()) for p in SCOPE for f in _py_files(p)}
+    names_in = {f: _referenced_names(t) for f, t in trees.items()}
     unreferenced = []
     for f in _py_files(PKG):
-        lines = texts[f].splitlines(keepends=True)
-        for node in ast.parse(texts[f]).body:
+        for node in trees[f].body:
             if not isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
                 continue
             if _is_registered_query(node):
                 continue
-            word = re.compile(rf"\b{re.escape(node.name)}\b")
-            first = min([node.lineno, *(d.lineno for d in node.decorator_list)]) - 1
-            outside_own_def = "".join(lines[:first] + lines[node.end_lineno:])
-            if word.search(outside_own_def) or any(
-                word.search(text) for g, text in texts.items() if g != f
+            if node.name in _referenced_names(trees[f], skip=node) or any(
+                node.name in names for g, names in names_in.items() if g != f
             ):
                 continue
             unreferenced.append(f"{f.relative_to(ROOT)}::{node.name}")
     assert not unreferenced, f"defs reached only from tests/: {unreferenced}"
+
+
+def _env_reads(tree: ast.AST) -> set[str]:
+    """Keys read by `os.environ.get(K)`, `os.environ[K]` and `os.getenv(K)`;
+    a key that is not a string literal reads as `<dynamic>`."""
+
+    def key(node: ast.AST) -> str:
+        return node.value if isinstance(node, ast.Constant) and isinstance(node.value, str) else "<dynamic>"
+
+    def is_environ(node: ast.AST) -> bool:
+        return (isinstance(node, ast.Attribute) and node.attr == "environ") or (
+            isinstance(node, ast.Name) and node.id == "environ"
+        )
+
+    keys = set()
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Subscript) and isinstance(node.ctx, ast.Load) and is_environ(node.value):
+            keys.add(key(node.slice))
+        elif isinstance(node, ast.Call) and node.args and isinstance(node.func, (ast.Attribute, ast.Name)):
+            fn = node.func
+            if (isinstance(fn, ast.Attribute) and fn.attr == "get" and is_environ(fn.value)) or (
+                getattr(fn, "attr", getattr(fn, "id", None)) == "getenv"
+            ):
+                keys.add(key(node.args[0]))
+    return keys
+
+
+def test_package_reads_only_deployment_env_vars():
+    """The package's behaviour is not switched by env vars: the only ones
+    it reads size the local session (cores and driver memory)."""
+    read = set().union(*(_env_reads(ast.parse(f.read_text())) for f in _py_files(PKG)))
+    assert read == {"SPARK_GRAFT_CPUS", "SPARK_GRAFT_DRIVER_MEM"}

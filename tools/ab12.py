@@ -6,10 +6,11 @@ assignments applied) block-by-block for N pairs, and reports per-query and
 per-set min/median for both sides. Only this same-session interleaving is
 trustworthy on this host (documented 1.5-2.2x same-code cross-run swings).
 
-A candidate is measured through an environment variable the code already
-reads (e.g. SPARK_GRAFT_MATERIALIZE=persist); a code change
-without one is gated by adding such a read at its call site for the
-duration of the measurement.
+The package reads no behavioural environment variable, so a candidate
+code change is gated by a temporary read at its call site for the duration
+of the measurement, e.g. `if os.environ.get("AB_CANDIDATE"): <new path>`,
+then run as `python -m tools.ab12 AB_CANDIDATE=1 <query> ...`. Remove the
+read before committing.
 
 Usage:
     python -m tools.ab12 <K=V[,K=V...]> <query> [<query> ...] [--pairs N]

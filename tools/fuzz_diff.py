@@ -47,7 +47,7 @@ Mutation classes are phased so a failure is attributable:
           precondition (upstream DQ repair), not a comparable semantic.
           Non-finite VECTORS are admitted and must hit the shared
           "non-finite ≡ missing embedding" convention (base.emb /
-          vectors.vec_nonfinite_to_null) identically in both engines —
+          vectors.vec_contract_to_null) identically in both engines —
           the r11 recon found Spark's null-skipping [-1,1] clamp silently
           rewrote NaN cosines to 1.0 while DuckDB ordered them greatest
           (13 queries diverged before the convention).
