@@ -15,6 +15,9 @@ to the epoch, so bucket edges coincide.
 
 from __future__ import annotations
 
+import os
+import shutil
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -24,24 +27,47 @@ from .base import dec2, register, sql_dsum, t
 _SUM_VAL = sql_dsum("value", "sum_value")
 
 
-def _replay_events(spark: SparkSession, sf_dir: str, name: str) -> str:
-    """Re-materialize the events table as a 4-file parquet directory (the
-    process scratch dir `name`, ts cast to the watermarkable `timestamp`)
-    and return its path: a file stream reads each file as micro-batch
-    input."""
+# The replay directory this process last published, per scratch path,
+# with the identity of the events fixture it was written from.
+_REPLAYED: dict[str, tuple[str, int, int]] = {}
+
+
+def _replay_events(spark: SparkSession, sf_dir: str) -> str:
+    """The events table re-materialized as a 4-file parquet directory (ts
+    cast to the watermarkable `timestamp`) for a file stream, which reads
+    each file as micro-batch input; returns its path.
+
+    Every live query streams the same bytes, so the directory is written
+    once per process and shared. It is keyed by the fixture's identity:
+    `realpath(sf_dir)` plus the `events.parquet` mtime_ns and size. When
+    the key changes or the directory is gone it is written again, into a
+    temp directory first and then renamed into place, so a stream never
+    lists a half-written replay. A write is a shuffle and a parquet job
+    that fork about 40 `chmod` processes (one per file created, SCALE.md
+    "Streaming"); at sf0.01 on 4 cores it took 0.29-0.50 s of each warm
+    live build before it was shared."""
     from .lifecycle_q import _scratch
 
-    path = _scratch(sf_dir, name)
+    src = os.path.join(os.path.realpath(sf_dir), "events.parquet")
+    st = os.stat(src)
+    key = (src, st.st_mtime_ns, st.st_size)
+    path = _scratch(sf_dir, "events_stream")
+    if _REPLAYED.get(path) == key and os.path.isdir(path):
+        return path
+    tmp = path + ".tmp"
+    shutil.rmtree(tmp, ignore_errors=True)
     ev = t(spark, sf_dir, "events")
-    ev.withColumn("ts", F.col("ts").cast("timestamp")).repartition(4).write.mode(
-        "overwrite"
-    ).parquet(path)
+    ev.withColumn("ts", F.col("ts").cast("timestamp")).repartition(4).write.parquet(tmp)
+    shutil.rmtree(path, ignore_errors=True)
+    os.rename(tmp, path)
+    _REPLAYED[path] = key
     return path
 
 
 def _run_live(spark: SparkSession, stream: DataFrame, name: str, output_mode: str) -> DataFrame:
-    """Run `stream` to completion into the memory sink `name` under the
-    state-sized shuffle partitions and return the sink's table."""
+    """Run `stream` to completion into the memory sink `name` inside the
+    stream start scope (state-sized shuffle partitions, local checkpoint
+    manager) and return the sink's table."""
     from ..streaming.streams import run_stream_to_memory, state_partitions
 
     with state_partitions(spark):
@@ -190,17 +216,18 @@ def q_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_stream_live_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A REAL Structured Streaming execution inside the oracle gate: the
-    events table re-materialized as a 4-file parquet directory, consumed
-    through readStream (each file a micro-batch input), aggregated with a
-    watermarked tumbling window, and run to completion into a complete-mode
-    memory sink. Complete mode over a finite source is exactly the batch
-    answer, and the sums ride DECIMAL, so the streamed state-store result
-    hash-matches the same SQL the batch q_stream_tumbling family uses —
-    the incremental execution path itself is what's under test. Output
-    timestamps are cast back to ntz (UTC session makes values coincide)."""
+    events table's shared 4-file replay directory (`_replay_events`),
+    consumed through readStream (each file a micro-batch input),
+    aggregated with a watermarked tumbling window, and run to completion
+    into a complete-mode memory sink. Complete mode over a finite source is
+    exactly the batch answer, and the sums ride DECIMAL, so the streamed
+    state-store result hash-matches the same SQL the batch
+    q_stream_tumbling family uses — the incremental execution path itself
+    is what's under test. Output timestamps are cast back to ntz (UTC
+    session makes values coincide)."""
     from ..streaming.streams import file_stream
 
-    path = _replay_events(spark, sf_dir, "events_stream")
+    path = _replay_events(spark, sf_dir)
     agg = (
         file_stream(spark, path, max_files_per_trigger=2)
         .withWatermark("ts", "10 minutes")
@@ -224,18 +251,18 @@ def q_stream_live_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle="SELECT DISTINCT user_id, event_type FROM events",
 )
 def q_stream_live_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming keyed dedup executed for real: readStream over the 4-file
-    events directory, dropDuplicates on (user_id, event_type), append-mode
-    memory sink run to completion. Every first-seen key is emitted exactly
-    once, so the key-only output equals batch DISTINCT no matter how the
-    micro-batches split — which is what makes a live stateful-dedup
+    """Streaming keyed dedup executed for real: readStream over the shared
+    4-file events replay directory (`_replay_events`), dropDuplicates on
+    (user_id, event_type), append-mode memory sink run to completion.
+    Every first-seen key is emitted exactly once, so the key-only output
+    equals batch DISTINCT no matter how the micro-batches split — which is what makes a live stateful-dedup
     execution oracle-checkable (non-key columns would expose the engine's
     arbitrary which-duplicate-won choice). State is bounded by the key
     domain; a watermarked `dropDuplicatesWithinWatermark` would bound it
     by time instead (q_stream_dedup is its batch analog)."""
     from ..streaming.streams import file_stream
 
-    path = _replay_events(spark, sf_dir, "events_stream_dd")
+    path = _replay_events(spark, sf_dir)
     dd = (
         file_stream(spark, path, max_files_per_trigger=2)
         .select("user_id", "event_type")
@@ -259,10 +286,10 @@ def q_stream_live_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_stream_live_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """An EXECUTED stream-stream join inside the oracle gate: purchases
     and view/click touches arrive as two independent watermarked streams
-    (readStream over the same multi-file directory, micro-batched 2 files
-    per trigger), joined on user within a 1-hour lookback
-    (streams.py::stream_stream_interval_join), run to completion into an
-    append-mode memory sink.
+    (readStream twice over the shared events replay directory,
+    micro-batched 2 files per trigger), joined on user within a 1-hour
+    lookback (streams.py::stream_stream_interval_join), run to completion
+    into an append-mode memory sink.
 
     Stream-stream INNER join emits each match in the first micro-batch
     where both rows are present — emission never waits on the watermark
@@ -295,7 +322,7 @@ def q_stream_live_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounded by watermark + window."""
     from ..streaming.streams import file_stream, stream_stream_interval_join
 
-    path = _replay_events(spark, sf_dir, "events_stream_ssj")
+    path = _replay_events(spark, sf_dir)
     # era translation (see docstring): both sides shifted identically, so
     # the join condition and lag_s are unchanged while pre-epoch rows
     # clear Spark's non-negative watermark domain
@@ -360,7 +387,7 @@ def q_stream_live_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream-stream join."""
     from ..streaming.streams import file_stream
 
-    path = _replay_events(spark, sf_dir, "events_stream_sl")
+    path = _replay_events(spark, sf_dir)
     agg = (
         file_stream(spark, path, max_files_per_trigger=2)
         .withWatermark("ts", "10 minutes")
@@ -410,7 +437,7 @@ def q_stream_live_session(spark: SparkSession, sf_dir: str) -> DataFrame:
     every window kind the batch surface declares also RUNS incrementally."""
     from ..streaming.streams import file_stream
 
-    path = _replay_events(spark, sf_dir, "events_stream_se")
+    path = _replay_events(spark, sf_dir)
     agg = (
         file_stream(spark, path, max_files_per_trigger=2)
         .groupBy(F.session_window("ts", "5 minutes"), "user_id")
@@ -451,7 +478,7 @@ def q_stream_live_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     in-flight form."""
     from ..streaming.streams import file_stream
 
-    path = _replay_events(spark, sf_dir, "events_stream_sj")
+    path = _replay_events(spark, sf_dir)
     cust = t(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
     joined = (
         file_stream(spark, path, max_files_per_trigger=2)
@@ -503,8 +530,6 @@ def q_stream_live_eviction(spark: SparkSession, sf_dir: str) -> DataFrame:
     watermark defines the drop point, closed windows leave the state
     store, and a replayed/late source cannot resurrect them."""
     import datetime as _dt
-    import os
-    import shutil
     import time as _time
 
     import pyarrow as pa
@@ -527,6 +552,11 @@ def q_stream_live_eviction(spark: SparkSession, sf_dir: str) -> DataFrame:
     # parquet write carries ~5 s of fixed job/committer overhead ON EACH
     # of the three files (measured r6); pyarrow writes them in ~ms and the
     # stream source only cares about the bytes.
+    # The file source discovers files oldest-first by modification time,
+    # so each file gets an explicit mtime one second after the previous
+    # one: the order is fixed by construction. They end at the current
+    # second, well inside the source's maxFileAge.
+    first_mtime = int(_time.time()) - len(batches) + 1
     for i, rows in enumerate(batches):
         tbl = pa.table({
             "event_id": pa.array([eid for eid, _ in rows], pa.int64()),
@@ -542,10 +572,9 @@ def q_stream_live_eviction(spark: SparkSession, sf_dir: str) -> DataFrame:
             "value": pa.array([1.0] * len(rows), pa.float64()),
             "props": pa.array([None] * len(rows), pa.string()),
         })
-        pq.write_table(tbl, os.path.join(path, f"batch{i}.parquet"))
-        # distinct mtimes keep oldest-first discovery deterministic (the
-        # file source orders by modification time; 50 ms >> fs resolution)
-        _time.sleep(0.05)
+        f = os.path.join(path, f"batch{i}.parquet")
+        pq.write_table(tbl, f)
+        os.utime(f, (first_mtime + i, first_mtime + i))
     agg = (
         file_stream(spark, path, max_files_per_trigger=1)
         .withWatermark("ts", "10 minutes")

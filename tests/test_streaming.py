@@ -30,6 +30,31 @@ def _tumbling_counts(events, window="5 minutes", watermark="10 minutes"):
     )
 
 
+def _manager_of(q) -> str:
+    """Simple class name of a running query's checkpoint file manager."""
+    return q._jsq.streamingQuery().offsetLog().fileManager().getClass().getSimpleName()
+
+
+FS_MANAGER = "FileSystemBasedCheckpointFileManager"
+
+
+@pytest.fixture
+def live_managers(monkeypatch):
+    """Checkpoint file manager of every memory-sink run, by sink name."""
+    from quarkus_etl_spark.streaming import streams
+
+    seen: dict[str, str] = {}
+    run = streams.run_stream_to_memory
+
+    def recording(df, name, output_mode="append"):
+        q = run(df, name, output_mode)
+        seen[name] = _manager_of(q)
+        return q
+
+    monkeypatch.setattr(streams, "run_stream_to_memory", recording)
+    return seen
+
+
 def test_streaming_import_leaves_interpreter_alone():
     """Importing the streaming module must not edit sys.path or put a
     `google` package in place: workers that unpickle a streaming function
@@ -314,12 +339,13 @@ def test_python_streaming_datasource_exactly_once(spark, tmp_path):
     assert sorted(map(tuple, got.collect())) == sorted(map(tuple, batch.collect()))
 
 
-def test_live_eviction_drops_late_rows(spark):
+def test_live_eviction_drops_late_rows(spark, live_managers):
     """Row-exact pin of q_stream_live_eviction (the driver-visible
     watermark-eviction query): three finalized windows, the [10:00,10:15)
     count stays 3 because the post-eviction late arrival was dropped, and
     the final 11:30 window never emits (append mode, watermark never
-    passes it)."""
+    passes it). The run checkpoints through the FileSystem-based
+    manager."""
     import datetime as dt
 
     from quarkus_etl_spark.queries.streaming_q import q_stream_live_eviction
@@ -334,6 +360,7 @@ def test_live_eviction_drops_late_rows(spark):
         (d(10, 30), d(10, 45), "view", 1),
         (d(10, 45), d(11, 0), "view", 1),
     ]
+    assert live_managers == {"live_eviction": FS_MANAGER}
 
 
 def test_watermark_is_lower_bound_while_state_lives(spark, tmp_path):
@@ -465,7 +492,8 @@ def test_eviction_stream_checkpoint_restart_no_duplicate_windows(spark, tmp_path
     cnt-3 emission. Expected end state: exactly the same three finalized
     windows as the one-shot q_stream_live_eviction run — 3/1/1, each window
     exactly once — with exactly-once emission across the restart via the
-    file sink's transactional manifest."""
+    file sink's transactional manifest. Both runs checkpoint through the
+    FileSystem-based manager."""
     import datetime as dt
     import os
     import time
@@ -479,6 +507,8 @@ def test_eviction_stream_checkpoint_restart_no_duplicate_windows(spark, tmp_path
     src.mkdir()
     out, cp = str(tmp_path / "out"), str(tmp_path / "cp")
     day = dt.datetime(2024, 3, 1)
+    # explicit mtimes a second apart fix oldest-first discovery order
+    first_mtime = int(time.time()) - 3
 
     def write_batch(i, rows):
         tbl = pa.table({
@@ -493,8 +523,9 @@ def test_eviction_stream_checkpoint_restart_no_duplicate_windows(spark, tmp_path
             "value": pa.array([1.0] * len(rows), pa.float64()),
             "props": pa.array([None] * len(rows), pa.string()),
         })
-        pq.write_table(tbl, os.path.join(str(src), f"batch{i}.parquet"))
-        time.sleep(0.05)  # distinct mtimes -> deterministic oldest-first order
+        f = os.path.join(str(src), f"batch{i}.parquet")
+        pq.write_table(tbl, f)
+        os.utime(f, (first_mtime + i, first_mtime + i))
 
     def run_once():
         agg = (
@@ -508,7 +539,7 @@ def test_eviction_stream_checkpoint_restart_no_duplicate_windows(spark, tmp_path
                 "cnt",
             )
         )
-        with state_partitions(spark):
+        with state_partitions(spark, cp):
             q = (
                 agg.writeStream.format("parquet")
                 .option("path", out)
@@ -517,6 +548,7 @@ def test_eviction_stream_checkpoint_restart_no_duplicate_windows(spark, tmp_path
                 .start()
             )
             q.processAllAvailable()
+            assert _manager_of(q) == FS_MANAGER
             q.stop()
 
     # phase A: the window-building batch only (watermark reaches 10:30 at
@@ -562,7 +594,8 @@ def test_stream_stream_join_checkpoint_restart_exactly_once(spark, tmp_path):
        append an extra (p2,v3) row.
 
     Expected end state: exactly the 3 matches a one-shot batch interval
-    join over the non-late rows produces, each exactly once."""
+    join over the non-late rows produces, each exactly once. Both runs
+    checkpoint through the FileSystem-based manager."""
     import datetime as dt
     import os
     import time
@@ -581,6 +614,9 @@ def test_stream_stream_join_checkpoint_restart_exactly_once(spark, tmp_path):
     tdir.mkdir()
     out, cp = str(tmp_path / "out"), str(tmp_path / "cp")
     day = dt.datetime(2024, 3, 1)
+    # explicit mtimes a second apart, in write order, fix each side's
+    # file discovery order
+    mtimes = iter(range(int(time.time()) - 4, int(time.time())))
 
     def write_side(dirpath, name, id_col, ts_col, rows):
         tbl = pa.table({
@@ -591,8 +627,10 @@ def test_stream_stream_join_checkpoint_restart_exactly_once(spark, tmp_path):
                 pa.timestamp("us", tz="UTC"),
             ),
         })
-        pq.write_table(tbl, os.path.join(str(dirpath), name))
-        time.sleep(0.05)  # distinct mtimes -> deterministic file order
+        f = os.path.join(str(dirpath), name)
+        pq.write_table(tbl, f)
+        mtime = next(mtimes)
+        os.utime(f, (mtime, mtime))
 
     P_SCHEMA = "p_event long, user_id long, p_ts timestamp"
     T_SCHEMA = "v_event long, user_id long, v_ts timestamp"
@@ -609,7 +647,7 @@ def test_stream_stream_join_checkpoint_restart_exactly_once(spark, tmp_path):
             left_ts="p_ts", right_ts="v_ts",
             window="1 hour", watermark="10 minutes",
         ).select("p_event", "v_event", "user_id")
-        with state_partitions(spark):
+        with state_partitions(spark, cp):
             q = (
                 joined.writeStream.format("parquet")
                 .option("path", out)
@@ -618,6 +656,7 @@ def test_stream_stream_join_checkpoint_restart_exactly_once(spark, tmp_path):
                 .start()
             )
             q.processAllAvailable()
+            assert _manager_of(q) == FS_MANAGER
             q.stop()
 
     # phase A: v1<->p1 match emits; p4 (u7 @11:55) buffers unmatched; the
@@ -681,14 +720,25 @@ _LIVE_PLAN_FORBID = (
 )
 
 
-def test_live_streaming_executed_plan_markers(spark, sf_dir):
+def test_live_streaming_executed_plan_markers(spark, sf_dir, live_managers, monkeypatch):
     """Runs every q_stream_live_* query for real and audits the executed
     physical plan of its final micro-batch (captured by
     run_stream_to_memory before stop()): the expected state operator is
-    present, no anti-pattern node class appears."""
+    present, no anti-pattern node class appears. Every run checkpoints
+    through the FileSystem-based manager, and every query over the events
+    fixture streams the one shared replay directory."""
     from quarkus_etl_spark.queries import all_query_callables
+    from quarkus_etl_spark.queries.streaming_q import _replay_events
     from quarkus_etl_spark.streaming import streams
 
+    sources: dict[str, set[str]] = {}
+    stream_of = streams.file_stream
+
+    def recording(spark, source_dir, *args, **kwargs):
+        sources.setdefault(qname, set()).add(source_dir)
+        return stream_of(spark, source_dir, *args, **kwargs)
+
+    monkeypatch.setattr(streams, "file_stream", recording)
     qs = all_query_callables()
     assert set(_LIVE_PLAN_EXPECT) == {
         n for n in qs if n.startswith("q_stream_live_")
@@ -701,6 +751,57 @@ def test_live_streaming_executed_plan_markers(spark, sf_dir):
             assert marker in plan, f"{qname}: expected {marker} in executed plan"
         for marker in _LIVE_PLAN_FORBID:
             assert marker not in plan, f"{qname}: forbidden {marker} in plan"
+    assert live_managers == {sink: FS_MANAGER for sink, _ in _LIVE_PLAN_EXPECT.values()}
+    shared = {_replay_events(spark, sf_dir)}
+    replayed = {q: dirs for q, dirs in sources.items() if q != "q_stream_live_eviction"}
+    assert replayed == {q: shared for q in _LIVE_PLAN_EXPECT if q != "q_stream_live_eviction"}
+
+
+def _replay_jobs(spark, build, group: str):
+    """(rows, jobs launched on the calling thread) of one live build; the
+    micro-batch jobs run in the stream's own job group, so what the
+    caller's group counts is the events replay write."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        df = build()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return sorted(map(tuple, df.collect())), len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_live_streams_replay_events_once(spark, sf_dir, tmp_path):
+    """The events replay is written once per fixture identity: a second
+    live build reuses it (no job on the caller's thread) and returns the
+    same rows; a new events mtime or a deleted replay directory makes the
+    next build write it again, each time with the jobs of one write."""
+    import os
+    import shutil
+
+    from quarkus_etl_spark.queries.streaming_q import _replay_events, q_stream_live_dedup
+
+    fixture = tmp_path / os.path.basename(sf_dir)
+    fixture.mkdir()
+    events = fixture / "events.parquet"
+    shutil.copy(os.path.join(sf_dir, "events.parquet"), events)
+
+    def build():
+        return q_stream_live_dedup(spark, str(fixture))
+
+    load_table(spark, str(fixture), "events")  # its schema-read job is not the replay's
+    first, write_jobs = _replay_jobs(spark, build, "replay-first")
+    again, reuse_jobs = _replay_jobs(spark, build, "replay-again")
+    assert write_jobs > 0 and reuse_jobs == 0
+    assert first == again and len(first) > 0
+
+    st = os.stat(events)
+    os.utime(events, ns=(st.st_atime_ns, st.st_mtime_ns + 10**9))
+    touched, touched_jobs = _replay_jobs(spark, build, "replay-touched")
+    assert (touched, touched_jobs) == (first, write_jobs)
+
+    shutil.rmtree(_replay_events(spark, str(fixture)))
+    rebuilt, rebuilt_jobs = _replay_jobs(spark, build, "replay-deleted")
+    assert (rebuilt, rebuilt_jobs) == (first, write_jobs)
 
 
 def test_stream_join_epoch_floor_and_era_translation(spark, tmp_path):
@@ -765,10 +866,50 @@ def test_stream_join_epoch_floor_and_era_translation(spark, tmp_path):
 
 def test_state_partitions_expected_keys_sizing(spark):
     """Stateful streams start under LOCAL_STATE_PARTITIONS (4) shuffle
-    partitions, and the session's own setting is restored on exit."""
-    from quarkus_etl_spark.streaming.streams import LOCAL_STATE_PARTITIONS, state_partitions
+    partitions and, for a checkpoint on the local `file:` file system,
+    the FileSystem-based checkpoint manager; the session's own settings
+    are restored on exit, an unset manager key unset again. A checkpoint
+    root on any other scheme keeps Spark's default manager."""
+    from quarkus_etl_spark.streaming.streams import (
+        CHECKPOINT_MANAGER_KEY,
+        FS_CHECKPOINT_MANAGER,
+        LOCAL_STATE_PARTITIONS,
+        checkpoint_is_local,
+        state_partitions,
+    )
 
-    before = spark.conf.get("spark.sql.shuffle.partitions")
+    conf = spark.conf
+    before = conf.get("spark.sql.shuffle.partitions")
+    assert conf.get(CHECKPOINT_MANAGER_KEY, None) is None
     with state_partitions(spark):
-        assert int(spark.conf.get("spark.sql.shuffle.partitions")) == LOCAL_STATE_PARTITIONS == 4
-    assert spark.conf.get("spark.sql.shuffle.partitions") == before
+        assert int(conf.get("spark.sql.shuffle.partitions")) == LOCAL_STATE_PARTITIONS == 4
+        assert conf.get(CHECKPOINT_MANAGER_KEY) == FS_CHECKPOINT_MANAGER
+    assert conf.get("spark.sql.shuffle.partitions") == before
+    assert conf.get(CHECKPOINT_MANAGER_KEY, None) is None
+
+    context_manager = (
+        "org.apache.spark.sql.execution.streaming.checkpointing."
+        "FileContextBasedCheckpointFileManager"
+    )
+    conf.set(CHECKPOINT_MANAGER_KEY, context_manager)
+    try:
+        with state_partitions(spark, "/tmp/cp"):
+            assert conf.get(CHECKPOINT_MANAGER_KEY) == FS_CHECKPOINT_MANAGER
+        assert conf.get(CHECKPOINT_MANAGER_KEY) == context_manager
+    finally:
+        conf.unset(CHECKPOINT_MANAGER_KEY)
+
+    assert checkpoint_is_local(None)
+    assert checkpoint_is_local("/tmp/cp")
+    assert checkpoint_is_local("file:///tmp/cp")
+    assert not checkpoint_is_local("hdfs://nn/cp")
+    assert not checkpoint_is_local("s3a://bucket/cp")
+    assert not checkpoint_is_local("/tmp/cp", default_fs="hdfs://nn:8020")
+    with state_partitions(spark, "hdfs://nn/cp"):
+        assert conf.get(CHECKPOINT_MANAGER_KEY, None) is None
+    conf.set("spark.sql.streaming.checkpointLocation", "hdfs://nn/cp")
+    try:
+        with state_partitions(spark):
+            assert conf.get(CHECKPOINT_MANAGER_KEY, None) is None
+    finally:
+        conf.unset("spark.sql.streaming.checkpointLocation")
