@@ -42,10 +42,8 @@ def _replay_events(spark: SparkSession, sf_dir: str) -> str:
     `realpath(sf_dir)` plus the `events.parquet` mtime_ns and size. When
     the key changes or the directory is gone it is written again, into a
     temp directory first and then renamed into place, so a stream never
-    lists a half-written replay. A write is a shuffle and a parquet job
-    that fork about 40 `chmod` processes (one per file created, SCALE.md
-    "Streaming"); at sf0.01 on 4 cores it took 0.29-0.50 s of each warm
-    live build before it was shared."""
+    lists a half-written replay. What one write costs is in SCALE.md
+    "Streaming"."""
     from .lifecycle_q import _scratch
 
     src = os.path.join(os.path.realpath(sf_dir), "events.parquet")

@@ -6,16 +6,8 @@ Design rules for scale:
   is the same bug as the reference's UNLIMITED channel (EtlMain.kt:51),
   which we deliberately do not replicate.
 - Size stateful shuffle partitions to state volume (`state_partitions`).
-- Write local checkpoints through the FileSystem API, not FileContext
-  (`state_partitions`, same start scope). pip PySpark ships no libhadoop,
-  so Hadoop's RawLocalFileSystem runs `chmod` through a forked process on
-  every create-with-permission, which Spark's default FileContext
-  checkpoint manager makes for every offset, commit, state-delta and
-  checksum file. One warm q_stream_live_dedup run (2 micro-batches,
-  4 cores) makes 543 new PIDs under the default manager and 142 under
-  the FileSystem-based one. Only a `file:` checkpoint switches: the
-  FileSystem-based manager's rename-overwrite is safe only where rename
-  is atomic, so an HDFS or object-store checkpoint keeps Spark's default.
+- Write local checkpoints through the FileSystem-based checkpoint manager
+  (`state_partitions` says why).
 """
 
 from __future__ import annotations
@@ -88,7 +80,7 @@ FS_CHECKPOINT_MANAGER = (
 )
 
 
-def checkpoint_is_local(root: str | None, default_fs: str = "file:///") -> bool:
+def checkpoint_is_local(root: str | None, default_fs: str) -> bool:
     """True when a checkpoint under `root` lands on the local `file:` file
     system. A root without a scheme resolves against `default_fs`, as
     Hadoop resolves it; no root means Spark's temp checkpoint directory,
@@ -97,11 +89,10 @@ def checkpoint_is_local(root: str | None, default_fs: str = "file:///") -> bool:
 
 
 @contextmanager
-def state_partitions(spark: SparkSession, checkpoint: str | None = None):
+def state_partitions(spark: SparkSession):
     """The scope every stream START runs in. Two session settings are
     pinned at start (a streaming query clones the session's conf then) and
-    restored on exit; `checkpoint` is the query's explicit
-    `checkpointLocation`, if it has one.
+    restored on exit.
 
     Shuffle partitions are sized to STATE volume, not CPU count: every
     state partition carries its own state store (a stream-stream join
@@ -116,17 +107,14 @@ def state_partitions(spark: SparkSession, checkpoint: str | None = None):
     A checkpoint on the local `file:` file system is written through
     FS_CHECKPOINT_MANAGER. Without libhadoop (pip PySpark has none),
     Spark's default FileContext manager makes RawLocalFileSystem fork a
-    `chmod` process for every checkpoint file it creates. Medians of 10
-    warm q_stream_live_dedup runs at sf0.01 on 4 cores, default ->
-    FileSystem-based: 543 -> 142 new PIDs (280 -> 80 JVM threads
-    started), processAllAvailable 0.88 -> 0.52 s, and, summed over the 2
-    batches, walCommit 70 -> 17 ms and state-store commit 779 -> 113 ms.
-    The checkpoint holds the same files, `.crc` sidecars and state
-    checksums included. The root that decides is `checkpoint`, else the
-    session's `spark.sql.streaming.checkpointLocation`, else Spark's temp
-    directory. Any other scheme keeps Spark's default manager, because
-    the FileSystem-based one overwrites by rename, which is safe only
-    where rename is atomic.
+    `chmod` process for every checkpoint file it creates (measured in
+    SCALE.md "Streaming"). The root that decides is the session's
+    `spark.sql.streaming.checkpointLocation`, else Spark's temp
+    directory, resolved against `fs.defaultFS`. Any other scheme keeps
+    Spark's default manager, because the FileSystem-based one overwrites
+    by rename, which is safe only where rename is atomic; so a stream
+    whose own `checkpointLocation` is on HDFS or an object store is not
+    started in this scope under a local session root.
 
     The state-store provider is the session's own
     `spark.sql.streaming.stateStore.providerClass` (RocksDB is the scale
@@ -135,7 +123,7 @@ def state_partitions(spark: SparkSession, checkpoint: str | None = None):
     conf = spark.conf
     old_partitions = conf.get("spark.sql.shuffle.partitions")
     old_manager = conf.get(CHECKPOINT_MANAGER_KEY, None)
-    root = checkpoint or conf.get("spark.sql.streaming.checkpointLocation", None)
+    root = conf.get("spark.sql.streaming.checkpointLocation", None)
     default_fs = spark._jsc.hadoopConfiguration().get("fs.defaultFS", "file:///")
     conf.set("spark.sql.shuffle.partitions", str(LOCAL_STATE_PARTITIONS))
     if checkpoint_is_local(root, default_fs):

@@ -539,7 +539,7 @@ def test_eviction_stream_checkpoint_restart_no_duplicate_windows(spark, tmp_path
                 "cnt",
             )
         )
-        with state_partitions(spark, cp):
+        with state_partitions(spark):
             q = (
                 agg.writeStream.format("parquet")
                 .option("path", out)
@@ -647,7 +647,7 @@ def test_stream_stream_join_checkpoint_restart_exactly_once(spark, tmp_path):
             left_ts="p_ts", right_ts="v_ts",
             window="1 hour", watermark="10 minutes",
         ).select("p_event", "v_event", "user_id")
-        with state_partitions(spark, cp):
+        with state_partitions(spark):
             q = (
                 joined.writeStream.format("parquet")
                 .option("path", out)
@@ -893,20 +893,20 @@ def test_state_partitions_expected_keys_sizing(spark):
     )
     conf.set(CHECKPOINT_MANAGER_KEY, context_manager)
     try:
-        with state_partitions(spark, "/tmp/cp"):
+        with state_partitions(spark):
             assert conf.get(CHECKPOINT_MANAGER_KEY) == FS_CHECKPOINT_MANAGER
         assert conf.get(CHECKPOINT_MANAGER_KEY) == context_manager
     finally:
         conf.unset(CHECKPOINT_MANAGER_KEY)
 
-    assert checkpoint_is_local(None)
-    assert checkpoint_is_local("/tmp/cp")
-    assert checkpoint_is_local("file:///tmp/cp")
-    assert not checkpoint_is_local("hdfs://nn/cp")
-    assert not checkpoint_is_local("s3a://bucket/cp")
-    assert not checkpoint_is_local("/tmp/cp", default_fs="hdfs://nn:8020")
-    with state_partitions(spark, "hdfs://nn/cp"):
-        assert conf.get(CHECKPOINT_MANAGER_KEY, None) is None
+    local_fs = "file:///"
+    assert checkpoint_is_local(None, local_fs)
+    assert checkpoint_is_local("/tmp/cp", local_fs)
+    assert checkpoint_is_local("file:///tmp/cp", local_fs)
+    assert not checkpoint_is_local("hdfs://nn/cp", local_fs)
+    assert not checkpoint_is_local("s3a://bucket/cp", local_fs)
+    assert not checkpoint_is_local("/tmp/cp", "hdfs://nn:8020")
+    assert not checkpoint_is_local(None, "hdfs://nn:8020")
     conf.set("spark.sql.streaming.checkpointLocation", "hdfs://nn/cp")
     try:
         with state_partitions(spark):
