@@ -44,25 +44,24 @@ class EtlJob:
     name: str
     extract: str
     write: str | WriteTarget | None = None
-    # DAG extension (the reference runs strictly sequentially,
-    # EtlMain.kt:28-37; depends_on adds explicit ordering so independent
-    # jobs may run concurrently under JobRunner.run_dag)
-    depends_on: tuple[str, ...] = ()
+
+
+_JOB_KEYS = {"name", "extract", "write"}
 
 
 def jobs_from_dicts(raw: list[dict]) -> list[EtlJob]:
+    """Jobs run strictly in list order (EtlMain.kt:28-37). A key other
+    than name/extract/write fails here, so a config written for some other
+    scheduler (say, with `depends_on`) cannot silently run in file order."""
     out: list[EtlJob] = []
     for d in raw:
-        write = d.get("write")
-        deps_raw = d.get("depends_on", ()) or ()
-        if isinstance(deps_raw, str):
-            # A bare string would iterate char-by-char into ('s','t','a',...)
-            # and surface later as a confusing unknown-jobs DAG error.
-            raise TypeError(
-                f"job {d.get('name')!r}: depends_on must be a list of job "
-                f"names, got the bare string {deps_raw!r}"
+        unknown = sorted(set(d) - _JOB_KEYS)
+        if unknown:
+            raise ValueError(
+                f"job {d.get('name')!r}: unknown keys {unknown}; "
+                f"a job has only {sorted(_JOB_KEYS)}"
             )
-        depends_on = tuple(deps_raw)
+        write = d.get("write")
         if isinstance(write, dict):
             write = WriteTarget(
                 format=write.get("format", "parquet"),
@@ -72,8 +71,7 @@ def jobs_from_dicts(raw: list[dict]) -> list[EtlJob]:
                 options=dict(write.get("options", {})),
                 partition_by=tuple(write.get("partition_by", ())),
             )
-        out.append(EtlJob(name=d["name"], extract=d["extract"], write=write,
-                          depends_on=depends_on))
+        out.append(EtlJob(name=d["name"], extract=d["extract"], write=write))
     return out
 
 

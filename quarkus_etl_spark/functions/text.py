@@ -41,7 +41,7 @@ def fingerprint_md5(text: Column | str) -> Column:
     return F.md5(normalize_text(text))
 
 
-def ngrams(tokens: Column, n: int = 2, sep: str = " ") -> Column:
+def ngrams(tokens: Column, n: int = 2) -> Column:
     """Word n-grams from a token array: join of tokens[i..i+n-1].
 
     Branch-free short-input handling: `slice` past the array end is just a
@@ -54,7 +54,7 @@ def ngrams(tokens: Column, n: int = 2, sep: str = " ") -> Column:
     A `when`-guarded variant is ~2.4x slower again (the conditional defeats
     fusion of the array pipeline)."""
     idx = F.sequence(F.lit(1), F.greatest(F.size(tokens) - (n - 1), F.lit(1)))
-    grams_full = F.transform(idx, lambda i: F.array_join(F.slice(tokens, i, n), sep))
+    grams_full = F.transform(idx, lambda i: F.array_join(F.slice(tokens, i, n), " "))
     return F.slice(grams_full, 1, F.greatest(F.size(tokens) - (n - 1), F.lit(0)))
 
 
@@ -147,32 +147,19 @@ def chunked(df, tokens: Column, window: int = 20, stride: int = 15, keep=None):
     )
 
 
-def ngram_hashes(tokens: Column, n: int = 2) -> Column:
-    """Hashes of word n-grams, skipping string materialization: for
-    identity-only consumers (Jaccard, MinHash, SimHash features) the n-gram
-    STRING is never needed, so hash the token tuple directly —
-    `zip_with(tokens[0:k], tokens[1:k], xxhash64)` for bigrams. The
-    expression tree is a fraction of `ngrams()`+concat+hash, which matters
-    both at runtime and in codegen compile time for the big dedup plans.
-
-    CALLER CONTRACT for n > 2: pass `tokens` as a bound column (a real
-    attribute), NOT a derived expression — the general-n path indexes the
-    array inside a transform lambda, and interpreted HOF eval re-evaluates
-    a derived argument once PER ELEMENT (no CSE): an inline split() there
-    turns O(L) into O(L²) per row."""
-    if n == 2:
-        k = F.size(tokens) - 1
-        return F.zip_with(
-            F.slice(tokens, 1, F.greatest(k, F.lit(0))),
-            F.slice(tokens, 2, F.greatest(k, F.lit(0))),
-            lambda x, y: F.xxhash64(x, y),
-        )
-    # general n: hash the n successive tokens via try_element_at
-    idx = F.sequence(F.lit(0), F.greatest(F.size(tokens) - 1, F.lit(0)))
-    full = F.transform(
-        idx, lambda i: F.xxhash64(*[F.try_element_at(tokens, i + j + 1) for j in range(n)])
+def ngram_hashes(tokens: Column) -> Column:
+    """Hashes of word bigrams, skipping string materialization: for
+    identity-only consumers (Jaccard, MinHash, SimHash features) the bigram
+    STRING is never needed, so hash the token pair directly —
+    `zip_with(tokens[0:k], tokens[1:k], xxhash64)`. The expression tree is
+    a fraction of `ngrams()`+concat+hash, which matters both at runtime and
+    in codegen compile time for the big dedup plans."""
+    k = F.size(tokens) - 1
+    return F.zip_with(
+        F.slice(tokens, 1, F.greatest(k, F.lit(0))),
+        F.slice(tokens, 2, F.greatest(k, F.lit(0))),
+        lambda x, y: F.xxhash64(x, y),
     )
-    return F.slice(full, 1, F.greatest(F.size(tokens) - (n - 1), F.lit(0)))
 
 
 # Per-row strategy switch for max_token_count: below this length the

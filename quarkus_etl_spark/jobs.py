@@ -22,9 +22,7 @@ spill — that quirk is deliberately not replicated.
 from __future__ import annotations
 
 import logging
-import threading
 import time
-from concurrent.futures import FIRST_COMPLETED, ThreadPoolExecutor, wait
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, Observation, SparkSession
@@ -52,19 +50,11 @@ class JobResult:
 class JobRunner:
     """Runs an ordered list of EtlJobs on one SparkSession."""
 
-    def __init__(self, spark: SparkSession, normalize: bool = True):
+    def __init__(self, spark: SparkSession):
         self.spark = spark
-        self.normalize = normalize
-        # Write-SQL jobs publish their extract as the shared `etl_source`
-        # view (reference-parity name); concurrent DAG branches must not
-        # race on it, so the view+SQL pair executes under this lock.
-        self._sql_write_lock = threading.Lock()
 
     def extract(self, job: EtlJob) -> DataFrame:
-        df = self.spark.sql(job.extract)
-        if self.normalize:
-            df = normalize_identifiers(df)  # uppercase + dup guard (A6/A7)
-        return df
+        return normalize_identifiers(self.spark.sql(job.extract))  # uppercase + dup guard (A6/A7)
 
     def run_job(self, job: EtlJob) -> JobResult:
         start = time.monotonic()
@@ -89,14 +79,8 @@ class JobRunner:
                 )
             references_source = "etl_source" in stmt.lower()
             if references_source:
-                # The shared etl_source view name is the only cross-job
-                # mutable state; scope the lock to jobs that actually use
-                # it so DDL/static-SQL branches stay parallel under run_dag.
-                with self._sql_write_lock:
-                    observed.createOrReplaceTempView("etl_source")
-                    self.spark.sql(stmt)
-            else:
-                self.spark.sql(stmt)
+                observed.createOrReplaceTempView("etl_source")
+            self.spark.sql(stmt)
             # Pure DDL (the reference's job-0 `tableCreate` shape,
             # application.properties:12-15) never runs the extract, so the
             # observation would block forever — only read it when the write
@@ -113,36 +97,3 @@ class JobRunner:
 
     def run(self, jobs: list[EtlJob]) -> list[JobResult]:
         return [self.run_job(j) for j in jobs]
-
-    def run_dag(self, jobs: list[EtlJob], max_parallel: int = 4) -> list[JobResult]:
-        """DAG execution: run each job as soon as its `depends_on` jobs
-        finished, independent branches concurrently (Spark schedules
-        concurrent actions from multiple threads fairly within one
-        session). The reference executes strictly sequentially
-        (EtlMain.kt:28-37) — `run()` keeps that parity; this is the
-        engine extension that keeps a 1000-executor cluster busy when a
-        config has parallel extract/load branches. Unknown dependencies
-        and cycles fail fast; a failing job propagates its exception and
-        cancels nothing already running (at-most-once per job, like the
-        reference's per-batch autocommit)."""
-        by_name = {j.name: j for j in jobs}
-        if len(by_name) != len(jobs):
-            raise ValueError("duplicate job names in DAG")
-        unknown = {d for j in jobs for d in j.depends_on} - set(by_name)
-        if unknown:
-            raise ValueError(f"depends_on references unknown jobs: {sorted(unknown)}")
-        pending = {j.name: set(j.depends_on) for j in jobs}
-        results: dict[str, JobResult] = {}
-        running: dict = {}
-        with ThreadPoolExecutor(max_workers=max_parallel) as ex:
-            while pending or running:
-                ready = [n for n, ds in pending.items() if ds <= results.keys()]
-                if not ready and not running:
-                    raise ValueError(f"dependency cycle among jobs: {sorted(pending)}")
-                for n in ready:
-                    del pending[n]
-                    running[ex.submit(self.run_job, by_name[n])] = n
-                done, _ = wait(running, return_when=FIRST_COMPLETED)
-                for f in done:
-                    results[running.pop(f)] = f.result()
-        return [results[j.name] for j in jobs]

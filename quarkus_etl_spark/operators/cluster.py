@@ -19,7 +19,7 @@ action) and then picks one of two solvers by that count:
   distance, so chain-shaped clusters converge in O(log diameter) rounds.
   Each round ends in a `localCheckpoint` (an iterative plan otherwise
   grows a lineage Catalyst re-analyzes every round) and a `count()` of
-  changed labels. A loop that hits `max_iter` before a no-change round
+  changed labels. A loop that hits `MAX_ITER` before a no-change round
   raises rather than return half-propagated labels.
 
 Both solvers give every non-NULL endpoint its smallest reachable id. An
@@ -39,6 +39,8 @@ from pyspark.sql import functions as F
 # union-find is ~0.4 s; the task holds two int64 columns, ~32 MB. The
 # Spark rounds took 29-35 s on the same graph.
 LOCAL_EDGE_CAP = 2_000_000
+# Rounds the over-cap Spark loop may run before it raises.
+MAX_ITER = 20
 
 
 def symmetrized_edges(
@@ -113,11 +115,10 @@ def connected_components(
     pairs: DataFrame,
     src: str,
     dst: str,
-    max_iter: int = 20,
 ) -> DataFrame:
     """(node, component) for every non-NULL node appearing in `pairs`;
     component is the smallest node id reachable via pair edges
-    (deterministic). `max_iter` bounds the over-cap Spark loop, which
+    (deterministic). `MAX_ITER` bounds the over-cap Spark loop, which
     raises when it runs out before converging."""
     from ..catalog import ensure_worker_imports
 
@@ -152,7 +153,7 @@ def connected_components(
     # deferring it makes round i+1 re-evaluate round i's two joins as an
     # unmaterialized subtree under EACH of its several `labels` references
     # — more work than the one count() barrier it saves (~2 of ~28 jobs).
-    for _ in range(max_iter):
+    for _ in range(MAX_ITER):
         # Round 1: neighbor min — comp(u) := min(comp(u), min comp(v) over edges)
         neigh = (
             edges.join(labels.select(F.col("u").alias("v"), F.col("comp").alias("vc")), "v")
@@ -187,7 +188,7 @@ def connected_components(
         if changed == 0:
             return labels.select(F.col("u").alias("node"), F.col("comp").alias("component"))
     raise RuntimeError(
-        f"connected_components: labels still changed after max_iter={max_iter} "
+        f"connected_components: labels still changed after MAX_ITER={MAX_ITER} "
         f"rounds on {n_edges} edges; the components would be partial"
     )
 
@@ -196,13 +197,12 @@ def dedup_keep_canonical(
     df: DataFrame,
     pairs: DataFrame,
     id_col: str,
-    src: str = "id_a",
-    dst: str = "id_b",
 ) -> DataFrame:
     """Drop every clustered row except its component's min-id canonical:
-    the end-to-end near-dedup contract (pairs in, deduplicated table out).
-    Rows never appearing in `pairs` are kept untouched."""
-    comp = connected_components(pairs, src, dst)
+    the end-to-end near-dedup contract ((id_a, id_b) pairs in,
+    deduplicated table out). Rows never appearing in `pairs` are kept
+    untouched."""
+    comp = connected_components(pairs, "id_a", "id_b")
     losers = comp.where(F.col("node") != F.col("component")).select(
         F.col("node").alias(id_col)
     )
@@ -214,8 +214,6 @@ def dedup_keep_best(
     pairs: DataFrame,
     id_col: str,
     score_col: str,
-    src: str = "id_a",
-    dst: str = "id_b",
 ) -> DataFrame:
     """Quality-aware canonicalization: per near-dup component keep the
     member with the HIGHEST integer score (ties -> smallest id), drop the
@@ -236,8 +234,8 @@ def dedup_keep_best(
     one row kills the job), and DECIMAL keys are not an option because
     DuckDB 1.0's arg_max picks a non-extreme row on them (NOTES Round 6).
     Components come from the same `connected_components` as every other
-    cluster consumer."""
-    comp = connected_components(pairs, src, dst)
+    cluster consumer. `pairs` carries (id_a, id_b) edges."""
+    comp = connected_components(pairs, "id_a", "id_b")
     scored = comp.join(
         df.select(F.col(id_col).alias("node"), F.col(score_col).alias("__score")),
         "node",

@@ -2,7 +2,7 @@
 q_dedup_*): exact, MinHash+LSH, SimHash, n-gram Jaccard.
 
 Every near-dup path is one candidate -> verify pipeline over one feature
-table (`_ngram_sets`: hashed word n-gram sets, optionally blocked):
+table (`_ngram_sets`: hashed word bigram sets, optionally blocked):
 candidates come from the size-bucketed join, prefix filtering or LSH
 banding, and every candidate is verified with the same exact Jaccard.
 
@@ -66,9 +66,7 @@ LSH_BANDS = 16
 MAX_BUCKET = 1000
 
 
-def minhash_signatures(
-    sets: DataFrame, id_col: str, num_hashes: int = MINHASH_HASHES
-) -> DataFrame:
+def minhash_signatures(sets: DataFrame, id_col: str) -> DataFrame:
     """(id, h0..h{k-1}) MinHash signature per document from its `__set`
     feature array.
 
@@ -83,7 +81,7 @@ def minhash_signatures(
         id_col,
         *[
             F.expr(f"array_min(transform(__set, x -> hash(x, {i}))) AS h{i}")
-            for i in range(num_hashes)
+            for i in range(MINHASH_HASHES)
         ],
     )
 
@@ -176,7 +174,7 @@ def minhash_near_dup_pairs(
     sides of the verification join), so it is checkpointed eagerly
     (construction-time jobs: the consumers land in one job, and concurrent
     stages double-compute a lazy intermediate)."""
-    sets = _ngram_sets(df, id_col, text_col, None, 2).localCheckpoint()
+    sets = _ngram_sets(df, id_col, text_col, None).localCheckpoint()
     return _jaccard_lsh(sets, id_col, threshold)
 
 
@@ -232,7 +230,7 @@ def simhash(
     else:
         hashed = F.array_union(
             F.array_distinct(F.transform(toks, lambda x: F.xxhash64(x))),
-            F.array_distinct(ngram_hashes(toks, 2)),
+            F.array_distinct(ngram_hashes(toks)),
         )
     base = pre.select(F.col(id_col), hashed.alias("__f")).withColumn("__n", F.size("__f"))
     # ZERO-shuffle: each bit's majority is a per-row filter-count over the
@@ -306,27 +304,25 @@ def ngram_jaccard_pairs(
     text_col: str,
     block_col: str,
     threshold: float,
-    n: int = 2,
-    strategy: str = "auto",
 ) -> DataFrame:
-    """Blocked pairwise word-n-gram-set Jaccard at `threshold` — exact
-    under every strategy; `strategy` picks the candidate-generation plan
-    ("auto" routes by corpus size, see below):
+    """Blocked pairwise word-bigram-set Jaccard at `threshold` — exact on
+    both candidate-generation plans, which are routed by corpus size
+    (`EXHAUSTIVE_MAX_DOCS`):
 
-    - "exhaustive": blocked self-join with size-ratio pruning and
-      short-circuited intersect. Catalyst picks the join strategy by its
-      size estimate (auto-broadcast while the block table fits, shuffle join
-      on the block/bucket equi-keys beyond that). Wins when the vocabulary
-      is dense (synthetic fixtures: every feature is common, so rarity-based
-      pruning has nothing to grip).
-    - "prefix": AllPairs/PPJoin prefix filtering — candidates only from
-      pairs sharing one of each doc's globally-rarest features. Near-linear
-      on realistic Zipf-distributed corpora at cluster scale, where the
-      exhaustive quadratic is intractable and rare features are truly rare.
+    - exhaustive (at or below the cap): blocked self-join with size-ratio
+      pruning and short-circuited intersect. Catalyst picks the join
+      strategy by its size estimate (auto-broadcast while the block table
+      fits, shuffle join on the block/bucket equi-keys beyond that). Wins
+      when the vocabulary is dense (synthetic fixtures: every feature is
+      common, so rarity-based pruning has nothing to grip).
+    - prefix (above the cap): AllPairs/PPJoin prefix filtering —
+      candidates only from pairs sharing one of each doc's
+      globally-rarest features. Near-linear on realistic Zipf-distributed
+      corpora at cluster scale, where the exhaustive quadratic is
+      intractable and rare features are truly rare.
 
-    Word n-grams (default bigrams) capture local order, which keeps Jaccard
-    discriminative even over a small shared vocabulary (unigram sets
-    saturate). Deterministic and SQL-replicable (unlike LSH), so it serves
+    Word bigrams capture local order, which keeps Jaccard discriminative
+    even over a small shared vocabulary (unigram sets saturate). Deterministic and SQL-replicable (unlike LSH), so it serves
     as the oracle-checked member of the near-dup family.
 
     The feature table is checkpointed: every candidate branch consumes it
@@ -336,24 +332,19 @@ def ngram_jaccard_pairs(
     scale it is the materialize-the-fingerprints step of guide §8).
     The checkpoint is EAGER (construction-time jobs — concurrent consumers
     make lazy unsafe)."""
-    sets = _ngram_sets(df, id_col, text_col, block_col, n).localCheckpoint()
-    if strategy == "auto":
-        # Both branches are EXACT (prefix filtering loses no recall), so
-        # auto-routing never changes the result set — only the candidate
-        # plan. Exhaustive wins below the threshold (dense small corpora,
-        # and it is the shape the SQL oracle replicates); AllPairs prefix
-        # filtering is the near-linear path on Zipf-distributed corpora
-        # where the blocked quadratic is intractable.
-        strategy = (
-            "exhaustive" if _fits_exhaustive(df) else "prefix"
-        )
+    sets = _ngram_sets(df, id_col, text_col, block_col).localCheckpoint()
+    # Both branches are EXACT (prefix filtering loses no recall), so the
+    # routing never changes the result set — only the candidate plan.
+    # Exhaustive wins below the threshold (dense small corpora, and it is
+    # the shape the SQL oracle replicates); AllPairs prefix filtering is
+    # the near-linear path on Zipf-distributed corpora where the blocked
+    # quadratic is intractable.
+    if _fits_exhaustive(df):
         # Both branches exact -> never approximate; DEBUG record only.
-        log_route("ngram_jaccard_pairs", strategy, approximate=False)
-    if strategy == "exhaustive":
+        log_route("ngram_jaccard_pairs", "exhaustive", approximate=False)
         return _jaccard_exhaustive(sets, id_col, threshold)
-    if strategy == "prefix":
-        return _jaccard_prefix(sets, id_col, threshold)
-    raise ValueError(f"unknown strategy: {strategy}")
+    log_route("ngram_jaccard_pairs", "prefix", approximate=False)
+    return _jaccard_prefix(sets, id_col, threshold)
 
 
 # Corpus-size routing threshold for the near-dup edge builders. Below it the
@@ -375,18 +366,16 @@ def near_dup_edges(
     text_col: str,
     block_col: str,
     threshold: float,
-    n: int = 2,
-    strategy: str = "auto",
 ) -> DataFrame:
     """Near-duplicate candidate EDGES (id_a < id_b, jaccard) for the
     graph/cluster consumers (connected components, canonical keep,
     SoftDeDup weights, PageRank/LPA, leakage checks).
 
-    strategy="auto" is the 100 TB routing contract (VERDICT r2 #2): below
-    `EXHAUSTIVE_MAX_DOCS` it builds the exact exhaustive
+    Routing by corpus size is the 100 TB contract (VERDICT r2 #2): at or
+    below `EXHAUSTIVE_MAX_DOCS` it builds the exact exhaustive
     blocked-Jaccard graph — bit-identical to the SQL oracles — and above
     it switches to MinHash-LSH candidate generation over the SAME hashed
-    n-gram sets, verified with the SAME exact Jaccard (precision 1.0,
+    bigram sets, verified with the SAME exact Jaccard (precision 1.0,
     recall per the LSH S-curve in the module docstring; every surviving
     edge carries a value identical to what the exhaustive plan would
     emit). Candidate cost goes from quadratic-per-block to near-linear
@@ -394,15 +383,12 @@ def near_dup_edges(
 
     Feature table checkpointed eagerly for the same multi-consumer reason
     as ngram_jaccard_pairs."""
-    sets = _ngram_sets(df, id_col, text_col, block_col, n).localCheckpoint()
-    if strategy == "auto":
-        strategy = "exhaustive" if _fits_exhaustive(df) else "lsh"
-        log_route("near_dup_edges", strategy, approximate=strategy == "lsh")
-    if strategy == "exhaustive":
+    sets = _ngram_sets(df, id_col, text_col, block_col).localCheckpoint()
+    if _fits_exhaustive(df):
+        log_route("near_dup_edges", "exhaustive", approximate=False)
         return _jaccard_exhaustive(sets, id_col, threshold)
-    if strategy == "lsh":
-        return _jaccard_lsh(sets, id_col, threshold)
-    raise ValueError(f"unknown strategy: {strategy}")
+    log_route("near_dup_edges", "lsh", approximate=True)
+    return _jaccard_lsh(sets, id_col, threshold)
 
 
 def _jaccard_lsh(sets: DataFrame, id_col: str, threshold: float) -> DataFrame:
@@ -424,16 +410,16 @@ def _jaccard_lsh(sets: DataFrame, id_col: str, threshold: float) -> DataFrame:
 
 
 def _ngram_sets(
-    df: DataFrame, id_col: str, text_col: str, block_col: str | None, n: int
+    df: DataFrame, id_col: str, text_col: str, block_col: str | None
 ) -> DataFrame:
-    """(id, __blk, __set, __len) hashed-n-gram feature table; block_col=None
+    """(id, __blk, __set, __len) hashed-bigram feature table; block_col=None
     puts every document in one block.
 
-    Hash each n-gram to a long up front: set intersection over longs is
+    Hash each bigram to a long up front: set intersection over longs is
     several times cheaper than over strings, and Jaccard only needs
-    identity, not content. Word n-grams (bigrams by default) stay
-    discriminative over small vocabularies, where character shingles of
-    unrelated documents overlap heavily and flood LSH with candidates.
+    identity, not content. Word bigrams stay discriminative over small
+    vocabularies, where character shingles of unrelated documents overlap
+    heavily and flood LSH with candidates.
     Stage discipline (this was a 10x bug, visible only in the plan):
     1. Repartition the RAW rows first — `repartition()` sits above its
        child, so projecting features before it would run the whole
@@ -453,16 +439,15 @@ def _ngram_sets(
         df.select(
             F.col(id_col),
             blk.alias("__blk"),
-            # tokenized as a REAL column: ngram_hashes' general-n path
-            # indexes the token array inside a lambda, and a derived
-            # expression there would re-split per element (interpreted
-            # HOF, no CSE — O(L²) per row); a bound attribute is O(1)
+            # tokenized as a REAL column: ngram_hashes reads the token
+            # array four times, and a derived expression there would
+            # re-split on each read; a bound attribute is split once
             F.split(F.coalesce(normalize_text(text_col), F.lit("")), "\\s+").alias(
                 "__tk"
             ),
         )
     )
-    hashed = F.array_distinct(ngram_hashes(F.col("__tk"), n))
+    hashed = F.array_distinct(ngram_hashes(F.col("__tk")))
     return pre.select(F.col(id_col), F.col("__blk"), hashed.alias("__set")).withColumn(
         "__len", F.size("__set")
     )
@@ -475,8 +460,6 @@ def incremental_jaccard_pairs(
     text_col: str,
     block_col: str,
     threshold: float,
-    n: int = 2,
-    strategy: str = "auto",
 ) -> DataFrame:
     """Asymmetric near-dup join for incremental ingest: which INCOMING
     documents are near-duplicates of the EXISTING corpus — the daily-batch
@@ -491,29 +474,20 @@ def incremental_jaccard_pairs(
     (__blk, __bkt) equi-keys with AQE skew splitting.
     Returns (id_exist, id_new, jaccard) for pairs at/above threshold.
 
-    strategy="auto" (the default) keeps this exact size-bucketed plan while
-    corpus+delta fit EXHAUSTIVE_MAX_DOCS and switches to the
-    asymmetric MinHash-LSH candidate plan above it (band hashes computed
+    It keeps this exact size-bucketed plan while corpus+delta fit
+    EXHAUSTIVE_MAX_DOCS and switches to the asymmetric MinHash-LSH
+    candidate plan above it (band hashes computed
     per side, equi-join on (band, hash), exact verification — identical
     jaccard on every surviving pair, recall S-curve-bounded): at dense
     duplicate density the bucketed exact join degrades toward
     corpus-quadratic (measured 653 s at 500k x 500k replicated docs; the
     LSH plan is candidate-linear)."""
-    sa = _ngram_sets(existing, id_col, text_col, block_col, n)
-    sb = _ngram_sets(incoming, id_col, text_col, block_col, n)
-    if strategy == "auto":
-        strategy = (
-            "exact"
-            if routing_count(existing) + routing_count(incoming) <= EXHAUSTIVE_MAX_DOCS
-            else "lsh"
-        )
-        log_route(
-            "incremental_jaccard_pairs", strategy, approximate=strategy == "lsh"
-        )
-    if strategy == "lsh":
+    sa = _ngram_sets(existing, id_col, text_col, block_col)
+    sb = _ngram_sets(incoming, id_col, text_col, block_col)
+    if routing_count(existing) + routing_count(incoming) > EXHAUSTIVE_MAX_DOCS:
+        log_route("incremental_jaccard_pairs", "lsh", approximate=True)
         return _incremental_lsh(sa, sb, id_col, threshold)
-    if strategy != "exact":
-        raise ValueError(f"unknown strategy: {strategy}")
+    log_route("incremental_jaccard_pairs", "exact", approximate=False)
     return _jaccard_exhaustive(sa, id_col, threshold, incoming=sb)
 
 

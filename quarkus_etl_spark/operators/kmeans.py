@@ -34,7 +34,7 @@ import math
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.vectors import sql_array, sql_fold, sql_ident
+from ..functions.vectors import sql_array, sql_fold
 
 # Above this centroid count the Lloyd assignment routes to the pruned plan
 # (q_emb_kmeans keeps the exact plan at its oracle-graded fixture k=4).
@@ -47,19 +47,17 @@ def _sq_dist(a: list[float], b: list[float]) -> float:
 
 def coarse_cells(
     centroids: list[tuple[int, list[float]]],
-    n_cells: int | None = None,
-    iters: int = 3,
 ) -> tuple[list[list[float]], dict[int, int]]:
-    """Driver-side grouping of the k centroids into C coarse cells.
-    Deterministic: seeds are the first C centroids by cluster id; Lloyd
-    over k points (k*dim floats — driver-trivial). Returns (coarse center
-    vectors, cluster_id -> cell_id)."""
+    """Driver-side grouping of the k centroids into C = max(2, isqrt(k))
+    coarse cells. Deterministic: seeds are the first C centroids by
+    cluster id; three Lloyd steps over k points (k*dim floats —
+    driver-trivial). Returns (coarse center vectors, cluster_id -> cell_id)."""
     cents = sorted(centroids, key=lambda t: t[0])
     k = len(cents)
-    c = n_cells or max(2, math.isqrt(k))
+    c = max(2, math.isqrt(k))
     coarse = [list(cents[i][1]) for i in range(min(c, k))]
     assign: dict[int, int] = {}
-    for _ in range(max(iters, 1)):
+    for _ in range(3):
         members: dict[int, list[list[float]]] = {}
         for cid, vec in cents:
             best = min(
@@ -95,24 +93,18 @@ def quantized_sq_dist(a: str, b: str) -> Column:
 def kmeans_assign_pruned(
     v: DataFrame,
     centroids: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "e",
-    cluster_col: str = "cluster",
-    carr_col: str = "carr",
     nprobe: int = 2,
-    n_cells: int | None = None,
 ) -> DataFrame:
-    """IVF-pruned Lloyd assignment (see module docstring). `centroids` is
+    """IVF-pruned Lloyd assignment (see module docstring) of the
+    (vec_id, e) rows of `v`, returning (vec_id, cluster). `centroids` is
     the small (cluster, carr) frame the exact plan would broadcast; it is
     collected driver-side (k rows — the accepted tiny-collect class) to
     build the coarse cells."""
     from ..plans.tuning import log_route
 
-    rows = centroids.select(
-        F.col(cluster_col).cast("long").alias("c"), F.col(carr_col).alias("v")
-    ).collect()
+    rows = centroids.select(F.col("cluster").cast("long").alias("c"), F.col("carr").alias("v")).collect()
     cents = [(int(r["c"]), [float(x) for x in r["v"]]) for r in rows]
-    coarse, cell_of = coarse_cells(cents, n_cells=n_cells)
+    coarse, cell_of = coarse_cells(cents)
     nprobe = min(max(nprobe, 1), len(coarse))
     log_route(
         "kmeans_assign",
@@ -129,19 +121,19 @@ def kmeans_assign_pruned(
     cell_scores = F.array(
         *[
             F.struct(
-                quantized_sq_dist(sql_ident(vec_col), sql_array(c)).alias("d"),
+                quantized_sq_dist("e", sql_array(c)).alias("d"),
                 F.lit(j).cast("int").alias("cell"),
             )
             for j, c in enumerate(coarse)
         ]
     )
     probed = v.select(
-        F.col(id_col),
-        F.col(vec_col),
+        F.col("vec_id"),
+        F.col("e"),
         F.explode(F.sequence(F.lit(1), F.lit(nprobe))).alias("__pi"),
     ).select(
-        F.col(id_col),
-        F.col(vec_col),
+        F.col("vec_id"),
+        F.col("e"),
         F.element_at(
             F.slice(F.array_sort(cell_scores), 1, nprobe).getField("cell"),
             F.col("__pi"),
@@ -161,16 +153,16 @@ def kmeans_assign_pruned(
             "cluster long, carr array<double>, __cell int",
         )
     )
-    qdist = quantized_sq_dist(sql_ident(vec_col), "carr")
+    qdist = quantized_sq_dist("e", "carr")
     return (
         probed.join(cent_cells, "__cell")
         .select(
-            id_col,
+            "vec_id",
             F.struct(qdist.alias("dist"), F.col("cluster").alias("cluster")).alias(
                 "dc"
             ),
         )
-        .groupBy(id_col)
+        .groupBy("vec_id")
         .agg(F.min("dc").alias("m"))
-        .select(id_col, F.col("m.cluster").alias("cluster"))
+        .select("vec_id", F.col("m.cluster").alias("cluster"))
     )

@@ -6,9 +6,8 @@ Frame sampling, feature extraction and audio windowing run as Arrow-batched
 `mapInPandas` over the binary column — the Spark-side plumbing (schemas,
 batch iteration, partition-preserving map) is real and tested; the actual
 codec calls are STUBBED (no image/audio libraries are a dependency):
-payloads use a deterministic synthetic header that the operators parse, and
-requesting a real codec raises NotImplementedError at the exact point a
-PIL/ffmpeg call would slot in.
+payloads use a deterministic synthetic header that the operators parse, at
+the point where a PIL/ffmpeg call would slot in.
 
 Synthetic payload layout (big-endian):
   magic   3 bytes  b"SYN"
@@ -33,8 +32,6 @@ MEDIA_SCHEMA = (
 )
 
 _KINDS = ("image", "audio", "video")
-
-SUPPORTED_CODECS = ("synthetic",)
 
 
 def make_synthetic_payload(media_id: int, kind: int, w: int, h: int) -> bytes:
@@ -76,9 +73,7 @@ def synthetic_media(spark, n: int = 100, partitions: int | None = None) -> DataF
 FEATURE_DIM = 16
 
 
-def video_features(
-    df: DataFrame, n_frames: int = 4, codec: str = "synthetic"
-) -> DataFrame:
+def video_features(df: DataFrame, n_frames: int = 4) -> DataFrame:
     """Fused frame-sample + featurize: ONE Arrow stage from video payload to
     (media_id, frame_idx, frame_ts_ms, feature).
 
@@ -97,8 +92,6 @@ def video_features(
     frames; this operator is that pass — one worker chain, frames never
     leave Python. The expansion is per-row and partition-preserving (no
     shuffle), so fan-out never concentrates on one executor."""
-    if codec not in SUPPORTED_CODECS:
-        raise NotImplementedError(f"codec {codec!r} unavailable (stub environment)")
 
     import numpy as np
 
@@ -129,9 +122,7 @@ def video_features(
     return df.select("media_id", "payload").mapInPandas(fused, schema=out_schema)
 
 
-def audio_windows(
-    df: DataFrame, window_ms: int = 250, codec: str = "synthetic"
-) -> DataFrame:
+def audio_windows(df: DataFrame, window_ms: int = 250) -> DataFrame:
     """Audio window segmentation + per-window features: 1 audio row ->
     ceil(duration/window) rows of (media_id, win_idx, win_start_ms, rms,
     zero_crossings, n_samples) — the audio analog of video frame sampling
@@ -140,8 +131,6 @@ def audio_windows(
     header's declared rate; a real backend would pydub/torchaudio-decode
     in the same Arrow seam. Per-row expansion, partition-preserving, no
     shuffle — identical scale shape to the video path."""
-    if codec not in SUPPORTED_CODECS:
-        raise NotImplementedError(f"codec {codec!r} unavailable (stub environment)")
 
     import numpy as np
 

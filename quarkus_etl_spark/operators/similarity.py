@@ -243,15 +243,14 @@ def _lsh_bucket_sql(vec_col: str, planes: list[list[float]]) -> str:
     return f"aggregate({bits}, 0L, (__lsh_s, __lsh_b) -> __lsh_s + __lsh_b)"
 
 
-def add_lsh_bucket(
-    df: DataFrame, vec_col: str, planes: list[list[float]], out_col: str = "bucket"
-) -> DataFrame:
-    """Sign-bit bucket id from the hyperplane dot products: bit i is set iff
-    dot(v, planes[i]) >= 0 (a NULL or ragged vector sets no bit). One
+def add_lsh_bucket(df: DataFrame, vec_col: str, planes: list[list[float]]) -> DataFrame:
+    """Column `bucket`: the sign-bit bucket id from the hyperplane dot
+    products. Bit i is set iff dot(v, planes[i]) >= 0 (a NULL or ragged
+    vector sets no bit). One
     parsed expression (`_lsh_bucket_sql`), so building it costs a fixed
     few py4j round trips for any plane count and dim (a Column expression
     per plane cost ~270 round trips each)."""
-    return df.withColumn(out_col, F.expr(_lsh_bucket_sql(vec_col, planes)))
+    return df.withColumn("bucket", F.expr(_lsh_bucket_sql(vec_col, planes)))
 
 
 def _bucket_of(probe: list[float], planes: list[list[float]]) -> int:
@@ -313,52 +312,20 @@ def lsh_topk(
 # --------------------------------------------------------------------------
 
 
-def ivf_centroids(
-    df: DataFrame, vec_col: str, id_col: str, n_cells: int, refine_iters: int = 0
-) -> list[list[float]]:
-    """Deterministic centroid seed: the first `n_cells` vectors by id,
-    optionally refined with `refine_iters` Lloyd (k-means) steps. One tiny
-    n_cells-row driver collect per iteration.
-
-    Each refinement step is fully distributed and deterministic: cell
-    assignment is the same pure-Column scoring `add_ivf_cell` uses at query
-    time, and the new centroid means ride the portable fixed-point
-    aggregation (floor to a 1e-15 grid -> exact integer sums; see
-    q_emb_centroid) — shuffle volume |cells| x dim per step. Empty cells
-    keep their previous centroid. Balanced cells mean balanced scan work
-    per probe, which is what refinement buys the index at scale."""
+def ivf_centroids(df: DataFrame, vec_col: str, id_col: str, n_cells: int) -> list[list[float]]:
+    """Deterministic centroids: the first `n_cells` vectors by id, in one
+    tiny n_cells-row driver collect."""
     rows = (
         df.orderBy(F.col(id_col).asc())
         .limit(n_cells)
         .select(to_double_array(vec_col).alias("v"))
         .collect()
     )
-    cents = [list(r["v"]) for r in rows]
-    for _ in range(refine_iters):
-        assigned = add_ivf_cell(df, vec_col, cents, out_col="__cell")
-        exploded = assigned.select(
-            "__cell", F.posexplode(to_double_array(vec_col)).alias("pos", "x")
-        )
-        q = F.floor(F.col("x") * F.lit(1e15)).cast("decimal(28,0)")
-        means = (
-            exploded.groupBy("__cell", "pos")
-            .agg((F.sum(q).cast("double") / F.lit(1e15) / F.count(F.lit(1))).alias("m"))
-            .groupBy("__cell")
-            .agg(F.array_sort(F.collect_list(F.struct("pos", "m"))).alias("pm"))
-            .select("__cell", F.col("pm.m").alias("mean"))
-            .collect()
-        )
-        new_cents = list(cents)
-        for r in means:
-            new_cents[r["__cell"]] = [float(x) for x in r["mean"]]
-        cents = new_cents
-    return cents
+    return [list(r["v"]) for r in rows]
 
 
-def add_ivf_cell(
-    df: DataFrame, vec_col: str, centroids: list[list[float]], out_col: str = "cell"
-) -> DataFrame:
-    """Assign each vector to its max-cosine centroid: build the score
+def add_ivf_cell(df: DataFrame, vec_col: str, centroids: list[list[float]]) -> DataFrame:
+    """Column `cell`: each vector's max-cosine centroid. Build the score
     array, take array_position of its max. Ties resolve to the lowest cell
     id (array_position finds the first occurrence); a NULL vector gets a
     NULL cell.
@@ -379,7 +346,7 @@ def add_ivf_cell(
         df.withColumn("__nv", l2_norm(vec_col))
         .withColumn("__ivf_s", F.expr(f"transform({cents}, __ivf_e -> {score})"))
         .withColumn(
-            out_col,
+            "cell",
             F.expr("CAST(array_position(__ivf_s, array_max(__ivf_s)) - 1 AS INT)"),
         )
         .drop("__nv", "__ivf_s")
@@ -418,13 +385,12 @@ def ivf_topk(
     k: int = 10,
     n_cells: int = 16,
     nprobe: int = 3,
-    refine_iters: int = 0,
 ) -> DataFrame:
     """IVF ANN: route the probe to its `nprobe` nearest cells and scan only
     those (~nprobe/n_cells of the data). The cell assignment is a pure
     column expression, so at scale the index is just a partition/cluster-by
     column on the stored table — no shuffle at query time."""
-    cents = ivf_centroids(df, vec_col, id_col, n_cells, refine_iters=refine_iters)
+    cents = ivf_centroids(df, vec_col, id_col, n_cells)
     cells = _probe_cells(probe, cents, nprobe)
     bucketed = add_ivf_cell(ensure_parallelism(df), vec_col, cents)
     cands = bucketed.where(F.col("cell").isin(cells))
@@ -676,7 +642,6 @@ def ann_pairs(
     *,
     dim: int,
     block_col: str | None = None,
-    n_planes: int | None = None,
 ) -> DataFrame:
     """APPROXIMATE all-pairs at cosine >= threshold: the scale path for
     `pairwise_similar`. The candidates are knn_graph_ann's one bucket
@@ -700,8 +665,7 @@ def ann_pairs(
 
     `dim` is the column's declared vector dimension, as for knn_graph_ann:
     a row whose vector has another length gets no pairs."""
-    if n_planes is None:
-        n_planes = _auto_planes(df)
+    n_planes = _auto_planes(df)
     pairs = _lsh_candidates(
         ensure_parallelism(_contract_projection(df, id_col, vec_col, dim, block_col)),
         id_col, dim=dim, n_planes=n_planes, seeds=(LSH_SEED,),

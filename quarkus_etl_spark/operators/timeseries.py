@@ -60,9 +60,8 @@ def sessionize(
     ts_col: str,
     gap_s: int,
     tiebreak: list[str] | None = None,
-    out_col: str = "session_id",
 ) -> DataFrame:
-    """Assign an ordinal session id per key: a new session starts when the
+    """Assign an ordinal `session_id` per key: a new session starts when the
     gap to the previous event exceeds gap_s seconds.
 
     Both window passes (lag for the gap, running sum for the counter) use
@@ -74,7 +73,7 @@ def sessionize(
     gap_us = _epoch_us(ts_col) - _epoch_us(F.lag(ts_col).over(w))
     is_new = F.when(gap_us.isNull() | (gap_us > gap_s * US), F.lit(1)).otherwise(F.lit(0))
     running = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    return df.withColumn(out_col, F.sum(is_new).over(running))
+    return df.withColumn("session_id", F.sum(is_new).over(running))
 
 
 _INTERVAL_UNIT_US = {
@@ -120,7 +119,6 @@ def gapfill(
     step: str,
     dims: list[str],
     fills: dict[str, Column],
-    max_cells: int = GAPFILL_MAX_CELLS,
 ) -> DataFrame:
     """Densify a bucketed aggregate: emit one row per (grid bucket × dim
     combination), filling absent cells from `fills` (col -> default).
@@ -130,7 +128,7 @@ def gapfill(
     driver-side fetch, same k-bounded pattern as the k-means centroids);
     generation is CHUNKED — explode ~100k-cell spans across partitions,
     then sequence within each — so no single task ever materializes the
-    whole calendar, and a `max_cells` budget fails fast with the bounds
+    whole calendar, and the `GAPFILL_MAX_CELLS` budget fails fast with the bounds
     when a clock-skewed outlier row would otherwise explode the grid
     (one 2200-dated event in 100 TB must be a clear error, not a hang).
     The join still runs against data that aggregation already shrank."""
@@ -160,11 +158,11 @@ def gapfill(
         empty_cols = [bucket_col, *dims, *fills]
         return agg.select(*empty_cols).limit(0)
     n_cells = (hi_us - lo_us) // step_us + 1
-    if n_cells > max_cells:
+    if n_cells > GAPFILL_MAX_CELLS:
         raise ValueError(
             f"gapfill grid would have {n_cells} cells ({row['__lo']} .. "
-            f"{row['__hi']} at {step}) > max_cells={max_cells}; clamp "
-            f"outlier timestamps or pass a larger max_cells"
+            f"{row['__hi']} at {step}) > GAPFILL_MAX_CELLS={GAPFILL_MAX_CELLS}; "
+            f"clamp outlier timestamps"
         )
     chunk_us = GAPFILL_CHUNK_CELLS * step_us
     spark = agg.sparkSession

@@ -1,6 +1,6 @@
 """Plan text capture (SURVEY.md §4.2: "don't defeat Catalyst").
 
-`plan_string` returns a frame's `explain(mode)` output as a string, for the
+`plan_string` returns a frame's formatted `explain` output as a string, for the
 plan dumps of the measurement tools and the plan assertions in
 tests/test_plans.py.
 """
@@ -13,8 +13,8 @@ from contextlib import redirect_stdout
 from pyspark.sql import DataFrame
 
 
-def plan_string(df: DataFrame, mode: str = "formatted") -> str:
+def plan_string(df: DataFrame) -> str:
     buf = io.StringIO()
     with redirect_stdout(buf):
-        df.explain(mode=mode)
+        df.explain(mode="formatted")
     return buf.getvalue()

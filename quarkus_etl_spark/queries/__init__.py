@@ -30,10 +30,5 @@ def _load_all() -> None:
     if _loaded:
         return
     for mod in _MODULES:
-        try:
-            importlib.import_module(f".{mod}", __name__)
-        except ModuleNotFoundError as e:
-            # Tolerate not-yet-written wave modules during incremental build.
-            if f".{mod}" not in str(e) and mod not in str(e):
-                raise
+        importlib.import_module(f".{mod}", __name__)
     _loaded = True

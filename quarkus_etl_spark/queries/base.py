@@ -28,7 +28,7 @@ from collections.abc import Callable
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..catalog import TABLES, load_table
+from ..catalog import load_table
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLES: dict[str, str] = {}
@@ -85,13 +85,12 @@ _VIEWS_READY: set[tuple[str, str]] = set()
 def ensure_views(spark: SparkSession, sf_dir: str) -> None:
     """Register all fixtures as temp views once per (session, sf_dir) so
     SQL-path queries (CTEs, subqueries, grouping sets) can run."""
-    from ..catalog import _session_key
+    from ..catalog import _session_key, register_views
 
     key = (_session_key(spark), sf_dir)
     if key in _VIEWS_READY:
         return
-    for name in TABLES:
-        load_table(spark, sf_dir, name).createOrReplaceTempView(name)
+    register_views(spark, sf_dir)
     _VIEWS_READY.add(key)
 
 
@@ -138,6 +137,11 @@ def davg(c: Column | str, alias: str) -> Column:
     return (F.sum(dec2(c)).cast("double") / F.count(c)).alias(alias)
 
 
+# The text normalization + whitespace tokenization of
+# functions.text.tokenize(normalize_text(...)), spelled in DuckDB.
+SQL_TOKS = r"string_split(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' ')"
+
+
 def sql_dsum(expr: str, alias: str) -> str:
     return f"CAST(SUM(CAST({expr} AS DECIMAL(18,2))) AS DOUBLE) AS {alias}"
 
@@ -166,26 +170,26 @@ def _read_json_object(path: str) -> dict:
     return obj
 
 
-def _last_graded_rounds(root: str = _ROOT) -> dict[str, int]:
+def _last_graded_rounds() -> dict[str, int]:
     """name -> newest round whose driver record grades it. A record that
     cannot be read raises, naming the file: these records are the only
     source of the grading order."""
     out: dict[str, int] = {}
-    for fname in sorted(os.listdir(root)):
+    for fname in sorted(os.listdir(_ROOT)):
         m = _RECORD.fullmatch(fname)
         if m:
-            for name in _read_json_object(os.path.join(root, fname)):
+            for name in _read_json_object(os.path.join(_ROOT, fname)):
                 out[name] = max(out.get(name, 0), int(m.group(1)))
     return out
 
 
-def _graded_last(d: dict, root: str = _ROOT, manifest: str = FINGERPRINTS) -> dict:
+def _graded_last(d: dict) -> dict:
     """Grading-priority order. A query leads iff its manifest entry was
     re-verified at or after its last driver verdict (never-graded queries
     included); every other query follows, least-recently graded first.
     Ties keep registration order."""
-    last = _last_graded_rounds(root)
-    stamp = {n: e.get("round", 0) for n, e in _read_json_object(manifest).items()}
+    last = _last_graded_rounds()
+    stamp = {n: e.get("round", 0) for n, e in _read_json_object(FINGERPRINTS).items()}
 
     def prio(name: str) -> tuple[int, int]:
         graded = last.get(name, 0)

@@ -27,10 +27,7 @@ from ..functions.text import (
 )
 from ..functions.vectors import duck_cosine
 from ..plans.tuning import ensure_parallelism
-from .base import emb, register, t
-
-# The same normalization pipeline, spelled in DuckDB.
-_SQL_TOKS = r"string_split(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' ')"
+from .base import SQL_TOKS, emb, register, t
 
 
 # --------------------------------------------------------------------------
@@ -44,7 +41,7 @@ _CHUNK_W, _CHUNK_S = 20, 15
     "q_text_chunk",
     oracle=rf"""
     WITH toks AS (
-        SELECT doc_id, {_SQL_TOKS} AS tk FROM documents
+        SELECT doc_id, {SQL_TOKS} AS tk FROM documents
     ), st AS (
         SELECT doc_id, tk,
                unnest(generate_series(0, len(tk) - 1, {_CHUNK_S})) AS start
@@ -149,7 +146,7 @@ def q_text_pii(spark: SparkSession, sf_dir: str) -> DataFrame:
     "q_text_repetition",
     oracle=rf"""
     WITH toks AS (
-        SELECT doc_id, {_SQL_TOKS} AS tk FROM documents
+        SELECT doc_id, {SQL_TOKS} AS tk FROM documents
     ), g AS (
         SELECT doc_id, tk,
                list_transform(generate_series(1, len(tk) - 1),
@@ -338,7 +335,7 @@ def q_join_skew_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
     "q_chunk_dedup",
     oracle=rf"""
     WITH toks AS (
-        SELECT doc_id, {_SQL_TOKS} AS tk FROM documents
+        SELECT doc_id, {SQL_TOKS} AS tk FROM documents
     ), st AS (
         SELECT doc_id, tk,
                unnest(generate_series(0, len(tk) - 1, {_CHUNK_S})) AS start
@@ -400,7 +397,7 @@ def q_chunk_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     "q_text_tfidf",
     oracle=rf"""
     WITH toks AS (
-        SELECT doc_id, {_SQL_TOKS} AS tk FROM documents
+        SELECT doc_id, {SQL_TOKS} AS tk FROM documents
     ), n AS (
         SELECT COUNT(*) AS n_docs FROM documents
     ), tf AS (
@@ -519,7 +516,7 @@ def q_text_url(spark: SparkSession, sf_dir: str) -> DataFrame:
     "q_corpus_pipeline",
     oracle=rf"""
     WITH toks AS (
-        SELECT doc_id, lang, text, {_SQL_TOKS} AS tk FROM documents
+        SELECT doc_id, lang, text, {SQL_TOKS} AS tk FROM documents
     ), scored AS (
         SELECT doc_id, lang, text, tk,
                LEAST(LENGTH(text) / 500.0, 1.0) * 0.4
@@ -631,7 +628,7 @@ def _gram_rows(toks: DataFrame) -> DataFrame:
     "q_decontaminate",
     oracle=rf"""
     WITH toks AS (
-        SELECT doc_id, {_SQL_TOKS} AS tk FROM documents
+        SELECT doc_id, {SQL_TOKS} AS tk FROM documents
     ), grams AS (
         SELECT doc_id,
                unnest(list_transform(
@@ -710,7 +707,7 @@ def _split_col() -> F.Column:
     "q_pack_sequences",
     oracle=rf"""
     WITH toks AS (
-        SELECT doc_id, lang, len({_SQL_TOKS}) AS n_tok FROM documents
+        SELECT doc_id, lang, len({SQL_TOKS}) AS n_tok FROM documents
     ), seq AS (
         SELECT lang, n_tok,
                SUM(n_tok) OVER (PARTITION BY lang ORDER BY doc_id) AS cum
@@ -837,7 +834,7 @@ def q_split_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=rf"""
     WITH toks AS (
         SELECT doc_id, t.w AS term
-        FROM (SELECT doc_id, {_SQL_TOKS} AS tk FROM documents), unnest(tk) AS t(w)
+        FROM (SELECT doc_id, {SQL_TOKS} AS tk FROM documents), unnest(tk) AS t(w)
     ), cnt AS (
         SELECT term, COUNT(*) AS term_n FROM toks GROUP BY term
     ), tot AS (
@@ -949,7 +946,7 @@ def q_mix_rebalance(spark: SparkSession, sf_dir: str) -> DataFrame:
     "q_corpus_stats",
     oracle=rf"""
     SELECT lang, source, COUNT(*) AS n_docs,
-           CAST(SUM(len({_SQL_TOKS})) AS BIGINT) AS total_tokens,
+           CAST(SUM(len({SQL_TOKS})) AS BIGINT) AS total_tokens,
            CAST(SUM(CAST(n_chars AS DECIMAL(18,2))) AS DOUBLE) / COUNT(*) AS avg_chars,
            CAST(SUM(CASE WHEN
                LEAST(LENGTH(text) / 500.0, 1.0) * 0.4
@@ -1000,7 +997,7 @@ _VOCAB_K = 64
     "q_vocab_build",
     oracle=rf"""
     WITH tok AS (
-        SELECT doc_id, unnest({_SQL_TOKS}) AS term FROM documents
+        SELECT doc_id, unnest({SQL_TOKS}) AS term FROM documents
     ), tok2 AS (
         SELECT doc_id, term FROM tok WHERE term <> ''
     ), stats AS (
@@ -1147,7 +1144,7 @@ _HASH_D = 32
     "q_feat_hash",
     oracle=rf"""
     WITH tok AS (
-        SELECT doc_id, unnest({_SQL_TOKS}) AS term FROM documents
+        SELECT doc_id, unnest({SQL_TOKS}) AS term FROM documents
     ), tok2 AS (
         SELECT doc_id, term FROM tok WHERE term <> ''
     )
@@ -1368,7 +1365,7 @@ _COLLOC_MIN = 5
     "q_text_colloc",
     oracle=rf"""
     WITH toks AS (
-        SELECT doc_id, {_SQL_TOKS} AS tk FROM documents
+        SELECT doc_id, {SQL_TOKS} AS tk FROM documents
     ), ug AS (
         SELECT unnest(tk) AS w FROM toks
     ), uc AS (
@@ -1453,7 +1450,7 @@ _BM25_K1, _BM25_B, _BM25_NQ = 1.2, 0.75, 5
 _BM25_ORACLE = rf"""
     WITH toks AS (
         SELECT doc_id, t.w AS term
-        FROM (SELECT doc_id, {_SQL_TOKS} AS tk FROM documents), unnest(tk) AS t(w)
+        FROM (SELECT doc_id, {SQL_TOKS} AS tk FROM documents), unnest(tk) AS t(w)
     ), dl AS (
         SELECT doc_id, COUNT(*) AS dl FROM toks GROUP BY doc_id
     ), stats AS (
@@ -1753,7 +1750,7 @@ def q_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=rf"""
     WITH toks AS (
         SELECT lang, t.w AS term
-        FROM (SELECT lang, {_SQL_TOKS} AS tk FROM documents), unnest(tk) AS t(w)
+        FROM (SELECT lang, {SQL_TOKS} AS tk FROM documents), unnest(tk) AS t(w)
     ), cnt AS (
         SELECT lang, term, COUNT(*) AS term_n FROM toks GROUP BY lang, term
     ), tot AS (
@@ -1804,7 +1801,7 @@ def q_corpus_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     "q_text_bigram_lp",
     oracle=rf"""
     WITH toks AS (
-        SELECT doc_id, tk FROM (SELECT doc_id, {_SQL_TOKS} AS tk FROM documents)
+        SELECT doc_id, tk FROM (SELECT doc_id, {SQL_TOKS} AS tk FROM documents)
     ), bg AS (
         SELECT doc_id, tk[i] AS w1, tk[i + 1] AS w2
         FROM toks, unnest(generate_series(1, len(tk) - 1)) AS g(i)
@@ -1873,7 +1870,7 @@ def q_text_bigram_lp(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=rf"""
     WITH pos AS (
         SELECT doc_id, tk[i] AS term, i - 1 AS p
-        FROM (SELECT doc_id, {_SQL_TOKS} AS tk FROM documents),
+        FROM (SELECT doc_id, {SQL_TOKS} AS tk FROM documents),
              unnest(generate_series(1, len(tk))) AS g(i)
     ), first_pos AS (
         SELECT term, doc_id, MIN(p) AS fp, COUNT(*) AS tf
@@ -2032,7 +2029,7 @@ def q_stats_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=rf"""
     WITH toks AS (
         SELECT doc_id, t.w AS term FROM
-        (SELECT doc_id, {_SQL_TOKS} AS tk FROM documents), unnest(tk) AS t(w)
+        (SELECT doc_id, {SQL_TOKS} AS tk FROM documents), unnest(tk) AS t(w)
     ), n AS (SELECT COUNT(*) AS n_docs FROM documents),
     tf AS (
         SELECT doc_id, term, COUNT(*) AS tf FROM toks GROUP BY doc_id, term
@@ -2277,7 +2274,7 @@ def q_anon_k(spark: SparkSession, sf_dir: str) -> DataFrame:
 _BPE_ORACLE = rf"""
     WITH toks AS (
         SELECT t.w AS word FROM
-        (SELECT {_SQL_TOKS} AS tk FROM documents), unnest(tk) AS t(w)
+        (SELECT {SQL_TOKS} AS tk FROM documents), unnest(tk) AS t(w)
         WHERE regexp_matches(t.w, '^[a-z]+$')
     ), words AS (
         SELECT word, COUNT(*) AS freq FROM toks GROUP BY word
@@ -2561,7 +2558,7 @@ def q_dedup_url(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=rf"""
     WITH toks AS (
         SELECT t.w AS word FROM
-        (SELECT {_SQL_TOKS} AS tk FROM documents), unnest(tk) AS t(w)
+        (SELECT {SQL_TOKS} AS tk FROM documents), unnest(tk) AS t(w)
         WHERE t.w <> ''
     ), tc AS (
         SELECT word, COUNT(*) AS true_count FROM toks GROUP BY word
@@ -2662,7 +2659,7 @@ def q_agg_countmin(spark: SparkSession, sf_dir: str) -> DataFrame:
         SELECT doc_id, w, pos FROM (
             SELECT doc_id, unnest(tk) AS w,
                    generate_subscripts(tk, 1) - 1 AS pos
-            FROM (SELECT doc_id, {_SQL_TOKS} AS tk FROM documents)
+            FROM (SELECT doc_id, {SQL_TOKS} AS tk FROM documents)
         ) WHERE w <> ''
     ), marked AS (
         SELECT doc_id, pos,
@@ -2762,7 +2759,7 @@ def q_span_corrupt(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=rf"""
     WITH toks AS (
         SELECT doc_id, t.w AS word FROM
-        (SELECT doc_id, {_SQL_TOKS} AS tk FROM documents), unnest(tk) AS t(w)
+        (SELECT doc_id, {SQL_TOKS} AS tk FROM documents), unnest(tk) AS t(w)
         WHERE t.w <> ''
     ), half AS (SELECT CAST(max(doc_id) // 2 AS BIGINT) AS h FROM documents),
     tc AS (SELECT word, COUNT(*) AS true_count FROM toks GROUP BY word),

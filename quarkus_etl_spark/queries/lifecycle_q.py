@@ -682,8 +682,8 @@ def q_zorder_key(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Z-order (Morton) clustering key over (l_partkey, l_suppkey): the
     multi-dimensional sort key a lakehouse OPTIMIZE ZORDER BY clusters
     files on, so parquet min/max stats row-group-skip on EVERY zordered
-    dimension (operators/zorder.py; the clustered WRITE + per-file range
-    narrowing is pinned in tests/test_maintenance.py). Quantization
+    dimension (operators/zorder.py; the bit interleave is pinned against a
+    Python reference in tests/test_properties.py). Quantization
     bounds come from a 1-row min/max aggregate (driver-collected seed,
     like IVF's centroids); the key itself is pure integer bit algebra —
     map-only, portable, deterministic."""
@@ -745,8 +745,8 @@ def q_join_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _nib(pos: int, width: int = 4) -> str:
-    return f"CAST('0x' || substr(h, {pos}, {width}) AS BIGINT)"
+def _nib(pos: int) -> str:
+    return f"CAST('0x' || substr(h, {pos}, 4) AS BIGINT)"
 
 
 @register(
@@ -798,16 +798,16 @@ def q_scan_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     documents written partitioned by lang, read back filtered to one
     partition — the layout that turns a predicate on the partition key
     into 'never open the other directories at all' (the test suite pins
-    the pruning in the executed plan's PartitionFilters;
-    sources/maintenance.py). At 100 TB this is the difference between
-    scanning 1/5th of a corpus and all of it."""
-    from ..sources.maintenance import write_partitioned
+    the pruning in the executed plan's PartitionFilters). The write goes
+    through `write_dataframe`, the JobRunner sink. At 100 TB this is the
+    difference between scanning 1/5th of a corpus and all of it."""
+    from ..config import WriteTarget
+    from ..sources.writers import write_dataframe
 
     path = _scratch(sf_dir, "docs_by_lang")
-    write_partitioned(
+    write_dataframe(
         t(spark, sf_dir, "documents").select("doc_id", "lang", "source", "n_chars"),
-        path,
-        ["lang"],
+        WriteTarget(path=path, mode="overwrite", partition_by=("lang",)),
     )
     return (
         spark.read.parquet(path)

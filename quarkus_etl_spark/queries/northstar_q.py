@@ -31,7 +31,7 @@ from ..operators.similarity import (
     pairwise_similar,
 )
 from ..plans.tuning import ensure_parallelism
-from .base import EMB_DIM, emb, register, t
+from .base import EMB_DIM, SQL_TOKS, emb, register, t
 
 
 # --------------------------------------------------------------------------
@@ -1152,8 +1152,6 @@ def q_dedup_canonical_best(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _MH_K, _MH_R = 8, 2  # 8 hash functions, bands of 2 -> 4 bands
 
-# The shared normalization pipeline, spelled in DuckDB (same as curation_q).
-_SQL_TOKS_NS = r"string_split(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' ')"
 
 
 def _mh_sig_sql(i: int) -> str:
@@ -1191,7 +1189,7 @@ def _mh_sig_sql(i: int) -> str:
     FROM capped a
     JOIN capped b ON a.band_id = b.band_id AND a.bk = b.bk AND a.doc_id < b.doc_id
     GROUP BY a.doc_id, b.doc_id
-    """.replace("{toks}", _SQL_TOKS_NS),
+    """.replace("{toks}", SQL_TOKS),
 )
 def q_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash+LSH candidate generation with an ENGINE-PORTABLE hash family

@@ -416,7 +416,7 @@ def q_time_interp(spark: SparkSession, sf_dir: str) -> DataFrame:
     Epoch-domain guard [1970, 2100) applied identically in both engines
     before the bounds aggregate — see q_time_gapfill's docstring; caps the
     worst-case grid at 4.6M cells so clock-skewed rows degrade
-    predictably instead of tripping gapfill's max_cells budget."""
+    predictably instead of tripping gapfill's GAPFILL_MAX_CELLS budget."""
     from ..operators.timeseries import gapfill, time_bucket
 
     ev = t(spark, sf_dir, "events").where(

@@ -20,12 +20,7 @@ can grade a custom-source scan like any other query.
 
 from __future__ import annotations
 
-from pyspark.sql.datasource import (
-    DataSource,
-    DataSourceReader,
-    InputPartition,
-    SimpleDataSourceStreamReader,
-)
+from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
 
 from ..operators.generator import CITIES, COUNTRIES, STATES, STREETS
 
@@ -88,9 +83,6 @@ class AddressDataSource(DataSource):
     def reader(self, schema) -> AddressReader:
         return AddressReader(self.options)
 
-    def simpleStreamReader(self, schema) -> "AddressStreamReader":
-        return AddressStreamReader(self.options)
-
 
 def register(spark) -> None:
     # The DataSource class is pickled BY REFERENCE to the create-instance
@@ -100,30 +92,3 @@ def register(spark) -> None:
 
     ensure_worker_imports(spark)
     spark.dataSource.register(AddressDataSource)
-
-
-class AddressStreamReader(SimpleDataSourceStreamReader):
-    """Streaming flavor of the same source: each micro-batch emits the
-    next `batch_rows` ids (offset = last id emitted, checkpointable by
-    the engine — restart resumes exactly where the last commit left off,
-    because rows derive deterministically from ids). `max_rows` bounds
-    the stream so tests terminate."""
-
-    def __init__(self, options):
-        self.batch_rows = int(options.get("batch_rows", 500))
-        self.max_rows = int(options.get("max_rows", 2000))
-
-    def initialOffset(self):
-        return {"last_id": 0}
-
-    def read(self, start):
-        lo = start["last_id"] + 1
-        hi = min(lo + self.batch_rows - 1, self.max_rows)
-        if lo > self.max_rows:
-            return iter([]), start
-        rows = [(i, *_md5_fields(i)) for i in range(lo, hi + 1)]
-        return iter(rows), {"last_id": hi}
-
-    def readBetweenOffsets(self, start, end):
-        lo, hi = start["last_id"] + 1, end["last_id"]
-        return iter([(i, *_md5_fields(i)) for i in range(lo, hi + 1)])

@@ -89,24 +89,19 @@ def write_bucketed_table(
     table: str,
     bucket_cols: list[str],
     num_buckets: int = 32,
-    sort_cols: list[str] | None = None,
-    mode: str = "overwrite",
-    fmt: str = "parquet",
     path: str | None = None,
 ) -> None:
-    """Persist a table bucketed (and optionally sorted) by its join key.
+    """Persist (overwrite) a parquet table bucketed by its join key.
 
     At scale this is THE lever for repeated big-to-big joins: two tables
     bucketed into the same bucket count on the join key co-locate matching
-    rows, so joins between them need no Exchange (and with sort_cols, no
-    per-task sort) — the shuffle is paid once at write time instead of on
-    every query. See tests/test_plans.py::test_bucketed_join_has_no_exchange
-    for the plan proof. `path` makes it an EXTERNAL table at an explicit
+    rows, so joins between them need no Exchange — the shuffle is paid
+    once at write time instead of on every query. See
+    tests/test_plans.py::test_bucketed_join_has_no_exchange for the plan
+    proof. `path` makes it an EXTERNAL table at an explicit
     location (bucketing metadata still lives in the session catalog —
     that's what lets the planner elide the exchange)."""
-    writer = df.write.format(fmt).mode(mode).bucketBy(num_buckets, *bucket_cols)
-    if sort_cols:
-        writer = writer.sortBy(*sort_cols)
+    writer = df.write.format("parquet").mode("overwrite").bucketBy(num_buckets, *bucket_cols)
     if path is not None:
         writer = writer.option("path", path)
     writer.saveAsTable(table)

@@ -31,12 +31,11 @@ EVENTS_SCHEMA = (
 def file_stream(
     spark: SparkSession,
     source_dir: str,
-    schema: str = EVENTS_SCHEMA,
-    fmt: str = "parquet",
     max_files_per_trigger: int | None = None,
 ) -> DataFrame:
-    """File-source stream (each arriving file is a micro-batch input)."""
-    reader = spark.readStream.format(fmt).schema(schema)
+    """Parquet file-source stream of events (each arriving file is a
+    micro-batch input)."""
+    reader = spark.readStream.format("parquet").schema(EVENTS_SCHEMA)
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
     return reader.load(source_dir)

@@ -60,3 +60,16 @@ def round_trips(monkeypatch):
             gc.enable()
 
     return count
+
+
+@pytest.fixture
+def lsh_planes(monkeypatch):
+    """`lsh_planes(n_rows, p)` sets `similarity.TARGET_BUCKET` so that
+    `_auto_planes` sizes exactly p hyperplanes for an n_rows input:
+    ceil(log2(n_rows / (n_rows / 2**(p - 0.5)))) = p."""
+    from quarkus_etl_spark.operators import similarity
+
+    def set_planes(n_rows: int, p: int) -> None:
+        monkeypatch.setattr(similarity, "TARGET_BUCKET", n_rows / 2 ** (p - 0.5))
+
+    return set_planes

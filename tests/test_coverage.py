@@ -68,15 +68,30 @@ def _write_json(path, obj) -> None:
     path.write_text(json.dumps(obj))
 
 
-def test_grading_order_is_derived_from_records_and_manifest(tmp_path):
+def test_missing_query_module_fails_at_load(monkeypatch):
+    """A renamed or deleted query module must fail the load, not silently
+    drop its queries from the registry."""
+    import pytest
+
+    import quarkus_etl_spark.queries as queries
+
+    monkeypatch.setattr(queries, "_loaded", False)
+    monkeypatch.setattr(queries, "_MODULES", ("relational", "no_such_wave_q"))
+    with pytest.raises(ModuleNotFoundError, match="no_such_wave_q"):
+        queries._load_all()
+
+
+def test_grading_order_is_derived_from_records_and_manifest(tmp_path, monkeypatch):
     """The driver grades ~50 queries in dict order per round. A query
     re-verified at or after its last verdict (or never graded) leads in
     registration order; the rest follow least-recently graded first, ties
     in registration order. Folding a new round's record needs no edit: a
     query graded after its stamp leaves the front."""
-    from quarkus_etl_spark.queries.base import _graded_last
+    from quarkus_etl_spark.queries import base
 
     manifest = tmp_path / "fingerprints.json"
+    monkeypatch.setattr(base, "_ROOT", str(tmp_path))
+    monkeypatch.setattr(base, "FINGERPRINTS", str(manifest))
     _write_json(manifest, {"q_c": {"src": "s", "round": 2},
                            "q_d": {"src": "s", "round": 1},
                            "q_e": {"src": "s", "round": 2},
@@ -86,28 +101,29 @@ def test_grading_order_is_derived_from_records_and_manifest(tmp_path):
     registered = dict.fromkeys(["q_c", "q_b", "q_a", "q_g", "q_d", "q_e", "q_f"])
 
     def order() -> list[str]:
-        return list(_graded_last(registered, root=str(tmp_path), manifest=str(manifest)))
+        return list(base._graded_last(registered))
 
     assert order() == ["q_c", "q_d", "q_e", "q_f", "q_a", "q_g", "q_b"]
     _write_json(tmp_path / "CORRECTNESS_r03.json", {"q_c": {}})
     assert order() == ["q_d", "q_e", "q_f", "q_a", "q_g", "q_b", "q_c"]
 
 
-def test_unreadable_grading_record_fails_loudly(tmp_path):
+def test_unreadable_grading_record_fails_loudly(tmp_path, monkeypatch):
     """The records are the only source of the grading order, so a corrupt
     one raises naming the file instead of silently reordering."""
     import pytest
 
-    from quarkus_etl_spark.queries.base import _last_graded_rounds
+    from quarkus_etl_spark.queries import base
 
+    monkeypatch.setattr(base, "_ROOT", str(tmp_path))
     _write_json(tmp_path / "CORRECTNESS_r01.json", {"q_a": {}})
-    assert _last_graded_rounds(str(tmp_path)) == {"q_a": 1}
+    assert base._last_graded_rounds() == {"q_a": 1}
     (tmp_path / "CORRECTNESS_r02.json").write_text('{"q_a": ')
     with pytest.raises(ValueError, match="CORRECTNESS_r02.json"):
-        _last_graded_rounds(str(tmp_path))
+        base._last_graded_rounds()
     _write_json(tmp_path / "CORRECTNESS_r02.json", ["q_a"])
     with pytest.raises(ValueError, match="CORRECTNESS_r02.json"):
-        _last_graded_rounds(str(tmp_path))
+        base._last_graded_rounds()
 
 
 def test_fingerprint_check_covers_every_registered_name():

@@ -55,27 +55,28 @@ def test_chunked_empty_and_degenerate(spark, empty_docs, messy_docs):
     ]
 
 
-def test_jaccard_pairs_empty_null_single(spark, empty_docs, messy_docs):
+def test_jaccard_pairs_empty_null_single(spark, empty_docs, messy_docs, monkeypatch):
+    from quarkus_etl_spark.operators import dedup
     from quarkus_etl_spark.operators.dedup import ngram_jaccard_pairs
 
-    for strat in ("exhaustive", "prefix"):
+    # the default cap routes to the exhaustive plan, -1 to prefix filtering
+    for cap in (dedup.EXHAUSTIVE_MAX_DOCS, -1):
+        monkeypatch.setattr(dedup, "EXHAUSTIVE_MAX_DOCS", cap)
         assert (
             ngram_jaccard_pairs(
-                empty_docs, "doc_id", "text", block_col="lang", threshold=0.5,
-                strategy=strat,
+                empty_docs, "doc_id", "text", block_col="lang", threshold=0.5
             ).count()
             == 0
         )
         pairs = {
             (r["id_a"], r["id_b"])
             for r in ngram_jaccard_pairs(
-                messy_docs, "doc_id", "text", block_col="lang", threshold=0.5,
-                strategy=strat,
+                messy_docs, "doc_id", "text", block_col="lang", threshold=0.5
             ).collect()
         }
         # nulls/empties produce no features and never pair; the exact
-        # duplicate pair in the 'de' block is found by both strategies
-        assert pairs == {(4, 5)}, strat
+        # duplicate pair in the 'de' block is found by both plans
+        assert pairs == {(4, 5)}, cap
 
 
 def test_incremental_jaccard_asymmetric_and_empty_delta(spark, empty_docs, messy_docs):

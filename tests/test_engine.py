@@ -88,15 +88,16 @@ def test_jobs_from_dicts_roundtrip():
 
 
 def test_jobs_from_dicts_rejects_bare_string_depends_on():
-    # {"depends_on": "stage"} must fail at parse time, not iterate
-    # char-by-char into ('s','t','a','g','e') and surface later as a
-    # confusing unknown-jobs DAG error
+    # A job is {name, extract, write} and jobs run in list order; a config
+    # written for a dependency scheduler must fail at parse time, naming
+    # the key, rather than silently run in file order.
     import pytest
 
-    with pytest.raises(TypeError, match="depends_on"):
-        jobs_from_dicts(
-            [{"name": "b", "extract": "SELECT 1", "depends_on": "stage"}]
-        )
+    for deps in ("stage", ["stage"]):
+        with pytest.raises(ValueError, match="depends_on"):
+            jobs_from_dicts(
+                [{"name": "b", "extract": "SELECT 1", "depends_on": deps}]
+            )
 
 
 def test_jobs_from_properties(tmp_path):
@@ -294,10 +295,8 @@ def test_python_datasource_partitions_and_determinism(spark):
 
 
 def test_job_dag_respects_dependencies_and_parallelizes(spark, sf_dir):
-    """run_dag: a dependent job sees the table its upstream created; two
-    independent branches both complete; unknown deps and cycles raise."""
-    import pytest
-
+    """Jobs run in list order: a later job sees the table an earlier one
+    created, and an independent job completes too."""
     from quarkus_etl_spark.config import EtlJob
     from quarkus_etl_spark.jobs import JobRunner
 
@@ -311,26 +310,12 @@ def test_job_dag_respects_dependencies_and_parallelizes(spark, sf_dir):
             extract="SELECT N_NATIONKEY, N_NAME FROM dag_nation",
             write="CREATE TABLE dag_stage AS SELECT * FROM etl_source",
         ),
-        EtlJob(
-            name="count_stage",
-            extract="SELECT count(*) AS C FROM dag_stage",
-            depends_on=("stage",),
-        ),
+        EtlJob(name="count_stage", extract="SELECT count(*) AS C FROM dag_stage"),
         EtlJob(name="independent", extract="SELECT 1 AS ONE"),
     ]
-    runner = JobRunner(spark)
-    results = {r.name: r for r in runner.run_dag(jobs)}
+    results = {r.name: r for r in JobRunner(spark).run(jobs)}
     assert set(results) == {"stage", "count_stage", "independent"}
     assert results["stage"].rows == 25
+    assert results["count_stage"].rows == 1
     assert spark.sql("SELECT C FROM (SELECT count(*) AS C FROM dag_stage)").first()["C"] == 25
-
-    with pytest.raises(ValueError, match="unknown jobs"):
-        runner.run_dag([EtlJob(name="a", extract="SELECT 1", depends_on=("zz",))])
-    with pytest.raises(ValueError, match="cycle"):
-        runner.run_dag(
-            [
-                EtlJob(name="a", extract="SELECT 1", depends_on=("b",)),
-                EtlJob(name="b", extract="SELECT 1", depends_on=("a",)),
-            ]
-        )
     spark.sql("DROP TABLE IF EXISTS dag_stage")

@@ -5,13 +5,14 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from quarkus_etl_spark.catalog import load_table
-from quarkus_etl_spark.sources.maintenance import write_partitioned
+from quarkus_etl_spark.config import WriteTarget
+from quarkus_etl_spark.sources.writers import write_dataframe
 
 
 def test_partitioned_write_prunes_at_scan(spark, sf_dir, tmp_path):
     out = str(tmp_path / "events_by_type")
     ev = load_table(spark, sf_dir, "events")
-    write_partitioned(ev, out, ["event_type"])
+    write_dataframe(ev, WriteTarget(path=out, mode="overwrite", partition_by=("event_type",)))
     back = spark.read.parquet(out)
     one = back.where(F.col("event_type") == "purchase")
     # pruning is visible in the physical plan: the predicate lands in the

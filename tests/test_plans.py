@@ -16,8 +16,8 @@ from quarkus_etl_spark.queries.relational import (
 )
 
 
-def assert_in_plan(df, fragment: str, mode: str = "formatted") -> None:
-    plan = plan_string(df, mode)
+def assert_in_plan(df, fragment: str) -> None:
+    plan = plan_string(df)
     assert fragment in plan, f"expected {fragment!r} in plan:\n{plan}"
 
 
@@ -99,28 +99,34 @@ def test_python_free_hot_path(spark, sf_dir):
         assert "EvalPython" not in plan, f"Python in hot path:\n{plan}"
 
 
-def test_unbounded_build_sides_never_force_broadcast(spark, sf_dir):
+def test_unbounded_build_sides_never_force_broadcast(spark, sf_dir, monkeypatch):
     """Round-1 scale fix: pairwise_similar / exact-Jaccard verification /
     blocked n-gram Jaccard used to HINT a broadcast of the full dataset —
     a guaranteed OOM at cluster scale. With auto-broadcast disabled
     (simulating 'build side does not fit'), their plans must contain no
     BroadcastExchange at all and still produce identical results."""
     from quarkus_etl_spark.catalog import load_table
+    from quarkus_etl_spark.operators import dedup
     from quarkus_etl_spark.operators.dedup import minhash_near_dup_pairs, ngram_jaccard_pairs
     from quarkus_etl_spark.operators.similarity import pairwise_similar
 
     docs = load_table(spark, sf_dir, "documents")
     emb = load_table(spark, sf_dir, "embeddings")
+
+    def ngram(cap):
+        # the routing cap is read when the plan is built
+        def build():
+            monkeypatch.setattr(dedup, "EXHAUSTIVE_MAX_DOCS", cap)
+            return ngram_jaccard_pairs(docs, "doc_id", "text", "lang", threshold=0.7)
+
+        return build
+
     builders = {
         "pairwise_similar": lambda: pairwise_similar(
             emb, "vec_id", "embedding", "label", threshold=0.4
         ),
-        "ngram_exhaustive": lambda: ngram_jaccard_pairs(
-            docs, "doc_id", "text", "lang", threshold=0.7, strategy="exhaustive"
-        ),
-        "ngram_prefix": lambda: ngram_jaccard_pairs(
-            docs, "doc_id", "text", "lang", threshold=0.7, strategy="prefix"
-        ),
+        "ngram_exhaustive": ngram(dedup.EXHAUSTIVE_MAX_DOCS),
+        "ngram_prefix": ngram(-1),
         "minhash_lsh": lambda: minhash_near_dup_pairs(docs, "doc_id", "text", threshold=0.8),
     }
 
@@ -147,8 +153,8 @@ def test_bucketed_join_has_no_exchange(spark, sf_dir):
 
     orders = load_table(spark, sf_dir, "orders")
     lineitem = load_table(spark, sf_dir, "lineitem")
-    write_bucketed_table(orders, "orders_bkt", ["o_orderkey"], 8, ["o_orderkey"])
-    write_bucketed_table(lineitem, "lineitem_bkt", ["l_orderkey"], 8, ["l_orderkey"])
+    write_bucketed_table(orders, "orders_bkt", ["o_orderkey"], 8)
+    write_bucketed_table(lineitem, "lineitem_bkt", ["l_orderkey"], 8)
     try:
         joined = (
             spark.table("orders_bkt")

@@ -299,7 +299,7 @@ def _py_jaccard_pairs(docs, threshold):
     return out
 
 
-def test_near_dup_edges_strategies_on_random_corpora(spark):
+def test_near_dup_edges_strategies_on_random_corpora(spark, monkeypatch):
     """On seeded random corpora with planted near-duplicates, every caller
     of the shared candidate/verify steps against the Python reference: the
     exact plans (near_dup_edges exhaustive, ngram_jaccard_pairs prefix,
@@ -308,12 +308,21 @@ def test_near_dup_edges_strategies_on_random_corpora(spark):
     incremental, unblocked minhash_near_dup_pairs) emit a subset. Every
     emitted pair carries the reference jaccard. Exercises shapes the
     fixture corpus doesn't (tiny blocks, empty docs, single-token docs)."""
+    from quarkus_etl_spark.operators import dedup
     from quarkus_etl_spark.operators.dedup import (
         incremental_jaccard_pairs,
         minhash_near_dup_pairs,
         near_dup_edges,
         ngram_jaccard_pairs,
     )
+
+    # the default cap routes to the exact plans, -1 to the at-scale ones
+    # (prefix filtering, LSH); routing happens when a plan is built
+    default_cap = dedup.EXHAUSTIVE_MAX_DOCS
+
+    def routed(cap, build):
+        monkeypatch.setattr(dedup, "EXHAUSTIVE_MAX_DOCS", cap)
+        return build()
 
     rng = random.Random(7)
     vocab = [f"w{i}" for i in range(30)]
@@ -345,35 +354,33 @@ def test_near_dup_edges_strategies_on_random_corpora(spark):
     runs = [
         (
             f"near_dup_edges {strategy}",
-            near_dup_edges(
+            routed(cap, lambda: near_dup_edges(
                 df, "doc_id", "text", block_col="lang", threshold=0.6,
-                strategy=strategy,
-            ),
+            )),
             want,
             strategy != "lsh",
         )
-        for strategy in ("exhaustive", "lsh")
+        for strategy, cap in (("exhaustive", default_cap), ("lsh", -1))
     ] + [
         (
             "ngram_jaccard_pairs prefix",
-            ngram_jaccard_pairs(
+            routed(-1, lambda: ngram_jaccard_pairs(
                 df, "doc_id", "text", block_col="lang", threshold=0.6,
-                strategy="prefix",
-            ),
+            )),
             want,
             True,
         )
     ] + [
         (
             f"incremental {strategy}",
-            incremental_jaccard_pairs(
+            routed(cap, lambda: incremental_jaccard_pairs(
                 existing, incoming, "doc_id", "text", block_col="lang",
-                threshold=0.6, strategy=strategy,
-            ),
+                threshold=0.6,
+            )),
             want_inc,
             strategy == "exact",
         )
-        for strategy in ("exact", "lsh")
+        for strategy, cap in (("exact", default_cap), ("lsh", -1))
     ] + [
         (
             "minhash_near_dup_pairs",

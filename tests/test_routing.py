@@ -8,8 +8,6 @@ exhaustive jaccard value)."""
 
 from __future__ import annotations
 
-import pytest
-
 from quarkus_etl_spark.operators import dedup, kmeans, similarity
 from quarkus_etl_spark.operators.dedup import near_dup_edges, ngram_jaccard_pairs
 from quarkus_etl_spark.plans import plan_string
@@ -21,19 +19,19 @@ def _docs(spark, sf_dir):
     return load_table(spark, sf_dir, "documents")
 
 
-def test_lsh_edges_are_subset_with_identical_jaccard(spark, sf_dir):
+def test_lsh_edges_are_subset_with_identical_jaccard(spark, sf_dir, monkeypatch):
     d = _docs(spark, sf_dir)
     exact = {
         (r.id_a, r.id_b): r.jaccard
         for r in near_dup_edges(
-            d, "doc_id", "text", block_col="lang", threshold=0.7,
-            strategy="exhaustive",
+            d, "doc_id", "text", block_col="lang", threshold=0.7
         ).collect()
     }
+    monkeypatch.setattr(dedup, "EXHAUSTIVE_MAX_DOCS", -1)
     lsh = {
         (r.id_a, r.id_b): r.jaccard
         for r in near_dup_edges(
-            d, "doc_id", "text", block_col="lang", threshold=0.7, strategy="lsh"
+            d, "doc_id", "text", block_col="lang", threshold=0.7
         ).collect()
     }
     # precision 1.0: every LSH edge is a true edge with the exact value
@@ -132,7 +130,7 @@ def test_knn_graph_routes_to_ann_above_threshold(spark, sf_dir, monkeypatch):
     assert all(1 <= r.nn_rank <= 3 for r in rows)
 
 
-def test_lsh_paths_never_plan_nested_loops(spark, sf_dir):
+def test_lsh_paths_never_plan_nested_loops(spark, sf_dir, monkeypatch, lsh_planes):
     """Every LSH candidate plan must join on equi-keys (bucket/band/id):
     if a refactor breaks an equality conjunct, Catalyst silently falls back
     to BroadcastNestedLoopJoin/CartesianProduct — the quadratic the router
@@ -148,20 +146,20 @@ def test_lsh_paths_never_plan_nested_loops(spark, sf_dir):
 
     d = load_table(spark, sf_dir, "documents")
     e = load_table(spark, sf_dir, "embeddings")
+    monkeypatch.setattr(dedup, "EXHAUSTIVE_MAX_DOCS", -1)
+    lsh_planes(e.count(), 4)
     plans = [
         plan_string(
-            near_dup_edges(d, "doc_id", "text", block_col="lang",
-                           threshold=0.7, strategy="lsh")
+            near_dup_edges(d, "doc_id", "text", block_col="lang", threshold=0.7)
         ),
         plan_string(
             incremental_jaccard_pairs(
                 d.where(F.col("doc_id") % 5 != 0),
                 d.where(F.col("doc_id") % 5 == 0),
-                "doc_id", "text", "lang", 0.7, strategy="lsh",
+                "doc_id", "text", "lang", 0.7,
             )
         ),
-        plan_string(ann_pairs(e, "vec_id", "embedding", 0.4, dim=64,
-                              block_col="label", n_planes=4)),
+        plan_string(ann_pairs(e, "vec_id", "embedding", 0.4, dim=64, block_col="label")),
     ]
     for p in plans:
         assert "CartesianProduct" not in p, p[:2000]
@@ -202,7 +200,7 @@ def test_events_ts_is_session_timezone_independent(spark, sf_dir):
     assert got == want
 
 
-def test_incremental_lsh_subset_with_identical_jaccard(spark, sf_dir):
+def test_incremental_lsh_subset_with_identical_jaccard(spark, sf_dir, monkeypatch):
     """The asymmetric LSH plan must emit a subset of the exact incremental
     pairs with identical jaccard values, and the auto route must flip to it
     when the combined corpus exceeds the threshold."""
@@ -217,13 +215,14 @@ def test_incremental_lsh_subset_with_identical_jaccard(spark, sf_dir):
     exact = {
         (r.id_exist, r.id_new): r.jaccard
         for r in incremental_jaccard_pairs(
-            corpus, delta, "doc_id", "text", "lang", 0.7, strategy="exact"
+            corpus, delta, "doc_id", "text", "lang", 0.7
         ).collect()
     }
+    monkeypatch.setattr(dedup, "EXHAUSTIVE_MAX_DOCS", -1)
     lsh = {
         (r.id_exist, r.id_new): r.jaccard
         for r in incremental_jaccard_pairs(
-            corpus, delta, "doc_id", "text", "lang", 0.7, strategy="lsh"
+            corpus, delta, "doc_id", "text", "lang", 0.7
         ).collect()
     }
     assert set(lsh) <= set(exact)
@@ -249,7 +248,7 @@ def test_incremental_auto_routes_by_size(spark, sf_dir, monkeypatch):
     assert "array_min" in plan_string(big)  # minhash signatures present
 
 
-def test_ann_pairs_subset_with_identical_cosine(spark, sf_dir):
+def test_ann_pairs_subset_with_identical_cosine(spark, sf_dir, lsh_planes):
     """The sign-LSH pair generator must emit a SUBSET of the exact pairs,
     each with the identical cosine, each exactly once (the probe.id <
     base.id conjunct), with near-total recall at fixture scale."""
@@ -263,9 +262,8 @@ def test_ann_pairs_subset_with_identical_cosine(spark, sf_dir):
             e, "vec_id", "embedding", "label", threshold=0.4
         ).collect()
     }
-    ann_rows = ann_pairs(
-        e, "vec_id", "embedding", 0.4, dim=64, block_col="label", n_planes=4
-    ).collect()
+    lsh_planes(e.count(), 4)
+    ann_rows = ann_pairs(e, "vec_id", "embedding", 0.4, dim=64, block_col="label").collect()
     ann = {(r.id_a, r.id_b): r.cosine for r in ann_rows}
     assert len(ann_rows) == len(ann)  # each pair exactly once
     assert set(ann) <= set(exact)
@@ -339,15 +337,6 @@ def test_max_token_count_strategies_agree(spark, sf_dir):
             .count()
         )
         assert diff == 0
-
-
-@pytest.mark.parametrize("bad", ["bogus", "LSH "])
-def test_unknown_strategy_raises(spark, sf_dir, bad):
-    d = _docs(spark, sf_dir)
-    with pytest.raises(ValueError, match="strategy"):
-        near_dup_edges(
-            d, "doc_id", "text", block_col="lang", threshold=0.7, strategy=bad
-        ).collect()
 
 
 def test_kmeans_pruned_assignment_exact_at_full_probe(spark, sf_dir):

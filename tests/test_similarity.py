@@ -212,7 +212,7 @@ def test_knn_graph_ann_plans_one_bucket_join_for_all_tables(spark, sf_dir):
     assert len(joins) == 1 and "__pb" in joins[0], joins
 
 
-def test_ann_pairs_round_trips_do_not_grow_with_planes(spark, sf_dir, round_trips):
+def test_ann_pairs_round_trips_do_not_grow_with_planes(spark, sf_dir, round_trips, lsh_planes):
     """The probe set is one parsed XOR-mask constant, so building the pair
     plan costs the same py4j round trips at 4 planes and 20 (a Column
     XOR per plane cost ~28 round trips each)."""
@@ -220,11 +220,13 @@ def test_ann_pairs_round_trips_do_not_grow_with_planes(spark, sf_dir, round_trip
     from quarkus_etl_spark.operators.similarity import ann_pairs
 
     e = load_table(spark, sf_dir, "embeddings")
+    n_rows = e.count()
 
     def fewest(n_planes):
+        lsh_planes(n_rows, n_planes)
         return min(
             round_trips(lambda: ann_pairs(e, "vec_id", "embedding", 0.4, dim=64,
-                                          block_col="label", n_planes=n_planes))
+                                          block_col="label"))
             for _ in range(3)
         )
 
@@ -329,9 +331,7 @@ def test_ann_operators_treat_off_contract_vectors_as_missing(spark):
 
     def pairs(extra):
         df = spark.createDataFrame(rows + extra, schema)
-        return sorted(map(tuple, ann_pairs(
-            df, "vec_id", "embedding", -1.0, dim=8, n_planes=3
-        ).collect()))
+        return sorted(map(tuple, ann_pairs(df, "vec_id", "embedding", -1.0, dim=8).collect()))
 
     edges, all_pairs = graph([]), pairs([])
     assert edges and {r[0] for r in edges} == set(range(60)) and all_pairs

@@ -307,38 +307,6 @@ def test_stream_checkpoint_restart_exactly_once(spark, sf_dir, tmp_path):
     assert got.select("event_id").distinct().count() == ev.count()
 
 
-def test_python_streaming_datasource_exactly_once(spark, tmp_path):
-    """The custom Python source's STREAMING reader (Spark 4
-    SimpleDataSourceStreamReader): micro-batches advance a checkpointable
-    id offset until max_rows; the appended output holds every generated
-    row exactly once and matches the batch reader's rows bit-for-bit."""
-    from quarkus_etl_spark.sources.pydatasource import register as reg
-
-    reg(spark)
-    stream = (
-        spark.readStream.format("addresses")
-        .option("batch_rows", "300")
-        .option("max_rows", "1000")
-        .load()
-    )
-    q = (
-        stream.writeStream.format("memory")
-        .queryName("pysrc_stream")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "cp"))
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    got = spark.table("pysrc_stream")
-    assert got.count() == 1000
-    assert got.select("id").distinct().count() == 1000
-    batch = (
-        spark.read.format("addresses").option("rows", "1000").load()
-    )
-    assert sorted(map(tuple, got.collect())) == sorted(map(tuple, batch.collect()))
-
-
 def test_live_eviction_drops_late_rows(spark, live_managers):
     """Row-exact pin of q_stream_live_eviction (the driver-visible
     watermark-eviction query): three finalized windows, the [10:00,10:15)
@@ -636,11 +604,15 @@ def test_stream_stream_join_checkpoint_restart_exactly_once(spark, tmp_path):
     T_SCHEMA = "v_event long, user_id long, v_ts timestamp"
 
     def run_once():
-        purchases = file_stream(
-            spark, str(pdir), schema=P_SCHEMA, max_files_per_trigger=1
+        purchases = (
+            spark.readStream.schema(P_SCHEMA)
+            .option("maxFilesPerTrigger", "1")
+            .parquet(str(pdir))
         )
-        touches = file_stream(
-            spark, str(tdir), schema=T_SCHEMA, max_files_per_trigger=1
+        touches = (
+            spark.readStream.schema(T_SCHEMA)
+            .option("maxFilesPerTrigger", "1")
+            .parquet(str(tdir))
         )
         joined = stream_stream_interval_join(
             purchases, touches, key="user_id",

@@ -109,7 +109,7 @@ def test_time_bucket_and_gapfill(spark):
     assert got[(0, "b")] == 1 and got[(15, "b")] == 0
 
 
-def test_gapfill_outlier_span_fails_fast(spark):
+def test_gapfill_outlier_span_fails_fast(spark, monkeypatch):
     """One clock-skewed row (a 2200-dated event) must raise a clear grid-
     budget error, not hang a single task materializing a 10M-element
     sequence array (round-5 phase-4 fuzz found the hang)."""
@@ -118,6 +118,7 @@ def test_gapfill_outlier_span_fails_fast(spark):
     import pytest as _pytest
     from pyspark.sql import functions as F
 
+    from quarkus_etl_spark.operators import timeseries
     from quarkus_etl_spark.operators.timeseries import gapfill
 
     agg = spark.createDataFrame(
@@ -126,13 +127,12 @@ def test_gapfill_outlier_span_fails_fast(spark):
     )
     # the error must NAME the offending bounds so the caller can find and
     # clamp the skewed source without re-profiling the data
-    with _pytest.raises(ValueError, match=r"1970.*2200.*max_cells"):
+    with _pytest.raises(ValueError, match=r"1970.*2200.*GAPFILL_MAX_CELLS"):
         gapfill(agg, "bucket", "1 MINUTE", [], {"v": F.lit(0.0)})
-    # and the budget is caller-tunable downward
+    # and the budget is the constant the check reads
+    monkeypatch.setattr(timeseries, "GAPFILL_MAX_CELLS", 1000)
     with _pytest.raises(ValueError, match="cells"):
-        gapfill(
-            agg, "bucket", "15 MINUTES", [], {"v": F.lit(0.0)}, max_cells=1000
-        )
+        gapfill(agg, "bucket", "15 MINUTES", [], {"v": F.lit(0.0)})
 
 
 def test_gapfill_rejects_date_bucket(spark):
